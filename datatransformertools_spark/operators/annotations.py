@@ -361,10 +361,10 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(hn + 1e-9, 6).alias("h_norm"),
     )
     path = _io_tmp("yolo_labels")
-    # single-split local input → fan the label encode/write out (same
-    # rationale as the sink roundtrips; the per-class checksum is
-    # order-independent)
-    labels = labels.repartition(spark.sparkContext.defaultParallelism, "file_name")
+    # key-only exchange: AQE sizes the label encode/write fan-out by
+    # bytes instead of writing a fixed count of near-empty part files
+    # (the per-class checksum is order-independent)
+    labels = labels.repartition("file_name")
     write_yolo_labels(labels, path)
     back = read_yolo_predictions(spark, path)
     line = F.concat_ws(

@@ -10,7 +10,7 @@ touches whole columnar batches, never single rows.
 The container (by design) has no image/audio codecs, so the decode
 kernel is a deterministic stub (documented below); everything
 around it — schema, batch shape, partitioning, UDF signature — is
-real and tested (tests/test_multimodal.py).
+real and tested (tests/test_operators.py::TestMultimodal).
 
 ``multimodal_manifest`` is the oracle-checked query: it builds the
 binary payload column from document text (utf-8 bytes — the same
@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -40,6 +40,33 @@ from datatransformertools_spark.sources.tables import load_table
 
 N_SHARDS = 16
 
+
+def _media_kind() -> Column:
+    """Deterministic media kind per document: doc_id % 3 → image,
+    audio, video."""
+    return F.element_at(
+        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    ).alias("media_kind")
+
+
+def _doc_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, payload): each document's utf-8 bytes as its binary
+    media payload — the one source every Arrow-kernel stage in this
+    module reads.
+
+    The exchange is key-only (``repartition("doc_id")``, no count),
+    so AQE sizes it by bytes: at least ~1 MB of payload per task, at
+    most ``spark.sql.shuffle.partitions`` tasks. Each Python task
+    has a fixed start-up cost whatever its input size, so a fixed
+    fan-out starts idle Python workers on a small input and caps the
+    parallelism of a large one; a byte-sized exchange does neither."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
+    ).repartition("doc_id")
+
+
 # ---------------------------------------------------------------------------
 # multimodal_manifest — oracle-checked metadata derivation
 # ---------------------------------------------------------------------------
@@ -48,14 +75,10 @@ N_SHARDS = 16
 def multimodal_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     payload = F.encode(F.col("text"), "UTF-8")
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
     return docs.select(
         "doc_id",
         F.col("source").alias("bucket"),
-        kind.alias("media_kind"),
+        _media_kind(),
         F.octet_length(payload).alias("n_bytes"),
         F.sha2(payload, 256).alias("sha256"),
         (md5_long(F.col("text"), salt="shard:") % N_SHARDS).alias("shard"),
@@ -297,19 +320,10 @@ def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
 
 
 def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, media_kind, payload) frame used by the decode tests:
-    payload is the utf-8 text, kind assigned deterministically,
-    repartitioned by shard the way a media lake would be."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    return docs.select(
-        "doc_id",
-        kind.alias("media_kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    ).repartition(8, "doc_id")
+    """(doc_id, media_kind, payload) frame the decode / resize /
+    frame-sampling kernels read: the byte-sized `_doc_payload`
+    exchange plus the deterministic kind assignment."""
+    return _doc_payload(spark, sf_dir).select("doc_id", _media_kind(), "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -371,44 +385,40 @@ def _make_pdf_render_probe():
     return _try_real_pages
 
 
-def _pdf_pages_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PAGES_SCHEMA frame (page_bytes included) behind
-    `pdf_to_pages`, shared with `server_pipeline` so the composed
-    flow rides the exact same pagination kernel it certifies
-    stage-by-stage. See `pdf_to_pages` for semantics and the fitz
-    import-probe contract."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = docs.select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
-
+def _make_paginate():
+    """Factory for the per-batch pagination function shared by
+    `pdf_to_pages` and `server_pipeline` (`<locals>` qualname →
+    cloudpickle ships it by value). The returned callable maps one
+    pandas batch of (doc_id, payload) rows to PAGES_SCHEMA columns as
+    lists: the fitz probe's real pages when the payload renders, else
+    ceil(n_bytes / PDF_PAGE_BYTES) byte-slice stub pages at fixed
+    72-dpi US-Letter dims."""
     page_bytes, page_w, page_h = PDF_PAGE_BYTES, PDF_PAGE_W, PDF_PAGE_H
+    columns = [f.name for f in PAGES_SCHEMA.fields]
     _try_real_pages = _make_pdf_render_probe()
 
-    def paginate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "page_idx", "page_name", "width", "height", "page_bytes")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fname = f"doc_{int(doc_id)}.pdf"
-                real = _try_real_pages(payload)
-                if real is not None:
-                    per_page = real
-                else:
-                    n_pages = max(1, -(-len(payload) // page_bytes))
-                    per_page = [
-                        (page_w, page_h, bytes(payload[(i - 1) * page_bytes : i * page_bytes]))
-                        for i in range(1, n_pages + 1)
-                    ]
-                for i, (w, h, pb) in enumerate(per_page, start=1):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["page_idx"].append(i)
-                    rows["page_name"].append(f"{fname}_page{i}")
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["page_bytes"].append(pb)
-            yield pd.DataFrame(rows)
+    def paginate(pdf: pd.DataFrame) -> dict[str, list]:
+        rows = {k: [] for k in columns}
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            doc_id = int(doc_id)
+            fname = f"doc_{doc_id}.pdf"
+            per_page = _try_real_pages(payload)
+            if per_page is None:
+                n_pages = max(1, -(-len(payload) // page_bytes))
+                per_page = [
+                    (page_w, page_h, bytes(payload[(i - 1) * page_bytes : i * page_bytes]))
+                    for i in range(1, n_pages + 1)
+                ]
+            for i, (w, h, pb) in enumerate(per_page, start=1):
+                rows["doc_id"].append(doc_id)
+                rows["page_idx"].append(i)
+                rows["page_name"].append(f"{fname}_page{i}")
+                rows["width"].append(w)
+                rows["height"].append(h)
+                rows["page_bytes"].append(pb)
+        return rows
 
-    return src.mapInPandas(paginate, PAGES_SCHEMA)
+    return paginate
 
 
 def pdf_to_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,8 +441,13 @@ def pdf_to_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed 72-dpi US-Letter dims + a byte-slice payload), so the
     oracle-checked face is unchanged until genuinely renderable
     documents arrive."""
-    pages = _pdf_pages_frame(spark, sf_dir)
-    return pages.select(
+    paginate = _make_paginate()
+
+    def pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(paginate(pdf))
+
+    return _doc_payload(spark, sf_dir).mapInPandas(pages, PAGES_SCHEMA).select(
         "doc_id", "page_idx", "page_name", "width", "height",
         F.octet_length("page_bytes").alias("n_bytes"),
     )
@@ -479,6 +494,51 @@ INFERENCE_SCHEMA = StructType(
 )
 
 
+def _make_stub_detector():
+    """Factory for the STUB model shared by `batch_inference` and
+    `server_pipeline` (`<locals>` qualname → cloudpickle ships it by
+    value; constants bound to locals, stdlib imported inside —
+    Python workers on a real cluster have only the serialized
+    closure, not this package).
+
+    Where the reference calls `model(images)` (server.py:84), the
+    returned ``detect(key, n_dets, n_bytes)`` derives deterministic
+    detections from md5(key:det:n_bytes) so batching, bbox clip,
+    xyxy→xywh and the confidence filter are value-checked end to
+    end and the DuckDB oracles can replay the arithmetic exactly. A
+    real model changes only this function."""
+    page_size, n_classes = PAGE_SIZE, N_CLASSES
+
+    def detect(key: str, n_dets: int, n_bytes: int) -> list[dict]:
+        import hashlib
+
+        dets = []
+        for j in range(n_dets):
+            hx = hashlib.md5(f"{key}:{j}:{n_bytes}".encode()).hexdigest()
+            cx = int(hx[4:8], 16) % page_size
+            cy = int(hx[8:12], 16) % page_size
+            bw = 1 + int(hx[12:16], 16) % 400
+            bh = 1 + int(hx[16:20], 16) % 400
+            x1 = max(cx - bw // 2, 0)
+            y1 = max(cy - bh // 2, 0)
+            x2 = min(cx + bw // 2, page_size)
+            y2 = min(cy + bh // 2, page_size)
+            dets.append(
+                {
+                    "det_idx": j,
+                    "category_id": int(hx[20:22], 16) % n_classes,
+                    "x": x1,
+                    "y": y1,
+                    "w": x2 - x1,  # xyxy→xywh, as server.py:100-105
+                    "h": y2 - y1,
+                    "confidence": int(hx[0:4], 16) % 1001,
+                }
+            )
+        return dets
+
+    return detect
+
+
 def batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched model inference over binary pages.
 
@@ -495,56 +555,19 @@ def batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     xywh boxes and the class name."""
     from datatransformertools_spark.operators.annotations import class_map
 
-    pages = media_frame(spark, sf_dir).select("doc_id", "payload")
-
-    # The closure must be fully self-contained (constants bound to
-    # locals, kernel nested) so cloudpickle ships it BY VALUE —
-    # Python workers on a real cluster don't have this package on
-    # their PYTHONPATH, only the serialized closure.
-    page_size, n_classes = PAGE_SIZE, N_CLASSES
+    detect = _make_stub_detector()
     out_columns = [f.name for f in INFERENCE_SCHEMA.fields]
 
     def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        def fake_detections(doc_id: int, n_bytes: int) -> list[dict]:
-            # STUB model: where the reference calls `model(images)`
-            # (server.py:84), derive deterministic detections from
-            # md5(doc_id:det:n_bytes) so batching, bbox clip,
-            # xyxy→xywh and the confidence filter are value-checked
-            # end to end. A real model changes only this function.
-            dets = []
-            for j in range(1 + doc_id % 3):
-                hx = hashlib.md5(f"{doc_id}:{j}:{n_bytes}".encode()).hexdigest()
-                cx = int(hx[4:8], 16) % page_size
-                cy = int(hx[8:12], 16) % page_size
-                bw = 1 + int(hx[12:16], 16) % 400
-                bh = 1 + int(hx[16:20], 16) % 400
-                x1 = max(cx - bw // 2, 0)
-                y1 = max(cy - bh // 2, 0)
-                x2 = min(cx + bw // 2, page_size)
-                y2 = min(cy + bh // 2, page_size)
-                dets.append(
-                    {
-                        "det_idx": j,
-                        "category_id": int(hx[20:22], 16) % n_classes,
-                        "x": x1,
-                        "y": y1,
-                        "w": x2 - x1,  # xyxy→xywh, as server.py:100-105
-                        "h": y2 - y1,
-                        "confidence": int(hx[0:4], 16) % 1001,
-                    }
-                )
-            return dets
-
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for det in fake_detections(int(doc_id), len(payload)):
-                    rows.append({"doc_id": int(doc_id), **det})
+                doc_id = int(doc_id)
+                for det in detect(str(doc_id), 1 + doc_id % 3, len(payload)):
+                    rows.append({"doc_id": doc_id, **det})
             yield pd.DataFrame(rows, columns=out_columns)
 
-    preds = pages.mapInPandas(predict, INFERENCE_SCHEMA)
+    preds = _doc_payload(spark, sf_dir).mapInPandas(predict, INFERENCE_SCHEMA)
     names = class_map(spark, sf_dir)
     return (
         preds.filter(F.col("confidence") >= int(CONF_THRESHOLD * 1000))
@@ -627,85 +650,49 @@ PIPELINE_DETS_SCHEMA = StructType(
 def server_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end reference server flow (server.py:64-117) as one
     fused plan: documents → PDF page fan-out (the `pdf_to_pages`
-    kernel, page bytes kept) → per-page batched stub inference (the
-    `batch_inference` recipe keyed per page) → confidence filter +
+    pagination) → per-page batched stub inference (the
+    `batch_inference` model keyed per page) → confidence filter +
     broadcast class-name join (predictions_to_json postprocess) →
     per-page response envelope (page_name, dims, annotation count,
     order-independent annotation checksum) — the server's JSON
     `results` array as a DataFrame, one row per page like the
     reference emits one object per page.
 
-    Stage-fusion shape: pagination and inference are BOTH
-    mapInPandas over the same partitioning, so Catalyst pipelines
-    them into one stage — page bytes flow kernel→kernel inside a
-    task and never touch a shuffle; the only exchanges are the
-    initial doc repartition and the final per-page aggregation.
+    Stage-fusion shape: pagination and inference run inside ONE
+    mapInPandas kernel, so each task starts one Python runner and
+    rendered page bytes stay in the Python worker — they never cross
+    Arrow back into the JVM. The only exchanges are the byte-sized
+    doc repartition (`_doc_payload`), the final per-page
+    aggregation and the class-map broadcast.
     Scale: fan-out is ~n_bytes/PDF_PAGE_BYTES rows per doc, the
     class map is the |classes|-bounded broadcast, and the envelope
     aggregation is pre-combined map-side (sums/counts), so 1000
     executors each paginate+predict their own doc slice with one
     shuffle of (page_key, partial-aggregate)-sized rows."""
-    pages = _pdf_pages_frame(spark, sf_dir)
-
-    # same closure-shipping rules as `batch_inference`: constants
-    # bound to locals, kernel nested, stdlib imported inside.
-    page_size, n_classes = PAGE_SIZE, N_CLASSES
+    paginate, detect = _make_paginate(), _make_stub_detector()
     out_columns = [f.name for f in PIPELINE_DETS_SCHEMA.fields]
 
-    def predict_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        def fake_page_detections(doc_id: int, page_idx: int, n_bytes: int) -> list[dict]:
-            # STUB model over PAGE images — where the reference calls
-            # `model.predict(images)` on the rendered page batch
-            # (server.py:84). Same md5-derived deterministic recipe
-            # as `batch_inference`, keyed by (doc, page, det, bytes)
-            # so every page of a doc gets its own detections and the
-            # DuckDB oracle can replay the arithmetic exactly.
-            dets = []
-            for j in range(1 + (doc_id + page_idx) % 3):
-                hx = hashlib.md5(f"{doc_id}:{page_idx}:{j}:{n_bytes}".encode()).hexdigest()
-                cx = int(hx[4:8], 16) % page_size
-                cy = int(hx[8:12], 16) % page_size
-                bw = 1 + int(hx[12:16], 16) % 400
-                bh = 1 + int(hx[16:20], 16) % 400
-                x1 = max(cx - bw // 2, 0)
-                y1 = max(cy - bh // 2, 0)
-                x2 = min(cx + bw // 2, page_size)
-                y2 = min(cy + bh // 2, page_size)
-                dets.append(
-                    {
-                        "det_idx": j,
-                        "category_id": int(hx[20:22], 16) % n_classes,
-                        "x": x1,
-                        "y": y1,
-                        "w": x2 - x1,  # xyxy→xywh, as server.py:100-105
-                        "h": y2 - y1,
-                        "confidence": int(hx[0:4], 16) % 1001,
-                    }
-                )
-            return dets
-
+    def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            pages = paginate(pdf)
             rows = []
-            for doc_id, page_idx, page_name, width, height, page_bytes in zip(
-                pdf["doc_id"], pdf["page_idx"], pdf["page_name"],
-                pdf["width"], pdf["height"], pdf["page_bytes"],
-            ):
-                for det in fake_page_detections(int(doc_id), int(page_idx), len(page_bytes)):
+            # PAGES_SCHEMA column order
+            for doc_id, page_idx, page_name, width, height, page_bytes in zip(*pages.values()):
+                n_dets = 1 + (doc_id + page_idx) % 3
+                for det in detect(f"{doc_id}:{page_idx}", n_dets, len(page_bytes)):
                     rows.append(
                         {
-                            "doc_id": int(doc_id),
-                            "page_idx": int(page_idx),
+                            "doc_id": doc_id,
+                            "page_idx": page_idx,
                             "page_name": page_name,
-                            "width": int(width),
-                            "height": int(height),
+                            "width": width,
+                            "height": height,
                             **det,
                         }
                     )
             yield pd.DataFrame(rows, columns=out_columns)
 
-    dets = pages.mapInPandas(predict_pages, PIPELINE_DETS_SCHEMA)
+    dets = _doc_payload(spark, sf_dir).mapInPandas(serve, PIPELINE_DETS_SCHEMA)
 
     # postprocess (predictions_to_json.py): id→name via the
     # |classes|-bounded broadcast dim; the confidence filter is kept
@@ -898,11 +885,6 @@ def audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial tail frames keep their true sample count. Samples are
     centered at −128 like signed PCM (ascii text → all values
     ≈ −30..−5, envelope still varies per frame)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = docs.select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
-
     frame_n = AUDIO_FRAME_SAMPLES
 
     def energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -930,7 +912,7 @@ def audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, n_samples int, n_frames int, "
         "mean_energy double, peak_energy double, peak_frame int"
     )
-    return src.mapInPandas(energy, schema=schema)
+    return _doc_payload(spark, sf_dir).mapInPandas(energy, schema=schema)
 
 
 AUDIO_FRAME_ENERGY_SQL = f"""

@@ -77,15 +77,17 @@ def test_iou_symmetric_bounded_and_reflexive(spark, pairs):
                   F.col("ax"), F.col("ay"), F.col("aw"), F.col("ah"))
     self_iou = iou_xywh(F.col("ax"), F.col("ay"), F.col("aw"), F.col("ah"),
                         F.col("ax"), F.col("ay"), F.col("aw"), F.col("ah"))
-    out = df.select(ab.alias("ab"), ba.alias("ba"), self_iou.alias("self"),
-                    (F.col("aw") * F.col("ah")).alias("area_a"))
+    out = df.select("ax", "ay", "aw", "ah", ab.alias("ab"), ba.alias("ba"), self_iou.alias("self"))
     for r in out.collect():
         assert 0.0 <= r.ab <= 1.0 + 1e-9
         assert r.ab == pytest.approx(r.ba, abs=1e-9)
-        # reflexivity needs a non-degenerate area: a subnormal width
-        # is absorbed by float addition (x + 1e-38 == x), which is
-        # float arithmetic, not an operator property
-        if r.area_a > 1e-6:
+        # reflexivity needs sides that survive float addition: the
+        # intersection width is (x + w) - x, and a width below about
+        # |x|·1e-9 is rounded away against x (2000.0 + 1e-13 ==
+        # 2000.0) — float arithmetic, not an operator property. The
+        # guard is relative because absorption is: an area guard
+        # admits a 1e-9-wide, 1500-high box at x = 2000.
+        if r.aw > abs(r.ax) * 1e-9 and r.ah > abs(r.ay) * 1e-9:
             assert r.self == pytest.approx(1.0, abs=1e-9)
-        elif r.area_a == 0.0:
+        elif r.aw * r.ah == 0.0:
             assert r.self == 0.0

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from datatransformertools_spark import registry
 
 _QUERIES = registry.queries()
@@ -624,19 +626,122 @@ def test_no_data_scale_driver_collects(spark, sf_dir):
     assert not bad, f"data-scale driver collects: {bad}"
 
 
-def test_global_plan_hygiene(spark, sf_dir):
+@pytest.fixture(scope="module")
+def batch_plans(spark, sf_dir) -> dict[str, str]:
+    """Executed plan of every registered batch query, built once and
+    shared by the engine-wide sweeps below. Streaming queries are
+    exercised by their own tests — their returned frame is a
+    memory-sink aggregate, so their plan here is not informative."""
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in _QUERIES.items()
+        if not name.startswith("events_stream_")
+    }
+
+
+def test_global_plan_hygiene(batch_plans):
     """Engine-wide scale contract: NO query may plan a cartesian
     product or a row-at-a-time Python UDF (BatchEvalPython). Arrow
     kernels (FlatMapGroupsInPandas / MapInPandas / MapInArrow) are
-    the sanctioned Python path. Streaming queries are exercised by
-    their own tests — their returned frame is a memory-sink
-    aggregate, so their plan here is not informative."""
-    for name, fn in _QUERIES.items():
-        if name.startswith("events_stream_"):
-            continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    the sanctioned Python path."""
+    for name, plan in batch_plans.items():
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan[:2000]}"
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF:\n{plan[:2000]}"
+
+
+_ARROW_KERNELS = ("MapInPandas", "FlatMapGroupsInPandas", "MapInArrow")
+
+
+def _plan_tree(plan: str) -> list[tuple[str, list[int]]]:
+    """Parse a physical-plan tree string into (operator line, child
+    indices) nodes, in pre-order. A node's depth is the column where
+    its operator name starts, after the `:- ` / `+- ` / `:  ` tree
+    markers."""
+    nodes: list[tuple[str, list[int]]] = []
+    stack: list[tuple[int, int]] = []  # (depth, node index)
+    for line in plan.splitlines():
+        op = line.lstrip(" :|+-")
+        if not op:
+            continue
+        depth = len(line) - len(op)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if stack:
+            nodes[stack[-1][1]][1].append(len(nodes))
+        stack.append((depth, len(nodes)))
+        nodes.append((op, []))
+    return nodes
+
+
+def _arrow_kernel_violations(plan: str) -> list[str]:
+    """For each Arrow kernel, walk every path down to its nearest
+    exchange: that exchange must not be a fixed-count repartition,
+    and no other Arrow kernel may sit in between."""
+    nodes = _plan_tree(plan)
+    bad = []
+    for i, (op, _) in enumerate(nodes):
+        if not op.startswith(_ARROW_KERNELS):
+            continue
+        todo = list(nodes[i][1])
+        while todo:
+            below, children = nodes[todo.pop()]
+            if "Exchange" in below:
+                if "REPARTITION_BY_NUM" in below:
+                    bad.append(f"fixed-count exchange under {op[:60]}: {below[:120]}")
+            elif below.startswith(_ARROW_KERNELS):
+                bad.append(f"stacked Arrow kernels: {op[:60]} over {below[:60]}")
+            else:
+                todo.extend(children)
+    return bad
+
+
+def test_arrow_kernels_one_round_trip_per_partition(batch_plans):
+    """Engine-wide Python-stage contract: every Python task pays a
+    fixed start-up cost whatever its input size, so each Arrow
+    kernel must run once per partition of a byte-sized input. The
+    nearest exchange below a kernel must be key-only (AQE coalesces
+    it by bytes), never a fixed-count REPARTITION_BY_NUM that starts
+    idle Python workers on a small input and caps a large one; and
+    no second Arrow kernel may sit between them (two kernels in one
+    task start two Python runners and move the intermediate rows
+    through Arrow twice)."""
+    bad = {}
+    for name, plan in batch_plans.items():
+        violations = _arrow_kernel_violations(plan)
+        if violations:
+            bad[name] = violations
+    assert not bad, "Arrow-kernel stages off the contract:\n" + "\n".join(
+        f"{n}: {v}" for n, vs in sorted(bad.items()) for v in vs
+    )
+
+
+def test_arrow_kernel_contract_catches_fixed_fanout_and_stacking():
+    """The plan walk flags both shapes it guards and spares a
+    key-only exchange and a kernel fed straight by a scan."""
+    fixed = (
+        "MapInPandas f(a#1)#2, [b#3], false\n"
+        "+- Exchange hashpartitioning(a#1, 8), REPARTITION_BY_NUM, [plan_id=1]\n"
+        "   +- FileScan parquet [a#1]\n"
+    )
+    stacked = (
+        "MapInPandas g(b#3)#4, [c#5], false\n"
+        "+- MapInPandas f(a#1)#2, [b#3], false\n"
+        "   +- Exchange hashpartitioning(a#1, 8), REPARTITION_BY_COL, [plan_id=1]\n"
+        "      +- FileScan parquet [a#1]\n"
+    )
+    clean = (
+        "BroadcastHashJoin [b#3], [b#6], Inner, BuildRight, false\n"
+        ":- MapInPandas f(a#1)#2, [b#3], false\n"
+        ":  +- Exchange hashpartitioning(a#1, 8), REPARTITION_BY_COL, [plan_id=1]\n"
+        ":     +- Exchange hashpartitioning(a#1, 8), REPARTITION_BY_NUM, [plan_id=2]\n"
+        ":        +- FileScan parquet [a#1]\n"
+        "+- BroadcastExchange HashedRelationBroadcastMode(List(input[0, int, false]),false)\n"
+        "   +- MapInArrow h(b#6)#7, [b#6], false\n"
+        "      +- FileScan parquet [b#6]\n"
+    )
+    assert len(_arrow_kernel_violations(fixed)) == 1
+    assert len(_arrow_kernel_violations(stacked)) == 1
+    assert _arrow_kernel_violations(clean) == []
 
 
 # --- round-3 operator plan contracts ---------------------------------------

@@ -79,8 +79,9 @@ SECTIONS = [
     ),
     (
         "pdf_to_pages",
-        "One mapInPandas fan-out stage over the repartitioned doc scan — "
-        "page explosion happens executor-side in Arrow batches.",
+        "One mapInPandas fan-out stage over a key-only doc exchange that "
+        "AQE sizes by bytes — page explosion happens executor-side in "
+        "Arrow batches.",
         False,
     ),
     (
