@@ -10,14 +10,23 @@ Design notes for the cluster:
   beyond the watermark are dropped deterministically;
 - the aggregation is keyed by (window, event_type) so state
   partitions across executors;
-- sinks go through ``writeStream`` with checkpointing; tests use
-  ``trigger(availableNow=True)`` + a memory sink to drain a bounded
-  file source and compare against the batch plan.
+- every registered query runs through ONE bounded drain, ``_drain``:
+  ``trigger(availableNow=True)`` into a memory sink over a staged
+  landing directory, on a throwaway checkpoint whose state-store
+  partition count is sized from the source bytes the way AQE sizes a
+  batch shuffle. The drain fails loudly at its ``DRAIN_TIMEOUT_S``
+  cap, and the gate compares what it drained against the batch plan.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import math
 import os
+import shutil
+import tempfile
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,31 +45,39 @@ _SCHEMA_MEMO: dict[tuple[str, str], object] = {}
 
 # Staged landing-dir memo (r13): the standard staging is IDENTICAL
 # for every streaming query over the same corpus — a tmp dir with an
-# events.parquet symlink (± the watermark sentinel row) — yet each of
-# the 16 queries re-ran mkdtemp + symlink + a pyarrow footer read +
-# a 1-row parquet write inside its timed region (VERDICT r12 #8:
-# staging is setup, not the state machine). One staged dir per
-# (session, sf_dir, sentinel?) now serves them all; bespoke layouts
-# (replay's a/b split) keep their own staging. Checkpoints stay
-# strictly per-query — only the immutable SOURCE directory is shared.
+# events.parquet symlink (± the watermark sentinel row). One staged
+# dir per (session, sf_dir, sentinel?) serves them all; bespoke
+# layouts (replay's a/b split) stage and remove their own. The dirs
+# are deleted by clear_staged_dirs(), which caching.clear_all_memos()
+# calls and which runs at interpreter exit. Checkpoints stay strictly
+# per-query.
 _SRC_DIR_MEMO: dict[tuple[str, str, bool], str] = {}
 
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str, sentinel: bool) -> str:
-    import os as _os
-    import tempfile as _tempfile
-
     key = (spark.sparkContext.applicationId, sf_dir, sentinel)
     d = _SRC_DIR_MEMO.get(key)
-    if d is None or not _os.path.isdir(d):
+    if d is None or not os.path.isdir(d):
         for stale in [k for k in _SRC_DIR_MEMO if k[0] != key[0]]:
-            _SRC_DIR_MEMO.pop(stale, None)
-        d = _tempfile.mkdtemp(prefix="dtt-stream-src-")
-        _os.symlink(_os.path.abspath(f"{sf_dir}/events.parquet"), f"{d}/events.parquet")
+            shutil.rmtree(_SRC_DIR_MEMO.pop(stale), ignore_errors=True)
+        d = tempfile.mkdtemp(prefix="dtt-stream-src-")
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{d}/events.parquet")
         if sentinel:
             _write_watermark_sentinel(d, sf_dir)
         _SRC_DIR_MEMO[key] = d
     return d
+
+
+def clear_staged_dirs() -> int:
+    """Delete every staged landing dir and forget it; returns how many."""
+    n = len(_SRC_DIR_MEMO)
+    for d in _SRC_DIR_MEMO.values():
+        shutil.rmtree(d, ignore_errors=True)
+    _SRC_DIR_MEMO.clear()
+    return n
+
+
+atexit.register(clear_staged_dirs)
 
 
 def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
@@ -74,19 +91,15 @@ def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
     events_event_time, which normalize either shape. Extra source
     options (e.g. maxFilesPerTrigger for multi-batch drains) pass
     through."""
-    import os as _os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # key on the realpath of the first parquet actually present —
     # ADVICE r12 #3: hardcoding events.parquet made the a/b-split
     # staging (replay dedup) miss forever AND leak one unique
     # per-tmp-dir key per call within a session
-    import glob as _glob
-
-    files = sorted(_glob.glob(f"{source_dir}/*.parquet"))
+    files = sorted(glob.glob(f"{source_dir}/*.parquet"))
     key = (
         spark.sparkContext.applicationId,
-        _os.path.realpath(files[0]) if files else source_dir,
+        os.path.realpath(files[0]) if files else source_dir,
     )
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
@@ -99,30 +112,88 @@ def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
         reader = reader.option(k, v)
     return reader.parquet(source_dir)
 
-# A streaming query's state-store partition count is pinned to
-# spark.sql.shuffle.partitions at FIRST checkpoint — it is the one
-# knob that must be sized to the keyspace up front (repartitioning
-# state later means a new checkpoint). Each HDFS-backed store
-# instance carries per-microbatch open/commit overhead, so
-# over-partitioning a small keyspace costs real wall-clock: the
-# bounded gate drains here run 2-3× faster at 8 than at 32. At
-# 100 TB you RAISE this (state ∝ live keys), which is exactly why
-# it is surfaced as an explicit env knob instead of inherited
-# silently from the batch shuffle setting.
-STREAM_STATE_PARTITIONS = int(os.environ.get("DTT_STREAM_STATE_PARTITIONS", "8"))
+
+# A streaming query's state-store partition count is frozen into its
+# checkpoint: the query reads spark.sql.shuffle.partitions when it
+# starts, and every later run on that checkpoint keeps the count. AQE
+# cannot coalesce a state store the way it coalesces a batch shuffle.
+# Each HDFS-backed store instance writes a delta file and its checksum
+# sidecars on every micro-batch, so a count far above what the input
+# needs is a fixed fee per partition on every drain. `_drain` starts
+# each query on a fresh checkpoint, so it sizes the count the way AQE
+# sizes a batch shuffle: one partition per
+# spark.sql.adaptive.advisoryPartitionSizeInBytes of source bytes,
+# capped at spark.sql.shuffle.partitions. A multi-TB backfill reaches
+# the cap; a small landing dir gets one partition.
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int = STREAM_STATE_PARTITIONS):
+def _state_partitions(spark: SparkSession, n: int):
     """Scope spark.sql.shuffle.partitions to the stream start so the
-    checkpoint is created with a state layout sized for the keyspace,
-    without disturbing the session's batch shuffle setting."""
+    checkpoint is created with ``n`` state partitions, without
+    disturbing the session's batch shuffle setting."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _state_partition_count(spark: SparkSession, src_dir: str) -> int:
+    """clamp(ceil(source bytes / advisory partition size), 1,
+    spark.sql.shuffle.partitions), where source bytes are the summed
+    sizes of the ``*.parquet`` files in ``src_dir`` (symlinks
+    followed)."""
+    n_bytes = sum(os.path.getsize(p) for p in glob.glob(f"{src_dir}/*.parquet"))
+    advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(advisory)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, math.ceil(n_bytes / target)))
+
+
+def run_available_now(
+    stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str = "complete"
+):
+    """Drain all available input with availableNow and park results
+    in a memory sink (test/backfill harness)."""
+    return (
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+# Cap on one bounded drain: a drain still running then is an error,
+# never a partial result.
+DRAIN_TIMEOUT_S = 300
+
+
+def _drain(df: DataFrame, prefix: str, output_mode: str, src_dir: str) -> DataFrame:
+    """Run ``df`` as one bounded availableNow drain into a memory sink
+    and return the sink table. The checkpoint is a fresh temp dir whose
+    state layout ``_state_partition_count`` sizes from ``src_dir``; it
+    is removed once the query has terminated, because the sink holds
+    the rows and nothing reopens it. A drain still running at
+    DRAIN_TIMEOUT_S is stopped and raises TimeoutError instead of
+    returning a partial sink."""
+    spark = df.sparkSession
+    name = f"stream_{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix=f"dtt-stream-{prefix}-ckpt-")
+    try:
+        with _state_partitions(spark, _state_partition_count(spark, src_dir)):
+            q = run_available_now(df, name, ckpt, output_mode)
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                q.stop()
+                raise TimeoutError(
+                    f"streaming drain {name} did not finish within {DRAIN_TIMEOUT_S} s"
+                )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(name)
 
 
 # Watermark-close sentinel: a single far-future row appended to the
@@ -146,7 +217,9 @@ def _write_watermark_sentinel(src_dir: str, sf_dir: str) -> None:
     comes from the parquet FOOTER statistics — a driver-side
     metadata read, no data scan; the sentinel row carries the
     file's exact arrow schema so the stream's schema probe sees one
-    homogeneous directory."""
+    homogeneous directory. Its mtime is set 1 s after the newest
+    ``*.parquet`` already in the directory (symlink or target, whichever
+    is later), so a drain reads it after the real events."""
     import datetime as _dt
 
     import pyarrow as pa
@@ -184,7 +257,16 @@ def _write_watermark_sentinel(src_dir: str, sf_dir: str) -> None:
             v = None
         values[field.name] = pa.array([v], type=field.type)
     table = pa.table(values, schema=pa.schema(list(pf.schema_arrow)))
-    pq.write_table(table, f"{src_dir}/zz-watermark-sentinel.parquet")
+    newest_ns = max(
+        max(os.stat(p).st_mtime_ns, os.lstat(p).st_mtime_ns)
+        for p in glob.glob(f"{src_dir}/*.parquet")
+    )
+    out = f"{src_dir}/zz-watermark-sentinel.parquet"
+    pq.write_table(table, out)
+    # the file source reads files in modification-time order; a file
+    # copied in just before can share the sentinel's millisecond, and
+    # listing order would then decide which is read first
+    os.utime(out, ns=(newest_ns + 1_000_000_000,) * 2)
 
 
 def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -302,12 +384,6 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     `events_tumbling_agg` bucket arithmetic exactly and the same
     DuckDB oracle value-checks the streaming runtime — the
     one-codebase-two-runtimes guarantee, enforced by the gate."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     # the file stream source requires a DIRECTORY; stage one with a
     # symlink to the table file (a real deployment streams from the
     # landing directory to begin with)
@@ -330,18 +406,8 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_value",
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).filter(F.col("event_type") != SENTINEL_TYPE)
+    drained = _drain(agg, "tumbling", "append", src_dir)
+    return drained.filter(F.col("event_type") != SENTINEL_TYPE)
 
 
 # oracle: identical to the batch tumbling agg — the stream must
@@ -376,12 +442,6 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window's exact semantics: an event at t joins the open
     session iff t < last + gap (strictly), and the emitted window
     ends at last + gap."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
     raw = _read_raw(spark, src_dir)
     ev = raw.withColumn("event_time", events_event_time(raw))
@@ -400,18 +460,8 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"stream_sessionize_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-sess-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+    drained = _drain(agg, "sessionize", "append", src_dir)
+    return drained.filter(F.col("user_id") != SENTINEL_USER)
 
 
 # session_window replay: new session iff gap >= 30 min (session
@@ -455,12 +505,6 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded batch agg after the availableNow drain), and the DuckDB
     oracle recomputes the same distinct-triple counts — the
     streaming dedup state machine itself is value-checked."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     five_min_us = 300_000_000
@@ -473,19 +517,8 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("bucket_time", "10 minutes")
         .dropDuplicates(["user_id", "event_type", "bucket_time"])
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-dedup-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     return (
-        spark.table(name)
+        _drain(deduped, "dedup", "append", src_dir)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique"),
@@ -523,12 +556,6 @@ def events_stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch `events_hopping_agg`, so the same DuckDB cross-join
     oracle value-checks the streaming runtime's sliding-window state
     machine."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
     raw = _read_raw(spark, src_dir)
     ev = raw.withColumn("event_time", events_event_time(raw))
@@ -546,18 +573,8 @@ def events_stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_hopping_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-hop-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).filter(F.col("event_type") != SENTINEL_TYPE)
+    drained = _drain(agg, "hopping", "append", src_dir)
+    return drained.filter(F.col("event_type") != SENTINEL_TYPE)
 
 
 def _hopping_oracle() -> str:
@@ -578,25 +595,10 @@ def events_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     update-mode sink holds one row per user per microbatch, so the
     final state per user is the row with the highest running count
     (max_by), which on a bounded drain equals the batch aggregate."""
-    import os
-    import tempfile
-    import uuid
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     totals = stream_user_totals(raw)
-    name = f"stream_user_totals_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    tbl = spark.table(name)
+    tbl = _drain(totals, "user_totals", "update", src_dir)
     return tbl.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("total_value", "n_events") + 1e-9, 4).alias("total_value"),
@@ -669,9 +671,6 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded 100 TB/day feed. The drained pairs are then collapsed
     per user into exact-integer (n_pairs, total/max lag) so the
     DuckDB range-join oracle hashes stably."""
-    import tempfile
-    import uuid
-
     clicks = _interval_join_side(
         spark, sf_dir, "click", "c_user", "click_time", "click_us"
     )
@@ -692,19 +691,9 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_user").alias("user_id"),
         (F.col("purchase_us") - F.col("click_us")).alias("lag_us"),
     )
-    name = f"stream_interval_join_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ij-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     return (
-        spark.table(name)
+        _drain(joined, "interval_join", "append", src_dir)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -740,9 +729,6 @@ def events_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataF
     DuckDB left-join replay hash-matches without modeling microbatch
     timing. The boundary exclusion is applied identically in both
     engines."""
-    import tempfile
-    import uuid
-
     clicks = _interval_join_side(
         spark, sf_dir, "click", "c_user", "click_time", "click_us"
     )
@@ -764,25 +750,15 @@ def events_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataF
         "click_us",
         "purchase_us",
     )
-    name = f"stream_interval_oj_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-oj-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
+    drained = _drain(joined, "interval_oj", "append", src_dir)
 
     # final global watermark recomputed from the data (shared
     # helper; see _final_interval_watermark_us)
     wm_us = _final_interval_watermark_us(spark, sf_dir)
     safe_cut = wm_us - _IJ_INTERVAL_US - _IJ_SAFE_SLACK_US
     return (
-        spark.table(name)
-        .filter(F.col("click_us") <= F.lit(safe_cut))
+        drained.filter(F.col("click_us") <= F.lit(safe_cut))
         .groupBy("user_id")
         .agg(
             F.sum(F.col("purchase_us").isNotNull().cast("long")).alias("n_matched"),
@@ -845,9 +821,6 @@ def events_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFr
     final match status under either strictness, so the DuckDB
     full-join replay with the identical per-side cut hash-matches
     without modeling microbatch timing."""
-    import tempfile
-    import uuid
-
     clicks = _interval_join_side(
         spark, sf_dir, "click", "c_user", "click_time", "click_us"
     )
@@ -869,17 +842,8 @@ def events_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFr
         "click_us",
         "purchase_us",
     )
-    name = f"stream_interval_fj_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-fj-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
+    drained = _drain(joined, "interval_fj", "append", src_dir)
 
     # final global watermark recomputed from the data (shared
     # helper; see _final_interval_watermark_us)
@@ -889,8 +853,7 @@ def events_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("purchase_us").isNull() | (F.col("purchase_us") <= F.lit(safe_cut))
     )
     return (
-        spark.table(name)
-        .filter(in_band)
+        drained.filter(in_band)
         .groupBy("user_id")
         .agg(
             F.sum(
@@ -974,12 +937,6 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     this migration ZERO complete-mode sinks remain in the registry
     (pinned by tests/test_streaming.py::
     test_no_complete_mode_sinks_remain)."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     # the static reference: batch aggregate over the same landing
     # table (stand-in for the warehouse's historical stats table)
     static_stats = (
@@ -997,20 +954,9 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("above_mean").alias("n_above_mean"),
         F.max("mean_value").alias("mean_value"),
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-enrich-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     # last-update-wins over the update log: n_events only grows for
     # a key, so the max struct is that key's final state.
-    log = spark.table(name)
+    log = _drain(agg, "enrich", "update", src_dir)
     final = F.max(F.struct("n_events", "n_above_mean", "mean_value")).alias("s")
     return (
         log.groupBy("event_type")
@@ -1069,35 +1015,21 @@ def events_stream_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup runnable forever on an unbounded feed. The drained result
     aggregates per type so the DuckDB oracle (plain distinct replay)
     hashes stably."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     src_dir = tempfile.mkdtemp(prefix="dtt-stream-replay-src-")
     os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-a.parquet")
     os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-b.parquet")
-    raw = _read_raw(spark, src_dir)
-    deduped = (
-        raw.withColumn("event_time", events_event_time(raw))
-        .withWatermark("event_time", "60 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    name = f"stream_replay_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-replay-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
+    try:
+        raw = _read_raw(spark, src_dir)
+        deduped = (
+            raw.withColumn("event_time", events_event_time(raw))
+            .withWatermark("event_time", "60 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"])
         )
-        q.awaitTermination(300)
+        drained = _drain(deduped, "replay_dedup", "append", src_dir)
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        drained.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.count_distinct("event_id").alias("n_unique_ids"),
@@ -1138,12 +1070,6 @@ def events_stream_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     node, and the sentinel would then never advance the watermark.)
     Value-checked against the batch DAU oracle — the stream and the
     batch `events_active_users` agree exactly."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     day_us = 86_400_000_000
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
     raw = _read_raw(spark, src_dir)
@@ -1158,18 +1084,7 @@ def events_stream_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("dau"))
         .select(F.unix_micros(F.col("w.start")).alias("day_start_us"), "dau")
     )
-    name = f"stream_dau_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            dau.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-dau-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(dau, "dau", "append", src_dir)
 
 
 EVENTS_STREAM_DAILY_USERS_SQL = """
@@ -1269,25 +1184,10 @@ def events_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the custom per-key state kernel reproduces the batch
     operator bit-for-bit (the stream/batch-parity property Lambda
     architectures have to assume)."""
-    import os
-    import tempfile
-    import uuid
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     stream = stream_ewma(raw.withColumn("ts_us", events_ts_us(raw)))
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).select("event_id", "user_id", "ewma")
+    return _drain(stream, "ewma", "append", src_dir).select("event_id", "user_id", "ewma")
 
 
 # identical contract to the batch operator — the stream must equal it
@@ -1388,25 +1288,11 @@ def events_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stateful streaming z-score detector drained with
     availableNow and value-checked against the batch prefix-window
     SQL — stream/batch parity for an O(1)-state online scorer."""
-    import os
-    import tempfile
-    import uuid
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     stream = stream_anomaly(raw.withColumn("ts_us", events_ts_us(raw)))
-    name = f"stream_anomaly_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).select("event_id", "user_id", "z", "is_anomaly")
+    drained = _drain(stream, "anomaly", "append", src_dir)
+    return drained.select("event_id", "user_id", "z", "is_anomaly")
 
 
 EVENTS_STREAM_ANOMALY_SQL = f"""
@@ -1569,12 +1455,6 @@ def events_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
     each user's last open session provably times out during the
     bounded drain (on a live feed, arrivals advance the watermark
     the same way)."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
     raw = _read_raw(spark, src_dir)
     ev = (
@@ -1583,18 +1463,8 @@ def events_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("event_time", "60 minutes")
     )
     sessions = stream_session_timeout(ev)
-    name = f"stream_sto_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-sto-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+    drained = _drain(sessions, "sto", "append", src_dir)
+    return drained.filter(F.col("user_id") != SENTINEL_USER)
 
 
 def events_stream_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1616,30 +1486,13 @@ def events_stream_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch `events_bitmap_rollup` day grain, so the gate
     value-checks the streaming runtime against the same DuckDB
     oracle."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
-
     from datatransformertools_spark.operators.events import DAY_US, EVENING_MASK, MORNING_MASK
 
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     bm = stream_bitmap_rollup(raw.withColumn("ts_us", events_ts_us(raw)))
-    name = f"stream_bitmap_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            bm.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     final = (
-        spark.table(name)
+        _drain(bm, "bitmap", "update", src_dir)
         .groupBy("user_id", "day_start")
         .agg(F.max("hour_bitmap").alias("hour_bitmap"))
     )
@@ -1701,11 +1554,6 @@ def events_stream_top_k_per_window(spark: SparkSession, sf_dir: str) -> DataFram
     because rank needs the window closed anyway. Face matches the
     batch `events_top_k_per_window`, so the gate value-checks the
     streaming state math against the same oracle."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F  # noqa: F811 (self-contained)
     from pyspark.sql.window import Window
 
     from datatransformertools_spark.operators.events import WINDOW_TOP_K
@@ -1715,18 +1563,7 @@ def events_stream_top_k_per_window(spark: SparkSession, sf_dir: str) -> DataFram
     per_user = stream_window_user_totals(
         raw.withColumn("event_time", events_event_time(raw))
     )
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dtt-stream-ckpt-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    drained = spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+    drained = _drain(per_user, "topk", "append", src_dir).filter(F.col("user_id") != SENTINEL_USER)
     rank = F.row_number().over(
         Window.partitionBy("window_start_us").orderBy(
             F.col("total_value").desc(), F.col("user_id")
@@ -1777,20 +1614,6 @@ QUERIES = {
     ),
 }
 
-
-def run_available_now(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str = "complete"
-):
-    """Drain all available input with availableNow and park results
-    in a memory sink (test/backfill harness)."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_to_parquet_idempotent(

@@ -48,7 +48,7 @@ class TestStreamSessionTimeout:
             .withWatermark("event_time", "60 minutes")
         )
         name = f"sto_{uuid.uuid4().hex[:8]}"
-        with _state_partitions(spark):
+        with _state_partitions(spark, 8):
             q = (
                 stream_session_timeout(ev)
                 .writeStream.format("memory")

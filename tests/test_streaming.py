@@ -3,11 +3,14 @@ batch plan — the one-codebase-two-runtimes guarantee."""
 
 from __future__ import annotations
 
+import re
 import shutil
 import tempfile
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from datatransformertools_spark.sources.tables import events_event_time
 from datatransformertools_spark.streaming.events import (
@@ -182,14 +185,13 @@ def test_stream_interval_join_boundary(spark):
 
 
 def test_checkpoint_freezes_state_partition_count(spark, sf_dir):
-    """The documented DTT_STREAM_STATE_PARTITIONS invariant: the
-    state-store layout is pinned to spark.sql.shuffle.partitions at
-    FIRST checkpoint, and a later drain against the SAME checkpoint
+    """The state-store layout is pinned to spark.sql.shuffle.partitions
+    at FIRST checkpoint, and a later drain against the SAME checkpoint
     keeps the frozen count even when the session setting changed in
-    between (a driver re-run with a different env must not corrupt
-    or re-shard existing state). Also asserts the second drain picks
-    up only the new file and the accumulated counts stay correct —
-    i.e. state actually survived the re-open."""
+    between (a driver re-run with a different setting must not
+    corrupt or re-shard existing state). Also asserts the second drain
+    picks up only the new file and the accumulated counts stay
+    correct — i.e. state actually survived the re-open."""
     import json
 
     from datatransformertools_spark.streaming.events import _state_partitions
@@ -346,7 +348,7 @@ def test_watermark_evicts_state_and_closes_windows(spark, sf_dir):
         raw.withColumn("event_time", events_event_time(raw))
     )
     name = f"evict_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
+    with _state_partitions(spark, 8):
         q = (
             per_user.writeStream.format("memory")
             .queryName(name)
@@ -408,7 +410,7 @@ def test_bitmap_rollup_update_mode_state_bounded(spark, sf_dir):
     raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
     bm = stream_bitmap_rollup(raw.withColumn("ts_us", events_ts_us(raw)))
     name = f"bmu_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
+    with _state_partitions(spark, 8):
         q = (
             bm.writeStream.format("memory")
             .queryName(name)
@@ -468,7 +470,7 @@ def test_stream_dau_append_emits_each_day_once_and_evicts(spark, sf_dir):
         .select(F.unix_micros(F.col("w.start")).alias("day_start_us"), "dau")
     )
     name = f"dau_t_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
+    with _state_partitions(spark, 8):
         q = (
             dau.writeStream.format("memory")
             .queryName(name)
@@ -508,15 +510,19 @@ def test_no_complete_mode_sinks_remain(spark, sf_dir):
     has ZERO complete-mode sinks, period: every streaming query is
     watermark-bound append/update, and the one catalog-bounded
     scoreboard (events_stream_enrich) runs in update mode with a
-    last-update-wins reconstruction on the face."""
+    last-update-wins reconstruction on the face. Every registered
+    query drains through the one `_drain` call path."""
     import inspect
 
     from datatransformertools_spark import streaming
 
     src = inspect.getsource(streaming.events)
     assert src.count('.outputMode("complete")') == 0
+    modes = re.findall(r'_drain\([^)]*, "(\w+)", [^)]*\)', src)
+    assert len(modes) == len(streaming.events.QUERIES)
+    assert "complete" not in modes
     fn_src = inspect.getsource(streaming.events.events_stream_enrich)
-    assert '.outputMode("update")' in fn_src
+    assert '_drain(agg, "enrich", "update", src_dir)' in fn_src
     assert "last-update-wins" in fn_src
 
 
@@ -561,7 +567,7 @@ def test_enrich_update_emits_only_touched_keys(spark, sf_dir):
         F.max("mean_value").alias("mean_value"),
     )
     name = f"enrich_upd_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
+    with _state_partitions(spark, 8):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -595,4 +601,170 @@ def test_enrich_update_emits_only_touched_keys(spark, sf_dir):
         .collect()
     }
     assert got == want
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def _session_conf(spark, key, value):
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_state_partition_count_sizes_by_source_bytes(spark, sf_dir):
+    """The drain's state layout is one partition per advisory
+    partition size of source bytes, capped at
+    spark.sql.shuffle.partitions: 1 for a staged corpus of a few MB at
+    the 64MB default, and min(cap, ceil(bytes / 4096)) at 4KB."""
+    import math
+    import os
+
+    from datatransformertools_spark.streaming.events import (
+        _staged_events_dir,
+        _state_partition_count,
+    )
+
+    src = _staged_events_dir(spark, sf_dir, sentinel=False)
+    n_bytes = os.path.getsize(f"{sf_dir}/events.parquet")
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _state_partition_count(spark, src) == 1
+    with _session_conf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB"):
+        assert _state_partition_count(spark, src) == min(cap, math.ceil(n_bytes / 4096))
+
+
+class _StateLayout(StreamingQueryListener):
+    """Records, per query-name prefix, the numShufflePartitions every
+    state operator reported, and which queries have terminated."""
+
+    def __init__(self):
+        self.names: dict = {}
+        self.parts: dict[str, set] = {}
+        self.done: set[str] = set()
+
+    def onQueryStarted(self, event):
+        self.names[event.id] = event.name.rsplit("_", 1)[0]
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.parts.setdefault(p.name.rsplit("_", 1)[0], set()).update(
+            op.numShufflePartitions for op in p.stateOperators
+        )
+
+    def onQueryTerminated(self, event):
+        self.done.add(self.names.get(event.id))
+
+
+def test_drain_state_layout_follows_source_bytes(spark, sf_dir):
+    """events_stream_tumbling and events_stream_dedup return the same
+    rows whether their state store has 1 partition (64MB default) or
+    several (4KB advisory size), and the running query reports the
+    partition count _state_partition_count computed for its source."""
+    import time
+
+    from datatransformertools_spark.streaming.events import (
+        _staged_events_dir,
+        _state_partition_count,
+        events_stream_dedup,
+        events_stream_tumbling,
+    )
+
+    cases = [
+        ("stream_tumbling", events_stream_tumbling, True),
+        ("stream_dedup", events_stream_dedup, False),
+    ]
+    listener = _StateLayout()
+    spark.streams.addListener(listener)
+    try:
+        runs = {}
+        for size in ("64MB", "4KB"):
+            with _session_conf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", size):
+                want = {
+                    name: _state_partition_count(
+                        spark, _staged_events_dir(spark, sf_dir, sentinel=sentinel)
+                    )
+                    for name, _, sentinel in cases
+                }
+                rows = {name: sorted(fn(spark, sf_dir).collect()) for name, fn, _ in cases}
+            deadline = time.time() + 60
+            while not listener.done >= want.keys() and time.time() < deadline:
+                time.sleep(0.1)
+            listener.done.clear()
+            got = {name: listener.parts.pop(name, set()) for name in want}
+            assert got == {name: {n} for name, n in want.items()}, (size, got)
+            runs[size] = (want, rows)
+        assert set(runs["64MB"][0].values()) == {1}
+        if int(spark.conf.get("spark.sql.shuffle.partitions")) > 1:
+            assert min(runs["4KB"][0].values()) > 1
+        assert runs["4KB"][1] == runs["64MB"][1]
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_drain_raises_at_its_cap(spark, sf_dir, monkeypatch):
+    """A drain whose awaitTermination reports it still running at the
+    cap is stopped and raises TimeoutError naming the query; it never
+    returns a partial memory sink, and its checkpoint is removed."""
+    import os
+
+    import pytest
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from datatransformertools_spark.streaming.events import _drain, _staged_events_dir
+
+    src = _staged_events_dir(spark, sf_dir, sentinel=False)
+    stream = stream_dedup(read_events_stream(spark, src))
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    with pytest.raises(TimeoutError, match="stream_capped_"):
+        _drain(stream, "capped", "append", src)
+    assert spark.streams.active == []
+    left = [n for n in os.listdir(tempfile.gettempdir()) if n.startswith("dtt-stream-capped-")]
+    assert left == []
+
+
+def test_streaming_temp_dirs_removed(spark, sf_dir):
+    """Drains leave no checkpoint behind, the replay query removes its
+    own a/b landing dir, and clear_all_memos() deletes the shared
+    staged dirs: no new dtt-stream-* dir outlives its use."""
+    import os
+
+    from datatransformertools_spark.caching import clear_all_memos
+    from datatransformertools_spark.streaming.events import (
+        events_stream_dedup,
+        events_stream_replay_dedup,
+        events_stream_tumbling,
+    )
+
+    def stream_dirs():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("dtt-stream-")}
+
+    before = stream_dirs()
+    for fn in (events_stream_tumbling, events_stream_dedup, events_stream_replay_dedup):
+        assert fn(spark, sf_dir).count() > 0
+    clear_all_memos()
+    assert stream_dirs() - before == set()
+
+
+def test_sentinel_is_read_after_the_real_events(sf_dir):
+    """The file source reads files in mtime order, so the watermark
+    sentinel must be strictly the newest file in its landing dir —
+    by a full second, whether the events file was copied in (tests)
+    or symlinked (staged dirs) just before it was written."""
+    import os
+
+    from datatransformertools_spark.streaming.events import _write_watermark_sentinel
+
+    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-mtime-"))
+    shutil.copy(f"{sf_dir}/events.parquet", tmp / "events.parquet")
+    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), tmp / "linked.parquet")
+    _write_watermark_sentinel(str(tmp), sf_dir)
+    sentinel_ns = os.stat(tmp / "zz-watermark-sentinel.parquet").st_mtime_ns
+    for name in ("events.parquet", "linked.parquet"):
+        p = tmp / name
+        assert sentinel_ns >= max(os.stat(p).st_mtime_ns, os.lstat(p).st_mtime_ns) + 10**9
     shutil.rmtree(tmp, ignore_errors=True)
