@@ -1,21 +1,41 @@
-"""Session-scoped cache tracking for stage tables.
+"""The two lifetimes of what the engine keeps between plans.
 
-Several operators persist intermediate stage tables (shingles,
-minhash signatures, IoU pairs) that multiple downstream plans reuse
-within one query run. A bare ``.persist()`` inside a plan builder
-has no release path, so a long-lived session running many queries
-(bench.py runs the whole registry) accumulates cached blocks it can
-never free. ``track()`` registers every such frame; callers that
-own the session lifecycle (bench.py per query, tests per module)
-call ``release_caches()`` to drop them all.
+Per-query: ``track()`` persists a stage table that several plans of
+ONE query reuse (shingles, minhash signatures, IoU pairs). A bare
+``.persist()`` inside a plan builder has no release path, so a
+long-lived session running many queries (bench.py runs the whole
+registry) would accumulate cached blocks it can never free. The
+caller that owns the query (bench.py per query, the test session at
+its end) calls ``release_caches()`` to drop every tracked frame.
 
-At cluster scale the same role is played by writing the stage table
-to storage; in-session, persist+track is the zero-copy equivalent.
+Cross-query: a ``Memo`` holds a value that SEVERAL registered queries
+start from (shingle and τ-pair tables, IoU pairs, co-purchase edges,
+trained centroids and weights, staged streaming landing dirs), built
+once per (session, key). ``release_caches()`` deliberately does not
+own these; every ``Memo`` registers itself on construction, so
+``clear_all_memos()`` releases all of them without a list to keep.
+The policy lives here only:
+
+- an entry is keyed on ``(applicationId, key)``. A miss first drops
+  the entries of other applications (one live SparkSession per
+  process, so their handles are dead weight), then the least recently
+  used entries down to ``MEMO_CAP``, then builds;
+- release follows the value's type: a DataFrame is persisted
+  MEMORY_AND_DISK on build and unpersisted on release, a
+  ``TemporaryDirectory`` is removed, any other value is dropped.
+
+A memo key names immutable data: a corpus directory is read-only for
+the process lifetime, and a pipeline that regenerates one in place
+calls ``clear_all_memos()``. At cluster scale both roles are played by
+writing the stage table to storage once per corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import tempfile
+from collections.abc import Callable, Hashable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
@@ -41,34 +61,60 @@ def release_caches() -> int:
     return n
 
 
-def clear_all_memos(unpersist: bool = True) -> int:
-    """Release every CROSS-QUERY memo: the _FrameMemo stage tables
-    (shingles, τ-pairs, IoU pairs, co-purchase edges, …) plus the
-    scalar training memos (k-means centroids, corpus-K, logreg
-    weights, BPE merge tables, exact-pair counts, streaming schema
-    probes) and the staged streaming landing dirs, which are deleted.
-    release_caches() deliberately does NOT own these —
-    they exist for cross-query reuse — so the bench's memo-cold
-    isolated tag calls this to time a query that pays its own memo
-    builds (VERDICT r12 #2: memoized families must report both the
-    build-payer and the memo-rider number)."""
-    from datatransformertools_spark.operators import (
-        dedup,
-        quality,
-        similarity,
-        text_analysis,
-    )
-    from datatransformertools_spark.streaming import events as streaming_events
+# Entries one Memo keeps per application: enough for the few corpora
+# a session reads, small enough that a long test session touching many
+# tmp-path corpora cannot pile up executor storage.
+MEMO_CAP = 4
 
-    n = dedup.clear_dedup_memos(unpersist)
-    for d in (
-        dedup._EXACT_PAIRS_MEMO,
-        quality._W_MEMO,
-        similarity._K_MEMO,
-        similarity._CENT_MEMO,
-        text_analysis._BPE_MERGES_MEMO,
-        streaming_events._SCHEMA_MEMO,
-    ):
-        n += len(d)
-        d.clear()
-    return n + streaming_events.clear_staged_dirs()
+_MEMOS: list[Memo] = []
+
+
+def _release(value: object) -> None:
+    try:
+        if isinstance(value, DataFrame):
+            value.unpersist()
+        elif isinstance(value, tempfile.TemporaryDirectory):
+            value.cleanup()
+    except Exception:
+        pass  # session may already be stopped
+
+
+class Memo:
+    """A cross-query memo under the policy in the module docstring."""
+
+    def __init__(self) -> None:
+        self._entries: dict[tuple[str, Hashable], object] = {}  # insertion order = LRU
+        _MEMOS.append(self)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get_or_build(self, spark: SparkSession, key: Hashable, build: Callable[[], object]):
+        app_id = spark.sparkContext.applicationId
+        entry = (app_id, key)
+        if entry in self._entries:
+            value = self._entries.pop(entry)
+        else:
+            for stale in [k for k in self._entries if k[0] != app_id]:
+                _release(self._entries.pop(stale))
+            while len(self._entries) >= MEMO_CAP:
+                _release(self._entries.pop(next(iter(self._entries))))
+            value = build()
+            if isinstance(value, DataFrame):
+                value = value.persist(StorageLevel.MEMORY_AND_DISK)
+        self._entries[entry] = value  # (re-)insert as most recently used
+        return value
+
+    def clear(self) -> int:
+        """Release every entry; returns how many."""
+        n = len(self._entries)
+        while self._entries:
+            _release(self._entries.popitem()[1])
+        return n
+
+
+def clear_all_memos() -> int:
+    """Release the entries of every ``Memo``; returns how many. The
+    bench's memo-cold isolated tag calls this to time a query that
+    pays its own memo builds."""
+    return sum(m.clear() for m in _MEMOS)

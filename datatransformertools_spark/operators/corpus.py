@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import normalize_text, tokens
 from datatransformertools_spark.operators.dedup import _SHINGLE_SQL, _shingle_df
@@ -1855,10 +1856,8 @@ TB_BUDGET_TOKENS = 1_000  # per-source token budget
 # expensive stage (full corpus scan + tokenize) and BOTH budget ops
 # start from it — memoized per (session, sf_dir) exactly like the
 # dedup shingle/pair stage tables (one materialization serves the
-# family; release path is clear_dedup_memos())
-from datatransformertools_spark.operators.dedup import _FrameMemo  # noqa: E402
-
-_TB_BSTATS_MEMO = _FrameMemo()
+# family)
+_TB_BSTATS_MEMO = Memo()
 
 
 def _tb_bstats_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.caching import track
+from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import lsh_band_keys
 from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
 from datatransformertools_spark.functions.vectors import (
@@ -67,101 +67,15 @@ COSINE_TAU = 0.3
 # ---------------------------------------------------------------------------
 
 
-class _FrameMemo:
-    """Cross-query persisted-frame memo keyed on (applicationId,
-    sf_dir). The τ-pair / shingle stage tables are consumed by
-    SEVERAL registered queries, so they persist OUTSIDE the
-    `caching.track()` registry (release_caches() runs per-query in
-    bench; the whole point here is cross-query reuse) under the same
-    immutable-sf_dir contract as similarity._CENT_MEMO. Hygiene
-    (ADVICE r6): entries keyed to other applicationIds are evicted
-    on first miss (their sessions are gone — one live SparkSession
-    per process in this engine — so the handles are dead weight),
-    the memo is LRU-capped so a long test session touching many
-    tmp-path corpora can't accumulate executor storage, and
-    `clear_dedup_memos()` is the explicit release hook alongside
-    release_caches(). At cluster scale the same role is played by
-    writing the stage table to storage once per corpus."""
-
-    def __init__(self, cap: int = 4):
-        self._frames: dict[tuple[str, str], DataFrame] = {}  # insertion order = LRU
-        self._cap = cap
-
-    def get_or_build(self, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-        from pyspark.storagelevel import StorageLevel
-
-        app_id = spark.sparkContext.applicationId
-        key = (app_id, sf_dir)
-        df = self._frames.pop(key, None)
-        if df is None:
-            for stale in [k for k in self._frames if k[0] != app_id]:
-                self._frames.pop(stale, None)
-            while len(self._frames) >= self._cap:
-                old = self._frames.pop(next(iter(self._frames)))
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            df = build().persist(StorageLevel.MEMORY_AND_DISK)
-        self._frames[key] = df  # re-insert → most recently used
-        return df
-
-    def clear(self, unpersist: bool = True) -> int:
-        n = len(self._frames)
-        while self._frames:
-            _k, df = self._frames.popitem()
-            if unpersist:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # session may already be stopped
-        return n
-
-
-_SHINGLE_MEMO = _FrameMemo()
-_CAPPED_SHINGLE_MEMO = _FrameMemo()
-_EMB_PAIRS_MEMO = _FrameMemo()
-_MINHASH_PAIRS_MEMO = _FrameMemo()
-_SIMHASH_FP_MEMO = _FrameMemo()
-_SIMHASH_PAIRS_MEMO = _FrameMemo()
-
-
-def clear_dedup_memos(unpersist: bool = True) -> int:
-    """Drop every cross-query memoized frame (shingle index, capped
-    index, τ-pairs, kNN edges, token-bucket subtotals); returns how
-    many were evicted. The
-    companion to `caching.release_caches()`, which deliberately does
-    NOT own these. `unpersist=False` when the owning session is
-    stopped."""
-    from datatransformertools_spark.operators import relational
-    from datatransformertools_spark.operators.corpus import _TB_BSTATS_MEMO
-    from datatransformertools_spark.operators.evaluation import _eval_memos
-    from datatransformertools_spark.operators.graph import _EDGES_MEMO
-    from datatransformertools_spark.operators.quality import _FEATS_MEMO
-    from datatransformertools_spark.operators.similarity import (
-        _BF_TOPK_MEMO,
-        _KNN_EDGES_MEMO,
-    )
-
-    mb = (relational._MB_PAIRS_MEMO,) if relational._MB_PAIRS_MEMO is not None else ()
-    return sum(
-        m.clear(unpersist)
-        for m in (
-            *mb,
-            *_eval_memos(),
-            _SHINGLE_MEMO,
-            _CAPPED_SHINGLE_MEMO,
-            _EMB_PAIRS_MEMO,
-            _MINHASH_PAIRS_MEMO,
-            _SIMHASH_FP_MEMO,
-            _SIMHASH_PAIRS_MEMO,
-            _KNN_EDGES_MEMO,
-            _BF_TOPK_MEMO,
-            _TB_BSTATS_MEMO,
-            _EDGES_MEMO,
-            _FEATS_MEMO,
-        )
-    )
+# Cross-query stage tables (caching.Memo): the shingle indexes and
+# the τ-pair / fingerprint tables are each consumed by SEVERAL
+# registered queries.
+_SHINGLE_MEMO = Memo()
+_CAPPED_SHINGLE_MEMO = Memo()
+_EMB_PAIRS_MEMO = Memo()
+_MINHASH_PAIRS_MEMO = Memo()
+_SIMHASH_FP_MEMO = Memo()
+_SIMHASH_PAIRS_MEMO = Memo()
 
 
 def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,7 +1234,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consume the SAME blocked-join pair table — the biggest join in
 # the embedding family — so a session running the family together
 # would otherwise build it three times (_EMB_PAIRS_MEMO, a
-# _FrameMemo — see that class for the persistence/eviction
+# caching.Memo — see that module for the persistence/eviction
 # contract). Size is bounded by the near-dup pair count — the
 # operator's own output, i.e. what a production pipeline would
 # persist to storage at this exact stage anyway.
@@ -1427,7 +1341,7 @@ def _multiprobe(
 # blocking curve) re-ran the quadratic label-blocked join to get it.
 # Memoized per sf_dir like the k-means centroid / logreg weight
 # scalars (r12); the quadratic join now runs once per session.
-_EXACT_PAIRS_MEMO: dict[str, int] = {}
+_EXACT_PAIRS_MEMO = Memo()
 
 
 def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,12 +1352,12 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB run it on a capped stratified_sample slice).
 
     NOTE (ADVICE r12): the scalar is computed EAGERLY (.first()) at
-    DataFrame-construction time on first touch per sf_dir — under
-    the _CENT_MEMO precedent — so plan-only consumers (explain
+    DataFrame-construction time on first touch per sf_dir — like
+    the trained-centroid memo — so plan-only consumers (explain
     sweeps, profilers) pay the one-time quadratic job too. Accepted:
     deferring it would re-introduce per-consumer rebuilds."""
-    n = _EXACT_PAIRS_MEMO.get(sf_dir)
-    if n is None:
+
+    def count() -> int:
         from datatransformertools_spark.operators.similarity import DIM
 
         # flat-column cosine (r13, guide §4.1): this is the largest
@@ -1459,7 +1373,7 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1e-9,
             6,
         )
-        n = (
+        return int(
             a.join(
                 b,
                 (F.col("a.label") == F.col("b.label"))
@@ -1469,8 +1383,9 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_exact_pairs"))
             .first()[0]
         )
-        _EXACT_PAIRS_MEMO[sf_dir] = int(n)
-    return spark.createDataFrame([(int(n),)], "n_exact_pairs long")
+
+    n = _EXACT_PAIRS_MEMO.get_or_build(spark, sf_dir, count)
+    return spark.createDataFrame([(n,)], "n_exact_pairs long")
 
 
 _EMB_COS_SQL = (

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.bbox import clip_box, iou_xywh
 from datatransformertools_spark.operators.annotations import ANN_BASE_SQL, annotations_df
 
@@ -157,19 +157,8 @@ matched AS (SELECT * FROM ranked WHERE rn_p = 1 AND rn_g = 1)
 # persisted build per (session, sf_dir) now serves the family — the
 # same contract as the dedup shingle/pair memos, and the stage table
 # an evaluation pipeline would write anyway at cluster scale.
-_PAIRS_MEMO = None
-_MUTUAL_MEMO = None
-
-
-def _eval_memos():
-    # lazy init to avoid a circular import at module load
-    global _PAIRS_MEMO, _MUTUAL_MEMO
-    if _PAIRS_MEMO is None:
-        from datatransformertools_spark.operators.dedup import _FrameMemo
-
-        _PAIRS_MEMO = _FrameMemo()
-        _MUTUAL_MEMO = _FrameMemo()
-    return _PAIRS_MEMO, _MUTUAL_MEMO
+_PAIRS_MEMO = Memo()
+_MUTUAL_MEMO = Memo()
 
 
 def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,7 +184,7 @@ def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pred_id", "gt_id", "image_id", "cls", "conf", iou.alias("iou")
         )
 
-    return _eval_memos()[0].get_or_build(spark, sf_dir, build)
+    return _PAIRS_MEMO.get_or_build(spark, sf_dir, build)
 
 
 def _mutual_best_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,7 +212,7 @@ def _mutual_best_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter((F.col("rn_p") == 1) & (F.col("rn_g") == 1))
         )
 
-    return _eval_memos()[1].get_or_build(spark, sf_dir, build)
+    return _MUTUAL_MEMO.get_or_build(spark, sf_dir, build)
 
 
 def _matched_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.caching import track
-from datatransformertools_spark.operators.dedup import _FrameMemo
+from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.sources.tables import load_table
 
 PR_DAMPING = 0.85
@@ -40,7 +39,7 @@ PR_ITERS = 5
 # (session, sf_dir) now serves the family — the same cross-query
 # stage-table contract as dedup's shingle/pair memos (at cluster
 # scale: the edge table a graph pipeline writes once per corpus).
-_EDGES_MEMO = _FrameMemo()
+_EDGES_MEMO = Memo()
 
 
 def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

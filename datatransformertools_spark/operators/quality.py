@@ -30,12 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.text import tokens
-from datatransformertools_spark.operators.dedup import _FrameMemo
 from datatransformertools_spark.sources.tables import load_table
 
 # the standardized logreg feature frame (see _logreg_features)
-_FEATS_MEMO = _FrameMemo()
+_FEATS_MEMO = Memo()
 
 # Gopher-style thresholds, tuned so each rule does real work on the
 # synthetic corpus (word counts span 10-99, median 56; top-word
@@ -605,7 +605,7 @@ def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt the full Gopher chain (tokenize + word stats over every
     document); one persisted build now serves all three — the
     feature stage table a distillation pipeline writes once per
-    corpus (the _FrameMemo contract; cleared by clear_dedup_memos)."""
+    corpus (a caching.Memo)."""
     return _FEATS_MEMO.get_or_build(
         spark, sf_dir, lambda: _logreg_features_build(spark, sf_dir)
     )
@@ -695,11 +695,11 @@ def _dot(wts: list[float]) -> F.Column:
 # train and score queries share one run per session (same pattern
 # and same contract as similarity.trained_centroids: sf_dir
 # contents are immutable for the process lifetime).
-_W_MEMO: dict[str, list[float]] = {}
+_W_MEMO = Memo()
 
 
 def _trained_weights(spark: SparkSession, sf_dir: str) -> list[float]:
-    if sf_dir not in _W_MEMO:
+    def train() -> list[float]:
         n_feat = len(_LOGREG_FEATURES)
         # the memoized feature frame is already persisted (r13); the
         # loop's 24 rounds and the train/score consumers share it
@@ -716,8 +716,9 @@ def _trained_weights(spark: SparkSession, sf_dir: str) -> list[float]:
                 round(wts[i] - LOGREG_LR * g[f"g{i + 1}"] + 1e-9, 6)
                 for i in range(n_feat)
             ]
-        _W_MEMO[sf_dir] = wts
-    return _W_MEMO[sf_dir]
+        return wts
+
+    return _W_MEMO.get_or_build(spark, sf_dir, train)
 
 
 def _logreg_chain_parts() -> list[str]:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.operators.dedup import _FrameMemo
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -1314,9 +1314,7 @@ FROM scored
 # threshold to be lossless.
 MB_PART_MIN_ORDERS = 2
 MB_PAIR_MIN_ORDERS = 2
-# module-level like every other _FrameMemo (VERDICT r12 nit: the old
-# lazy-init `global` predated dedup's import graph being cycle-free)
-_MB_PAIRS_MEMO = _FrameMemo()
+_MB_PAIRS_MEMO = Memo()
 
 
 def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.vectors import (
     as_double,
     cosine_prenormed,
@@ -1065,19 +1066,19 @@ TARGET_CELL = 256
 # per-key window instead of a codegen'd projection.
 K_LITERAL_MAX = 2048
 
-_K_MEMO: dict[str, int] = {}
+_K_MEMO = Memo()
 
 
 def corpus_k(spark: SparkSession, sf_dir: str) -> int:
     """Corpus-derived cluster count (memoized per sf_dir, one 1-row
     count job on first touch — same immutable-sf_dir contract as
     `trained_centroids`)."""
-    k = _K_MEMO.get(sf_dir)
-    if k is None:
+
+    def build() -> int:
         n = load_table(spark, sf_dir, "embeddings").count()
-        k = max(K_CLUSTERS, -(-n // TARGET_CELL))
-        _K_MEMO[sf_dir] = k
-    return k
+        return max(K_CLUSTERS, -(-n // TARGET_CELL))
+
+    return _K_MEMO.get_or_build(spark, sf_dir, build)
 
 
 def _kmeans_dist(c) -> F.Column:  # squared L2, summed in dim order
@@ -1163,14 +1164,11 @@ def _assign(emb: DataFrame, cents: list[list[float]], key: str = "vec_id") -> Da
 # dedup_embedding / recall / curve at ITERS) shares ONE training
 # run per session — requesting more rounds later just extends the
 # existing chain. Only K·DIM centroid matrices are retained.
-# Contract: sf_dir contents are immutable for the process lifetime
-# (true for the read-only testdata; a pipeline regenerating data
-# in-place must restart the session or clear the memo).
-_CENT_MEMO: dict[str, list[list[list[float]]]] = {}
+_CENT_MEMO = Memo()
 
 
 def trained_centroids(spark: SparkSession, sf_dir: str, iters: int) -> list[list[float]]:
-    states = _CENT_MEMO.setdefault(sf_dir, [])
+    states = _CENT_MEMO.get_or_build(spark, sf_dir, list)
     if len(states) <= iters:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", as_double(F.col("embedding")).alias("v")
@@ -3230,16 +3228,13 @@ EMB_KNN_K = 3
 # cos_sim): three registered queries (`embedding_knn_graph`,
 # `embedding_knn_outlier`, `embedding_intrinsic_dim`) consume the
 # SAME blocked self-join + per-src top-k, so it is built once per
-# (applicationId, sf_dir) under the dedup._FrameMemo contract and
-# released through `clear_dedup_memos()` with the other stage
-# tables. At cluster scale the same role is a materialized edge
-# table written once per corpus snapshot.
-from datatransformertools_spark.operators.dedup import _FrameMemo  # noqa: E402
-
-_KNN_EDGES_MEMO = _FrameMemo()
+# (applicationId, sf_dir) as a caching.Memo. At cluster scale the
+# same role is a materialized edge table written once per corpus
+# snapshot.
+_KNN_EDGES_MEMO = Memo()
 # ground-truth exact top-k shared by the ANN eval/curve family
 # (resolved at call time by ann_bruteforce_topk above)
-_BF_TOPK_MEMO = _FrameMemo()
+_BF_TOPK_MEMO = Memo()
 
 
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

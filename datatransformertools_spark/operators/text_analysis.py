@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
 from datatransformertools_spark.sources.tables import load_table
@@ -1586,7 +1587,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # logreg weight memos: `bpe_train_merges` and `bpe_segment_stats`
 # each replayed the full loop per session. Contract: sf_dir contents
 # are immutable for the process lifetime.
-_BPE_MERGES_MEMO: dict[str, list[tuple[str, str, int]]] = {}
+_BPE_MERGES_MEMO = Memo()
 
 
 def _bpe_seq_expr(merges: list[tuple[str, str, int]]) -> F.Column:
@@ -1615,17 +1616,15 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     merge table itself is memoized per sf_dir (deterministic loop,
     scalar-only driver state), so the train and encode queries
     share one training run per session."""
-    from datatransformertools_spark.caching import track
-
     docs = load_table(spark, sf_dir, "documents").select("text")
     words = (
         docs.select(F.explode(tokens(normalize_text(F.col("text")))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    merges = _BPE_MERGES_MEMO.get(sf_dir)
-    if merges is None:
-        words = track(words)  # persisted across the K argmax rounds
+
+    def train() -> list[tuple[str, str, int]]:
+        track(words)  # persisted across the K argmax rounds
         merges = []
         for _ in range(BPE_MERGES):
             # split yields ['', s1..sm, '']; adjacent pairs are
@@ -1655,7 +1654,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             if not top:
                 break
             merges.append((top[0]["l"], top[0]["r"], int(top[0]["pair_count"])))
-        _BPE_MERGES_MEMO[sf_dir] = merges
+        return merges
+
+    merges = _BPE_MERGES_MEMO.get_or_build(spark, sf_dir, train)
     vocab = words.select("word", "cnt", _bpe_seq_expr(merges).alias("seq"))
     return merges, vocab
 

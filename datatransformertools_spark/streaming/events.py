@@ -20,11 +20,9 @@ Design notes for the cluster:
 
 from __future__ import annotations
 
-import atexit
 import glob
 import math
 import os
-import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
@@ -32,6 +30,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.sources.tables import events_event_time, events_ts_us
 
 
@@ -41,43 +40,29 @@ from datatransformertools_spark.sources.tables import events_event_time, events_
 # per (session, events file) — 16 streaming queries each paid a
 # driver-side batch-read analysis for an identical answer. Keyed on
 # the resolved events path, NOT the tmp staging dir.
-_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
+_SCHEMA_MEMO = Memo()
 
 # Staged landing-dir memo (r13): the standard staging is IDENTICAL
 # for every streaming query over the same corpus — a tmp dir with an
 # events.parquet symlink (± the watermark sentinel row). One staged
 # dir per (session, sf_dir, sentinel?) serves them all; bespoke
-# layouts (replay's a/b split) stage and remove their own. The dirs
-# are deleted by clear_staged_dirs(), which caching.clear_all_memos()
-# calls and which runs at interpreter exit. Checkpoints stay strictly
+# layouts (replay's a/b split) stage and remove their own. The memo
+# holds TemporaryDirectory objects, so a dir is removed when its
+# entry is released (caching.clear_all_memos(), eviction) or, at the
+# latest, when the interpreter exits. Checkpoints stay strictly
 # per-query.
-_SRC_DIR_MEMO: dict[tuple[str, str, bool], str] = {}
+_SRC_DIR_MEMO = Memo()
 
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str, sentinel: bool) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, sentinel)
-    d = _SRC_DIR_MEMO.get(key)
-    if d is None or not os.path.isdir(d):
-        for stale in [k for k in _SRC_DIR_MEMO if k[0] != key[0]]:
-            shutil.rmtree(_SRC_DIR_MEMO.pop(stale), ignore_errors=True)
-        d = tempfile.mkdtemp(prefix="dtt-stream-src-")
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{d}/events.parquet")
+    def stage() -> tempfile.TemporaryDirectory:
+        d = tempfile.TemporaryDirectory(prefix="dtt-stream-src-", ignore_cleanup_errors=True)
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{d.name}/events.parquet")
         if sentinel:
-            _write_watermark_sentinel(d, sf_dir)
-        _SRC_DIR_MEMO[key] = d
-    return d
+            _write_watermark_sentinel(d.name, sf_dir)
+        return d
 
-
-def clear_staged_dirs() -> int:
-    """Delete every staged landing dir and forget it; returns how many."""
-    n = len(_SRC_DIR_MEMO)
-    for d in _SRC_DIR_MEMO.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SRC_DIR_MEMO.clear()
-    return n
-
-
-atexit.register(clear_staged_dirs)
+    return _SRC_DIR_MEMO.get_or_build(spark, (sf_dir, sentinel), stage).name
 
 
 def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
@@ -97,16 +82,11 @@ def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
     # staging (replay dedup) miss forever AND leak one unique
     # per-tmp-dir key per call within a session
     files = sorted(glob.glob(f"{source_dir}/*.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
+    schema = _SCHEMA_MEMO.get_or_build(
+        spark,
         os.path.realpath(files[0]) if files else source_dir,
+        lambda: spark.read.parquet(source_dir).schema,
     )
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        for stale in [k for k in _SCHEMA_MEMO if k[0] != key[0]]:
-            _SCHEMA_MEMO.pop(stale, None)
-        schema = spark.read.parquet(source_dir).schema
-        _SCHEMA_MEMO[key] = schema
     reader = spark.readStream.schema(schema)
     for k, v in options.items():
         reader = reader.option(k, v)
@@ -182,17 +162,18 @@ def _drain(df: DataFrame, prefix: str, output_mode: str, src_dir: str) -> DataFr
     returning a partial sink."""
     spark = df.sparkSession
     name = f"stream_{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"dtt-stream-{prefix}-ckpt-")
-    try:
-        with _state_partitions(spark, _state_partition_count(spark, src_dir)):
-            q = run_available_now(df, name, ckpt, output_mode)
-            if not q.awaitTermination(DRAIN_TIMEOUT_S):
-                q.stop()
-                raise TimeoutError(
-                    f"streaming drain {name} did not finish within {DRAIN_TIMEOUT_S} s"
-                )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with (
+        tempfile.TemporaryDirectory(
+            prefix=f"dtt-stream-{prefix}-ckpt-", ignore_cleanup_errors=True
+        ) as ckpt,
+        _state_partitions(spark, _state_partition_count(spark, src_dir)),
+    ):
+        q = run_available_now(df, name, ckpt, output_mode)
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming drain {name} did not finish within {DRAIN_TIMEOUT_S} s"
+            )
     return spark.table(name)
 
 
@@ -1015,10 +996,11 @@ def events_stream_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup runnable forever on an unbounded feed. The drained result
     aggregates per type so the DuckDB oracle (plain distinct replay)
     hashes stably."""
-    src_dir = tempfile.mkdtemp(prefix="dtt-stream-replay-src-")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-a.parquet")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-b.parquet")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dtt-stream-replay-src-", ignore_cleanup_errors=True
+    ) as src_dir:
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-a.parquet")
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{src_dir}/events-b.parquet")
         raw = _read_raw(spark, src_dir)
         deduped = (
             raw.withColumn("event_time", events_event_time(raw))
@@ -1026,8 +1008,6 @@ def events_stream_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicatesWithinWatermark(["event_id"])
         )
         drained = _drain(deduped, "replay_dedup", "append", src_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
     return (
         drained.groupBy("event_type")
         .agg(

@@ -22,8 +22,9 @@ def spark():
 
     s = get_spark("dtt-tests")
     yield s
-    from datatransformertools_spark.caching import release_caches
+    from datatransformertools_spark.caching import clear_all_memos, release_caches
 
+    clear_all_memos()
     release_caches()
 
 

@@ -1,0 +1,72 @@
+"""Every cross-query memo is a ``caching.Memo``, ``clear_all_memos()``
+releases all of them, and the package makes no temp dir outside a
+``with`` block or a memo."""
+
+from __future__ import annotations
+
+import importlib
+import os
+import re
+import tempfile
+from pathlib import Path
+
+from pyspark.storagelevel import StorageLevel
+
+from datatransformertools_spark import caching, registry
+
+PKG = Path(caching.__file__).resolve().parent
+MEMO_NAME = re.compile(r"^(_?[A-Z][A-Z0-9_]*_MEMO)\b", re.M)
+
+
+def _package_sources():
+    return sorted(PKG.rglob("*.py"))
+
+
+def test_every_module_level_memo_is_a_memo():
+    registry._load()
+    names = {}
+    for path in _package_sources():
+        found = MEMO_NAME.findall(path.read_text())
+        if found:
+            rel = path.relative_to(PKG.parent).with_suffix("")
+            mod = importlib.import_module(".".join(rel.parts))
+            names.update({f"{mod.__name__}.{n}": getattr(mod, n) for n in found})
+    assert len(names) >= 21, sorted(names)
+    not_memo = {n: type(v).__name__ for n, v in names.items() if not isinstance(v, caching.Memo)}
+    assert not not_memo, not_memo
+
+
+def test_clear_all_memos_releases_every_kind(spark, sf_dir):
+    from datatransformertools_spark.operators.graph import _co_edges
+    from datatransformertools_spark.operators.similarity import corpus_k
+    from datatransformertools_spark.streaming.events import _staged_events_dir
+
+    def dtt_dirs():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("dtt-")}
+
+    before = dtt_dirs()
+    caching.clear_all_memos()
+    frame = _co_edges(spark, sf_dir)
+    assert frame.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert corpus_k(spark, sf_dir) > 0
+    staged = _staged_events_dir(spark, sf_dir, sentinel=False)
+    assert os.path.isdir(staged)
+
+    assert caching.clear_all_memos() >= 3
+    assert {id(m): len(m) for m in caching._MEMOS if len(m)} == {}
+    assert frame.storageLevel == StorageLevel.NONE
+    assert not os.path.exists(staged)
+    assert dtt_dirs() - before == set()
+
+
+def test_temp_dirs_are_scoped_or_memo_owned():
+    """A temp dir is either a ``with TemporaryDirectory`` block or a
+    ``Memo`` value; nothing hand-removes one or relies on an exit hook."""
+    banned = re.compile(r"\bmkdtemp\(|\batexit\.register\b")
+    hits = [
+        f"{path.relative_to(PKG.parent)}:{i}"
+        for path in _package_sources()
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

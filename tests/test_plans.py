@@ -59,7 +59,7 @@ def _plan_hints_only(spark, sf_dir, name: str) -> str:
     # broadcast upgrades), and InMemoryTableScan would render that
     # interior into this plan, making the hints-only assertion see
     # AQE's legitimate small-SF decisions instead of our hints. The
-    # cross-query _FrameMemo frames (shingle/τ-pair stage tables)
+    # cross-query Memo frames (shingle/τ-pair stage tables)
     # live OUTSIDE release_caches() by design and freeze plans the
     # same way — if oracle-parity tests ran first in this session,
     # the memoized pair frame was built under normal conf and its
@@ -76,11 +76,10 @@ def _plans_hints_only(spark, sf_dir, name: str) -> tuple[str, str]:
     hints are visible — JoinSelection rejects an unbuildable hint at
     PHYSICAL planning, so the logical join still carries the
     annotation while the physical plan silently lacks the exchange."""
-    from datatransformertools_spark.caching import release_caches
-    from datatransformertools_spark.operators.dedup import clear_dedup_memos
+    from datatransformertools_spark.caching import clear_all_memos, release_caches
 
     release_caches()
-    clear_dedup_memos()
+    clear_all_memos()
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -882,14 +881,12 @@ def test_minhash_family_shares_memoized_pair_frame(spark, sf_dir):
     rebuilding signature + band explode + self-join: after any one
     of them plans, the others' executed plans carry an
     InMemoryTableScan and no band_key join of their own."""
-    from datatransformertools_spark.operators.dedup import (
-        _MINHASH_PAIRS_MEMO,
-        clear_dedup_memos,
-    )
+    from datatransformertools_spark.caching import clear_all_memos
+    from datatransformertools_spark.operators.dedup import _MINHASH_PAIRS_MEMO
 
-    clear_dedup_memos()
+    clear_all_memos()
     _plan(spark, sf_dir, "dedup_minhash_lsh")  # builds the memo entry
-    assert len(_MINHASH_PAIRS_MEMO._frames) == 1
+    assert len(_MINHASH_PAIRS_MEMO) == 1
     for name in ("dedup_minhash_verify", "dedup_lsh_quality", "minhash_perm_error_curve"):
         plan = _plan(spark, sf_dir, name)
         # the scan node proves the consumer reads the persisted stage
@@ -899,7 +896,7 @@ def test_minhash_family_shares_memoized_pair_frame(spark, sf_dir):
         assert "InMemoryTableScan" in plan, f"{name} not reading the memo:\n{plan}"
     # one (session, sf_dir) entry serves all consumers — nobody
     # built a second keyed copy
-    assert len(_MINHASH_PAIRS_MEMO._frames) == 1
+    assert len(_MINHASH_PAIRS_MEMO) == 1
 
 
 def test_simhash_family_shares_memoized_pair_frame(spark, sf_dir):
@@ -908,21 +905,18 @@ def test_simhash_family_shares_memoized_pair_frame(spark, sf_dir):
     (doc_a, doc_b, hamming) stage table, and `simhash_bit_balance_audit`
     reads the persisted fingerprint table — one build each per
     (session, sf_dir)."""
-    from datatransformertools_spark.operators.dedup import (
-        _SIMHASH_FP_MEMO,
-        _SIMHASH_PAIRS_MEMO,
-        clear_dedup_memos,
-    )
+    from datatransformertools_spark.caching import clear_all_memos
+    from datatransformertools_spark.operators.dedup import _SIMHASH_FP_MEMO, _SIMHASH_PAIRS_MEMO
 
-    clear_dedup_memos()
+    clear_all_memos()
     _plan(spark, sf_dir, "dedup_simhash")  # builds fp + pair memo entries
-    assert len(_SIMHASH_PAIRS_MEMO._frames) == 1
-    assert len(_SIMHASH_FP_MEMO._frames) == 1
+    assert len(_SIMHASH_PAIRS_MEMO) == 1
+    assert len(_SIMHASH_FP_MEMO) == 1
     for name in ("simhash_hamming_curve", "simhash_bit_balance_audit"):
         plan = _plan(spark, sf_dir, name)
         assert "InMemoryTableScan" in plan, f"{name} not reading the memo:\n{plan}"
-    assert len(_SIMHASH_PAIRS_MEMO._frames) == 1
-    assert len(_SIMHASH_FP_MEMO._frames) == 1
+    assert len(_SIMHASH_PAIRS_MEMO) == 1
+    assert len(_SIMHASH_FP_MEMO) == 1
 
 
 def test_knn_eval_broadcasts_fixed_query_frame(spark, sf_dir):
@@ -1060,19 +1054,18 @@ def test_curation_pipeline_stage_fusion(spark, sf_dir):
       window. Nothing else may sort the corpus.
     - never a cartesian product.
 
-    State-normalized capture: tracked stage tables + dedup memos are
+    State-normalized capture: tracked stage tables + all memos are
     cleared first (the _plans_hints_only prelude) so the assertion
     reads THIS query's plan, not whatever materialized cache plans
     300 earlier suite tests left in the CacheManager (a materialized
     InMemoryRelation prints its AQE-executed interior, which the
     line-indent scan parser must not misread as live scans).
     """
-    from datatransformertools_spark.caching import release_caches
+    from datatransformertools_spark.caching import clear_all_memos, release_caches
     from datatransformertools_spark.operators.corpus import corpus_curation_pipeline
-    from datatransformertools_spark.operators.dedup import clear_dedup_memos
 
     release_caches()
-    clear_dedup_memos()
+    clear_all_memos()
     plan = corpus_curation_pipeline(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     scans = _top_level_text_scans(plan)
     assert 1 <= len(scans) <= 2, "\n".join(scans)

@@ -1,21 +1,14 @@
 """Round-7 tests: the `_cells_join` assignment path exercised
 end-to-end inside a registered query's build (VERDICT r6 #4), the
-cross-query _FrameMemo hygiene contract (ADVICE r6), and the
+cross-query memo hygiene contract (ADVICE r6), and the
 quantized nation_trade_matrix face.
 """
 
 from __future__ import annotations
 
-
-def _reset_embedding_state():
-    """Drop every cross-query memo the embedding family builds on so
-    the next build re-runs the full fit + blocking + pair join."""
-    import datatransformertools_spark.operators.dedup as dd
-    import datatransformertools_spark.operators.similarity as sim
-
-    dd.clear_dedup_memos()
-    sim._CENT_MEMO.clear()
-    sim._K_MEMO.clear()
+# Dropping every cross-query memo makes the next embedding build
+# re-run the full fit + blocking + pair join.
+from datatransformertools_spark.caching import clear_all_memos
 
 
 class TestCellsJoinEndToEnd:
@@ -34,7 +27,7 @@ class TestCellsJoinEndToEnd:
             df = dd._emb_tau_pairs(spark, sf_dir)
             return {(r["vec_a"], r["vec_b"], r["cos_sim"]) for r in df.collect()}
 
-        _reset_embedding_state()
+        clear_all_memos()
         literal = pairs_set()
         assert literal  # the corpus has near-dup embeddings by construction
 
@@ -45,7 +38,7 @@ class TestCellsJoinEndToEnd:
             calls["n"] += 1
             return real_cells_join(*args, **kwargs)
 
-        _reset_embedding_state()
+        clear_all_memos()
         # corpus_k floors at K_CLUSTERS=8 on the shipped SFs; a
         # ceiling of 4 puts every assignment (fit iterations AND the
         # probe explode) on the join path
@@ -54,7 +47,7 @@ class TestCellsJoinEndToEnd:
         try:
             joined = pairs_set()
         finally:
-            _reset_embedding_state()  # drop frames built under the patch
+            clear_all_memos()  # drop frames built under the patch
         # fit runs KMEANS_ITERS assignments + one probe explode
         assert calls["n"] >= sim.KMEANS_ITERS + 1
         assert joined == literal
@@ -65,58 +58,84 @@ class TestCellsJoinEndToEnd:
         import datatransformertools_spark.operators.dedup as dd
         import datatransformertools_spark.operators.similarity as sim
 
-        _reset_embedding_state()
+        clear_all_memos()
         literal = {tuple(r) for r in dd.dedup_embedding(spark, sf_dir).collect()}
 
-        _reset_embedding_state()
+        clear_all_memos()
         monkeypatch.setattr(sim, "K_LITERAL_MAX", 4)
         try:
             joined = {tuple(r) for r in dd.dedup_embedding(spark, sf_dir).collect()}
         finally:
-            _reset_embedding_state()
+            clear_all_memos()
         assert joined == literal
 
 
 class TestFrameMemo:
-    def test_lru_cap_and_clear(self, spark, sf_dir):
+    """caching.Memo: LRU cap, stale-app eviction and release by value
+    type (a frame is unpersisted, a TemporaryDirectory removed)."""
+
+    def test_lru_cap_and_clear(self, spark, sf_dir, monkeypatch):
+        import os
+        import tempfile
+
         from pyspark.sql import functions as F
+        from pyspark.storagelevel import StorageLevel
 
-        from datatransformertools_spark.operators.dedup import _FrameMemo
+        from datatransformertools_spark import caching
 
-        memo = _FrameMemo(cap=2)
-        builds = {"n": 0}
+        monkeypatch.setattr(caching, "MEMO_CAP", 2)
 
-        def make_build(i):
-            def build():
-                builds["n"] += 1
-                return spark.range(i + 1).select(F.col("id"))
+        def frame(i):
+            return spark.range(i + 1).select(F.col("id"))
 
-            return build
+        def tempdir(i):
+            return tempfile.TemporaryDirectory(prefix=f"dtt-memo-test-{i}-")
 
-        for i in range(3):  # 3 distinct sf_dir keys through a cap of 2
-            memo.get_or_build(spark, f"/fake/sf{i}", make_build(i))
-        assert builds["n"] == 3
-        assert len(memo._frames) == 2  # oldest evicted at the cap
-        # hit: most-recent key rebuilds nothing
-        memo.get_or_build(spark, "/fake/sf2", make_build(2))
-        assert builds["n"] == 3
-        # evicted key rebuilds
-        memo.get_or_build(spark, "/fake/sf0", make_build(0))
-        assert builds["n"] == 4
-        assert memo.clear() == 2
-        assert memo._frames == {}
+        def released(value):
+            if isinstance(value, tempfile.TemporaryDirectory):
+                return not os.path.exists(value.name)
+            return value.storageLevel == StorageLevel.NONE
+
+        for make in (frame, tempdir):
+            memo = caching.Memo()
+            builds = {"n": 0}
+
+            def make_build(i):
+                def build():
+                    builds["n"] += 1
+                    return make(i)
+
+                return build
+
+            # 3 distinct sf_dir keys through a cap of 2
+            got = [memo.get_or_build(spark, f"/fake/sf{i}", make_build(i)) for i in range(3)]
+            assert builds["n"] == 3
+            assert len(memo) == 2  # oldest evicted at the cap
+            assert released(got[0])  # ... and released, not just forgotten
+            assert not released(got[2])
+            # hit: most-recent key rebuilds nothing
+            assert memo.get_or_build(spark, "/fake/sf2", make_build(2)) is got[2]
+            assert builds["n"] == 3
+            # evicted key rebuilds
+            memo.get_or_build(spark, "/fake/sf0", make_build(0))
+            assert builds["n"] == 4
+            assert memo.clear() == 2
+            assert len(memo) == 0
+            assert released(got[2])
 
     def test_stale_app_entries_evicted(self, spark):
         from pyspark.sql import functions as F
+        from pyspark.storagelevel import StorageLevel
 
-        from datatransformertools_spark.operators.dedup import _FrameMemo
+        from datatransformertools_spark.caching import Memo
 
-        memo = _FrameMemo()
-        df = spark.range(1).select(F.col("id"))
-        memo._frames[("dead-app-id", "/fake/sf")] = df
+        memo = Memo()
+        df = spark.range(1).select(F.col("id")).persist()
+        memo._entries[("dead-app-id", "/fake/sf")] = df
         got = memo.get_or_build(spark, "/fake/sf", lambda: spark.range(2).select(F.col("id")))
         assert got.count() == 2  # rebuilt, not the dead handle
-        assert ("dead-app-id", "/fake/sf") not in memo._frames
+        assert len(memo) == 1
+        assert df.storageLevel == StorageLevel.NONE  # unpersisted, not just forgotten
         memo.clear()
 
     def test_shingle_frames_shared_across_queries(self, spark, sf_dir):
@@ -124,11 +143,11 @@ class TestFrameMemo:
         ONE memoized capped-shingle materialization per session."""
         import datatransformertools_spark.operators.dedup as dd
 
-        dd.clear_dedup_memos()
+        clear_all_memos()
         first = dd._capped_shingle_df(spark, sf_dir)
         second = dd._capped_shingle_df(spark, sf_dir)
         assert first is second
-        assert dd.clear_dedup_memos() >= 2  # shingle + capped entries
+        assert clear_all_memos() >= 2  # shingle + capped entries
 
 
 class TestTradeMatrixFace:

@@ -185,20 +185,20 @@ class TestKnnEdgeMemo:
         per (session, sf_dir) and shared by knn_graph / knn_outlier /
         intrinsic_dim — asserted by identity of the memoized frame
         across calls, and by the memo registering exactly one entry."""
-        import datatransformertools_spark.operators.dedup as dd
         import datatransformertools_spark.operators.similarity as sim
+        from datatransformertools_spark.caching import clear_all_memos
 
-        dd.clear_dedup_memos()
+        clear_all_memos()
         e1 = sim._knn_edges(spark, sf_dir)
         e2 = sim._knn_edges(spark, sf_dir)
         assert e1 is e2
-        assert len(sim._KNN_EDGES_MEMO._frames) == 1
+        assert len(sim._KNN_EDGES_MEMO) == 1
         # consumers agree with the shared frame
         n_edges = e1.count()
         assert n_edges > 0
         graph_edges = sim.embedding_knn_graph(spark, sf_dir).count()
         assert graph_edges == n_edges
-        assert dd.clear_dedup_memos() >= 1
+        assert clear_all_memos() >= 1
 
 
 class TestSessionStats:
