@@ -41,9 +41,9 @@ from pyspark.storagelevel import StorageLevel
 _LIVE: list[DataFrame] = []
 
 
-def track(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+def track(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for later release."""
-    df.persist(level) if level is not None else df.persist()
+    df.persist()
     _LIVE.append(df)
     return df
 

@@ -99,25 +99,3 @@ def flat_cosine_prenormed(
     return F.when(denom > 0, flat_dot(a_prefix, b_prefix, dim) / denom).otherwise(
         F.lit(0.0)
     )
-
-
-def flat_dist2_lit(prefix: str, cent: list[float]) -> Column:
-    """Squared L2 distance from flat columns to a LITERAL centroid,
-    accumulated left-to-right from 0.0 in dimension order —
-    bit-identical to the zip_with fold in similarity._kmeans_dist.
-    One parsed SQL expression (see flat_dot); ``repr(float)`` emits
-    the shortest round-trip decimal and both Python and the SQL
-    parser convert it to the identical nearest double."""
-    terms = "".join(
-        f" + ({prefix}{i} - {sql_double(c)}) * ({prefix}{i} - {sql_double(c)})"
-        for i, c in enumerate(cent)
-    )
-    return F.expr("0.0D" + terms)
-
-
-def sql_double(x: float) -> str:
-    """Exact double literal for a parsed SQL expression: repr() is
-    the shortest decimal that round-trips in IEEE double, and the
-    parser's Double.parseDouble is correctly rounded, so the parsed
-    value is bit-identical to the Python float."""
-    return f"CAST('{x!r}' AS DOUBLE)" if ("inf" in repr(x) or "nan" in repr(x)) else f"{x!r}D"

@@ -3,14 +3,14 @@
 Re-expresses the reference server's media handling
 (`Tools/server.py:43-88`: bytes → decoded pages/images → batched
 model input) as Spark-native plumbing: media travel as opaque
-``binary`` columns with typed metadata; per-item decode /
-feature-extract runs as Arrow-batched ``mapInPandas`` so Python
-touches whole columnar batches, never single rows.
+``binary`` columns with typed metadata; per-item page rendering,
+frame sampling and detection run as Arrow-batched ``mapInPandas``
+so Python touches whole columnar batches, never single rows.
 
-The container (by design) has no image/audio codecs, so the decode
-kernel is a deterministic stub (documented below); everything
-around it — schema, batch shape, partitioning, UDF signature — is
-real and tested (tests/test_operators.py::TestMultimodal).
+No image/audio codec is a dependency, so the media kernels are
+deterministic stubs (documented below); everything around them —
+schema, batch shape, partitioning, UDF signature — is real and
+tested (tests/test_operators.py::TestMultimodal).
 
 ``multimodal_manifest`` is the oracle-checked query: it builds the
 binary payload column from document text (utf-8 bytes — the same
@@ -97,197 +97,8 @@ FROM documents
 """
 
 # ---------------------------------------------------------------------------
-# decode / feature plumbing — real Spark mechanics, stubbed kernel
+# frame sampling — real Spark mechanics, stubbed kernel
 # ---------------------------------------------------------------------------
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_kind", StringType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("feature", BinaryType()),
-    ]
-)
-
-
-def _make_decode_kernel():
-    # Factory so the kernel's qualname contains `<locals>` →
-    # cloudpickle serializes it BY VALUE into the mapInPandas
-    # closure; cluster Python workers never import this package.
-    #
-    # Import-probe upgrade (VERDICT r7 #8): if PIL ever appears in
-    # the worker environment, image payloads that actually decode get
-    # REAL width/height/n_frames; everything else (no PIL, non-image
-    # kinds, or payloads that aren't valid images — which includes
-    # all of this repo's synthetic text-byte payloads) falls through
-    # to the deterministic stub, so the oracle-checked face is
-    # unchanged until genuinely decodable media arrives.
-    pil_state: list = [None]  # memoized per-worker probe: None=untried
-
-    def _try_real_image_meta(payload: bytes):
-        if pil_state[0] is None:
-            try:
-                from PIL import Image  # noqa: F401
-
-                pil_state[0] = Image
-            except Exception:
-                # same breadth as the fitz probe: a broken Pillow
-                # install (native lib import error) must stub, not
-                # crash the executor task
-                pil_state[0] = False
-        if pil_state[0] is False:
-            return None
-        import io
-
-        try:
-            with pil_state[0].open(io.BytesIO(payload)) as im:
-                return {
-                    "width": int(im.width),
-                    "height": int(im.height),
-                    "n_frames": int(getattr(im, "n_frames", 1)),
-                }
-        except Exception:
-            return None  # not a decodable image → deterministic stub
-
-    def decode_kernel(payload: bytes, kind: str) -> dict:
-        """Decode: real PIL metadata when the library exists AND the
-        payload decodes; otherwise deterministic pseudo-metadata from
-        the payload bytes so the pipeline stays testable end to end
-        (ffmpeg-backed video/audio remains stub-only — no container
-        binding). Swapping in further codecs changes only this
-        function."""
-        if kind == "image":
-            real = _try_real_image_meta(payload)
-            if real is not None:
-                return real
-        n = len(payload)
-        if kind == "image":
-            return {"width": 64 + n % 512, "height": 64 + n % 384, "n_frames": 1}
-        if kind == "video":
-            return {"width": 320, "height": 240, "n_frames": 1 + n % 120}
-        return {"width": 0, "height": 0, "n_frames": 1 + n % 600}  # audio: frames≈chunks
-
-    return decode_kernel
-
-
-_decode_kernel = _make_decode_kernel()
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """Arrow-batched decode over (doc_id, media_kind, payload).
-
-    mapInPandas streams whole record batches through Python — the
-    reference's one-file-at-a-time PIL loop (server.py:76-82)
-    becomes a vectorized per-partition pass that scales with
-    executors, and the decode cost is amortized over Arrow batches
-    instead of paid per row.
-    """
-
-    # Bind the kernel locally so cloudpickle ships the closure by
-    # value — cluster Python workers don't have this package on path.
-    decode_kernel = _decode_kernel
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_kernel(p, k) for p, k in zip(pdf["payload"], pdf["media_kind"])]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_kind": pdf["media_kind"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    # stub "feature": first 8 payload bytes — stands in for
-                    # an embedding / thumbnail produced by a real kernel
-                    "feature": [bytes(p[:8]) for p in pdf["payload"]],
-                }
-            )
-
-    return df.mapInPandas(decode, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_kind", StringType()),
-        StructField("out_w", IntegerType()),
-        StructField("out_h", IntegerType()),
-        StructField("thumb", BinaryType()),
-    ]
-)
-
-
-def _make_thumb_probe(target: int):
-    """Factory for the per-worker PIL thumbnail probe (`<locals>`
-    qualname → shipped by value; probe memoized per worker). Returns
-    real RGB-normalized resized pixel bytes when PIL exists AND the
-    payload decodes, else None."""
-    pil_state: list = [None]
-
-    def _try_real_thumb(payload: bytes):
-        if pil_state[0] is None:
-            try:
-                from PIL import Image  # noqa: F401
-
-                pil_state[0] = Image
-            except Exception:
-                # same breadth as the fitz probe: a broken Pillow
-                # install (native lib import error) must stub, not
-                # crash the executor task
-                pil_state[0] = False
-        if pil_state[0] is False:
-            return None
-        import io
-
-        try:
-            with pil_state[0].open(io.BytesIO(payload)) as im:
-                # normalize mode BEFORE resize (the reference pattern,
-                # Tools/server.py: open → .convert('RGB') → use): raw
-                # .tobytes() is mode-dependent (P/RGBA/L lay out
-                # differently), so downstream consumers get one fixed
-                # 3-byte-per-pixel layout whatever the source mode
-                return im.convert("RGB").resize((target, target)).tobytes()
-        except Exception:
-            return None
-
-    return _try_real_thumb
-
-
-def resize_media(df: DataFrame, target: int = 224) -> DataFrame:
-    """Resize plumbing over (doc_id, media_kind, payload): every item
-    is normalized to a target×target thumbnail. When PIL is present
-    AND a payload decodes as an image, the thumbnail is a real
-    `Image.resize` (the reference's per-file decode+resize,
-    server.py:76-82, as an Arrow batch loop); otherwise — no PIL, or
-    a payload that isn't a valid image, which covers all of this
-    repo's synthetic payloads — the deterministic truncated-payload
-    stub keeps the face oracle-stable."""
-    _try_real_thumb = _make_thumb_probe(target)
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # `is not None`, never truthiness: a legitimately empty
-            # pixel buffer must not be mistaken for decode failure
-            thumbs = []
-            for p in pdf["payload"]:
-                real = _try_real_thumb(p)
-                thumbs.append(real if real is not None else bytes(p[:target]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_kind": pdf["media_kind"],
-                    "out_w": target,
-                    "out_h": target,
-                    "thumb": thumbs,
-                }
-            )
-
-    return df.mapInPandas(resize, RESIZED_SCHEMA)
-
 
 FRAMES_SCHEMA = StructType(
     [
@@ -320,9 +131,9 @@ def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
 
 
 def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, media_kind, payload) frame the decode / resize /
-    frame-sampling kernels read: the byte-sized `_doc_payload`
-    exchange plus the deterministic kind assignment."""
+    """(doc_id, media_kind, payload) frame the frame-sampling kernel
+    reads: the byte-sized `_doc_payload` exchange plus the
+    deterministic kind assignment."""
     return _doc_payload(spark, sf_dir).select("doc_id", _media_kind(), "payload")
 
 
@@ -347,9 +158,10 @@ PAGES_SCHEMA = StructType(
 
 
 def _make_pdf_render_probe():
-    """Factory for the per-worker PyMuPDF import-probe (same pattern
-    as `_make_decode_kernel`'s PIL probe: `<locals>` qualname →
-    cloudpickle ships it by value; probe result memoized per worker).
+    """Factory for the per-worker PyMuPDF import-probe (`<locals>`
+    qualname → cloudpickle ships it by value, so cluster Python
+    workers never import this package; probe result memoized per
+    worker).
     The returned callable maps a payload to [(width, height,
     png_bytes)] per page via fitz, or None when fitz is absent / the
     payload isn't a PDF."""
@@ -800,8 +612,8 @@ def image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     running a fixed-input detector over arbitrarily large document
     scans. Tile boxes are pure integer arithmetic on the manifest's
     (width, height), so the plan — the part that matters before any
-    pixel is decoded — is exact and oracle-checked; the decode of
-    each tile is the stubbed kernel's job (`decode_media`).
+    pixel is decoded — is exact and oracle-checked; decoding each
+    tile is left to the detector that consumes the plan.
 
     Scale design: the fan-out is a map-side double explode of
     per-axis offset arrays (array_union dedups the edge offset when

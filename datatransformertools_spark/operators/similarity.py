@@ -2150,22 +2150,6 @@ ANN_DIM_RECALL_CURVE_SQL = _ann_dim_curve_sql()
 QUANT_BITS_GRID = [2, 4, 8, 32]
 
 
-def _dequantized(v, bits: int):
-    """Symmetric per-vector max-abs scalar quantization, immediately
-    dequantized: q = floor(x/scale + 0.5), x̂ = q·scale with scale =
-    max|x| / (2^(bits-1) − 1). floor(+0.5) — not round() — because
-    the two engines disagree on round()'s tie rule; floor(+0.5) is
-    half-up in both. A zero vector (scale 0) passes through
-    unchanged. bits ≥ 32 is the float passthrough."""
-    if bits >= 32:
-        return v
-    qmax = float((1 << (bits - 1)) - 1)
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(qmax)
-    return F.when(
-        scale > 0, F.transform(v, lambda x: F.floor(x / scale + 0.5) * scale)
-    ).otherwise(v)
-
-
 def ann_quantization_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of cosine search over scalar-quantized embeddings vs
     the full-precision exact top-k, for every budget on
@@ -2184,12 +2168,17 @@ def ann_quantization_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    # r13: hoist each budget's max-abs scale into its own column
-    # BEFORE the dequantize transform — inlined (as _dequantized
-    # composes it), the O(DIM) array_max re-evaluates inside every
-    # element's lambda: O(DIM²) interpreted work per vector, measured
-    # ~2.5 s of this query alone at sf0.1. Same arithmetic, same
-    # values, the oracle unchanged.
+    # Symmetric per-vector max-abs scalar quantization, immediately
+    # dequantized: q = floor(x/scale + 0.5), x̂ = q·scale with scale =
+    # max|x| / (2^(bits-1) − 1). floor(+0.5) — not round() — because
+    # the two engines disagree on round()'s tie rule; floor(+0.5) is
+    # half-up in both. A zero vector (scale 0) passes through
+    # unchanged; bits ≥ 32 is the float passthrough.
+    # Each budget's max-abs scale is hoisted into its own column
+    # BEFORE the dequantize transform: inside it, the O(DIM)
+    # array_max would re-evaluate in every element's lambda — O(DIM²)
+    # interpreted work per vector, measured ~2.5 s of this query
+    # alone at sf0.1.
     scaled = emb.select(
         "vec_id",
         "v",

@@ -102,9 +102,6 @@ def write_yolo_labels(df: DataFrame, path: str, split_col: str | None = None) ->
     writer.text(path)
 
 
-YOLO_PREDICTION_SCHEMA = "image_stem string, category_id int, x_center double, y_center double, w_norm double, h_norm double, confidence double"
-
-
 def read_yolo_predictions(spark: SparkSession, path: str) -> DataFrame:
     """YOLO prediction text (stem-prefixed lines, see
     write_yolo_labels) → typed rows. Malformed lines are dropped,

@@ -1,9 +1,7 @@
 """Generic sources and sinks beyond the star-schema parquet.
 
-- CSV / JSON-lines readers with explicit schemas (schema inference
-  is a full extra pass at 100 TB — never rely on it);
-- partitioned parquet writer (partition pruning is the first-order
-  scan saver for time/tenant-sliced lakes);
+- JSON-lines reader and writer with an explicit schema (schema
+  inference is a full extra pass at 100 TB — never rely on it);
 - bucketed table writer: pre-shuffling both sides of a recurring
   join into the same bucketing lets every later join run with ZERO
   exchanges — the classic pay-once-join-forever layout
@@ -15,39 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_csv(spark: SparkSession, path: str, schema: str, header: bool = True) -> DataFrame:
-    """CSV with an explicit DDL schema; malformed rows dropped
-    (PERMISSIVE would silently null them — fail loud in pipelines)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "DROPMALFORMED")
-        .csv(path)
-    )
-
-
 def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """JSON-lines with an explicit DDL schema (one object per line —
     the splittable layout; multiLine JSON cannot be parallelized)."""
     return spark.read.schema(schema).json(path)
 
 
-def write_partitioned_parquet(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned parquet: directory per partition value
-    so later reads prune partitions before touching bytes."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame, table: str, bucket_col: str, n_buckets: int, mode: str = "overwrite"
-) -> None:
+def write_bucketed_table(df: DataFrame, table: str, bucket_col: str, n_buckets: int) -> None:
     """Bucketed + sorted managed table: rows are hash-distributed
     into n_buckets files by bucket_col. Two tables bucketed the same
     way join with no exchange on either side."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
@@ -204,11 +181,11 @@ GROUP BY 1
 """
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines writer — the LLM-pipeline interchange format (one
     object per line, splittable, streamable). Partitioned part
     files; consumers glob the directory."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 # ---------------------------------------------------------------------------
@@ -291,10 +268,11 @@ _ORDERS_CSV_SCHEMA = (
 
 
 def orders_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Push orders through CSV write → read_csv (explicit schema,
-    header on) and emit per-status order-independent checksums.
-    Doubles survive because Spark's CSV writer emits the shortest
-    round-trippable repr; timestamps ride an explicit pinned format.
+    """Push orders through a CSV write and an explicit-schema read
+    (header on, malformed rows dropped) and emit per-status
+    order-independent checksums. Doubles survive because Spark's CSV
+    writer emits the shortest round-trippable repr; timestamps ride an
+    explicit pinned format.
     Any quoting/formatting/parsing drift flips a hash against the
     oracle computed straight from parquet."""
     from pathlib import Path

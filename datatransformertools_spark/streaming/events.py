@@ -132,21 +132,6 @@ def _state_partition_count(spark: SparkSession, src_dir: str) -> int:
     return max(1, min(cap, math.ceil(n_bytes / target)))
 
 
-def run_available_now(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str = "complete"
-):
-    """Drain all available input with availableNow and park results
-    in a memory sink (test/backfill harness)."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # Cap on one bounded drain: a drain still running then is an error,
 # never a partial result.
 DRAIN_TIMEOUT_S = 300
@@ -168,7 +153,14 @@ def _drain(df: DataFrame, prefix: str, output_mode: str, src_dir: str) -> DataFr
         ) as ckpt,
         _state_partitions(spark, _state_partition_count(spark, src_dir)),
     ):
-        q = run_available_now(df, name, ckpt, output_mode)
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         if not q.awaitTermination(DRAIN_TIMEOUT_S):
             q.stop()
             raise TimeoutError(
@@ -248,62 +240,6 @@ def _write_watermark_sentinel(src_dir: str, sf_dir: str) -> None:
     # copied in just before can share the sentinel's millisecond, and
     # listing order would then decide which is read first
     os.utime(out, ns=(newest_ns + 1_000_000_000,) * 2)
-
-
-def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream over events parquet with a normalized
-    `event_time` timestamp column (same µs instants as the batch
-    reader, whatever the parquet physical type)."""
-    raw = _read_raw(spark, source_dir)
-    return raw.withColumn("event_time", events_event_time(raw))
-
-
-def stream_tumbling_agg(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """5-minute tumbling window counts/sums with a watermark —
-    the streaming twin of ``events_tumbling_agg``."""
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", "5 minutes"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_session_agg(events: DataFrame, watermark: str = "60 minutes") -> DataFrame:
-    """30-minute-gap sessionization with the native session_window —
-    the streaming twin of ``events_sessionize``. State is keyed by
-    (session_window, user_id), so it distributes and expires by
-    watermark like any windowed agg."""
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", "30 minutes"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def stream_dedup(events: DataFrame, watermark: str = "60 minutes") -> DataFrame:
-    """Streaming exact dedup on event_id within the watermark — the
-    streaming form of the training-pipeline dedup gate. State holds
-    only ids inside the watermark horizon, so it is bounded."""
-    return events.withWatermark("event_time", watermark).dropDuplicates(["event_id"])
 
 
 USER_COUNTS_SCHEMA = "user_id long, n_events long, total_value double"
@@ -888,6 +824,25 @@ GROUP BY user_id
 """
 
 
+def stream_enrich(events: DataFrame, history: DataFrame) -> DataFrame:
+    """Per-type running scoreboard over a stream-static join: each
+    event joins its type's historical mean (4-dp, from the batch
+    ``history`` events, broadcast) and the stream counts events and
+    above-mean events per type. Keyed on the catalog-bounded
+    ``event_type``, so state is |types| rows."""
+    stats = history.groupBy("event_type").agg(
+        F.round(F.avg("value") + 1e-9, 4).alias("mean_value")
+    )
+    enriched = events.join(F.broadcast(stats), "event_type").withColumn(
+        "above_mean", (F.col("value") > F.col("mean_value")).cast("long")
+    )
+    return enriched.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("above_mean").alias("n_above_mean"),
+        F.max("mean_value").alias("mean_value"),
+    )
+
+
 def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STATIC join executed as a stream: each micro-batch of
     the event stream joins a STATIC per-type reference table (the
@@ -918,22 +873,11 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     this migration ZERO complete-mode sinks remain in the registry
     (pinned by tests/test_streaming.py::
     test_no_complete_mode_sinks_remain)."""
-    # the static reference: batch aggregate over the same landing
-    # table (stand-in for the warehouse's historical stats table)
-    static_stats = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("event_type")
-        .agg(F.round(F.avg("value") + 1e-9, 4).alias("mean_value"))
-    )
+    # the static side is a batch read of the same landing table
+    # (stand-in for the warehouse's historical stats table)
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
-    raw = _read_raw(spark, src_dir)
-    enriched = raw.join(F.broadcast(static_stats), "event_type").withColumn(
-        "above_mean", (F.col("value") > F.col("mean_value")).cast("long")
-    )
-    agg = enriched.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("above_mean").alias("n_above_mean"),
-        F.max("mean_value").alias("mean_value"),
+    agg = stream_enrich(
+        _read_raw(spark, src_dir), spark.read.parquet(f"{sf_dir}/events.parquet")
     )
     # last-update-wins over the update log: n_events only grows for
     # a key, so the max struct is that key's final state.
@@ -1026,6 +970,25 @@ GROUP BY event_type
 """
 
 
+def stream_daily_users(events: DataFrame) -> DataFrame:
+    """Exact daily active users as a dedup → day-window count chain:
+    ``dropDuplicates`` on (user_id, day_start) under a 1-day
+    watermark, then a 1-day window count, emitted (in append mode)
+    once per day as the watermark closes it."""
+    from datatransformertools_spark.operators.events import DAY_US
+
+    ev = events.withColumn("ts_us", events_ts_us(events)).withColumn(
+        "day_start", F.timestamp_micros(F.expr(f"ts_us div {DAY_US}") * DAY_US)
+    )
+    return (
+        ev.withWatermark("day_start", "1 day")
+        .dropDuplicates(["user_id", "day_start"])
+        .groupBy(F.window("day_start", "1 day").alias("w"))
+        .agg(F.count(F.lit(1)).alias("dau"))
+        .select(F.unix_micros(F.col("w.start")).alias("day_start_us"), "dau")
+    )
+
+
 def events_stream_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT daily active users computed AS A STREAM: per-day dedup
     state (dropDuplicates on (user_id, day)) feeds a day-windowed
@@ -1050,20 +1013,8 @@ def events_stream_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     node, and the sentinel would then never advance the watermark.)
     Value-checked against the batch DAU oracle — the stream and the
     batch `events_active_users` agree exactly."""
-    day_us = 86_400_000_000
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
-    raw = _read_raw(spark, src_dir)
-    ev = (
-        raw.withColumn("ts_us", events_ts_us(raw))
-        .withColumn("day_start", F.timestamp_micros(F.expr(f"ts_us div {day_us}") * day_us))
-    )
-    dau = (
-        ev.withWatermark("day_start", "1 day")
-        .dropDuplicates(["user_id", "day_start"])
-        .groupBy(F.window("day_start", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("dau"))
-        .select(F.unix_micros(F.col("w.start")).alias("day_start_us"), "dau")
-    )
+    dau = stream_daily_users(_read_raw(spark, src_dir))
     return _drain(dau, "dau", "append", src_dir)
 
 
@@ -1296,7 +1247,7 @@ FROM framed
 """
 
 
-def stream_bitmap_rollup(events_with_ts_us: DataFrame, watermark: str = "1 day") -> DataFrame:
+def stream_bitmap_rollup(events_with_ts_us: DataFrame) -> DataFrame:
     """Watermarked per-(user, day) hour-bitmap streaming aggregate
     in UPDATE-mode shape: the grouping key carries the event-time
     `day_start` timestamp, so state for days older than the
@@ -1312,7 +1263,7 @@ def stream_bitmap_rollup(events_with_ts_us: DataFrame, watermark: str = "1 day")
         "user_id",
     )
     return (
-        ev.withWatermark("day_start", watermark)
+        ev.withWatermark("day_start", "1 day")
         .groupBy("user_id", "day_start")
         .agg(
             F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(hour AS INT))")).alias(
@@ -1493,7 +1444,7 @@ def _stream_bitmap_oracle() -> str:
     return EVENTS_BITMAP_ROLLUP_SQL
 
 
-def stream_window_user_totals(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_window_user_totals(events: DataFrame) -> DataFrame:
     """Watermarked per-(hour-window, user) value totals in
     APPEND-on-window-close shape: `F.window` over the event-time
     column with a watermark, so each (window, user) row is emitted
@@ -1502,7 +1453,7 @@ def stream_window_user_totals(events: DataFrame, watermark: str = "2 hours") -> 
     to (delay + window) × |active users| keys on an unbounded feed
     and makes the emission itself final (safe to rank downstream)."""
     return (
-        events.withWatermark("event_time", watermark)
+        events.withWatermark("event_time", "2 hours")
         .groupBy(F.window("event_time", "1 hour").alias("w"), "user_id")
         .agg(F.round(F.sum("value") + 1e-9, 4).alias("total_value"))
         .select(
@@ -1593,33 +1544,3 @@ QUERIES = {
         _stream_topk_oracle(),
     ),
 }
-
-
-
-def stream_to_parquet_idempotent(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    output_mode: str = "update",
-):
-    """foreachBatch parquet sink with replay-safe writes: each
-    micro-batch lands in ``out_dir/batch_id=<id>`` with overwrite
-    mode, so a batch replayed after a failure overwrites its OWN
-    directory instead of appending duplicates — idempotence under
-    Structured Streaming's at-least-once batch delivery, without a
-    transactional table format. The batch_id partition column also
-    gives downstream readers replay lineage for free. This is the
-    production landing-zone pattern when Delta/Iceberg isn't
-    available; on a cluster the same function body issues a MERGE
-    instead of a directory overwrite."""
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 import pytest
 from hypothesis import settings
@@ -31,3 +33,45 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def drain_two_batches(spark, sf_dir, tmp_path):
+    """Drain ``plan(raw)`` over a landing dir ``tmp_path / "events"``
+    that holds the events file and one later file, read as two
+    micro-batches (maxFilesPerTrigger=1) on 8 state partitions.
+    ``second(src)`` writes the later file; by default it is the
+    watermark sentinel. Returns the memory sink table and the query's
+    progress list."""
+    from datatransformertools_spark.streaming.events import (
+        _read_raw,
+        _state_partitions,
+        _write_watermark_sentinel,
+    )
+
+    def drain(plan, output_mode, second=None):
+        src = tmp_path / "events"
+        src.mkdir()
+        shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
+        # written AFTER the copy → newer mtime → later batch
+        if second is None:
+            _write_watermark_sentinel(str(src), sf_dir)
+        else:
+            second(src)
+        raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
+        name = f"two_batch_{uuid.uuid4().hex[:8]}"
+        with _state_partitions(spark, 8):
+            q = (
+                plan(raw)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(180)
+            progresses = list(q.recentProgress)
+        return spark.table(name), progresses
+
+    return drain

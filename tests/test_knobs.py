@@ -1,7 +1,10 @@
-"""Every environment variable the package reads is a documented knob."""
+"""Source scans of the package: every environment variable it reads is
+a documented knob, and every top-level definition is reached from a
+query, a script or README's example."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -28,3 +31,70 @@ def test_every_env_read_is_a_documented_knob():
     knobs = _knobs_paragraph()
     missing = {name: str(path) for name, path in reads.items() if f"`{name}`" not in knobs}
     assert not missing, f"env vars read but not in README's Knobs line: {missing}"
+
+
+PACKAGE = ROOT / "datatransformertools_spark"
+CONSTANT = re.compile(r"_*[A-Z][A-Z0-9_]*")
+
+
+def _referenced(node: ast.AST) -> set[str]:
+    """Names, attribute names and import aliases under ``node``. String
+    and docstring text never counts as a reference."""
+    found = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            found.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            found.add(sub.attr)
+        elif isinstance(sub, ast.alias):
+            found.add(sub.name.rsplit(".", 1)[-1])
+    return found
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    """The top-level def or class name, or the UPPER_CASE constants an
+    assignment binds; nothing for any other statement."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [t.id for t in targets if isinstance(t, ast.Name) and CONSTANT.fullmatch(t.id)]
+    return []
+
+
+def _unreached_definitions() -> list[str]:
+    """Top-level defs, classes and UPPER_CASE constants of the package
+    that no root reaches. Roots: every other module-level statement of
+    the package (the registry's QUERIES dicts among them), bench.py,
+    __spark_entry__.py, perfbench/*.py and README's python blocks.
+    Names match across modules, so a name reached anywhere counts as
+    reached everywhere."""
+    defs: dict[str, list[tuple[str, ast.stmt]]] = {}
+    roots = {"QUERIES"}  # registry._load reads each module's QUERIES by name
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for stmt in ast.parse(path.read_text()).body:
+            names = _defined_names(stmt)
+            if not names:
+                roots |= _referenced(stmt)
+            for name in names:
+                defs.setdefault(name, []).append((f"{path.relative_to(ROOT)}:{name}", stmt))
+    scripts = [ROOT / "bench.py", ROOT / "__spark_entry__.py", *(ROOT / "perfbench").glob("*.py")]
+    sources = [p.read_text() for p in scripts]
+    sources += re.findall(r"```python\n(.*?)```", (ROOT / "README.md").read_text(), re.S)
+    for src in sources:
+        roots |= _referenced(ast.parse(src))
+    reached: set[str] = set()
+    todo = [name for name in roots if name in defs]
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for _, stmt in defs[name]:
+            todo.extend(n for n in _referenced(stmt) if n in defs and n not in reached)
+    return sorted(where for name in defs.keys() - reached for where, _ in defs[name])
+
+
+def test_every_package_definition_is_reached_from_a_root():
+    unreached = _unreached_definitions()
+    assert not unreached, f"definitions no query, script or README example reaches: {unreached}"

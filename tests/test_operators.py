@@ -11,7 +11,6 @@ from datatransformertools_spark.functions.bbox import clip_box, from_yolo, iou_x
 from datatransformertools_spark.operators.annotations import train_val_split
 from datatransformertools_spark.operators.dedup import dedup_exact, dedup_ngram_jaccard
 from datatransformertools_spark.operators.evaluation import detection_eval
-from datatransformertools_spark.operators.multimodal import decode_media, media_frame
 from datatransformertools_spark.operators.similarity import ann_bruteforce_topk, ann_lsh_topk
 
 
@@ -360,14 +359,6 @@ class TestGroupedMap:
 
 
 class TestMultimodal:
-    def test_resize_plumbing(self, spark, sf_dir):
-        from datatransformertools_spark.operators.multimodal import media_frame, resize_media
-
-        rows = resize_media(media_frame(spark, sf_dir), target=64).collect()
-        assert len(rows) > 0
-        assert all(r.out_w == 64 and r.out_h == 64 for r in rows)
-        assert all(len(r.thumb) <= 64 for r in rows)
-
     def test_frame_sampling_explodes_rows(self, spark, sf_dir):
         from datatransformertools_spark.operators.multimodal import media_frame, sample_frames
 
@@ -379,20 +370,6 @@ class TestMultimodal:
             by_doc.setdefault(r.doc_id, []).append(r.frame_idx)
         for idxs in by_doc.values():
             assert sorted(idxs) == list(range(0, max(idxs) + 1, 2))
-
-    def test_decode_plumbing(self, spark, sf_dir):
-        decoded = decode_media(media_frame(spark, sf_dir))
-        rows = decoded.collect()
-        assert len(rows) > 0
-        kinds = {r.media_kind for r in rows}
-        assert kinds <= {"image", "audio", "video"}
-        for r in rows[:20]:
-            assert r.n_bytes > 0
-            assert isinstance(r.feature, (bytes, bytearray))
-            if r.media_kind == "image":
-                assert r.n_frames == 1
-            else:
-                assert r.n_frames >= 1
 
 
 class TestKScaling:

@@ -7,61 +7,37 @@ edge memo (one build per session/corpus across its three consumers).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-from pathlib import Path
-
 from pyspark.sql import functions as F
 
 
 class TestStreamSessionTimeout:
-    def test_timeout_evicts_state(self, spark, sf_dir):
+    def test_timeout_evicts_state(self, spark, sf_dir, drain_two_batches):
         """Two-batch drain (real file, then the far-future sentinel):
         after the sentinel advances the watermark, every real user's
         open session must TIME OUT — emitted via hasTimedOut and
         removed via state.remove() — leaving at most the sentinel's
         own key in the store. Asserted from the query's state-store
         metrics, not just from correct values."""
-        import uuid
-
         from datatransformertools_spark.sources.tables import (
             events_event_time,
             events_ts_us,
         )
         from datatransformertools_spark.streaming.events import (
             SENTINEL_USER,
-            _read_raw,
-            _state_partitions,
-            _write_watermark_sentinel,
             stream_session_timeout,
         )
 
-        tmp = Path(tempfile.mkdtemp(prefix="dtt-sto-evict-"))
-        src = tmp / "events"
-        src.mkdir()
-        shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-        _write_watermark_sentinel(str(src), sf_dir)
-        raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
-        ev = (
-            raw.withColumn("ts_us", events_ts_us(raw))
-            .withColumn("event_time", events_event_time(raw))
-            .withWatermark("event_time", "60 minutes")
-        )
-        name = f"sto_{uuid.uuid4().hex[:8]}"
-        with _state_partitions(spark, 8):
-            q = (
-                stream_session_timeout(ev)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        def plan(raw):
+            ev = (
+                raw.withColumn("ts_us", events_ts_us(raw))
+                .withColumn("event_time", events_event_time(raw))
+                .withWatermark("event_time", "60 minutes")
             )
-            q.awaitTermination(180)
-            progresses = list(q.recentProgress)
+            return stream_session_timeout(ev)
 
-        emitted = spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+        sink, progresses = drain_two_batches(plan, "append")
+
+        emitted = sink.filter(F.col("user_id") != SENTINEL_USER)
         n_users = (
             spark.read.parquet(f"{sf_dir}/events.parquet")
             .select("user_id")
@@ -79,7 +55,6 @@ class TestStreamSessionTimeout:
             if op.get("numRowsTotal") is not None
         ]
         assert finals and finals[0] <= 1, f"state not evicted: {finals[:3]}"
-        shutil.rmtree(tmp, ignore_errors=True)
 
     def test_matches_builtin_session_window(self, spark, sf_dir):
         """The custom timeout kernel and the built-in session_window

@@ -1,6 +1,5 @@
-"""Round-9 additions: multimodal import-probe upgrades (PyMuPDF in
-pdf_to_pages, RGB-normalized PIL thumbnails) and the minhash
-pair-frame memo behavior."""
+"""Round-9 additions: the multimodal PyMuPDF import probe in
+pdf_to_pages and the minhash pair-frame memo behavior."""
 
 from __future__ import annotations
 
@@ -93,88 +92,6 @@ class TestPdfRenderProbe:
         monkeypatch.setitem(sys.modules, "fitz", _FakeFitz)
         probe = _make_pdf_render_probe()
         assert probe(b"%PDF-1.4") is None  # zero pages → stub fan-out
-
-
-class TestThumbProbe:
-    def test_no_pil_returns_none(self, monkeypatch):
-        # forced-absent Pillow (sys.modules["PIL"] = None makes the
-        # import raise), so the stub path is tested deterministically
-        # even where Pillow is installed
-        from datatransformertools_spark.operators.multimodal import _make_thumb_probe
-
-        monkeypatch.setitem(sys.modules, "PIL", None)
-        probe = _make_thumb_probe(8)
-        assert probe(b"anything") is None
-
-    def test_fake_pil_converts_to_rgb_before_resize(self, monkeypatch):
-        """ADVICE r8: the real-PIL path must `.convert('RGB')` BEFORE
-        resize (the reference's open→convert→use pattern) so tobytes
-        is mode-independent, and an EMPTY pixel buffer must count as
-        a successful decode (`is not None`, not truthiness)."""
-        from datatransformertools_spark.operators.multimodal import _make_thumb_probe
-
-        calls = []
-
-        class _FakeImage:
-            def __enter__(self):
-                return self
-
-            def __exit__(self, *a):
-                return False
-
-            def convert(self, mode):
-                calls.append(("convert", mode))
-                return self
-
-            def resize(self, size):
-                calls.append(("resize", size))
-                return self
-
-            def tobytes(self):
-                return b""  # empty-but-valid buffer
-
-        class _FakeImageModule:
-            @staticmethod
-            def open(buf):
-                return _FakeImage()
-
-        class _FakePIL:
-            Image = _FakeImageModule
-
-        monkeypatch.setitem(sys.modules, "PIL", _FakePIL)
-        probe = _make_thumb_probe(16)
-        out = probe(b"fake-image-bytes")
-        assert out == b""  # empty result is SUCCESS, not fallback
-        assert calls == [("convert", "RGB"), ("resize", (16, 16))]
-
-
-class TestResizeEmptyThumbIsNotFallback:
-    def test_resize_media_keeps_empty_real_thumb(self, monkeypatch):
-        """The batch loop must test `is not None`: with a fake PIL
-        yielding empty buffers, the emitted thumb is b'' — not the
-        truncated-payload stub."""
-        import datatransformertools_spark.operators.multimodal as mm
-
-        monkeypatch.setattr(mm, "_make_thumb_probe", lambda target: (lambda p: b""))
-        import pandas as pd
-
-        captured = {}
-
-        class _FakeDF:
-            def mapInPandas(self, fn, schema):
-                pdf = pd.DataFrame(
-                    {
-                        "doc_id": [1],
-                        "media_kind": ["image"],
-                        "payload": [b"0123456789"],
-                    }
-                )
-                captured["out"] = list(fn(iter([pdf])))
-                return self
-
-        mm.resize_media(_FakeDF(), target=4)
-        out = captured["out"][0]
-        assert list(out["thumb"]) == [b""]
 
 
 class TestWatermarkDelayCurve:

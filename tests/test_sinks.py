@@ -2,48 +2,18 @@
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-from pathlib import Path
-
-from pyspark.sql import functions as F
-
-from datatransformertools_spark.sources.sinks import (
-    read_csv,
-    read_jsonl,
-    write_bucketed_table,
-    write_partitioned_parquet,
-)
+from datatransformertools_spark.sources.sinks import read_jsonl, write_bucketed_table
 from datatransformertools_spark.sources.tables import load_table
 
 
-def test_csv_jsonl_roundtrip(spark, sf_dir):
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-io-"))
+def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
     nation = load_table(spark, sf_dir, "nation")
-    nation.write.mode("overwrite").option("header", "true").csv(str(tmp / "csv"))
-    nation.write.mode("overwrite").json(str(tmp / "jsonl"))
+    nation.write.mode("overwrite").json(str(tmp_path / "jsonl"))
 
     schema = "n_nationkey int, n_name string, n_regionkey int"
-    got_csv = read_csv(spark, str(tmp / "csv"), schema)
-    got_jsonl = read_jsonl(spark, str(tmp / "jsonl"), schema)
+    got_jsonl = read_jsonl(spark, str(tmp_path / "jsonl"), schema)
     want = sorted(tuple(r) for r in nation.collect())
-    assert sorted(tuple(r) for r in got_csv.collect()) == want
     assert sorted(tuple(r) for r in got_jsonl.collect()) == want
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_partitioned_parquet_prunes(spark, sf_dir):
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-part-"))
-    orders = load_table(spark, sf_dir, "orders")
-    write_partitioned_parquet(orders, str(tmp / "orders"), ["o_orderpriority"])
-
-    one = spark.read.parquet(str(tmp / "orders")).filter(F.col("o_orderpriority") == "1-URGENT")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    # partition filter must prune at planning time, not scan-then-filter
-    assert "PartitionFilters" in plan and "o_orderpriority" in plan.split("PartitionFilters")[1]
-    want = orders.filter(F.col("o_orderpriority") == "1-URGENT").count()
-    assert one.count() == want
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):

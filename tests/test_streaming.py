@@ -7,152 +7,14 @@ import re
 import shutil
 import tempfile
 from contextlib import contextmanager
-from pathlib import Path
 
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from datatransformertools_spark.sources.tables import events_event_time
-from datatransformertools_spark.streaming.events import (
-    read_events_stream,
-    run_available_now,
-    stream_dedup,
-    stream_session_agg,
-    stream_to_parquet_idempotent,
-    stream_tumbling_agg,
-    stream_user_totals,
-)
 
 
-def test_stream_matches_batch(spark, sf_dir):
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
-
-    stream = read_events_stream(spark, str(src))
-    assert stream.isStreaming
-    agg = stream_tumbling_agg(stream)
-    q = run_available_now(agg, "stream_tumbling", str(tmp / "ckpt"))
-    q.awaitTermination(120)
-
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in spark.sql("SELECT * FROM stream_tumbling").collect()
-    }
-
-    raw_batch = spark.read.parquet(str(src))
-    batch = (
-        raw_batch
-        .withColumn("event_time", events_event_time(raw_batch))
-        .groupBy(F.window("event_time", "5 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .select(F.col("window.start").alias("ws"), "event_type", "n", "s")
-    )
-    want = {(r["ws"], r["event_type"]): (r["n"], round(r["s"], 4)) for r in batch.collect()}
-
-    assert got == want
-    assert len(got) > 0
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _staged_events(sf_dir):
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
-    return tmp, src
-
-
-def test_stream_session_window_matches_batch(spark, sf_dir):
-    tmp, src = _staged_events(sf_dir)
-    stream = read_events_stream(spark, str(src))
-    q = run_available_now(stream_session_agg(stream), "stream_sessions", str(tmp / "ckpt"))
-    q.awaitTermination(120)
-    got = {
-        (r["session_start"], r["user_id"]): (r["n_events"], round(r["total_value"], 4))
-        for r in spark.sql("SELECT * FROM stream_sessions").collect()
-    }
-
-    raw_batch = spark.read.parquet(str(src))
-    batch = (
-        raw_batch
-        .withColumn("event_time", events_event_time(raw_batch))
-        .groupBy(F.session_window("event_time", "30 minutes"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .select(F.col("session_window.start").alias("ws"), "user_id", "n", "s")
-    )
-    want = {(r["ws"], r["user_id"]): (r["n"], round(r["s"], 4)) for r in batch.collect()}
-    assert len(got) > 0
-    assert got == want
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_dedup_drops_resent_batch(spark, sf_dir):
-    tmp, src = _staged_events(sf_dir)
-    # the same file twice = an exactly-resent batch, the common
-    # at-least-once-delivery case streaming dedup exists for
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-1.parquet")
-    stream = read_events_stream(spark, str(src))
-    q = run_available_now(stream_dedup(stream), "stream_dedup", str(tmp / "ckpt"), "append")
-    q.awaitTermination(120)
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM stream_dedup").first()
-    n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert got["n"] == got["d"] == n_src
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_foreachbatch_parquet_sink(spark, sf_dir):
-    tmp, src = _staged_events(sf_dir)
-    out = tmp / "out"
-    stream = read_events_stream(spark, str(src))
-    agg = stream_tumbling_agg(stream)
-    q = stream_to_parquet_idempotent(agg, str(out), str(tmp / "ckpt"))
-    q.awaitTermination(120)
-    # read the landed batch_id=* dirs back and compare to the batch plan
-    landed = spark.read.option("basePath", str(out)).parquet(str(out) + "/batch_id=*")
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in landed.collect()
-    }
-    raw_batch = spark.read.parquet(str(src))
-    batch = (
-        raw_batch
-        .withColumn("event_time", events_event_time(raw_batch))
-        .groupBy(F.window("event_time", "5 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .select(F.col("window.start").alias("ws"), "event_type", "n", "s")
-    )
-    want = {(r["ws"], r["event_type"]): (r["n"], round(r["s"], 4)) for r in batch.collect()}
-    assert got == want
-    assert len(got) > 0
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_user_totals_stateful(spark, sf_dir):
-    tmp, src = _staged_events(sf_dir)
-    stream = read_events_stream(spark, str(src))
-    q = run_available_now(stream_user_totals(stream), "stream_user_totals", str(tmp / "ckpt"), "update")
-    q.awaitTermination(120)
-    # update-mode memory sink may hold one row per microbatch per
-    # user; the LAST emission per user is the running total
-    rows = spark.sql("SELECT * FROM stream_user_totals").collect()
-    got = {}
-    for r in rows:
-        got[r["user_id"]] = (r["n_events"], round(r["total_value"], 4))
-    want = {
-        r["user_id"]: (r["n"], round(r["s"], 4))
-        for r in spark.read.parquet(str(src))
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert len(got) > 0
-    assert got == want
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_interval_join_boundary(spark):
+def test_stream_interval_join_boundary(spark, tmp_path):
     """The stream-stream attribution join uses CLOSED bounds: a
     purchase exactly 30 min after the click matches; one microsecond
     later does not."""
@@ -160,7 +22,6 @@ def test_stream_interval_join_boundary(spark):
 
     from datatransformertools_spark.streaming.events import events_stream_interval_join
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-ij-boundary-"))
     t0 = 1_700_000_000_000_000_000  # epoch nanos
     half_hour_ns = 1_800_000_000_000
     rows = pd.DataFrame(
@@ -173,18 +34,17 @@ def test_stream_interval_join_boundary(spark):
             "props": ["{}"] * 4,
         }
     )
-    rows.to_parquet(tmp / "events.parquet")
-    got = events_stream_interval_join(spark, str(tmp)).collect()
+    rows.to_parquet(tmp_path / "events.parquet")
+    got = events_stream_interval_join(spark, str(tmp_path)).collect()
     # only the exactly-at-boundary purchase joins (the +1us one is
     # past the upper bound; the earlier one precedes the click)
     assert len(got) == 1
     assert got[0]["user_id"] == 7
     assert got[0]["n_pairs"] == 1
     assert got[0]["total_lag_us"] == half_hour_ns // 1000
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_checkpoint_freezes_state_partition_count(spark, sf_dir):
+def test_checkpoint_freezes_state_partition_count(spark, sf_dir, tmp_path):
     """The state-store layout is pinned to spark.sql.shuffle.partitions
     at FIRST checkpoint, and a later drain against the SAME checkpoint
     keeps the frozen count even when the session setting changed in
@@ -194,22 +54,32 @@ def test_checkpoint_freezes_state_partition_count(spark, sf_dir):
     correct — i.e. state actually survived the re-open."""
     import json
 
-    from datatransformertools_spark.streaming.events import _state_partitions
+    from datatransformertools_spark.streaming.events import _read_raw, _state_partitions
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-frozen-"))
-    src = tmp / "events"
+    src = tmp_path / "events"
     src.mkdir()
-    ckpt = str(tmp / "ckpt")
+    ckpt = tmp_path / "ckpt"
     shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
 
     def drain(n_parts, name):
-        stream = read_events_stream(spark, str(src))
-        agg = stream_tumbling_agg(stream)
+        raw = _read_raw(spark, str(src))
+        agg = (
+            raw.withColumn("event_time", events_event_time(raw))
+            .groupBy(F.window("event_time", "5 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+        )
         with _state_partitions(spark, n_parts):
-            q = run_available_now(agg, name, ckpt)
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
+            )
             q.awaitTermination(120)
         return {
-            (r["window_start"], r["event_type"]): r["n_events"]
+            (r["w"], r["event_type"]): r["n_events"]
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         }
 
@@ -227,7 +97,7 @@ def test_checkpoint_freezes_state_partition_count(spark, sf_dir):
     # the offsets metadata of EVERY microbatch records the state
     # partition count the runtime actually used; all committed
     # batches must carry the count the checkpoint was created with.
-    offsets_dir = Path(ckpt) / "offsets"
+    offsets_dir = ckpt / "offsets"
     counts = set()
     for f in offsets_dir.iterdir():
         if not f.name.isdigit():
@@ -237,7 +107,6 @@ def test_checkpoint_freezes_state_partition_count(spark, sf_dir):
                 meta = json.loads(line)
                 counts.add(meta["conf"]["spark.sql.shuffle.partitions"])
     assert counts == {"8"}, counts
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_stream_outer_interval_join_emits_null_rows(spark, sf_dir):
@@ -318,7 +187,7 @@ def test_stream_top_k_matches_batch(spark, sf_dir):
     assert stream == batch
 
 
-def test_watermark_evicts_state_and_closes_windows(spark, sf_dir):
+def test_watermark_evicts_state_and_closes_windows(spark, sf_dir, drain_two_batches):
     """The append-mode windowed aggregate must EVICT state once the
     watermark passes a window (VERDICT r7 #1's 'done' criterion):
     drain the real file and the far-future sentinel as SEPARATE
@@ -326,41 +195,18 @@ def test_watermark_evicts_state_and_closes_windows(spark, sf_dir):
     between them, then assert (a) every real window was emitted
     exactly once (append = final), and (b) the state store reports
     rows REMOVED — the eviction itself, not just correct values."""
-    import os
-    import uuid
-
     from datatransformertools_spark.streaming.events import (
         SENTINEL_USER,
-        _read_raw,
-        _state_partitions,
-        _write_watermark_sentinel,
         stream_window_user_totals,
     )
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-evict-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    # sentinel written AFTER the copy → newer mtime → later batch
-    _write_watermark_sentinel(str(src), sf_dir)
-    raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
-    per_user = stream_window_user_totals(
-        raw.withColumn("event_time", events_event_time(raw))
+    sink, progresses = drain_two_batches(
+        lambda raw: stream_window_user_totals(
+            raw.withColumn("event_time", events_event_time(raw))
+        ),
+        "append",
     )
-    name = f"evict_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, 8):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        progresses = list(q.recentProgress)
-
-    emitted = spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+    emitted = sink.filter(F.col("user_id") != SENTINEL_USER)
     raw_batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     want = (
         raw_batch.withColumn("event_time", events_event_time(raw_batch))
@@ -380,47 +226,22 @@ def test_watermark_evicts_state_and_closes_windows(spark, sf_dir):
         for op in (p.get("stateOperators") or [])
     )
     assert removed >= want, f"state rows removed {removed} < windows {want}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    if os.path.exists(str(src)):
-        shutil.rmtree(str(src), ignore_errors=True)
 
 
-def test_bitmap_rollup_update_mode_state_bounded(spark, sf_dir):
+def test_bitmap_rollup_update_mode_state_bounded(drain_two_batches):
     """The update-mode bitmap rollup must carry a watermark on its
     day-grain key (state evictable on an unbounded feed) and emit
     per-microbatch only touched keys. Two-batch drain (real file,
     then sentinel): batch 2 touches only the sentinel's key, so its
     update emission must be ≤ 1 row — NOT the whole table, which is
     what the replaced complete-mode twin re-emitted every batch."""
-    import uuid
-
     from datatransformertools_spark.sources.tables import events_ts_us
-    from datatransformertools_spark.streaming.events import (
-        _read_raw,
-        _state_partitions,
-        _write_watermark_sentinel,
-        stream_bitmap_rollup,
-    )
+    from datatransformertools_spark.streaming.events import stream_bitmap_rollup
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-bmu-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    _write_watermark_sentinel(str(src), sf_dir)
-    raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
-    bm = stream_bitmap_rollup(raw.withColumn("ts_us", events_ts_us(raw)))
-    name = f"bmu_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, 8):
-        q = (
-            bm.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        progresses = list(q.recentProgress)
+    _, progresses = drain_two_batches(
+        lambda raw: stream_bitmap_rollup(raw.withColumn("ts_us", events_ts_us(raw))),
+        "update",
+    )
     data_batches = [p for p in progresses if p.get("numInputRows", 0) > 0]
     assert len(data_batches) >= 2, "expected the two files to drain as separate batches"
     # batch 2 (sentinel only) must emit ≤ 1 updated row, not the table
@@ -433,58 +254,25 @@ def test_bitmap_rollup_update_mode_state_bounded(spark, sf_dir):
         for op in (p.get("stateOperators") or [])
     )
     assert removed > 0
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_stream_dau_append_emits_each_day_once_and_evicts(spark, sf_dir):
+def test_stream_dau_append_emits_each_day_once_and_evicts(spark, sf_dir, drain_two_batches):
     """The append-mode DAU chain (dedup → day-windowed count,
-    VERDICT r8 #5): two-batch drain (real file, then sentinel) must
-    (a) match the batch DAU exactly, (b) emit every day exactly once
-    (append = final, no complete-mode re-emission), and (c) report
-    state rows REMOVED from BOTH stateful operators once the
-    sentinel pushes the watermark past the real days."""
-    import uuid
-
+    VERDICT r8 #5) that events_stream_daily_users runs: two-batch
+    drain (real file, then sentinel) must (a) match the batch DAU
+    exactly, (b) emit every day exactly once (append = final, no
+    complete-mode re-emission), and (c) report state rows REMOVED
+    from BOTH stateful operators once the sentinel pushes the
+    watermark past the real days."""
     from datatransformertools_spark.sources.tables import events_ts_us
-    from datatransformertools_spark.streaming.events import (
-        _read_raw,
-        _state_partitions,
-        _write_watermark_sentinel,
-    )
+    from datatransformertools_spark.streaming.events import stream_daily_users
 
     day_us = 86_400_000_000
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-dau-t-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    _write_watermark_sentinel(str(src), sf_dir)
-    raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
-    ev = raw.withColumn("ts_us", events_ts_us(raw)).withColumn(
-        "day_start", F.timestamp_micros(F.expr(f"ts_us div {day_us}") * day_us)
-    )
-    dau = (
-        ev.withWatermark("day_start", "1 day")
-        .dropDuplicates(["user_id", "day_start"])
-        .groupBy(F.window("day_start", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("dau"))
-        .select(F.unix_micros(F.col("w.start")).alias("day_start_us"), "dau")
-    )
-    name = f"dau_t_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, 8):
-        q = (
-            dau.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        progresses = list(q.recentProgress)
+    sink, progresses = drain_two_batches(stream_daily_users, "append")
 
     # the sentinel's own day may never close → it cannot appear; all
     # real days must (sentinel user would land on a far-future day)
-    got = {r["day_start_us"]: r["dau"] for r in spark.table(name).collect()}
+    got = {r["day_start_us"]: r["dau"] for r in sink.collect()}
     raw_batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     want = {
         r["day_start_us"]: r["dau"]
@@ -502,7 +290,6 @@ def test_stream_dau_append_emits_each_day_once_and_evicts(spark, sf_dir):
     )
     # dedup evicts one row per (user, day); the agg one per day
     assert removed >= sum(want.values()) + len(want), removed
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_no_complete_mode_sinks_remain(spark, sf_dir):
@@ -526,64 +313,39 @@ def test_no_complete_mode_sinks_remain(spark, sf_dir):
     assert "last-update-wins" in fn_src
 
 
-def test_enrich_update_emits_only_touched_keys(spark, sf_dir):
-    """The migrated enrich scoreboard must emit per micro-batch only
-    the keys that batch TOUCHED (update mode), and the
-    last-update-wins reconstruction must still land on the exact
-    batch answer. Two-batch drain: the real file, then a small
-    single-type file — batch 2 may re-emit at most that ONE type's
-    row, not the whole |types| table (which is what the replaced
-    complete-mode sink did every batch)."""
-    import uuid
-
+def test_enrich_update_emits_only_touched_keys(spark, sf_dir, tmp_path, drain_two_batches):
+    """The migrated enrich scoreboard that events_stream_enrich runs
+    must emit per micro-batch only the keys that batch TOUCHED
+    (update mode), and the last-update-wins reconstruction must still
+    land on the exact batch answer. Two-batch drain: the real file,
+    then a small single-type file — batch 2 may re-emit at most that
+    ONE type's row, not the whole |types| table (which is what the
+    replaced complete-mode sink did every batch)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from datatransformertools_spark.streaming.events import _read_raw, _state_partitions
+    from datatransformertools_spark.streaming.events import stream_enrich
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-enrich-upd-"))
-    src = tmp / "events"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    one_type = t.column("event_type")[0].as_py()
-    pq.write_table(
-        t.filter(pc.equal(t.column("event_type"), one_type)).slice(0, 20),
-        src / "zz_second_batch.parquet",
-    )
-
-    static_stats = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("event_type")
-        .agg(F.round(F.avg("value") + 1e-9, 4).alias("mean_value"))
-    )
-    raw = _read_raw(spark, str(src), maxFilesPerTrigger=1)
-    enriched = raw.join(F.broadcast(static_stats), "event_type").withColumn(
-        "above_mean", (F.col("value") > F.col("mean_value")).cast("long")
-    )
-    agg = enriched.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("above_mean").alias("n_above_mean"),
-        F.max("mean_value").alias("mean_value"),
-    )
-    name = f"enrich_upd_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    def second_batch(src):
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        one_type = t.column("event_type")[0].as_py()
+        pq.write_table(
+            t.filter(pc.equal(t.column("event_type"), one_type)).slice(0, 20),
+            src / "zz_second_batch.parquet",
         )
-        q.awaitTermination(180)
-        progresses = list(q.recentProgress)
+
+    history = spark.read.parquet(f"{sf_dir}/events.parquet")
+    log, progresses = drain_two_batches(
+        lambda raw: stream_enrich(raw, history), "update", second_batch
+    )
     data_batches = [p for p in progresses if p.get("numInputRows", 0) > 0]
     assert len(data_batches) >= 2, "expected the two files to drain as separate batches"
     assert data_batches[-1]["sink"]["numOutputRows"] <= 1
 
     # last-update-wins reconstruction == exact batch replay
-    log = spark.table(name)
+    static_stats = history.groupBy("event_type").agg(
+        F.round(F.avg("value") + 1e-9, 4).alias("mean_value")
+    )
     got = {
         r.event_type: (r.n_events, r.n_above_mean)
         for r in log.groupBy("event_type")
@@ -593,7 +355,7 @@ def test_enrich_update_emits_only_touched_keys(spark, sf_dir):
     }
     want = {
         r.event_type: (r.n_events, r.n_above_mean)
-        for r in spark.read.parquet(str(src))
+        for r in spark.read.parquet(str(tmp_path / "events"))
         .join(F.broadcast(static_stats), "event_type")
         .withColumn("above_mean", (F.col("value") > F.col("mean_value")).cast("long"))
         .groupBy("event_type")
@@ -601,7 +363,6 @@ def test_enrich_update_emits_only_touched_keys(spark, sf_dir):
         .collect()
     }
     assert got == want
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 @contextmanager
@@ -715,10 +476,14 @@ def test_drain_raises_at_its_cap(spark, sf_dir, monkeypatch):
     import pytest
     from pyspark.sql.streaming.query import StreamingQuery
 
-    from datatransformertools_spark.streaming.events import _drain, _staged_events_dir
+    from datatransformertools_spark.streaming.events import (
+        _drain,
+        _read_raw,
+        _staged_events_dir,
+    )
 
     src = _staged_events_dir(spark, sf_dir, sentinel=False)
-    stream = stream_dedup(read_events_stream(spark, src))
+    stream = _read_raw(spark, src).dropDuplicates(["event_id"])
     monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
     with pytest.raises(TimeoutError, match="stream_capped_"):
         _drain(stream, "capped", "append", src)
@@ -750,7 +515,7 @@ def test_streaming_temp_dirs_removed(spark, sf_dir):
     assert stream_dirs() - before == set()
 
 
-def test_sentinel_is_read_after_the_real_events(sf_dir):
+def test_sentinel_is_read_after_the_real_events(sf_dir, tmp_path):
     """The file source reads files in mtime order, so the watermark
     sentinel must be strictly the newest file in its landing dir —
     by a full second, whether the events file was copied in (tests)
@@ -759,12 +524,10 @@ def test_sentinel_is_read_after_the_real_events(sf_dir):
 
     from datatransformertools_spark.streaming.events import _write_watermark_sentinel
 
-    tmp = Path(tempfile.mkdtemp(prefix="dtt-stream-mtime-"))
-    shutil.copy(f"{sf_dir}/events.parquet", tmp / "events.parquet")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), tmp / "linked.parquet")
-    _write_watermark_sentinel(str(tmp), sf_dir)
-    sentinel_ns = os.stat(tmp / "zz-watermark-sentinel.parquet").st_mtime_ns
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), tmp_path / "linked.parquet")
+    _write_watermark_sentinel(str(tmp_path), sf_dir)
+    sentinel_ns = os.stat(tmp_path / "zz-watermark-sentinel.parquet").st_mtime_ns
     for name in ("events.parquet", "linked.parquet"):
-        p = tmp / name
+        p = tmp_path / name
         assert sentinel_ns >= max(os.stat(p).st_mtime_ns, os.lstat(p).st_mtime_ns) + 10**9
-    shutil.rmtree(tmp, ignore_errors=True)
