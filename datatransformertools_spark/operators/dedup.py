@@ -33,12 +33,7 @@ from pyspark.sql.window import Window
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import lsh_band_keys
 from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
-from datatransformertools_spark.functions.vectors import (
-    as_double,
-    flat_cols,
-    flat_cosine_prenormed,
-    norm,
-)
+from datatransformertools_spark.functions.vectors import flat_cols, flat_cosine_prenormed
 from datatransformertools_spark.sources.tables import load_table
 
 NUM_PERM = 8
@@ -1242,17 +1237,15 @@ def _emb_tau_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datatransformertools_spark.operators.similarity import (
         DIM,
         KMEANS_ITERS,
+        _vectors,
         trained_centroids,
     )
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", as_double(F.col("embedding")).alias("v")
-        )
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-        # norm BEFORE the probe explode — after it, the O(DIM) fold
-        # would evaluate EMB_PROBE times per vector
-        assigned = _multiprobe(emb.withColumn("nrm", norm(F.col("v"))), cents)
+        # nrm comes from _vectors, BEFORE the probe explode — after
+        # it, the O(DIM) fold would evaluate EMB_PROBE times per vector
+        assigned = _multiprobe(_vectors(spark, sf_dir), cents)
         # r13 (guide §4.1): split the vector into DIM primitive
         # columns once per probe row, so the O(pairs) cosine below is
         # a codegen'd multiply-add chain instead of the interpreted
@@ -1358,15 +1351,14 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     deferring it would re-introduce per-consumer rebuilds."""
 
     def count() -> int:
-        from datatransformertools_spark.operators.similarity import DIM
+        from datatransformertools_spark.operators.similarity import DIM, _vectors
 
         # flat-column cosine (r13, guide §4.1): this is the largest
         # pair count in the family (quadratic within-label), so the
         # per-pair kernel must be codegen, not the interpreted fold.
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", as_double(F.col("embedding")).alias("v")
-        ).withColumn("nrm", norm(F.col("v")))
-        flat = emb.select("vec_id", "label", "nrm", *flat_cols(F.col("v"), DIM, "_v"))
+        flat = _vectors(spark, sf_dir).select(
+            "vec_id", "label", "nrm", *flat_cols(F.col("v"), DIM, "_v")
+        )
         a, b = flat.alias("a"), flat.alias("b")
         cos = F.round(
             flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
@@ -1546,14 +1538,14 @@ def emb_blocking_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datatransformertools_spark.operators.similarity import (
         DIM,
         KMEANS_ITERS,
+        _vectors,
         trained_centroids,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
     cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-    probed = _multiprobe(emb, cents, max_probe=CURVE_MAX_PROBE, keep_rank=True)
+    probed = _multiprobe(
+        _vectors(spark, sf_dir), cents, max_probe=CURVE_MAX_PROBE, keep_rank=True
+    )
     # flat-column cosine (r13, guide §4.1): the widest-probe join is
     # the family's biggest candidate set — keep its kernel in codegen
     flat = probed.select(

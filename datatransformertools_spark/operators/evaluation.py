@@ -247,17 +247,7 @@ def detection_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hinted explicitly so an AQE-off run can't regress into a 1-row
     # shuffle join (asserted in tests/test_plans.py)
     joined = matched.crossJoin(F.broadcast(n_pred)).crossJoin(F.broadcast(n_gt))
-    tp, np_, ng = F.col("tp"), F.col("n_pred"), F.col("n_gt")
-    precision = tp / np_
-    recall = tp / ng
-    return joined.select(
-        tp,
-        (np_ - tp).alias("fp"),
-        (ng - tp).alias("fn"),
-        F.round(precision + 1e-9, 6).alias("precision"),
-        F.round(recall + 1e-9, 6).alias("recall"),
-        F.round(F.when(precision + recall > 0, 2 * precision * recall / (precision + recall)).otherwise(0.0) + 1e-9, 6).alias("f1"),
-    )
+    return joined.select(*_counts_prf(F.col("tp")))
 
 
 DETECTION_EVAL_SQL = f"""
@@ -273,8 +263,8 @@ SELECT
   tp,
   n_pred - tp AS fp,
   n_gt - tp   AS fn,
-  round(CAST(tp AS DOUBLE) / n_pred + 1e-9, 6) AS precision,
-  round(CAST(tp AS DOUBLE) / n_gt + 1e-9, 6)   AS recall,
+  round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
+  round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
   round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
              THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
                   / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
@@ -306,16 +296,28 @@ def _prf(tp, fp, fn):
     return precision, recall, f1
 
 
+def _rounded_prf(tp, fp, fn) -> list:
+    """`_prf`'s precision / recall / f1, 6-dp rounded and named."""
+    return [
+        F.round(c + 1e-9, 6).alias(name)
+        for c, name in zip(_prf(tp, fp, fn), ("precision", "recall", "f1"))
+    ]
+
+
+def _counts_prf(tp) -> list:
+    """tp / fp / fn + rounded P/R/F1 from a matched count and the
+    broadcast ``n_pred`` / ``n_gt`` totals; an empty prediction or
+    GT set scores 0.0 instead of dividing by zero."""
+    fp, fn = F.col("n_pred") - tp, F.col("n_gt") - tp
+    return [tp.alias("tp"), fp.alias("fp"), fn.alias("fn"), *_rounded_prf(tp, fp, fn)]
+
+
 def detection_eval_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class TP/FP/FN + P/R/F1 (accuracy.ipynb per_class_stats
     printout, zero-denominator guards included)."""
     counts = _per_class_counts(spark, sf_dir)
-    precision, recall, f1 = _prf(F.col("tp"), F.col("fp"), F.col("fn"))
     return counts.select(
-        "cls", "tp", "fp", "fn",
-        F.round(precision + 1e-9, 6).alias("precision"),
-        F.round(recall + 1e-9, 6).alias("recall"),
-        F.round(f1 + 1e-9, 6).alias("f1"),
+        "cls", "tp", "fp", "fn", *_rounded_prf(F.col("tp"), F.col("fp"), F.col("fn"))
     )
 
 
@@ -397,28 +399,38 @@ _GREEDY_MATCH_SCHEMA = "image_id long, pred_id long, gt_id long, cls int, iou do
 
 N_GREEDY_BUCKETS = 256
 
+# The order predictions claim GTs in: the notebook's loop walks them
+# by pred_id; VOC/COCO AP evaluation walks them by confidence
+# (descending, pred_id tiebreak). Within a prediction, candidates go
+# by IoU desc, then the lowest gt_id (the GT enumeration order).
+_PRED_ID_ORDER = (["image_id", "pred_id", "iou", "gt_id"], [True, True, False, True])
+_CONF_ORDER = (
+    ["image_id", "conf", "pred_id", "iou", "gt_id"],
+    [True, False, True, False, True],
+)
 
-def _make_greedy_kernel():
+
+def _per_image_buckets(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """Run a per-image sequential kernel as a grouped map keyed by a
+    hash BUCKET of image_id, not image_id itself: one Arrow transfer
+    + pandas call handles a few hundred images instead of paying
+    per-group overhead on thousands of tiny groups. The kernel must
+    isolate each image itself."""
+    bucket = F.pmod(F.hash("image_id"), F.lit(N_GREEDY_BUCKETS))
+    return df.withColumn("_bucket", bucket).groupBy("_bucket").applyInPandas(kernel, schema)
+
+
+def _make_greedy_kernel(by: list[str], ascending: list[bool]):
     # Factory so cloudpickle serializes the kernel BY VALUE into the
     # applyInPandas closure — cluster Python workers never import
     # this package.
     def greedy_match(pdf):
         """The notebook's `match_detections` loop verbatim
         (Test/accuracy.ipynb, matching cell), applied independently
-        per image: predictions in pred_id order each claim the
-        unmatched same-class GT with the highest IoU (strict `>` ⇒
-        ties go to the lowest gt_id, the GT enumeration order).
-
-        The grouping key is a hash BUCKET of image_id, not image_id
-        itself: one Arrow transfer + pandas call handles a few
-        hundred images instead of paying per-group overhead on
-        thousands of tiny groups (the loop below still isolates each
-        image, so semantics are identical)."""
-        pdf = pdf.sort_values(
-            ["image_id", "pred_id", "iou", "gt_id"],
-            ascending=[True, True, False, True],
-            kind="mergesort",
-        )
+        per image: predictions in the sort order ``by``/``ascending``
+        each claim the unmatched same-class GT with the highest IoU
+        (strict `>` ⇒ ties go to the lowest gt_id)."""
+        pdf = pdf.sort_values(by, ascending=ascending, kind="mergesort")
         keep = []
         cur_img = None
         taken: set = set()
@@ -452,28 +464,15 @@ def detection_eval_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB while preserving the single-image loop semantics
     `detection_eval`'s mutual-best formulation only approximates."""
     cand = _pairs_df(spark, sf_dir).filter(F.col("iou") >= IOU_THRESHOLD)
-    bucket = F.pmod(F.hash("image_id"), F.lit(N_GREEDY_BUCKETS))
-    matched = (
-        cand.withColumn("_bucket", bucket)
-        .groupBy("_bucket")
-        .applyInPandas(_make_greedy_kernel(), _GREEDY_MATCH_SCHEMA)
+    matched = _per_image_buckets(
+        cand, _make_greedy_kernel(*_PRED_ID_ORDER), _GREEDY_MATCH_SCHEMA
     )
     tp_df = matched.agg(F.count(F.lit(1)).alias("tp"))
     n_pred = _pred_df(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_pred"))
     n_gt = _gt_df(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_gt"))
     # scalar aggregates ride as broadcast 1-row frames (house rule)
     joined = tp_df.crossJoin(F.broadcast(n_pred)).crossJoin(F.broadcast(n_gt))
-    tp, np_, ng = F.col("tp"), F.col("n_pred"), F.col("n_gt")
-    precision = tp / np_
-    recall = tp / ng
-    return joined.select(
-        tp,
-        (np_ - tp).alias("fp"),
-        (ng - tp).alias("fn"),
-        F.round(precision + 1e-9, 6).alias("precision"),
-        F.round(recall + 1e-9, 6).alias("recall"),
-        F.round(F.when(precision + recall > 0, 2 * precision * recall / (precision + recall)).otherwise(0.0) + 1e-9, 6).alias("f1"),
-    )
+    return joined.select(*_counts_prf(F.col("tp")))
 
 
 # The oracle replays the sequential loop as a recursive CTE: one
@@ -516,8 +515,8 @@ SELECT
   CAST(tp AS BIGINT) AS tp,
   CAST(n_pred - tp AS BIGINT) AS fp,
   CAST(n_gt - tp AS BIGINT)   AS fn,
-  round(CAST(tp AS DOUBLE) / n_pred + 1e-9, 6) AS precision,
-  round(CAST(tp AS DOUBLE) / n_gt + 1e-9, 6)   AS recall,
+  round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
+  round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
   round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
              THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
                   / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
@@ -557,20 +556,8 @@ def detection_eval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_pred))
         .crossJoin(F.broadcast(n_gt))
     )
-    tp = F.coalesce(F.col("tp"), F.lit(0))
-    precision = tp / F.col("n_pred")
-    recall = tp / F.col("n_gt")
     return joined.select(
-        F.col("thr").alias("iou_threshold"),
-        tp.alias("tp"),
-        (F.col("n_pred") - tp).alias("fp"),
-        (F.col("n_gt") - tp).alias("fn"),
-        F.round(precision + 1e-9, 6).alias("precision"),
-        F.round(recall + 1e-9, 6).alias("recall"),
-        F.round(
-            F.when(precision + recall > 0, 2 * precision * recall / (precision + recall)).otherwise(0.0)
-            + 1e-9, 6,
-        ).alias("f1"),
+        F.col("thr").alias("iou_threshold"), *_counts_prf(F.coalesce(F.col("tp"), F.lit(0)))
     )
 
 
@@ -597,8 +584,8 @@ counts AS (
 SELECT thr AS iou_threshold, tp,
        n_pred - tp AS fp,
        n_gt - tp   AS fn,
-       round(CAST(tp AS DOUBLE) / n_pred + 1e-9, 6) AS precision,
-       round(CAST(tp AS DOUBLE) / n_gt + 1e-9, 6)   AS recall,
+       round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
+       round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
        round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
                   THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
                        / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
@@ -619,57 +606,15 @@ FROM counts
 _AP_QUANT = 1_000_000_000
 
 
-def _make_conf_greedy_kernel():
-    # Factory so cloudpickle serializes the kernel BY VALUE (cluster
-    # Python workers never import this package).
-    def conf_greedy_match(pdf):
-        """Greedy matching in CONFIDENCE order — the assignment rule
-        of VOC/COCO AP evaluation: detections sorted by score
-        (descending, pred_id tiebreak) each claim the unmatched
-        same-class GT with the highest IoU. Same per-image isolation
-        as `detection_eval_greedy`'s kernel; only the processing
-        order differs (conf desc instead of pred_id asc)."""
-        pdf = pdf.sort_values(
-            ["image_id", "conf", "pred_id", "iou", "gt_id"],
-            ascending=[True, False, True, False, True],
-            kind="mergesort",
-        )
-        keep = []
-        cur_img = None
-        taken: set = set()
-        cur_pred = None
-        cur_matched = False
-        for row in pdf.itertuples():
-            if row.image_id != cur_img:
-                cur_img = row.image_id
-                taken = set()
-                cur_pred = None
-            if row.pred_id != cur_pred:
-                cur_pred = row.pred_id
-                cur_matched = False
-            if cur_matched or row.gt_id in taken:
-                continue
-            taken.add(row.gt_id)
-            cur_matched = True
-            keep.append(row.Index)
-        return pdf.loc[keep, ["image_id", "pred_id", "gt_id", "cls", "iou"]]
-
-    return conf_greedy_match
-
-
 def _ap_ranked_env_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confidence-ranked detections with cumulative TP and the
     precision envelope — the shared core of the AP family (all-points
     AP, mAP, and the 101-point COCO resampling). One row per
     detection: (cls, conf, pred_id, is_tp, rnk, cum_tp, p_env)."""
     cand = _pairs_df(spark, sf_dir).filter(F.col("iou") >= IOU_THRESHOLD)
-    bucket = F.pmod(F.hash("image_id"), F.lit(N_GREEDY_BUCKETS))
-    matched = (
-        cand.withColumn("_bucket", bucket)
-        .groupBy("_bucket")
-        .applyInPandas(_make_conf_greedy_kernel(), _GREEDY_MATCH_SCHEMA)
-        .select("pred_id", F.lit(1).alias("is_tp"))
-    )
+    matched = _per_image_buckets(
+        cand, _make_greedy_kernel(*_CONF_ORDER), _GREEDY_MATCH_SCHEMA
+    ).select("pred_id", F.lit(1).alias("is_tp"))
     # matched grows with the corpus → shuffle join on pred_id,
     # never broadcast.
     det = (
@@ -978,16 +923,13 @@ def detection_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("image_id", "pred_id", "conf", "gt_id", iou.alias("iou"), "pred_cls")
         .filter(F.col("iou") >= IOU_THRESHOLD)
     )
-    # the shared confidence-order greedy kernel expects a `cls`
-    # column and passes it through untouched — ride pred_cls in it.
-    bucket = F.pmod(F.hash("image_id"), F.lit(N_GREEDY_BUCKETS))
-    matched = (
-        cand.withColumnRenamed("pred_cls", "cls")
-        .withColumn("_bucket", bucket)
-        .groupBy("_bucket")
-        .applyInPandas(_make_conf_greedy_kernel(), _GREEDY_MATCH_SCHEMA)
-        .select("pred_id", "gt_id", F.col("cls").alias("pred_cls"))
-    )
+    # the greedy kernel expects a `cls` column and passes it through
+    # untouched — ride pred_cls in it.
+    matched = _per_image_buckets(
+        cand.withColumnRenamed("pred_cls", "cls"),
+        _make_greedy_kernel(*_CONF_ORDER),
+        _GREEDY_MATCH_SCHEMA,
+    ).select("pred_id", "gt_id", F.col("cls").alias("pred_cls"))
     # matched grows with the corpus → shuffle joins, never broadcast
     mm = (
         matched.join(gr.select("gt_id", "gt_cls"), "gt_id")
@@ -1152,15 +1094,7 @@ def detection_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the walk as a recursive CTE carrying the kept-box list,
     with suppression decided from a pre-thresholded pred-pred IoU
     pair table."""
-    p = _pred_df(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, "image_id"
-    )
-    bucket = F.pmod(F.hash("image_id"), F.lit(N_GREEDY_BUCKETS))
-    return (
-        p.withColumn("_bucket", bucket)
-        .groupBy("_bucket")
-        .applyInPandas(_make_nms_kernel(), _NMS_SCHEMA)
-    )
+    return _per_image_buckets(_pred_df(spark, sf_dir), _make_nms_kernel(), _NMS_SCHEMA)
 
 
 _NMS_IOU_EXPR = """

@@ -3692,8 +3692,8 @@ def user_hour_profile_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd round is the literal-centroid codegen assignment + a
     K·24 partial agg."""
     from datatransformertools_spark.operators.similarity import (
-        _assign,
         _init_cents,
+        _lloyd_final,
         _lloyd_update,
     )
 
@@ -3716,22 +3716,7 @@ def user_hour_profile_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _init_cents(feats, k=UHP_K, key="user_id")
     for _ in range(UHP_ITERS - 1):
         cents = _lloyd_update(feats, cents)
-    final = (
-        _assign(feats, cents, key="user_id")
-        .select("cluster", F.posexplode("v").alias("dim", "val"))
-        .groupBy("cluster", "dim")
-        .agg(F.round(F.avg("val") + 1e-9, 6).alias("cval"), F.count(F.lit(1)).alias("n_members"))
-    )
-    prev = spark.createDataFrame(
-        [(k, d, cents[k][d]) for k in range(UHP_K) for d in range(UHP_DIM)],
-        "cluster int, dim int, prev_cval double",
-    )
-    return prev.join(final, ["cluster", "dim"], "left").select(
-        "cluster",
-        "dim",
-        F.coalesce(F.col("cval"), F.col("prev_cval")).alias("cval"),
-        F.coalesce(F.col("n_members"), F.lit(0)).alias("n_members"),
-    )
+    return _lloyd_final(feats, cents, key="user_id")
 
 
 def _user_hour_profile_kmeans_sql() -> str:

@@ -2657,8 +2657,8 @@ def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim, cval, n_members) centroid matrix, the same contract as
     `kmeans_embeddings`."""
     from datatransformertools_spark.operators.similarity import (
-        _assign,
         _init_cents,
+        _lloyd_final,
         _lloyd_update,
     )
 
@@ -2672,22 +2672,7 @@ def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _init_cents(feats, k=RFM_K, key="custkey")
     for _ in range(RFM_ITERS - 1):
         cents = _lloyd_update(feats, cents)
-    final = (
-        _assign(feats, cents, key="custkey")
-        .select("cluster", F.posexplode("v").alias("dim", "val"))
-        .groupBy("cluster", "dim")
-        .agg(F.round(F.avg("val") + 1e-9, 6).alias("cval"), F.count(F.lit(1)).alias("n_members"))
-    )
-    prev = spark.createDataFrame(
-        [(k, d, cents[k][d]) for k in range(RFM_K) for d in range(_RFM_DIM)],
-        "cluster int, dim int, prev_cval double",
-    )
-    return prev.join(final, ["cluster", "dim"], "left").select(
-        "cluster",
-        "dim",
-        F.coalesce(F.col("cval"), F.col("prev_cval")).alias("cval"),
-        F.coalesce(F.col("n_members"), F.lit(0)).alias("n_members"),
-    )
+    return _lloyd_final(feats, cents, key="custkey")
 
 
 def _rfm_kmeans_sql() -> str:

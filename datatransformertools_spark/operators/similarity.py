@@ -41,6 +41,34 @@ NBITS = 4
 N_TABLES = 4
 DIM = 64
 
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table decoded once: ``(vec_id, label, v, nrm)``
+    with ``v`` the DOUBLE array and ``nrm`` its L2 norm. Columns a
+    caller does not read are pruned by the optimizer. ``nrm`` is a
+    separate projection over ``v``: inlining ``norm(as_double(...))``
+    would make the optimizer evaluate the decode twice."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", as_double(F.col("embedding")).alias("v")
+    ).withColumn("nrm", norm(F.col("v")))
+
+
+def _rerank_topk(pairs: DataFrame) -> DataFrame:
+    """The exact refine every ANN filter ends in: 6-dp cosine over the
+    ``(query_id, neighbor_id, qv, cv, qn, cn)`` candidate pairs, then
+    the TOP_K per query (ties → lowest neighbor_id)."""
+    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
+    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
+    rank = F.row_number().over(
+        Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    )
+    return (
+        scored.withColumn("rank", rank)
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    )
+
+
 # ---------------------------------------------------------------------------
 # ann_bruteforce_topk
 # ---------------------------------------------------------------------------
@@ -54,9 +82,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TOP_K·N_QUERIES rows — the ground-truth table an ANN eval
     # pipeline materializes once per corpus.
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        ).withColumn("nrm", norm(F.col("v")))
+        emb = _vectors(spark, sf_dir)
         queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
         )
@@ -65,17 +91,8 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("cv"),
             F.col("nrm").alias("cn"),
         )
-        pairs = cands.crossJoin(F.broadcast(queries))  # query side broadcast: scan streams once
-        cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-        scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        rank = F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-        )
-        return (
-            scored.withColumn("rank", rank)
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cos_sim")
-        )
+        # query side broadcast: scan streams once
+        return _rerank_topk(cands.crossJoin(F.broadcast(queries)))
 
     return _BF_TOPK_MEMO.get_or_build(spark, sf_dir, build)
 
@@ -141,9 +158,7 @@ def _bucket_col(v, table: int) -> F.Column:
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
     bucketed = emb.select(
         "vec_id", "v", "nrm",
@@ -164,16 +179,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "qv", "cv", "qn", "cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    rank = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    )
-    return (
-        scored.withColumn("rank", rank)
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    return _rerank_topk(pairs)
 
 
 def _lsh_sql() -> str:
@@ -259,26 +265,28 @@ def _with_cells(
     return out if keep_rank else out.drop("cell_rank")
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: index vectors live in their nearest coarse cell;
-    each query probes its N_PROBE nearest cells and reranks only
-    those cells' members with exact cosine. At 100 TB the cell id
-    is the partition key — a probe touches N_PROBE/N_CELLS of the
-    corpus instead of all of it, and the rerank is per-cell work."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    # Codebook: the first N_CELLS candidate vectors — a deterministic
-    # stand-in for the offline k-means centroids IVF trains
-    # out-of-band. The engine-side mechanics (broadcast codebook,
-    # argmax assignment, cell-equality join) are the production shape.
-    cents = emb.filter(
+def _ivf_codebook(emb: DataFrame) -> DataFrame:
+    """Codebook: the first N_CELLS candidate vectors — a deterministic
+    stand-in for the offline k-means centroids IVF trains
+    out-of-band. The engine-side mechanics (broadcast codebook,
+    argmax assignment, cell-equality join) are the production shape."""
+    return emb.filter(
         (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
     ).select(
         (F.col("vec_id") - N_QUERIES).alias("cell_id"),
         F.col("v").alias("cell_v"),
         F.col("nrm").alias("cell_nrm"),
     )
+
+
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN: index vectors live in their nearest coarse cell;
+    each query probes its N_PROBE nearest cells and reranks only
+    those cells' members with exact cosine. At 100 TB the cell id
+    is the partition key — a probe touches N_PROBE/N_CELLS of the
+    corpus instead of all of it, and the rerank is per-cell work."""
+    emb = _vectors(spark, sf_dir)
+    cents = _ivf_codebook(emb)
     cands = _with_cells(emb.filter(F.col("vec_id") >= N_QUERIES), cents, 1, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
         F.col("nrm").alias("cn"), "cell_id",
@@ -287,17 +295,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
         F.col("nrm").alias("qn"), "cell_id",
     )
-    pairs = cands.join(F.broadcast(queries), "cell_id")
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    rank = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    )
-    return (
-        scored.withColumn("rank", rank)
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    return _rerank_topk(cands.join(F.broadcast(queries), "cell_id"))
 
 
 _COS_SQL = """round(
@@ -367,12 +365,7 @@ def ann_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     global); members collapse to N_CELLS groups map-side; the
     corpus total rides a partition-less window on the N_CELLS-row
     aggregate (feature-bounded)."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= N_QUERIES)
-        .select("vec_id", as_double(F.col("embedding")).alias("v"))
-        .withColumn("nrm", norm(F.col("v")))
-    )
+    emb = _vectors(spark, sf_dir).filter(F.col("vec_id") >= N_QUERIES)
     cents = emb.filter(F.col("vec_id") < N_QUERIES + N_CELLS).select(
         (F.col("vec_id") - N_QUERIES).alias("cell_id"),
         F.col("v").alias("cell_v"),
@@ -494,9 +487,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first PQ_CODES candidates — the same offline-training
     convention as IVF's cells), so the DuckDB oracle replays
     encode→ADC→rerank value-for-value."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     cb = _pq_sub_explode(
         emb.filter((F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_CODES)),
         "vec_id",
@@ -540,16 +531,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(short.select("query_id", F.col("vec_id").alias("neighbor_id"))), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
     )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    rank = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    )
-    return (
-        scored.withColumn("rank", rank)
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    return _rerank_topk(pairs)
 
 
 def _pq_sql() -> str:
@@ -668,9 +650,7 @@ def embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the single broadcast; encode is one min-combined aggregate
     keyed (vec_id, m, sub_id); per-vector errors collapse keyed
     (vec_id, m); the face is |PQ_DISTORTION_MS| rows."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     pairs = _pq_ms_pairs()
 
     # r13 (guide §4.1/§1.2): the old shape fanned each vector to 14
@@ -826,16 +806,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist rerank. Deterministic stand-in codebooks (same
     convention as the IVF cells / PQ codebooks they reuse) keep the
     whole encode→probe→ADC→rerank pipeline value-checked in DuckDB."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    cents = emb.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("v").alias("cell_v"),
-        F.col("nrm").alias("cell_nrm"),
-    )
+    emb = _vectors(spark, sf_dir)
+    cents = _ivf_codebook(emb)
     cands = emb.filter(F.col("vec_id") >= N_QUERIES)
     cand_cells = _with_cells(cands, cents, 1, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), "cell_id"
@@ -891,16 +863,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(short.select("query_id", "neighbor_id")), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
     )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    rank = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    )
-    return (
-        scored.withColumn("rank", rank)
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    return _rerank_topk(pairs)
 
 
 def _ivf_pq_sql() -> str:
@@ -1016,9 +979,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|·DIM scalar rows — which is both the join-friendly shape
     downstream consumers (ANN rerank, IVF codebooks) want and a
     schema every engine can hash (no array column)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     dims = emb.select(
         "label", F.explode(F.sequence(F.lit(0), F.lit(DIM - 1))).alias("dim"), "v"
     ).select("label", "dim", F.element_at("v", F.col("dim") + 1).alias("val"))
@@ -1170,9 +1131,7 @@ _CENT_MEMO = Memo()
 def trained_centroids(spark: SparkSession, sf_dir: str, iters: int) -> list[list[float]]:
     states = _CENT_MEMO.get_or_build(spark, sf_dir, list)
     if len(states) <= iters:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
+        emb = _vectors(spark, sf_dir)
         if not states:
             # K derived from the corpus (clusters ∝ N). The oracle
             # mirrors this in pure SQL (`_lloyd_cte_parts(k=None)`
@@ -1204,6 +1163,30 @@ def _lloyd_update(emb: DataFrame, cents: list[list[float]]) -> list[list[float]]
     ]
 
 
+def _lloyd_final(feats: DataFrame, cents: list[list[float]], key: str = "vec_id") -> DataFrame:
+    """The last Lloyd round, fully lazy: assignment of the ``(key, v)``
+    feature frame from the literal centroids ``cents`` → per-dim mean
+    + member count per cluster in one plan. An empty cluster keeps
+    its centroid from ``cents`` with 0 members. Output is the
+    exploded (cluster, dim, cval, n_members) centroid matrix."""
+    final = (
+        _assign(feats, cents, key=key)
+        .select("cluster", F.posexplode("v").alias("dim", "val"))
+        .groupBy("cluster", "dim")
+        .agg(F.round(F.avg("val") + 1e-9, 6).alias("cval"), F.count(F.lit(1)).alias("n_members"))
+    )
+    prev = feats.sparkSession.createDataFrame(
+        [(k, d, c[d]) for k, c in enumerate(cents) for d in range(len(c))],
+        "cluster int, dim int, prev_cval double",
+    )
+    return prev.join(final, ["cluster", "dim"], "left").select(
+        "cluster",
+        "dim",
+        F.coalesce(F.col("cval"), F.col("prev_cval")).alias("cval"),
+        F.coalesce(F.col("n_members"), F.lit(0)).alias("n_members"),
+    )
+
+
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means, the MLlib way: centroids live on the driver
     (K·DIM doubles) and ship into each assignment pass as a literal
@@ -1220,29 +1203,8 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin ties break toward the lowest cluster id. Output is the
     exploded (cluster, dim, cval) centroid matrix with member
     counts; empty clusters keep their previous centroid."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
     cents = trained_centroids(spark, sf_dir, KMEANS_ITERS - 1)
-
-    # final round, fully lazy: assignment from the last literal
-    # centroids → per-dim update + member counts in one plan
-    final = (
-        _assign(emb, cents)
-        .select("cluster", F.posexplode("v").alias("dim", "val"))
-        .groupBy("cluster", "dim")
-        .agg(F.round(F.avg("val") + 1e-9, 6).alias("cval"), F.count(F.lit(1)).alias("n_members"))
-    )
-    prev = spark.createDataFrame(
-        [(k, d, cents[k][d]) for k in range(len(cents)) for d in range(DIM)],
-        "cluster int, dim int, prev_cval double",
-    )
-    return prev.join(final, ["cluster", "dim"], "left").select(
-        "cluster",
-        "dim",
-        F.coalesce(F.col("cval"), F.col("prev_cval")).alias("cval"),
-        F.coalesce(F.col("n_members"), F.lit(0)).alias("n_members"),
-    )
+    return _lloyd_final(_vectors(spark, sf_dir), cents)
 
 
 _KM_DIST_SQL = (
@@ -1381,11 +1343,9 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cluster id. Cross-engine determinism inherits the kmeans
     contract: 6-dp centroid quantization at every iteration
     boundary, lowest-cluster argmin ties, 6-dp rounded cosine."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-    assigned = _assign(emb, cents).withColumn("nrm", norm(F.col("v")))
+    assigned = _assign(emb, cents)
     # flat-column cosine (r13, guide §4.1): DIM primitive columns
     # split once per vector so the in-cluster pair kernel is a
     # codegen'd multiply-add chain, not the interpreted zip_with
@@ -1615,9 +1575,7 @@ def ann_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-corpus work stays in the codegen'd scoring join. Kernel
     float math is a sequential fold, bit-identical to the oracle's
     recursive-CTE replay."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -1732,10 +1690,9 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-double fold as every similarity op, so the numbers are
     engine-exact), then one |labels|-group partial-agg shuffle —
     the audit of a billion-vector corpus moves |labels| rows."""
-    emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
-    n = norm(as_double(F.col("embedding")))
     return (
-        emb.select("label", n.alias("l2"))
+        _vectors(spark, sf_dir)
+        .select("label", F.col("nrm").alias("l2"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -1832,9 +1789,7 @@ def lsh_tables_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (×N_TABLES) broadcast-grid filter over the deduped pair set,
     never a re-join. Ground truth is the audited brute-force top-k;
     the comparison join is k·|queries| rows."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
     bucketed = emb.select(
         "vec_id", "v", "nrm", F.posexplode(buckets).alias("tbl", "bucket")
@@ -1990,9 +1945,7 @@ def ann_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth reuses the audited brute-force plan. The identical
     segment-then-add / single-fold arithmetic runs in the DuckDB
     oracle, so every cosine is bit-stable cross-engine."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     seg_cols = [
         F.slice("v", lo + 1, hi - lo).alias(f"s{hi}") for lo, hi in _DIM_SEGMENTS
     ]
@@ -2165,9 +2118,7 @@ def ann_quantization_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded rows; ground truth reuses the audited brute-force plan.
     Quantization arithmetic (max-abs scale, floor(+0.5), dequant
     multiply) is replayed exactly in the DuckDB oracle."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     # Symmetric per-vector max-abs scalar quantization, immediately
     # dequantized: q = floor(x/scale + 0.5), x̂ = q·scale with scale =
     # max|x| / (2^(bits-1) − 1). floor(+0.5) — not round() — because
@@ -2423,7 +2374,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     into exactly d(d+1)/2 groups — the shuffle carries d² partial
     sums per map partition, never N·d² rows. The d-row mean frame
     is broadcast (bounded by schema, not data)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(as_double(F.col("embedding")).alias("v"))
+    emb = _vectors(spark, sf_dir)
     d = F.size(F.col("v"))
     ex_i = emb.select(F.posexplode("v").alias("i", "xi"), "v", d.alias("d"))
     pairs = ex_i.select(
@@ -2488,11 +2439,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. At cluster scale the exact scan swaps for the IVF
     shortlist (ann_ivf_topk) without changing this vote/accuracy
     stage."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", as_double(F.col("embedding")).alias("v"))
-        .withColumn("nrm", norm(F.col("v")))
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < KNN_EVAL_N).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
@@ -2585,9 +2532,7 @@ def _cov_fit(spark: SparkSession, sf_dir: str):
     numpy arrays — the shared fit for PCA and ZCA whitening."""
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     ex = emb.select(F.posexplode("v").alias("i", "xi"), F.size("v").alias("d"), "v")
     pairs = ex.select(
         "i",
@@ -2648,9 +2593,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     check (trace, projection-mean/variance/orthonormality
     residuals, share bounds)."""
     mu, comps, shares, _evals, _total_var = _pca_fit(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
 
     # project: centered dot product as a zip_with sum — pure JVM
     out_cols = [emb["vec_id"], emb["label"]]
@@ -2697,9 +2640,7 @@ def embedding_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     mu, comps, shares, evals_desc, total_var = _pca_fit(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     mu_lit = F.array(*[F.lit(float(m)) for m in mu])
     aggs = []
     for k, vec in enumerate(comps):
@@ -2816,9 +2757,7 @@ def embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gated companion `embedding_whiten_invariants` certifies
     the contract."""
     mu, w, _total_var = _whiten_fit(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     scores = _whiten_scores(mu, w, WHITEN_K)
     return emb.select(
         "vec_id",
@@ -2849,9 +2788,7 @@ def embedding_whiten_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     One extra scan collapsing to a single 1-row aggregate
     (WHITEN_K means + WHITEN_K(WHITEN_K+1)/2 product means)."""
     mu, w, total_var = _whiten_fit(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     scores = _whiten_scores(mu, w, WHITEN_K)
     aggs = []
     for j in range(WHITEN_K):
@@ -2918,9 +2855,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keys, the query side broadcasts, and the radius filter
     runs before any window, so output is the only per-query
     variable cost. No all-pairs stage anywhere."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
     bucketed = emb.select(
         "vec_id", "v", "nrm",
@@ -3016,8 +2951,8 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial sums — |labels|·2·DIM rows leave the scan regardless of
     corpus size; centroids are 6-dp quantized before the cosine so
     cross-engine float-sum order can't flip the flag."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", (F.col("vec_id") % 2).alias("half"), as_double(F.col("embedding")).alias("v")
+    emb = _vectors(spark, sf_dir).select(
+        "label", (F.col("vec_id") % 2).alias("half"), "v"
     )
     dims = emb.select(
         "label", "half", F.posexplode("v").alias("dim", "val")
@@ -3099,16 +3034,8 @@ def ann_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     along), then a probe-grid explode (×4, constants-bounded) and
     per-(p, query) windows; ground truth is the brute-force top-k
     (its own audited broadcast shape)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    cents = emb.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("v").alias("cell_v"),
-        F.col("nrm").alias("cell_nrm"),
-    )
+    emb = _vectors(spark, sf_dir)
+    cents = _ivf_codebook(emb)
     cands = _with_cells(emb.filter(F.col("vec_id") >= N_QUERIES), cents, 1, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
         F.col("nrm").alias("cn"), "cell_id",
@@ -3240,9 +3167,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from datatransformertools_spark.operators.dedup import _multiprobe
 
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", as_double(F.col("embedding")).alias("v")
-        ).withColumn("nrm", norm(F.col("v")))
+        emb = _vectors(spark, sf_dir)
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
         assigned = _multiprobe(emb, cents)
         # flat-column cosine (r13, guide §4.1) — see semdedup
@@ -3353,9 +3278,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|-row rollup. Centroids are rounded at 6 dp BEFORE the
     distances so both engines measure against bit-identical
     prototypes."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", as_double(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     cent_rows = label_centroids(spark, sf_dir).select("label", "dim", "cval").collect()
     cents: dict[int, list[float]] = {}
     for r in cent_rows:

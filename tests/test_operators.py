@@ -311,6 +311,70 @@ class TestEvaluation:
         assert 0.0 < m.map50 < 1.0
 
 
+    def test_greedy_kernel_claims_in_its_sort_order(self):
+        """One image where the two processing orders disagree: pred 1
+        (low conf) and pred 2 (high conf) both prefer GT 10. In
+        pred_id order pred 1 claims it; in confidence order pred 2
+        does, and the other prediction falls back to GT 11."""
+        import pandas as pd
+
+        from datatransformertools_spark.operators.evaluation import (
+            _CONF_ORDER,
+            _PRED_ID_ORDER,
+            _make_greedy_kernel,
+        )
+
+        pdf = pd.DataFrame(
+            {
+                "image_id": [7, 7, 7, 7],
+                "pred_id": [1, 1, 2, 2],
+                "gt_id": [10, 11, 10, 11],
+                "cls": [0, 0, 0, 0],
+                "conf": [0.3, 0.3, 0.9, 0.9],
+                "iou": [0.8, 0.55, 0.7, 0.6],
+            }
+        )
+
+        def claims(order):
+            out = _make_greedy_kernel(*order)(pdf)
+            return sorted(zip(out["pred_id"], out["gt_id"]))
+
+        assert claims(_PRED_ID_ORDER) == [(1, 10), (2, 11)]
+        assert claims(_CONF_ORDER) == [(1, 11), (2, 10)]
+
+    def test_empty_prediction_set_scores_zero(self, spark, sf_dir, tmp_path):
+        """Events 1–3 yield 3 GT boxes but no prediction: every
+        jittered one has conf = event_id % 100 / 100 < CONF_THRESHOLD
+        and none is a far duplicate (event_id % 19 != 0). The global
+        P/R/F1 queries and their oracles then report 0.0, not a
+        division by zero."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from datatransformertools_spark import registry
+
+        events = pq.read_table(f"{sf_dir}/events.parquet")
+        pq.write_table(
+            events.filter(pc.is_in(events["event_id"], value_set=pa.array([1, 2, 3]))),
+            tmp_path / "events.parquet",
+        )
+        duck = duckdb.connect()
+        duck.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+        cols = ["tp", "fp", "fn", "precision", "recall", "f1"]
+        want = (0, 0, 3, 0.0, 0.0, 0.0)
+        for name in ("detection_eval", "detection_eval_greedy", "detection_eval_sweep"):
+            sdf = registry.queries()[name](spark, str(tmp_path))
+            got = [tuple(r[c] for c in cols) for r in sdf.collect()]
+            rel = duck.sql(registry.oracle_sql()[name])
+            oracle = [tuple(dict(zip(rel.columns, r))[c] for c in cols) for r in rel.fetchall()]
+            n = 5 if name == "detection_eval_sweep" else 1  # one row per IoU threshold
+            assert got == [want] * n, name
+            assert oracle == [want] * n, name
+        duck.close()
+
+
 class TestBatchInference:
     def test_detections_clip_and_threshold(self, spark, sf_dir):
         from datatransformertools_spark.operators.multimodal import (

@@ -714,6 +714,23 @@ def test_arrow_kernels_one_round_trip_per_partition(batch_plans):
     )
 
 
+def test_detection_nms_shuffles_predictions_once(spark, sf_dir):
+    """The NMS kernel's own `_bucket` exchange is the only exchange
+    below it: a fixed-count repartition under it would shuffle every
+    prediction row twice."""
+    plan = _plan(spark, sf_dir, "detection_nms")
+    nodes = _plan_tree(plan)
+    [kernel] = [i for i, (op, _) in enumerate(nodes) if op.startswith("FlatMapGroupsInPandas")]
+    exchanges, todo = [], list(nodes[kernel][1])
+    while todo:
+        op, children = nodes[todo.pop()]
+        if "Exchange" in op:
+            exchanges.append(op)
+        todo.extend(children)
+    assert len(exchanges) == 1, exchanges
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_arrow_kernel_contract_catches_fixed_fanout_and_stacking():
     """The plan walk flags both shapes it guards and spares a
     key-only exchange and a kernel fed straight by a scan."""
