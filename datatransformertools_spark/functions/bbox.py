@@ -72,3 +72,21 @@ def iou_xywh(
     inter = iw * ih
     union = aw * ah + bw * bh - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def iou_xywh_sql(a: tuple[str, str, str, str], b: tuple[str, str, str, str]) -> str:
+    """DuckDB twin of ``iou_xywh`` over two ``(x, y, w, h)`` tuples of
+    SQL expressions."""
+    ax, ay, aw, ah = a
+    bx, by, bw, bh = b
+    iw = f"greatest(0.0, least({ax} + {aw}, {bx} + {bw}) - greatest({ax}, {bx}))"
+    ih = f"greatest(0.0, least({ay} + {ah}, {by} + {bh}) - greatest({ay}, {by}))"
+    return f"""CASE WHEN ({aw} * {ah} + {bw} * {bh}
+           - {iw}
+             * {ih}) > 0
+     THEN ({iw}
+           * {ih})
+          / ({aw} * {ah} + {bw} * {bh}
+             - {iw}
+               * {ih})
+     ELSE 0.0 END"""

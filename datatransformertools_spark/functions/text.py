@@ -1,8 +1,17 @@
-"""Text analysis Column builders.
+"""Text analysis Column builders and their DuckDB twins.
 
 All built-in JVM expressions (split/regexp/transform) — the text
-hot path stays inside whole-stage codegen. Every builder has an
-exact ANSI-SQL twin used in the DuckDB oracles.
+hot path stays inside whole-stage codegen. The DuckDB oracles build
+their SQL from the twins here: ``normalize_sql`` mirrors
+``normalize_text``, ``tokens_sql`` mirrors ``tokens``, and
+``norm_tokens_sql`` is ``tokens(normalize_text(col))`` without the
+no-op outer trim.
+
+Precondition of the twins: the text holds no U+000B and no U+0130.
+Java's ``\\s`` matches the vertical tab and RE2's does not, and the
+engines lowercase ``İ`` differently (``i̇`` against ``i``). The staged
+documents at sf0.001, sf0.01 and sf0.1 are all ASCII and hold no tab,
+CR, FF or vertical tab.
 """
 
 from __future__ import annotations
@@ -20,6 +29,22 @@ def normalize_text(col: Column) -> Column:
 def tokens(col: Column) -> Column:
     """Whitespace tokenization of trimmed text → array<string>."""
     return F.split(F.trim(col), r"\s+")
+
+
+def normalize_sql(col: str = "text") -> str:
+    """DuckDB twin of ``normalize_text`` over the column ``col``."""
+    return rf"trim(regexp_replace(lower({col}), '\s+', ' ', 'g'))"
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB twin of ``tokens`` over the SQL expression ``expr``."""
+    return rf"regexp_split_to_array(trim({expr}), '\s+')"
+
+
+def norm_tokens_sql(col: str = "text") -> str:
+    """DuckDB twin of ``tokens(normalize_text(col))`` without the outer
+    trim, which is a no-op on normalized text."""
+    return rf"regexp_split_to_array({normalize_sql(col)}, '\s+')"
 
 
 def word_shingles(tok: Column, n: int) -> Column:

@@ -39,6 +39,21 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(ad, bd) / denom).otherwise(F.lit(0.0))
 
 
+def norm_sql(v: str) -> str:
+    """DuckDB twin of ``norm`` over a DOUBLE[] expression."""
+    return f"sqrt(list_sum(list_transform({v}, x -> x * x)))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``cosine`` over two DOUBLE[] expressions."""
+    return f"""CASE WHEN {norm_sql(a)}
+                     * {norm_sql(b)} > 0
+                THEN list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i]))
+                     / ({norm_sql(a)}
+                        * {norm_sql(b)})
+                ELSE 0.0 END"""
+
+
 def cosine_prenormed(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     """Cosine with per-vector norms precomputed BEFORE the pair join
     — same values as ``cosine`` (identical sequential fold per

@@ -31,8 +31,15 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.hashing import md5_long
-from datatransformertools_spark.functions.text import normalize_text, tokens
-from datatransformertools_spark.operators.dedup import _SHINGLE_SQL, _shingle_df
+from datatransformertools_spark.functions.text import (
+    norm_tokens_sql,
+    normalize_sql,
+    normalize_text,
+    tokens,
+    tokens_sql,
+)
+from datatransformertools_spark.operators.dedup import _SHINGLE_SQL, _minhash_ctes, _shingle_df
+from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL, quality_terms_sql
 from datatransformertools_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -421,10 +428,10 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PACK_SEQUENCES_SQL = (
-    r"""
+    rf"""
 WITH toks AS (
   SELECT doc_id, source,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_tokens
+         len({tokens_sql(normalize_sql())}) AS n_tokens
   FROM documents
 ),
 packed AS (
@@ -473,10 +480,10 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_RATE_BY_SOURCE_SQL = r"""
+DEDUP_RATE_BY_SOURCE_SQL = rf"""
 WITH per_hash AS (
   SELECT source,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
+         md5({normalize_sql()}) AS h,
          count(*) AS n
   FROM documents
   GROUP BY 1, 2
@@ -592,12 +599,7 @@ def cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 CAP_PER_SOURCE_SQL = rf"""
 WITH scored AS (
   SELECT doc_id, source,
-         round(
-           0.5 * (CASE WHEN len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) > 0
-                       THEN len(list_distinct(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')))::DOUBLE
-                            / len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+'))
-                       ELSE 0.0 END)
-           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS quality_score
+         {QUALITY_SCORE_SQL} AS quality_score
   FROM documents
 ),
 ranked AS (
@@ -651,18 +653,11 @@ def quality_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUALITY_SQL_FRAG = r"""round(
-           0.5 * (CASE WHEN len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) > 0
-                       THEN len(list_distinct(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')))::DOUBLE
-                            / len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+'))
-                       ELSE 0.0 END)
-           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6)"""
-
 QUALITY_STRATIFIED_SPLIT_SQL = f"""
 WITH scored AS (
   SELECT doc_id,
-         {_QUALITY_SQL_FRAG} AS quality,
-         least(CAST(floor({_QUALITY_SQL_FRAG} * 10) AS BIGINT), 9) AS stratum,
+         {QUALITY_SCORE_SQL} AS quality,
+         least(CAST(floor({QUALITY_SCORE_SQL} * 10) AS BIGINT), 9) AS stratum,
          CASE WHEN ('0x' || substr(md5('{SPLIT_SALT}' || doc_id), 1, 15))::BIGINT % 100 < {VAL_PCT}
               THEN 'val' ELSE 'train' END AS split
   FROM documents
@@ -866,7 +861,7 @@ paras AS (
 ),
 hashed AS (
   SELECT doc_id, idx, length(para) AS para_chars,
-         md5(trim(regexp_replace(lower(para), '\s+', ' ', 'g'))) AS para_hash
+         md5({normalize_sql('para')}) AS para_hash
   FROM paras
 ),
 flagged AS (
@@ -984,19 +979,16 @@ def dataset_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DATASET_DATASHEET_SQL = r"""
+DATASET_DATASHEET_SQL = rf"""
 WITH m AS (
   SELECT source, lang, n_chars,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
-         regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+') AS t
+         md5({normalize_sql()}) AS h,
+         {tokens_sql(normalize_sql())} AS t
   FROM documents
 ),
 s AS (
   SELECT source, lang, n_chars, h,
-         round(0.5 * (CASE WHEN len(t) > 0
-                           THEN len(list_distinct(t))::DOUBLE / len(t)
-                           ELSE 0.0 END)
-               + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS q
+         round({quality_terms_sql('t')}, 6) AS q
   FROM m
 )
 SELECT count(*) AS n_docs,
@@ -1059,15 +1051,14 @@ def quality_token_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUALITY_TOKEN_RETENTION_SQL = (
-    r"""
+    rf"""
 WITH base AS (
   SELECT doc_id, n_chars,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 scored AS (
-  SELECT round(0.5 * (CASE WHEN len(t) > 0 THEN len(list_distinct(t))::DOUBLE / len(t) ELSE 0.0 END)
-               + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS q,
+  SELECT round({quality_terms_sql('t')}, 6) AS q,
          CAST(len(t) AS BIGINT) AS n_tokens
   FROM base
 ),
@@ -1125,16 +1116,15 @@ def source_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_QUALITY_CALIBRATION_SQL = r"""
+SOURCE_QUALITY_CALIBRATION_SQL = rf"""
 WITH base AS (
   SELECT source, n_chars,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 scored AS (
   SELECT source,
-         round(0.5 * (CASE WHEN len(t) > 0 THEN len(list_distinct(t))::DOUBLE / len(t) ELSE 0.0 END)
-               + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS q
+         round({quality_terms_sql('t')}, 6) AS q
   FROM base
 ),
 per_source AS (
@@ -1238,10 +1228,10 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TOKENIZE_TO_IDS_ARRAY_SQL = (
-    r"""
+    rf"""
 WITH split AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS arr
+         {norm_tokens_sql()} AS arr
   FROM documents
 ),
 tok AS (
@@ -1467,7 +1457,7 @@ def _dedup_funnel_by_source_sql() -> str:
     return rf"""
 WITH d AS (
   SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h
+         md5({normalize_sql()}) AS h
   FROM documents
 ),
 keep AS (SELECT h, min(doc_id) AS keep_id FROM d GROUP BY 1),
@@ -1605,8 +1595,8 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
 CURRICULUM_PHASES_SQL = f"""
 WITH scored AS (
   SELECT doc_id, source,
-         {_QUALITY_SQL_FRAG} AS quality,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))), '\\s+')) AS n_tokens
+         {QUALITY_SCORE_SQL} AS quality,
+         len({tokens_sql(normalize_sql())}) AS n_tokens
   FROM documents
 ),
 phased AS (
@@ -1711,7 +1701,7 @@ def pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_EFFICIENCY_CURVE_SQL = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))), '\\s+')) AS n_tokens
+         len({tokens_sql(normalize_sql())}) AS n_tokens
   FROM documents
 ),
 offs AS (
@@ -2114,7 +2104,7 @@ TOKEN_BUDGET_CURVE_SQL = rf"""
 WITH base AS (
   SELECT source, doc_id,
          ('0x' || substr(md5('{TB_SALT}' || doc_id), 1, 15))::BIGINT AS h,
-         CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS BIGINT) AS n_tokens
+         CAST(len({norm_tokens_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 ),
 ordered AS (
@@ -2155,7 +2145,7 @@ TOKEN_BUDGET_SAMPLE_SQL = rf"""
 WITH base AS (
   SELECT source, doc_id,
          ('0x' || substr(md5('{TB_SALT}' || doc_id), 1, 15))::BIGINT AS h,
-         CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS BIGINT) AS n_tokens
+         CAST(len({norm_tokens_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 ),
 ordered AS (
@@ -2415,52 +2405,15 @@ def _curation_ctes() -> str:
     component oracles use, composed in one CTE pipeline (recursive
     reach for the CC stage, per DEDUP_COMPONENTS_SQL). The pipeline
     and the funnel audit append different finals."""
-    from datatransformertools_spark.operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        ROWS_PER_BAND,
-    )
-
-    sig_aggs = ",\n    ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
-        for i in range(NUM_PERM)
-    )
-    band_exprs = ",\n    ".join(
-        "md5('%d:' || %s) AS band%d"
-        % (
-            b,
-            " || ".join(
-                f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR) || ','"
-                for r in range(ROWS_PER_BAND)
-            ),
-            b,
-        )
-        for b in range(BANDS)
-    )
-    band_union = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM banded" for b in range(BANDS)
-    )
     return rf"""
 WITH RECURSIVE {_SHINGLE_SQL.strip()},
 scored AS (
-  SELECT doc_id, source, {_QUALITY_SQL_FRAG} AS quality_score
+  SELECT doc_id, source, {QUALITY_SCORE_SQL} AS quality_score
   FROM documents
   WHERE doc_id % {BENCH_MOD} <> 0
 ),
 survivors AS (SELECT * FROM scored WHERE quality_score >= {CURATION_QUALITY_TAU}),
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shingles GROUP BY doc_id
-),
-banded AS (
-  SELECT *,
-    {band_exprs}
-  FROM sig
-),
-exploded AS (
-  {band_union}
-),
+{_minhash_ctes()},
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM exploded a JOIN exploded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -2517,7 +2470,7 @@ CORPUS_CURATION_PIPELINE_SQL = (
     + rf""",
 split_docs AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS arr
+         {norm_tokens_sql()} AS arr
   FROM documents WHERE doc_id IN (SELECT doc_id FROM clean)
 ),
 tok AS (

@@ -32,8 +32,16 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import lsh_band_keys
-from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
-from datatransformertools_spark.functions.vectors import flat_cols, flat_cosine_prenormed
+from datatransformertools_spark.functions.text import (
+    norm_tokens_sql,
+    normalize_sql,
+    normalize_text,
+    tokens,
+    tokens_sql,
+    word_shingles,
+)
+from datatransformertools_spark.functions.vectors import cosine_sql, flat_cols, flat_cosine_prenormed
+from datatransformertools_spark.operators.text_analysis import quality_terms_sql
 from datatransformertools_spark.sources.tables import load_table
 
 NUM_PERM = 8
@@ -182,10 +190,10 @@ def _member_pruned_sizes(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-_SHINGLE_SQL = r"""
+_SHINGLE_SQL = rf"""
 toks AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 shingles AS (
@@ -226,9 +234,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_EXACT_SQL = r"""
+DEDUP_EXACT_SQL = rf"""
 SELECT
-  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_hash,
+  md5({normalize_sql()}) AS text_hash,
   min(doc_id)                                             AS keep_doc_id,
   count(*)                                                AS n_copies
 FROM documents
@@ -277,19 +285,16 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_KEEP_BEST_SQL = r"""
+DEDUP_KEEP_BEST_SQL = rf"""
 WITH m AS (
   SELECT doc_id, n_chars,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
-         regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+') AS t
+         md5({normalize_sql()}) AS h,
+         {tokens_sql(normalize_sql())} AS t
   FROM documents
 ),
 s AS (
   SELECT doc_id, h,
-         round(0.5 * (CASE WHEN len(t) > 0
-                           THEN len(list_distinct(t))::DOUBLE / len(t)
-                           ELSE 0.0 END)
-               + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS score
+         round({quality_terms_sql('t')}, 6) AS score
   FROM m
 )
 SELECT arg_max(doc_id, printf('%.6f|%09d', score, 999999999 - doc_id)) AS keep_doc_id,
@@ -448,7 +453,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_sql() -> str:
+def _minhash_ctes(prefix: str = "", keep_sigs: bool = False) -> str:
+    """DuckDB twin of the signature → band-key explode under
+    `_minhash_pairs_df`: the ``{prefix}sig``, ``{prefix}banded`` and
+    ``{prefix}exploded`` CTEs over ``shingles``. ``keep_sigs`` carries
+    the signature columns through the explode."""
     sig_aggs = ",\n    ".join(
         f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
         for i in range(NUM_PERM)
@@ -464,26 +473,30 @@ def _minhash_sql() -> str:
         )
         for b in range(BANDS)
     )
+    sigs = "".join(f"sig{i}, " for i in range(NUM_PERM)) if keep_sigs else ""
     band_union = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {', '.join(f'sig{i}' for i in range(NUM_PERM))}, band{b} AS band_key FROM banded"
-        for b in range(BANDS)
+        f"SELECT doc_id, {sigs}band{b} AS band_key FROM {prefix}banded" for b in range(BANDS)
     )
-    est = " + ".join(f"(CASE WHEN a.sig{i} = b.sig{i} THEN 1 ELSE 0 END)" for i in range(NUM_PERM))
-    return f"""
-WITH {_SHINGLE_SQL},
-sig AS (
+    return f"""{prefix}sig AS (
   SELECT doc_id,
     {sig_aggs}
   FROM shingles GROUP BY doc_id
 ),
-banded AS (
+{prefix}banded AS (
   SELECT *,
     {band_exprs}
-  FROM sig
+  FROM {prefix}sig
 ),
-exploded AS (
+{prefix}exploded AS (
   {band_union}
-)
+)"""
+
+
+def _minhash_sql() -> str:
+    est = " + ".join(f"(CASE WHEN a.sig{i} = b.sig{i} THEN 1 ELSE 0 END)" for i in range(NUM_PERM))
+    return f"""
+WITH {_SHINGLE_SQL},
+{_minhash_ctes(keep_sigs=True)}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        round(({est}) / {float(NUM_PERM)} + 1e-9, 6) AS est_jaccard
 FROM exploded a JOIN exploded b
@@ -579,9 +592,9 @@ def _simhash_cte_parts() -> list[str]:
         for b in range(nb)
     )
     return [
-        r"""WITH sh_toks AS (
+        rf"""WITH sh_toks AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 )""",
         """hashed AS (
@@ -894,42 +907,12 @@ def neardup_detector_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_overlap_sql() -> str:
-    sig_aggs = ",\n    ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
-        for i in range(NUM_PERM)
-    )
-    band_exprs = ",\n    ".join(
-        "md5('%d:' || %s) AS band%d"
-        % (
-            b,
-            " || ".join(
-                f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR) || ','" for r in range(ROWS_PER_BAND)
-            ),
-            b,
-        )
-        for b in range(BANDS)
-    )
-    band_union = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM mbanded" for b in range(BANDS)
-    )
     return (
         ",\n".join(_simhash_cte_parts())
         + ",\n"
         + _SHINGLE_SQL.strip()
         + f""",
-msig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shingles GROUP BY doc_id
-),
-mbanded AS (
-  SELECT *,
-    {band_exprs}
-  FROM msig
-),
-mexploded AS (
-  {band_union}
-),
+{_minhash_ctes("m")},
 mpairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM mexploded a JOIN mexploded b
@@ -1051,7 +1034,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_WINNOWING_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS tok
+         {norm_tokens_sql()} AS tok
   FROM documents
 ),
 grams AS (
@@ -1154,7 +1137,7 @@ def winnowing_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOWING_DENSITY_AUDIT_SQL = rf"""
 WITH base AS (
   SELECT doc_id, source,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS tok
+         {norm_tokens_sql()} AS tok
   FROM documents
 ),
 grams AS (
@@ -1380,15 +1363,6 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame([(n,)], "n_exact_pairs long")
 
 
-_EMB_COS_SQL = (
-    "CASE WHEN sqrt(list_sum(list_transform(a.v, x -> x * x)))"
-    " * sqrt(list_sum(list_transform(b.v, x -> x * x))) > 0 THEN "
-    "list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]))"
-    " / (sqrt(list_sum(list_transform(a.v, x -> x * x)))"
-    " * sqrt(list_sum(list_transform(b.v, x -> x * x)))) ELSE 0.0 END"
-)
-
-
 def _emb_block_chain(max_rn: int) -> list[str]:
     """Shared oracle CTE chain for the cluster-blocked embedding
     family: the Lloyd's loop (same init/quantization/tie-breaks as
@@ -1433,7 +1407,7 @@ def _emb_pairs_parts() -> list[str]:
     return _emb_block_chain(EMB_PROBE) + [
         f"""pairs AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round({_EMB_COS_SQL} + 1e-9, 6) AS cos_sim
+         round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) AS cos_sim
   FROM afx a JOIN afx b
     ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
 )"""
@@ -1490,7 +1464,7 @@ _EMB_EXACT_CNT_SQL = f"""el AS (SELECT vec_id, label, embedding::DOUBLE[] AS v F
 exact_cnt AS (
   SELECT count(*) AS n_exact_pairs
   FROM el a JOIN el b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round({_EMB_COS_SQL} + 1e-9, 6) >= {COSINE_TAU}
+  WHERE round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) >= {COSINE_TAU}
 )"""
 
 
@@ -1601,7 +1575,7 @@ pair_lvl AS (
          min(greatest(a.rn, b.rn)) AS lvl
   FROM afx a JOIN afx b
     ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round({_EMB_COS_SQL} + 1e-9, 6) >= {COSINE_TAU}
+  WHERE round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) >= {COSINE_TAU}
   GROUP BY 1, 2
 ),
 lvl_counts AS (SELECT lvl, count(*) AS n FROM pair_lvl GROUP BY 1),
@@ -1785,19 +1759,7 @@ def _min_label_components(edges: DataFrame) -> DataFrame:
 
 DEDUP_COMPONENTS_SQL = f"""
 WITH RECURSIVE {_SHINGLE_SQL},
-sig AS (
-  SELECT doc_id,
-    {", ".join(f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}" for i in range(NUM_PERM))}
-  FROM shingles GROUP BY doc_id
-),
-banded AS (
-  SELECT *,
-    {", ".join("md5('%d:' || %s) AS band%d" % (b, " || ".join(f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR) || ','" for r in range(ROWS_PER_BAND)), b) for b in range(BANDS))}
-  FROM sig
-),
-exploded AS (
-  {" UNION ALL ".join(f"SELECT doc_id, band{b} AS band_key FROM banded" for b in range(BANDS))}
-),
+{_minhash_ctes()},
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM exploded a JOIN exploded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -1982,7 +1944,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_INCREMENTAL_SQL = rf"""
 WITH hashed AS (
   SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_hash
+         md5({normalize_sql()}) AS text_hash
   FROM documents
 ),
 drop_docs AS (SELECT * FROM hashed WHERE doc_id % {DROP_MOD} = 0),
@@ -2212,24 +2174,6 @@ def minhash_perm_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_perm_error_sql() -> str:
-    sig_aggs = ",\n    ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
-        for i in range(NUM_PERM)
-    )
-    band_exprs = ",\n    ".join(
-        "md5('%d:' || %s) AS band%d"
-        % (
-            b,
-            " || ".join(
-                f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR) || ','" for r in range(ROWS_PER_BAND)
-            ),
-            b,
-        )
-        for b in range(BANDS)
-    )
-    band_union = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM banded" for b in range(BANDS)
-    )
     est_cols = ",\n       ".join(
         "("
         + " + ".join(f"(CASE WHEN ga.sig{i} = gb.sig{i} THEN 1 ELSE 0 END)" for i in range(h))
@@ -2242,19 +2186,7 @@ def _minhash_perm_error_sql() -> str:
     )
     return f"""
 WITH {_SHINGLE_SQL},
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shingles GROUP BY doc_id
-),
-banded AS (
-  SELECT *,
-    {band_exprs}
-  FROM sig
-),
-exploded AS (
-  {band_union}
-),
+{_minhash_ctes()},
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM exploded a JOIN exploded b
@@ -2356,46 +2288,16 @@ def dedup_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_verify_sql() -> str:
-    sig_aggs = ",\n    ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
-        for i in range(NUM_PERM)
-    )
-    band_exprs = ",\n    ".join(
-        "md5('%d:' || %s) AS band%d"
-        % (
-            b,
-            " || ".join(
-                f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR) || ','" for r in range(ROWS_PER_BAND)
-            ),
-            b,
-        )
-        for b in range(BANDS)
-    )
-    band_union = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM banded" for b in range(BANDS)
-    )
     return rf"""
 WITH {_SHINGLE_SQL},
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shingles GROUP BY doc_id
-),
-banded AS (
-  SELECT *,
-    {band_exprs}
-  FROM sig
-),
-exploded AS (
-  {band_union}
-),
+{_minhash_ctes()},
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM exploded a JOIN exploded b
     ON a.band_key = b.band_key AND a.doc_id < b.doc_id
 ),
 norms AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+  SELECT doc_id, {normalize_sql()} AS norm
   FROM documents
 )
 SELECT doc_a, doc_b,
@@ -2633,7 +2535,7 @@ WITH aug AS (
 ),
 tok AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(t), '\s+', ' ', 'g')), '\s+') AS arr
+         {norm_tokens_sql('t')} AS arr
   FROM aug
 ),
 hh0 AS (
@@ -2765,7 +2667,7 @@ def template_prefix_families(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEMPLATE_PREFIX_FAMILIES_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, source, length(text) AS n_chars_raw,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 heads AS (

@@ -24,12 +24,14 @@ the GT boxes jittered by a few pixels, with ~1/13 class flips,
 
 from __future__ import annotations
 
+from textwrap import indent
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
-from datatransformertools_spark.functions.bbox import clip_box, iou_xywh
+from datatransformertools_spark.functions.bbox import clip_box, iou_xywh, iou_xywh_sql
 from datatransformertools_spark.operators.annotations import ANN_BASE_SQL, annotations_df
 
 IOU_THRESHOLD = 0.5
@@ -121,18 +123,18 @@ pred AS (
 )
 """
 
-_PAIRS_SQL = """
+
+def _box(alias: str, prefix: str = "p") -> tuple[str, str, str, str]:
+    """The ``(x, y, w, h)`` columns of ``alias`` for the IoU twin."""
+    return tuple(f"{alias}.{prefix}{c}" for c in "xywh")
+
+
+_PRED_BOX, _GT_BOX = _box("p"), _box("g", "g")
+
+_PAIRS_SQL = f"""
 pairs AS (
   SELECT p.pred_id, g.gt_id, p.image_id, p.cls, p.conf,
-    CASE WHEN (p.pw * p.ph + g.gw * g.gh
-               - greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-                 * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy))) > 0
-         THEN (greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-               * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy)))
-              / (p.pw * p.ph + g.gw * g.gh
-                 - greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-                   * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy)))
-         ELSE 0.0 END AS iou
+{indent(iou_xywh_sql(_PRED_BOX, _GT_BOX), "    ")} AS iou
   FROM pred p
   JOIN gt g ON p.image_id = g.image_id AND p.cls = g.cls
 )
@@ -147,6 +149,14 @@ ranked AS (
 ),
 matched AS (SELECT * FROM ranked WHERE rn_p = 1 AND rn_g = 1)
 """
+
+# DuckDB twin of `_counts_prf`'s rounded P/R/F1 over tp, n_pred and n_gt
+_PRF_SQL = """round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
+  round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
+  round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
+             THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
+                  / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
+             ELSE 0.0 END + 1e-9, 6) AS f1"""
 
 
 # Cross-query stage-table memos (r12): ELEVEN registered evaluation
@@ -263,12 +273,7 @@ SELECT
   tp,
   n_pred - tp AS fp,
   n_gt - tp   AS fn,
-  round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
-  round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
-  round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
-             THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
-                  / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
-             ELSE 0.0 END + 1e-9, 6) AS f1
+  {_PRF_SQL}
 FROM counts
 """
 
@@ -454,6 +459,35 @@ def _make_greedy_kernel(by: list[str], ascending: list[bool]):
     return greedy_match
 
 
+def _greedy_sql(order_by: str, seq_cols: str, seed: str, step: str) -> str:
+    """DuckDB twin of ``_make_greedy_kernel`` over ``pairs``: per image,
+    predictions in ``order_by`` order each claim their best unmatched
+    candidate GT. ``seed`` / ``step`` set the ``greedy`` CTE's last column."""
+    return f"""cand AS (SELECT * FROM pairs WHERE iou >= {IOU_THRESHOLD}),
+preds_seq AS (
+  SELECT image_id, pred_id,
+         row_number() OVER (PARTITION BY image_id ORDER BY {order_by}) AS rn
+  FROM (SELECT DISTINCT {seq_cols} FROM cand)
+),
+maxrn AS (SELECT image_id, max(rn) AS n FROM preds_seq GROUP BY 1),
+greedy AS (
+  SELECT image_id, 0 AS rn, CAST([] AS BIGINT[]) AS mg, {seed}
+  UNION ALL
+  SELECT g.image_id, g.rn + 1,
+         CASE WHEN b.gt_id IS NULL THEN g.mg ELSE list_append(g.mg, b.gt_id) END,
+         {step}
+  FROM greedy g
+  JOIN preds_seq s ON s.image_id = g.image_id AND s.rn = g.rn + 1
+  LEFT JOIN LATERAL (
+    SELECT c.gt_id FROM cand c
+    WHERE c.image_id = g.image_id AND c.pred_id = s.pred_id
+      AND NOT list_contains(g.mg, c.gt_id)
+    ORDER BY c.iou DESC, c.gt_id
+    LIMIT 1
+  ) b ON TRUE
+)"""
+
+
 def detection_eval_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global P/R/F1 with the notebook's EXACT greedy matching
     (accuracy.ipynb `match_detections`): sequential over predictions,
@@ -482,29 +516,10 @@ def detection_eval_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 DETECTION_EVAL_GREEDY_SQL = f"""
 WITH RECURSIVE {_GT_SQL},
 {_PAIRS_SQL},
-cand AS (SELECT * FROM pairs WHERE iou >= 0.5),
-preds_seq AS (
-  SELECT image_id, pred_id,
-         row_number() OVER (PARTITION BY image_id ORDER BY pred_id) AS rn
-  FROM (SELECT DISTINCT image_id, pred_id FROM cand)
-),
-maxrn AS (SELECT image_id, max(rn) AS n FROM preds_seq GROUP BY 1),
-greedy AS (
-  SELECT image_id, 0 AS rn, CAST([] AS BIGINT[]) AS mg, 0 AS tp FROM maxrn
-  UNION ALL
-  SELECT g.image_id, g.rn + 1,
-         CASE WHEN b.gt_id IS NULL THEN g.mg ELSE list_append(g.mg, b.gt_id) END,
-         g.tp + CASE WHEN b.gt_id IS NULL THEN 0 ELSE 1 END
-  FROM greedy g
-  JOIN preds_seq s ON s.image_id = g.image_id AND s.rn = g.rn + 1
-  LEFT JOIN LATERAL (
-    SELECT c.gt_id FROM cand c
-    WHERE c.image_id = g.image_id AND c.pred_id = s.pred_id
-      AND NOT list_contains(g.mg, c.gt_id)
-    ORDER BY c.iou DESC, c.gt_id
-    LIMIT 1
-  ) b ON TRUE
-),
+{_greedy_sql(
+    "pred_id", "image_id, pred_id", "0 AS tp FROM maxrn",
+    "g.tp + CASE WHEN b.gt_id IS NULL THEN 0 ELSE 1 END",
+)},
 counts AS (
   SELECT (SELECT COALESCE(sum(g.tp), 0) FROM greedy g
           JOIN maxrn m ON g.image_id = m.image_id AND g.rn = m.n) AS tp,
@@ -515,12 +530,7 @@ SELECT
   CAST(tp AS BIGINT) AS tp,
   CAST(n_pred - tp AS BIGINT) AS fp,
   CAST(n_gt - tp AS BIGINT)   AS fn,
-  round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
-  round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
-  round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
-             THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
-                  / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
-             ELSE 0.0 END + 1e-9, 6) AS f1
+  {_PRF_SQL}
 FROM counts
 """
 
@@ -584,12 +594,7 @@ counts AS (
 SELECT thr AS iou_threshold, tp,
        n_pred - tp AS fp,
        n_gt - tp   AS fn,
-       round(CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE 0.0 END + 1e-9, 6) AS precision,
-       round(CASE WHEN n_gt > 0 THEN CAST(tp AS DOUBLE) / n_gt ELSE 0.0 END + 1e-9, 6)   AS recall,
-       round(CASE WHEN CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt > 0
-                  THEN 2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gt)
-                       / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gt)
-                  ELSE 0.0 END + 1e-9, 6) AS f1
+  {indent(_PRF_SQL, "     ")}
 FROM counts
 """
 
@@ -774,31 +779,15 @@ def detection_eval_ap_coco(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recursive CTE (one step per ranked prediction per image, matched
 # GTs carried as a list), then integrates the same envelope with
 # window functions over identical (conf DESC, pred_id) ordering.
+_AP_GREEDY_SQL = _greedy_sql(
+    "conf DESC, pred_id",
+    "image_id, pred_id, conf",
+    "CAST(NULL AS BIGINT) AS matched_pred\n  FROM maxrn",
+    "CASE WHEN b.gt_id IS NULL THEN CAST(NULL AS BIGINT) ELSE s.pred_id END",
+)
+
 _AP_BASE_SQL = f"""
-cand AS (SELECT * FROM pairs WHERE iou >= {IOU_THRESHOLD}),
-preds_seq AS (
-  SELECT image_id, pred_id,
-         row_number() OVER (PARTITION BY image_id ORDER BY conf DESC, pred_id) AS rn
-  FROM (SELECT DISTINCT image_id, pred_id, conf FROM cand)
-),
-maxrn AS (SELECT image_id, max(rn) AS n FROM preds_seq GROUP BY 1),
-greedy AS (
-  SELECT image_id, 0 AS rn, CAST([] AS BIGINT[]) AS mg, CAST(NULL AS BIGINT) AS matched_pred
-  FROM maxrn
-  UNION ALL
-  SELECT g.image_id, g.rn + 1,
-         CASE WHEN b.gt_id IS NULL THEN g.mg ELSE list_append(g.mg, b.gt_id) END,
-         CASE WHEN b.gt_id IS NULL THEN CAST(NULL AS BIGINT) ELSE s.pred_id END
-  FROM greedy g
-  JOIN preds_seq s ON s.image_id = g.image_id AND s.rn = g.rn + 1
-  LEFT JOIN LATERAL (
-    SELECT c.gt_id FROM cand c
-    WHERE c.image_id = g.image_id AND c.pred_id = s.pred_id
-      AND NOT list_contains(g.mg, c.gt_id)
-    ORDER BY c.iou DESC, c.gt_id
-    LIMIT 1
-  ) b ON TRUE
-),
+{_AP_GREEDY_SQL},
 matched AS (SELECT matched_pred AS pred_id FROM greedy WHERE matched_pred IS NOT NULL),
 det AS (
   SELECT p.cls, p.pred_id, p.conf,
@@ -951,17 +940,7 @@ def detection_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.unionByName(fp).unionByName(fn)
 
 
-_CM_IOU_EXPR = """
-CASE WHEN (p.pw * p.ph + g.gw * g.gh
-           - greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-             * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy))) > 0
-     THEN (greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-           * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy)))
-          / (p.pw * p.ph + g.gw * g.gh
-             - greatest(0.0, least(p.px + p.pw, g.gx + g.gw) - greatest(p.px, g.gx))
-               * greatest(0.0, least(p.py + p.ph, g.gy + g.gh) - greatest(p.py, g.gy)))
-     ELSE 0.0 END
-"""
+_CM_IOU_EXPR = f"\n{iou_xywh_sql(_PRED_BOX, _GT_BOX)}\n"
 
 DETECTION_CONFUSION_MATRIX_SQL = f"""
 WITH RECURSIVE {_GT_SQL},
@@ -1097,17 +1076,7 @@ def detection_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _per_image_buckets(_pred_df(spark, sf_dir), _make_nms_kernel(), _NMS_SCHEMA)
 
 
-_NMS_IOU_EXPR = """
-CASE WHEN (a.pw * a.ph + b.pw * b.ph
-           - greatest(0.0, least(a.px + a.pw, b.px + b.pw) - greatest(a.px, b.px))
-             * greatest(0.0, least(a.py + a.ph, b.py + b.ph) - greatest(a.py, b.py))) > 0
-     THEN (greatest(0.0, least(a.px + a.pw, b.px + b.pw) - greatest(a.px, b.px))
-           * greatest(0.0, least(a.py + a.ph, b.py + b.ph) - greatest(a.py, b.py)))
-          / (a.pw * a.ph + b.pw * b.ph
-             - greatest(0.0, least(a.px + a.pw, b.px + b.pw) - greatest(a.px, b.px))
-               * greatest(0.0, least(a.py + a.ph, b.py + b.ph) - greatest(a.py, b.py)))
-     ELSE 0.0 END
-"""
+_NMS_IOU_EXPR = f"\n{iou_xywh_sql(_box('a'), _box('b'))}\n"
 
 DETECTION_NMS_SQL = f"""
 WITH RECURSIVE {_GT_SQL},

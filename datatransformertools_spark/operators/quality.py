@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
-from datatransformertools_spark.functions.text import tokens
+from datatransformertools_spark.functions.text import norm_tokens_sql, normalize_sql, tokens, tokens_sql
+from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL
 from datatransformertools_spark.sources.tables import load_table
 
 # the standardized logreg feature frame (see _logreg_features)
@@ -323,14 +324,9 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS_FILTER_FUNNEL_SQL = rf"""
 WITH base AS (
   SELECT doc_id, n_chars,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_tok,
-         round(
-           0.5 * (CASE WHEN len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) > 0
-                       THEN len(list_distinct(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')))::DOUBLE
-                            / len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+'))
-                       ELSE 0.0 END)
-           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS q
+         md5({normalize_sql()}) AS h,
+         len({tokens_sql(normalize_sql())}) AS n_tok,
+         {QUALITY_SCORE_SQL} AS q
   FROM documents
 ),
 bounds AS (
@@ -462,14 +458,9 @@ def corpus_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS_FILTER_ABLATION_SQL = rf"""
 WITH base AS (
   SELECT doc_id, n_chars,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_tok,
-         round(
-           0.5 * (CASE WHEN len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) > 0
-                       THEN len(list_distinct(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')))::DOUBLE
-                            / len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+'))
-                       ELSE 0.0 END)
-           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS q
+         md5({normalize_sql()}) AS h,
+         len({tokens_sql(normalize_sql())}) AS n_tok,
+         {QUALITY_SCORE_SQL} AS q
   FROM documents
 ),
 bounds AS (
@@ -556,7 +547,7 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_PERPLEXITY_BUCKETS_SQL = rf"""
 WITH tok AS (
   SELECT doc_id, source,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 vocab AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),

@@ -28,10 +28,12 @@ from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.vectors import (
     as_double,
     cosine_prenormed,
+    cosine_sql,
     dot,
     flat_cols,
     flat_cosine_prenormed,
     norm,
+    norm_sql,
 )
 from datatransformertools_spark.sources.tables import load_table
 
@@ -53,6 +55,12 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("nrm", norm(F.col("v")))
 
 
+def _vectors_sql(cols: str = "vec_id") -> str:
+    """DuckDB twin of ``_vectors`` without ``nrm``: the CTE ``e`` with the
+    columns ``cols`` and the DOUBLE[] vector ``v``."""
+    return f"e AS (SELECT {cols}, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
 def _rerank_topk(pairs: DataFrame) -> DataFrame:
     """The exact refine every ANN filter ends in: 6-dp cosine over the
     ``(query_id, neighbor_id, qv, cv, qn, cn)`` candidate pairs, then
@@ -67,6 +75,12 @@ def _rerank_topk(pairs: DataFrame) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "rank", "neighbor_id", "cos_sim")
     )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """``cosine_sql`` rounded to 6 dp, the score every ANN oracle ranks by."""
+    return f"""round(
+           {cosine_sql(a, b)} + 1e-9, 6)"""
 
 
 # ---------------------------------------------------------------------------
@@ -98,18 +112,12 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_BRUTEFORCE_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id >= {N_QUERIES}),
 scored AS (
   SELECT query_id, neighbor_id,
-         round(
-           CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))
-                     * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-                     / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                        * sqrt(list_sum(list_transform(cv, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6) AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM q CROSS JOIN c
 ),
 ranked AS (
@@ -157,6 +165,16 @@ def _bucket_col(v, table: int) -> F.Column:
     return sum(plane_dots)
 
 
+def _bucket_sql(table: int) -> str:
+    """DuckDB twin of ``_bucket_col`` over the DOUBLE[] column ``v``."""
+    terms = []
+    for p in range(NBITS):
+        lit = "[" + ", ".join(str(s) for s in PLANES[table][p]) + "]"
+        dot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> v[i] * ({lit}::DOUBLE[])[i]))"
+        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
+    return " + ".join(terms)
+
+
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _vectors(spark, sf_dir)
     buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
@@ -183,20 +201,15 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_sql() -> str:
-    bucket_cols = []
-    for t in range(N_TABLES):
-        plane_terms = []
-        for p in range(NBITS):
-            lit = "[" + ", ".join(str(s) for s in PLANES[t][p]) + "]"
-            dot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> v[i] * ({lit}::DOUBLE[])[i]))"
-            plane_terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
-        bucket_cols.append(f"'{t}:' || CAST({' + '.join(plane_terms)} AS VARCHAR) AS bucket{t}")
+    bucket_cols = [
+        f"'{t}:' || CAST({_bucket_sql(t)} AS VARCHAR) AS bucket{t}" for t in range(N_TABLES)
+    ]
     bucket_select = ",\n    ".join(bucket_cols)
     union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, v, bucket{t} AS bucket FROM with_buckets" for t in range(N_TABLES)
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 with_buckets AS (
   SELECT vec_id, v,
     {bucket_select}
@@ -213,13 +226,7 @@ cand AS (
 ),
 scored AS (
   SELECT query_id, neighbor_id,
-         round(
-           CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))
-                     * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-                     / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                        * sqrt(list_sum(list_transform(cv, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6) AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand
 ),
 ranked AS (
@@ -297,17 +304,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _rerank_topk(cands.join(F.broadcast(queries), "cell_id"))
 
-
-_COS_SQL = """round(
-           CASE WHEN sqrt(list_sum(list_transform({a}, x -> x * x)))
-                     * sqrt(list_sum(list_transform({b}, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i]))
-                     / (sqrt(list_sum(list_transform({a}, x -> x * x)))
-                        * sqrt(list_sum(list_transform({b}, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6)"""
-
 ANN_IVF_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 cents AS (
   SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
   FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
@@ -316,7 +314,7 @@ cand_cells AS (
   SELECT vec_id AS neighbor_id, cv, cell_id FROM (
     SELECT e.vec_id, e.v AS cv, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
   ) WHERE rn = 1
 ),
@@ -324,13 +322,13 @@ query_cells AS (
   SELECT vec_id AS query_id, qv, cell_id FROM (
     SELECT e.vec_id, e.v AS qv, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
   ) WHERE rn <= {N_PROBE}
 ),
 scored AS (
   SELECT query_id, neighbor_id,
-         {_COS_SQL.format(a='qv', b='cv')} AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand_cells JOIN query_cells USING (cell_id)
 ),
 ranked AS (
@@ -411,10 +409,10 @@ cents AS (
 assigned AS (
   SELECT vec_id, cell_id, cell_sim FROM (
     SELECT e.vec_id, c.cell_id,
-           {_COS_SQL.format(a='e.v', b='c.cell_v')} AS cell_sim,
+           {_cos_sql('e.v', 'c.cell_v')} AS cell_sim,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+             ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c
   ) WHERE rn = 1
 ),
@@ -541,7 +539,7 @@ def _pq_sql() -> str:
         )
 
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 cb AS (
   SELECT vec_id - {N_QUERIES} AS code_id, t.sub_id,
          list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS code_sv
@@ -591,7 +589,7 @@ short AS (
 ),
 scored AS (
   SELECT s.query_id, s.vec_id AS neighbor_id,
-         {_COS_SQL.format(a='q.v', b='c.v')} AS cos_sim
+         {_cos_sql('q.v', 'c.v')} AS cos_sim
   FROM short s
   JOIN e q ON q.vec_id = s.query_id
   JOIN e c ON c.vec_id = s.vec_id
@@ -738,7 +736,7 @@ def _pq_distortion_sql() -> str:
 
     nrm2 = " + ".join(f"v[{i}]*v[{i}]" for i in range(1, DIM + 1))
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 grid AS (SELECT m::INT AS m, sub_id::INT AS sub_id, lo, hi
          FROM (VALUES {pair_rows}) t(m, sub_id, lo, hi)),
 cb AS (
@@ -873,7 +871,7 @@ def _ivf_pq_sql() -> str:
         )
 
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 cents AS (
   SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
   FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
@@ -882,7 +880,7 @@ cand_cells AS (
   SELECT vec_id AS neighbor_id, cell_id FROM (
     SELECT e.vec_id, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
   ) WHERE rn = 1
 ),
@@ -890,7 +888,7 @@ query_cells AS (
   SELECT vec_id AS query_id, cell_id FROM (
     SELECT e.vec_id, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
   ) WHERE rn <= {N_PROBE}
 ),
@@ -947,7 +945,7 @@ short AS (
 ),
 scored AS (
   SELECT s.query_id, s.neighbor_id,
-         {_COS_SQL.format(a='q.v', b='c.v')} AS cos_sim
+         {_cos_sql('q.v', 'c.v')} AS cos_sim
   FROM short s
   JOIN e q ON q.vec_id = s.query_id
   JOIN e c ON c.vec_id = s.neighbor_id
@@ -990,7 +988,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LABEL_CENTROIDS_SQL = f"""
-WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql('label')},
 dims AS (
   SELECT label, i - 1 AS dim, v[i] AS val
   FROM e CROSS JOIN range(1, {DIM} + 1) t(i)
@@ -1245,7 +1243,7 @@ def _lloyd_cte_parts(
     parts = list(
         lead_parts
         if lead_parts is not None
-        else ["WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
+        else [f"WITH {_vectors_sql()}"]
     )
     if k is None:
         seed = f"""seed AS (
@@ -1379,8 +1377,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_sql() -> str:
     last = KMEANS_ITERS
-    norm_sql = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
-    na, nb = norm_sql.format(v="a.v"), norm_sql.format(v="b.v")
+    na, nb = norm_sql("a.v"), norm_sql("b.v")
     cos = (
         f"CASE WHEN {na} * {nb} > 0 THEN "
         f"list_sum(list_transform(range(1, {DIM} + 1), i -> a.v[i] * b.v[i]))"
@@ -1596,15 +1593,14 @@ def _mmr_sql() -> str:
     # unrolled greedy (the kmeans-oracle technique): one CTE pair per
     # selection step — recursive CTEs cannot express the correlated
     # diversity max, a fixed K-step chain of plain joins can
-    norm_sql = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
     dot_ab = f"list_sum(list_transform(range(1, {DIM} + 1), i -> a.cv[i] * b.cv[i]))"
-    na, nb = norm_sql.format(v="a.cv"), norm_sql.format(v="b.cv")
+    na, nb = norm_sql("a.cv"), norm_sql("b.cv")
     pair_cos = f"CASE WHEN {na} * {nb} > 0 THEN {dot_ab} / ({na} * {nb}) ELSE 0.0 END"
-    nq, nc = norm_sql.format(v="qv"), norm_sql.format(v="cv")
+    nq, nc = norm_sql("qv"), norm_sql("cv")
     qdot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * cv[i]))"
     qcos = f"CASE WHEN {nq} * {nc} > 0 THEN {qdot} / ({nq} * {nc}) ELSE 0.0 END"
     parts = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
+        _vectors_sql(),
         f"q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES})",
         f"c AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id >= {N_QUERIES})",
         f"""shortlist AS (
@@ -1840,21 +1836,14 @@ def lsh_tables_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_tables_curve_sql() -> str:
-    bucket_cols = []
-    for t in range(N_TABLES):
-        plane_terms = []
-        for p in range(NBITS):
-            lit = "[" + ", ".join(str(s) for s in PLANES[t][p]) + "]"
-            dot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> v[i] * ({lit}::DOUBLE[])[i]))"
-            plane_terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
-        bucket_cols.append(f"{' + '.join(plane_terms)} AS bucket{t}")
+    bucket_cols = [f"{_bucket_sql(t)} AS bucket{t}" for t in range(N_TABLES)]
     bucket_select = ",\n    ".join(bucket_cols)
     union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, v, {t + 1} AS lvl, bucket{t} AS bucket FROM with_buckets"
         for t in range(N_TABLES)
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 with_buckets AS (
   SELECT vec_id, v,
     {bucket_select}
@@ -1867,13 +1856,7 @@ q AS (SELECT vec_id AS query_id, v AS qv, lvl, bucket FROM bucketed WHERE vec_id
 c AS (SELECT vec_id AS neighbor_id, v AS cv, lvl, bucket FROM bucketed WHERE vec_id >= {N_QUERIES}),
 pairs AS (
   SELECT query_id, neighbor_id, min(q.lvl) AS lvl,
-         min(round(
-           CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))
-                     * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-                     / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                        * sqrt(list_sum(list_transform(cv, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6)) AS cos_sim
+         min({_cos_sql('qv', 'cv')}) AS cos_sim
   FROM q JOIN c ON q.lvl = c.lvl AND q.bucket = c.bucket
   GROUP BY query_id, neighbor_id
 ),
@@ -2035,17 +2018,11 @@ def _ann_dim_curve_sql() -> str:
             f"                  ELSE 0.0 END + 1e-9, 6) AS cos_sim\n"
             f"FROM segdots"
         )
-    # full width: the untruncated single-fold formula (identical to
-    # ANN_BRUTEFORCE_SQL's), NOT a sum of segment dots — bit-exact
-    # vs the ground truth by construction
+    # full width: the single-fold cosine, NOT a sum of segment dots —
+    # bit-exact vs the ground truth by construction
     budget_rows.append(
         f"SELECT query_id, neighbor_id, {DIM_GRID[-1]} AS dims,\n"
-        "       round(CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))\n"
-        "                       * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0\n"
-        "                  THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))\n"
-        "                       / (sqrt(list_sum(list_transform(qv, x -> x * x)))\n"
-        "                          * sqrt(list_sum(list_transform(cv, x -> x * x))))\n"
-        "                  ELSE 0.0 END + 1e-9, 6) AS cos_sim\n"
+        f"       round({cosine_sql('qv', 'cv')} + 1e-9, 6) AS cos_sim\n"
         "FROM segdots"
     )
     budgets = "\n  UNION ALL\n  ".join(budget_rows)
@@ -2482,18 +2459,12 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KNN_LABEL_EVAL_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql('vec_id, label')},
 q AS (SELECT vec_id AS query_id, label AS true_label, v AS qv FROM e WHERE vec_id < {KNN_EVAL_N}),
 c AS (SELECT vec_id AS neighbor_id, label AS n_label, v AS cv FROM e),
 scored AS (
   SELECT query_id, true_label, neighbor_id, n_label,
-         round(
-           CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))
-                     * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-                     / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                        * sqrt(list_sum(list_transform(cv, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6) AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM q CROSS JOIN c
   WHERE neighbor_id != query_id
 ),
@@ -2884,20 +2855,15 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _range_sql() -> str:
-    bucket_cols = []
-    for t in range(N_TABLES):
-        plane_terms = []
-        for p in range(NBITS):
-            lit = "[" + ", ".join(str(s) for s in PLANES[t][p]) + "]"
-            dot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> v[i] * ({lit}::DOUBLE[])[i]))"
-            plane_terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
-        bucket_cols.append(f"'{t}:' || CAST({' + '.join(plane_terms)} AS VARCHAR) AS bucket{t}")
+    bucket_cols = [
+        f"'{t}:' || CAST({_bucket_sql(t)} AS VARCHAR) AS bucket{t}" for t in range(N_TABLES)
+    ]
     bucket_select = ",\n    ".join(bucket_cols)
     union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, v, bucket{t} AS bucket FROM with_buckets" for t in range(N_TABLES)
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 with_buckets AS (
   SELECT vec_id, v,
     {bucket_select}
@@ -2914,13 +2880,7 @@ cand AS (
 ),
 scored AS (
   SELECT query_id, neighbor_id,
-         round(
-           CASE WHEN sqrt(list_sum(list_transform(qv, x -> x * x)))
-                     * sqrt(list_sum(list_transform(cv, x -> x * x))) > 0
-                THEN list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-                     / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                        * sqrt(list_sum(list_transform(cv, x -> x * x))))
-                ELSE 0.0 END + 1e-9, 6) AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand
 )
 SELECT query_id, neighbor_id, cos_sim FROM scored WHERE cos_sim >= {RANGE_TAU}
@@ -2987,7 +2947,7 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_DRIFT_SQL = f"""
-WITH e AS (SELECT label, vec_id % 2 AS half, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql('label, vec_id % 2 AS half')},
 dims AS (
   SELECT label, half, i - 1 AS dim, v[i] AS val
   FROM e CROSS JOIN range(1, {DIM} + 1) t(i)
@@ -3077,7 +3037,7 @@ def ann_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_ivf_probe_curve_sql() -> str:
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql()},
 cents AS (
   SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
   FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
@@ -3086,7 +3046,7 @@ cand_cells AS (
   SELECT vec_id AS neighbor_id, cv, cell_id FROM (
     SELECT e.vec_id, e.v AS cv, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
   ) WHERE rn = 1
 ),
@@ -3094,13 +3054,13 @@ query_cells AS (
   SELECT vec_id AS query_id, qv, cell_id, rn AS lvl FROM (
     SELECT e.vec_id, e.v AS qv, c.cell_id,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS_SQL.format(a='e.v', b='c.cell_v')} DESC, c.cell_id) AS rn
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
     FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
   ) WHERE rn <= {IVF_CURVE_MAX_PROBE}
 ),
 scored AS (
   SELECT query_id, neighbor_id, lvl,
-         {_COS_SQL.format(a='qv', b='cv')} AS cos_sim
+         {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand_cells JOIN query_cells USING (cell_id)
 ),
 grid AS (SELECT CAST(unnest([{", ".join(str(p) for p in range(1, IVF_CURVE_MAX_PROBE + 1))}]) AS INTEGER) AS probe),
@@ -3116,7 +3076,7 @@ exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_COS_SQL.format(a='q.v', b='c.v')} DESC, c.vec_id) AS rn
+                              ORDER BY {_cos_sql('q.v', 'c.v')} DESC, c.vec_id) AS rn
     FROM e q CROSS JOIN e c
     WHERE q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
   ) WHERE rn <= {TOP_K}
@@ -3323,7 +3283,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_SILHOUETTE_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_vectors_sql('vec_id, label')},
 dims AS (
   SELECT label, i - 1 AS dim, v[i] AS val
   FROM e CROSS JOIN range(1, {DIM} + 1) t(i)

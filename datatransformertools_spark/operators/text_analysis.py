@@ -15,7 +15,14 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_long
-from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
+from datatransformertools_spark.functions.text import (
+    norm_tokens_sql,
+    normalize_sql,
+    normalize_text,
+    tokens,
+    tokens_sql,
+    word_shingles,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 # English-ish function words used by the marker heuristic.
@@ -52,10 +59,10 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_STATS_SQL = r"""
+TEXT_STATS_SQL = rf"""
 WITH base AS (
   SELECT doc_id, text,
-         trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+         {normalize_sql()} AS norm
   FROM documents
 ),
 m AS (
@@ -99,6 +106,21 @@ def quality_score_expr() -> "F.Column":
     return F.round(0.5 * uniq_ratio + 0.5 * len_score + 1e-9, 6)
 
 
+def quality_terms_sql(toks: str) -> str:
+    """The unrounded ``quality_score_expr`` in DuckDB SQL, over the token
+    array expression ``toks`` and the ``n_chars`` column."""
+    return f"""0.5 * (CASE WHEN len({toks}) > 0
+                       THEN len(list_distinct({toks}))::DOUBLE
+                            / len({toks})
+                       ELSE 0.0 END)
+           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9"""
+
+
+# DuckDB twin of ``quality_score_expr``
+QUALITY_SCORE_SQL = f"""round(
+           {quality_terms_sql(tokens_sql(normalize_sql()))}, 6)"""
+
+
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     norm = normalize_text(F.col("text"))
@@ -116,10 +138,10 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_QUALITY_SQL = r"""
+TEXT_QUALITY_SQL = rf"""
 WITH base AS (
   SELECT doc_id, n_chars,
-         regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+') AS t
+         {tokens_sql(normalize_sql())} AS t
   FROM documents
 ),
 m AS (
@@ -185,7 +207,7 @@ def _lang_id_sql() -> str:
     return rf"""
 WITH base AS (
   SELECT doc_id, lang,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 scored AS (
@@ -274,7 +296,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_COUNT_BPE_SQL = rf"""
 SELECT doc_id,
-       len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_ws_tokens,
+       len({tokens_sql(normalize_sql())}) AS n_ws_tokens,
        len(regexp_extract_all(text, '{_BPE_PATTERN}')) AS n_bpe_tokens,
        round(CASE WHEN len(regexp_extract_all(text, '{_BPE_PATTERN}')) > 0
                   THEN length(text)::DOUBLE / len(regexp_extract_all(text, '{_BPE_PATTERN}'))
@@ -297,10 +319,10 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_FINGERPRINT_SQL = r"""
+DOC_FINGERPRINT_SQL = rf"""
 SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint_md5,
-       ('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15))::BIGINT AS fingerprint_int
+       md5({normalize_sql()}) AS fingerprint_md5,
+       ('0x' || substr(md5({normalize_sql()}), 1, 15))::BIGINT AS fingerprint_int
 FROM documents
 """
 
@@ -344,7 +366,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_TFIDF_SQL = rf"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS term
+         unnest({norm_tokens_sql()}) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -409,7 +431,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_BM25_SQL = rf"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS term
+         unnest({norm_tokens_sql()}) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -478,15 +500,10 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS_PREP_SQL = rf"""
 WITH scored AS (
   SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_hash,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_tokens,
+         md5({normalize_sql()}) AS text_hash,
+         len({tokens_sql(normalize_sql())}) AS n_tokens,
          len(regexp_extract_all(text, '{_BPE_PATTERN}')) AS n_bpe_tokens,
-         round(
-           0.5 * (CASE WHEN len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) > 0
-                       THEN len(list_distinct(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')))::DOUBLE
-                            / len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+'))
-                       ELSE 0.0 END)
-           + 0.5 * least(n_chars / 400.0, 1.0) + 1e-9, 6) AS quality_score
+         {QUALITY_SCORE_SQL} AS quality_score
   FROM documents
 ),
 kept AS (
@@ -528,7 +545,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_TOPK_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 bigrams AS (
@@ -601,10 +618,10 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REPETITION_STATS_SQL = r"""
+REPETITION_STATS_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+') AS tok
+         {tokens_sql(normalize_sql())} AS tok
   FROM documents
 ),
 sizes AS (
@@ -670,10 +687,10 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DOC_CHUNK_WINDOWS_SQL = (
-    r"""
+    rf"""
 WITH base AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+') AS tok
+         {tokens_sql(normalize_sql())} AS tok
   FROM documents
 ),
 sized AS (
@@ -730,10 +747,10 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TOKEN_LENGTH_HISTOGRAM_SQL = (
-    r"""
+    rf"""
 WITH toks AS (
   SELECT source,
-         len(regexp_split_to_array(trim(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), '\s+')) AS n_tokens
+         len({tokens_sql(normalize_sql())}) AS n_tokens
   FROM documents
 )
 SELECT source,
@@ -782,10 +799,10 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_UNIGRAM_LOGPROB_SQL = r"""
+DOC_UNIGRAM_LOGPROB_SQL = rf"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 vocab AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
@@ -830,13 +847,13 @@ def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_READABILITY_SQL = r"""
+DOC_READABILITY_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
-         length(regexp_replace(trim(regexp_replace(lower(text), '\s+', ' ', 'g')),
+         length(regexp_replace({normalize_sql()},
                                '[^A-Za-z0-9]', '', 'g')) AS n_chars,
          greatest(len(regexp_split_to_array(
-           trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')), 1) AS n_words,
+           {normalize_sql()}, '\s+')), 1) AS n_words,
          greatest(len(list_filter(regexp_split_to_array(text, '[.!?]+\s*'),
                                   x -> length(trim(x)) > 0)), 1) AS n_sents
   FROM documents
@@ -893,9 +910,9 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_CHAR_ENTROPY_SQL = r"""
+DOC_CHAR_ENTROPY_SQL = rf"""
 WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+  SELECT doc_id, {normalize_sql()} AS t
   FROM documents
 ),
 grams AS (
@@ -996,10 +1013,10 @@ def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DOC_RAKE_KEYPHRASES_SQL = (
-    r"""
+    rf"""
 WITH toks AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 pos AS (
@@ -1173,10 +1190,10 @@ def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SOURCE_UNIGRAM_DIVERGENCE_SQL = (
-    r"""
+    rf"""
 WITH tok AS (
   SELECT source,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 corpus_counts AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
@@ -1264,10 +1281,10 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_BIGRAM_LOGPROB_SQL = r"""
+DOC_BIGRAM_LOGPROB_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 bg AS (
@@ -1313,9 +1330,9 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VOCAB_TOPK_SQL = (
-    r"""
+    rf"""
 WITH tok AS (
-  SELECT unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+  SELECT unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1)
@@ -1390,7 +1407,7 @@ def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 PMI_BIGRAMS_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
-         regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+') AS t
+         {norm_tokens_sql()} AS t
   FROM documents
 ),
 bigrams AS (
@@ -1457,7 +1474,7 @@ def token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_FERTILITY_SQL = rf"""
 WITH per_doc AS (
   SELECT lang, n_chars,
-         len(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS n_ws,
+         len({norm_tokens_sql()}) AS n_ws,
          len(regexp_extract_all(text, '{_BPE_PATTERN}')) AS n_bpe
   FROM documents
 ),
@@ -1517,7 +1534,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 OOV_RATE_BY_SOURCE_SQL = rf"""
 WITH tok AS (
   SELECT source,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 vocab AS (
@@ -1669,8 +1686,8 @@ def _bpe_sql() -> str:
     vocab_k applies the replace via a cross join on the 1-row
     merge frame."""
     parts = [
-        r"""tok AS (
-  SELECT unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS word
+        rf"""tok AS (
+  SELECT unnest({norm_tokens_sql()}) AS word
   FROM documents
 ),
 words AS (SELECT word, count(*) AS cnt FROM tok GROUP BY 1),
@@ -1774,7 +1791,7 @@ src_words AS (
   SELECT source, word, count(*) AS cnt
   FROM (
     SELECT source,
-           unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), '\\s+')) AS word
+           unnest({norm_tokens_sql()}) AS word
     FROM documents
   )
   GROUP BY 1, 2
@@ -1832,9 +1849,9 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VOCAB_COVERAGE_CURVE_SQL = (
-    r"""
+    rf"""
 WITH tok AS (
-  SELECT unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+  SELECT unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
@@ -1945,7 +1962,7 @@ def vocab_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 VOCAB_HEAPS_LAW_SQL = rf"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS token
+         unnest({norm_tokens_sql()}) AS token
   FROM documents
 ),
 per_doc AS (SELECT doc_id, count(*) AS n_tok FROM tok GROUP BY 1),

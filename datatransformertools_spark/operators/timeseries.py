@@ -76,14 +76,20 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_AUTOCORR_SQL = f"""
-WITH hourly AS (
+def _hourly_sql(x: str) -> str:
+    """The ``hourly`` CTE of the DuckDB twins: the aggregate ``x`` per
+    (hour, event type), as each batch builder groups ``ts_us div HOUR_US``."""
+    return f"""hourly AS (
   SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_us,
          event_type,
-         count(*)::DOUBLE AS x
+         {x} AS x
   FROM events
   GROUP BY 1, 2
-),
+)"""
+
+
+EVENTS_AUTOCORR_SQL = f"""
+WITH {_hourly_sql('count(*)::DOUBLE')},
 lagged AS (
   SELECT event_type, x,
          lag(x, 1) OVER w AS lag1,
@@ -161,13 +167,7 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EVENTS_CUSUM_SQL = f"""
-WITH hourly AS (
-  SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_us,
-         event_type,
-         round(avg(value) + 1e-9, 6) AS x
-  FROM events
-  GROUP BY 1, 2
-),
+WITH {_hourly_sql('round(avg(value) + 1e-9, 6)')},
 stats AS (
   SELECT event_type, hour_us, x,
          avg(x)         OVER (PARTITION BY event_type) AS mu,
@@ -363,13 +363,7 @@ def _holt_sql() -> str:
     a, b = HOLT_ALPHA, HOLT_BETA
     lnew = f"{a} * x[1] + {1 - a} * (acc[1] + acc[2])"
     return f"""
-WITH hourly AS (
-  SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_us,
-         event_type,
-         count(*)::DOUBLE AS x
-  FROM events
-  GROUP BY 1, 2
-),
+WITH {_hourly_sql('count(*)::DOUBLE')},
 series AS (
   SELECT event_type,
          list(x ORDER BY hour_us) AS vals,
@@ -490,13 +484,7 @@ def _hw_sql() -> str:
     bnew = f"{b} * (({lnew}) - acc[1]) + {1 - b} * acc[2]"
     snew = f"{g} * (x[1] - ({lnew})) + {1 - g} * {sold}"
     return f"""
-WITH hourly AS (
-  SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_us,
-         event_type,
-         count(*)::DOUBLE AS x
-  FROM events
-  GROUP BY 1, 2
-),
+WITH {_hourly_sql('count(*)::DOUBLE')},
 series AS (
   SELECT event_type,
          list([x, ((hour_us // {HOUR_US}) % {m})::DOUBLE] ORDER BY hour_us) AS obs,

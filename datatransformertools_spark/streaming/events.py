@@ -31,6 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.operators.events import (
+    EVENTS_BITMAP_ROLLUP_SQL,
+    EVENTS_EWMA_SQL,
+    EVENTS_HOPPING_AGG_SQL,
+    EVENTS_TOP_K_SQL,
+    EVENTS_TUMBLING_AGG_SQL,
+)
 from datatransformertools_spark.sources.tables import events_event_time, events_ts_us
 
 
@@ -327,19 +334,6 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained.filter(F.col("event_type") != SENTINEL_TYPE)
 
 
-# oracle: identical to the batch tumbling agg — the stream must
-# produce exactly what the batch plan produces
-EVENTS_STREAM_TUMBLING_SQL = """
-SELECT
-  (epoch_us(ts) // 300000000) * 300000000 AS window_start_us,
-  event_type,
-  count(*)                      AS n_events,
-  round(sum(value) + 1e-9, 4)   AS sum_value,
-  round(avg(value) + 1e-9, 4)   AS avg_value
-FROM events
-GROUP BY 1, 2
-"""
-
 def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native `session_window` sessionization EXECUTED AS A STREAM,
     watermark-bound (VERDICT r7 #1): APPEND mode emits each
@@ -492,14 +486,6 @@ def events_stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = _drain(agg, "hopping", "append", src_dir)
     return drained.filter(F.col("event_type") != SENTINEL_TYPE)
-
-
-def _hopping_oracle() -> str:
-    # the stream must produce exactly what the batch hopping agg
-    # produces — share its cross-join fan-out oracle
-    from datatransformertools_spark.operators.events import EVENTS_HOPPING_AGG_SQL
-
-    return EVENTS_HOPPING_AGG_SQL
 
 
 def events_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1121,28 +1107,6 @@ def events_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(stream, "ewma", "append", src_dir).select("event_id", "user_id", "ewma")
 
 
-# identical contract to the batch operator — the stream must equal it
-EVENTS_STREAM_EWMA_SQL = """
-WITH framed AS (
-  SELECT event_id, user_id,
-         list(value) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN 49 PRECEDING AND CURRENT ROW) AS arr
-  FROM events
-)
-SELECT event_id, user_id,
-       round(
-         list_reduce(list_transform(range(1, len(arr) + 1),
-                                    i -> arr[i] * pow(0.8, (len(arr) - i)::DOUBLE)),
-                     (a, b) -> a + b)
-         / list_reduce(list_transform(range(1, len(arr) + 1),
-                                      i -> pow(0.8, (len(arr) - i)::DOUBLE)),
-                       (a, b) -> a + b)
-         + 1e-9, 4) AS ewma
-FROM framed
-"""
-
-
 # ---------------------------------------------------------------------------
 # events_stream_anomaly — O(1)-state running z-score detector
 # ---------------------------------------------------------------------------
@@ -1437,13 +1401,6 @@ def events_stream_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_bitmap_oracle() -> str:
-    from datatransformertools_spark.operators.events import EVENTS_BITMAP_ROLLUP_SQL
-
-    # the stream must produce exactly what the batch plan produces
-    return EVENTS_BITMAP_ROLLUP_SQL
-
-
 def stream_window_user_totals(events: DataFrame) -> DataFrame:
     """Watermarked per-(hour-window, user) value totals in
     APPEND-on-window-close shape: `F.window` over the event-time
@@ -1505,18 +1462,12 @@ def events_stream_top_k_per_window(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _stream_topk_oracle() -> str:
-    from datatransformertools_spark.operators.events import EVENTS_TOP_K_SQL
-
-    return EVENTS_TOP_K_SQL
-
-
 QUERIES = {
-    "events_stream_tumbling": (events_stream_tumbling, EVENTS_STREAM_TUMBLING_SQL),
+    "events_stream_tumbling": (events_stream_tumbling, EVENTS_TUMBLING_AGG_SQL),
     "events_stream_anomaly": (events_stream_anomaly, EVENTS_STREAM_ANOMALY_SQL),
     "events_stream_sessionize": (events_stream_sessionize, EVENTS_STREAM_SESSIONIZE_SQL),
     "events_stream_dedup": (events_stream_dedup, EVENTS_STREAM_DEDUP_SQL),
-    "events_stream_hopping": (events_stream_hopping, _hopping_oracle()),
+    "events_stream_hopping": (events_stream_hopping, EVENTS_HOPPING_AGG_SQL),
     "events_stream_user_totals": (events_stream_user_totals, EVENTS_STREAM_USER_TOTALS_SQL),
     "events_stream_interval_join": (
         events_stream_interval_join,
@@ -1533,14 +1484,14 @@ QUERIES = {
     "events_stream_enrich": (events_stream_enrich, EVENTS_STREAM_ENRICH_SQL),
     "events_stream_replay_dedup": (events_stream_replay_dedup, EVENTS_STREAM_REPLAY_DEDUP_SQL),
     "events_stream_daily_users": (events_stream_daily_users, EVENTS_STREAM_DAILY_USERS_SQL),
-    "events_stream_ewma": (events_stream_ewma, EVENTS_STREAM_EWMA_SQL),
+    "events_stream_ewma": (events_stream_ewma, EVENTS_EWMA_SQL),
     "events_stream_session_timeout": (
         events_stream_session_timeout,
         EVENTS_STREAM_SESSIONIZE_SQL,
     ),
-    "events_stream_bitmap_rollup": (events_stream_bitmap_rollup, _stream_bitmap_oracle()),
+    "events_stream_bitmap_rollup": (events_stream_bitmap_rollup, EVENTS_BITMAP_ROLLUP_SQL),
     "events_stream_top_k_per_window": (
         events_stream_top_k_per_window,
-        _stream_topk_oracle(),
+        EVENTS_TOP_K_SQL,
     ),
 }

@@ -98,3 +98,39 @@ def _unreached_definitions() -> list[str]:
 def test_every_package_definition_is_reached_from_a_root():
     unreached = _unreached_definitions()
     assert not unreached, f"definitions no query, script or README example reaches: {unreached}"
+
+
+# Each pasted-SQL fragment and the one definition allowed to spell it.
+# ``doc_char_entropy`` spells the normalization in a Spark SQL
+# expression, which is the builder itself, not a DuckDB twin.
+TWIN_FRAGMENTS = {
+    "regexp_replace(lower(": {
+        "datatransformertools_spark/functions/text.py:normalize_sql",
+        "datatransformertools_spark/operators/text_analysis.py:doc_char_entropy",
+    },
+    "substr(md5('{i}:' || shingle)": {
+        "datatransformertools_spark/operators/dedup.py:_minhash_ctes",
+    },
+}
+
+
+def _top_level_owner(tree: ast.Module, lineno: int) -> str:
+    for stmt in tree.body:
+        if stmt.lineno <= lineno <= stmt.end_lineno:
+            names = _defined_names(stmt)
+            return names[0] if names else f"line {lineno}"
+    return f"line {lineno}"
+
+
+def test_duckdb_twin_fragments_are_not_repasted():
+    """The DuckDB normalization and MinHash signature fragments are
+    spelled once, in their twin; every oracle calls the twin."""
+    hits: dict[str, set[str]] = {frag: set() for frag in TWIN_FRAGMENTS}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        text = path.read_text()
+        tree = ast.parse(text)
+        for i, line in enumerate(text.splitlines(), 1):
+            for frag in TWIN_FRAGMENTS:
+                if frag in line:
+                    hits[frag].add(f"{path.relative_to(ROOT)}:{_top_level_owner(tree, i)}")
+    assert hits == TWIN_FRAGMENTS
