@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datatransformertools_spark.functions.bbox import clip_box, from_yolo, to_yolo
+from datatransformertools_spark.functions.bbox import from_yolo, to_yolo
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.sources.tables import load_table
 

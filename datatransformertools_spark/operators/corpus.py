@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import (
     norm_tokens_sql,
@@ -38,8 +38,22 @@ from datatransformertools_spark.functions.text import (
     tokens,
     tokens_sql,
 )
-from datatransformertools_spark.operators.dedup import _SHINGLE_SQL, _minhash_ctes, _shingle_df
-from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL, quality_terms_sql
+from datatransformertools_spark.operators.dedup import (
+    DEDUP_COMPONENTS_SQL,
+    DEDUP_MINHASH_LSH_SQL,
+    _SHINGLE_SQL,
+    _min_label_components,
+    _minhash_ctes,
+    _minhash_pairs_df,
+    _shingle_df,
+    dedup_components,
+    dedup_minhash_lsh,
+)
+from datatransformertools_spark.operators.text_analysis import (
+    QUALITY_SCORE_SQL,
+    quality_score_expr,
+    quality_terms_sql,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -580,8 +594,6 @@ def cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact window, which bounds any partition to ~cap candidates.
     Quality reuses text_quality's exact scoring expression, so the
     kept set is consistent with the quality audit."""
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text", "n_chars")
     scored = docs.select(
         "doc_id", "source", quality_score_expr().alias("quality_score")
@@ -632,8 +644,6 @@ def quality_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: everything up to the final |strata|·2-group agg is
     per-row map-side arithmetic — one partial-agg shuffle total."""
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     q = quality_score_expr()
     scored = docs.select(
@@ -961,8 +971,6 @@ def dataset_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     single Expand + partial-agg pipeline (the
     events_column_profile shape): one shuffle of pre-aggregated
     partials, never a per-metric scan of the corpus."""
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents")
     h = F.md5(normalize_text(F.col("text")))
     q = quality_score_expr()
@@ -1018,9 +1026,6 @@ def quality_token_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan scores docs (quality + token count map-side); the
     cutoff fan-out is a broadcast join against |cutoffs| rows;
     totals ride as ONE broadcast aggregate."""
-    from datatransformertools_spark.functions.text import normalize_text, tokens
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     scored = docs.select(
         quality_score_expr().alias("q"),
@@ -1089,8 +1094,6 @@ def source_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     just bigger. Everything reduces map-side to |sources| rows plus
     ONE broadcast corpus-aggregate row; no percentile/global-sort
     machinery, so the same plan holds at any corpus size."""
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents").select("source", "text", "n_chars")
     scored = docs.select("source", quality_score_expr().alias("q"))
     per_source = scored.groupBy("source").agg(
@@ -1289,8 +1292,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     unordered split-pair: candidate count, share of all candidates,
     and the leak flag; a healthy split shows cross-split share ≈
     2·p·q, a hot spot means the split key correlates with content."""
-    from datatransformertools_spark.operators.dedup import dedup_minhash_lsh
-
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
 
     def split_of(c: str) -> F.Column:
@@ -1313,8 +1314,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_sql() -> str:
-    from datatransformertools_spark.operators.dedup import DEDUP_MINHASH_LSH_SQL
-
     split = (
         "CASE WHEN ('0x' || substr(md5('" + SPLIT_SALT + "' || {c}), 1, 15))::BIGINT"
         f" % 100 < {VAL_PCT} THEN 'val' ELSE 'train' END"
@@ -1424,8 +1423,6 @@ def dedup_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     never moves; the near stage reuses the LSH candidate graph CC
     (iterates over candidate edges only); the funnel itself is one
     source-keyed aggregate down to |sources| rows."""
-    from datatransformertools_spark.operators.dedup import dedup_components
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.md5(normalize_text(F.col("text"))).alias("h")
     )
@@ -1452,8 +1449,6 @@ def dedup_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_funnel_by_source_sql() -> str:
-    from datatransformertools_spark.operators.dedup import DEDUP_COMPONENTS_SQL
-
     return rf"""
 WITH d AS (
   SELECT doc_id, source,
@@ -1560,8 +1555,6 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same partition-local-window contract as pack_sequences);
     the rollup is one N_PHASES-row partial-agg shuffle and the
     share/cumulative columns are windows over that 4-row frame."""
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
@@ -2188,13 +2181,6 @@ def _curation_stage_frames(
     survivor subtree re-expands per consumer and a 100 TB run
     re-pays the scan + quality regex each time (the in-session
     equivalent of the stage writes a real pipeline does)."""
-    from datatransformertools_spark.caching import track
-    from datatransformertools_spark.operators.dedup import (
-        _min_label_components,
-        _minhash_pairs_df,
-    )
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
-
     corpus = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", "text", "n_chars")

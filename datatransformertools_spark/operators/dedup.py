@@ -41,7 +41,10 @@ from datatransformertools_spark.functions.text import (
     word_shingles,
 )
 from datatransformertools_spark.functions.vectors import cosine_sql, flat_cols, flat_cosine_prenormed
-from datatransformertools_spark.operators.text_analysis import quality_terms_sql
+from datatransformertools_spark.operators.text_analysis import (
+    quality_score_expr,
+    quality_terms_sql,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 NUM_PERM = 8
@@ -263,7 +266,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is the one formulation whose max_by/arg_max tie-break is
     bit-identical across Spark and DuckDB."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    from datatransformertools_spark.operators.text_analysis import quality_score_expr
 
     score = quality_score_expr()
     keyed = docs.select(

@@ -744,27 +744,34 @@ def detection_eval_ap_coco(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking caveat as `detection_eval_ap` (inherent to exact AP)."""
     env = _ap_ranked_env_df(spark, sf_dir)
     n_gt = _gt_df(spark, sf_dir).groupBy("cls").agg(F.count(F.lit(1)).alias("n_gt"))
-    sums = env.groupBy("cls").agg(
-        F.sum("is_tp").alias("tp"),
-        F.count(F.lit(1)).alias("n_pred"),
-    )
     thr = spark.range(N_COCO_RECALL_POINTS).select(F.col("id").cast("int").alias("thr_idx"))
-    env_r = env.join(F.broadcast(n_gt), "cls")
+    # the envelope is read once, so the greedy kernel runs once:
+    # threshold 0 admits every detection (100·cum_tp ≥ 0), so its
+    # group also counts the class's TPs and predictions
     pr = (
-        env_r.join(
+        env.join(F.broadcast(n_gt), "cls")
+        .join(
             F.broadcast(thr),
             F.lit(100) * F.col("cum_tp") >= F.col("thr_idx") * F.col("n_gt"),
         )
         .groupBy("cls", "thr_idx")
-        .agg(F.round(F.max("p_env") * _AP_QUANT).cast("long").alias("q"))
+        .agg(
+            F.round(F.max("p_env") * _AP_QUANT).cast("long").alias("q"),
+            F.sum("is_tp").alias("tp"),
+            F.count(F.lit(1)).alias("n_pred"),
+        )
     )
-    coco = pr.groupBy("cls").agg(F.sum("q").alias("sum_q"))
+    at_0 = F.col("thr_idx") == 0
+    coco = pr.groupBy("cls").agg(
+        F.sum("q").alias("sum_q"),
+        F.max(F.when(at_0, F.col("tp"))).alias("tp"),
+        F.max(F.when(at_0, F.col("n_pred"))).alias("n_pred"),
+    )
     ap = F.round(
         F.col("sum_q") / F.lit(float(_AP_QUANT)) / F.lit(float(N_COCO_RECALL_POINTS)) + 1e-9, 6
     )
     return (
-        n_gt.join(sums, "cls", "left")
-        .join(coco, "cls", "left")
+        n_gt.join(coco, "cls", "left")
         .select(
             "cls",
             "n_gt",
@@ -918,26 +925,22 @@ def detection_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.withColumnRenamed("pred_cls", "cls"),
         _make_greedy_kernel(*_CONF_ORDER),
         _GREEDY_MATCH_SCHEMA,
-    ).select("pred_id", "gt_id", F.col("cls").alias("pred_cls"))
-    # matched grows with the corpus → shuffle joins, never broadcast
-    mm = (
-        matched.join(gr.select("gt_id", "gt_cls"), "gt_id")
-        .groupBy("gt_cls", "pred_cls")
+    ).select("pred_id", "gt_id")
+    # the kernel runs once: preds ⟕ matched ⟗ GTs puts each matched pair,
+    # unmatched prediction (no gt_cls → FP column) and unmatched GT (no
+    # pred_cls → FN row) on one row. matched grows with the corpus →
+    # shuffle joins, never broadcast.
+    bg = F.lit(_CM_BACKGROUND).cast("int")
+    return (
+        pr.select("pred_id", "pred_cls")
+        .join(matched, "pred_id", "left")
+        .join(gr.select("gt_id", "gt_cls"), "gt_id", "full")
+        .groupBy(
+            F.coalesce(F.col("gt_cls"), bg).alias("gt_cls"),
+            F.coalesce(F.col("pred_cls"), bg).alias("pred_cls"),
+        )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    fp = (
-        pr.join(matched.select("pred_id"), "pred_id", "left_anti")
-        .groupBy("pred_cls")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit(_CM_BACKGROUND).cast("int").alias("gt_cls"), "pred_cls", "n")
-    )
-    fn = (
-        gr.join(matched.select("gt_id"), "gt_id", "left_anti")
-        .groupBy("gt_cls")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("gt_cls", F.lit(_CM_BACKGROUND).cast("int").alias("pred_cls"), "n")
-    )
-    return mm.unionByName(fp).unionByName(fn)
 
 
 _CM_IOU_EXPR = f"\n{iou_xywh_sql(_PRED_BOX, _GT_BOX)}\n"

@@ -2894,8 +2894,6 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(type, arm) count/sum/sum-of-squares — the sufficient
     statistics; the t math runs on |types| rows. No window, no
     join wider than the 2-arm pivot."""
-    from datatransformertools_spark.functions.hashing import md5_long
-
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "value")
     arm = (md5_long(F.col("user_id").cast("string"), salt="ab:") % 2).alias("arm")
     stats = ev.select("event_type", arm, "value").groupBy("event_type", "arm").agg(

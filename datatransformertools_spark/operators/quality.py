@@ -31,7 +31,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
-from datatransformertools_spark.functions.text import norm_tokens_sql, normalize_sql, tokens, tokens_sql
+from datatransformertools_spark.functions.text import (
+    norm_tokens_sql,
+    normalize_sql,
+    normalize_text,
+    tokens,
+    tokens_sql,
+)
 from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL
 from datatransformertools_spark.sources.tables import load_table
 
@@ -265,8 +271,6 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-scale shuffle (hash window); all eight funnel sums collapse
     map-side into ONE 1-row aggregate, and the 4 output rows explode
     from it — counts only, no per-doc rows leave the executors."""
-    from datatransformertools_spark.functions.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     norm = normalize_text(F.col("text"))
     tok = tokens(norm)
@@ -396,8 +400,6 @@ def corpus_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride as a broadcast 1-row frame; the dedup-keeper window on the
     text hash is the single data-scale shuffle; the grid collapses
     map-side into ≤ 8 rows."""
-    from datatransformertools_spark.functions.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     norm = normalize_text(F.col("text"))
     tok = tokens(norm)
@@ -513,8 +515,6 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the per-source ntile (partition key = source), and a final
     |sources|·PPL_BUCKETS-row aggregate. ntile ordering ties break
     on doc_id, so bucket assignment is deterministic cross-engine."""
-    from datatransformertools_spark.functions.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     tok = docs.select(
         "doc_id", "source", F.explode(tokens(normalize_text(F.col("text")))).alias("token")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -2661,8 +2661,6 @@ def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lloyd_final,
         _lloyd_update,
     )
-
-    from datatransformertools_spark.caching import track
 
     # persist the feature frame across the Lloyd rounds (r12): init,
     # every update, and the final assignment each re-derived the

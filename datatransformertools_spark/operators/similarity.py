@@ -14,6 +14,23 @@
 The hyperplanes are ±1-valued with signs derived from
 md5(plane:dim), so the DuckDB oracle reproduces the buckets
 bit-for-bit — even the approximate path is value-checked.
+
+Every ANN query is filter-then-refine: an index stage picks
+candidates, an exact rerank refines them. Each stage has one Spark
+builder, with its DuckDB twin (a string builder that never calls
+the Spark one) next to it:
+
+- ``_role`` — the query / candidate split (``query_id/qv/qn`` vs
+  ``neighbor_id/cv/cn``);
+- ``_lsh_pairs`` / ``_lsh_cand_sql`` — the LSH bucket join;
+- ``_ivf_probe`` (over ``_ivf_codebook`` and ``_with_cells``) /
+  ``_ivf_cells_sql`` — the IVF cell probe;
+- ``_pq_codebook``, ``_pq_encode``, ``_pq_lut`` / ``_PQ_CODES_SQL``
+  and ``_pq_rerank`` / ``_PQ_RERANK_SQL`` — PQ encode → ADC
+  lookup table → shortlist reload;
+- ``_rerank_topk`` / ``_TOPK_TAIL_SQL`` — the exact top-K refine;
+- ``_budget_recall`` / ``_recall_tail_sql`` — the recall-curve face
+  (per-budget top-K against the brute-force truth).
 """
 
 from __future__ import annotations
@@ -61,12 +78,31 @@ def _vectors_sql(cols: str = "vec_id") -> str:
     return f"e AS (SELECT {cols}, embedding::DOUBLE[] AS v FROM embeddings)"
 
 
+def _role(df: DataFrame, query: bool, *extra, stage=None) -> DataFrame:
+    """The query half (``vec_id < N_QUERIES``) or the candidate half of
+    a ``_vectors`` frame under its rerank names, ``query_id/qv/qn`` or
+    ``neighbor_id/cv/cn``, with the ``extra`` columns after them.
+    ``stage`` runs on the half before the rename (the IVF cell
+    assignment)."""
+    half = df.filter(F.col("vec_id") < N_QUERIES if query else F.col("vec_id") >= N_QUERIES)
+    if stage is not None:
+        half = stage(half)
+    key, p = ("query_id", "q") if query else ("neighbor_id", "c")
+    return half.select(
+        F.col("vec_id").alias(key), F.col("v").alias(f"{p}v"), F.col("nrm").alias(f"{p}n"), *extra
+    )
+
+
+def _cos6() -> F.Column:
+    """6-dp prenormed cosine of the ``(qv, cv, qn, cn)`` role columns."""
+    return F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
+
+
 def _rerank_topk(pairs: DataFrame) -> DataFrame:
     """The exact refine every ANN filter ends in: 6-dp cosine over the
     ``(query_id, neighbor_id, qv, cv, qn, cn)`` candidate pairs, then
     the TOP_K per query (ties → lowest neighbor_id)."""
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
+    scored = pairs.select("query_id", "neighbor_id", _cos6().alias("cos_sim"))
     rank = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     )
@@ -83,6 +119,17 @@ def _cos_sql(a: str, b: str) -> str:
            {cosine_sql(a, b)} + 1e-9, 6)"""
 
 
+# DuckDB twin of `_rerank_topk`: the TOP_K per query over a `scored`
+# CTE of (query_id, neighbor_id, cos_sim)
+_TOPK_TAIL_SQL = f"""ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos_sim DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+"""
+
+
 # ---------------------------------------------------------------------------
 # ann_bruteforce_topk
 # ---------------------------------------------------------------------------
@@ -97,16 +144,8 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline materializes once per corpus.
     def build() -> DataFrame:
         emb = _vectors(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-        )
-        cands = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
         # query side broadcast: scan streams once
-        return _rerank_topk(cands.crossJoin(F.broadcast(queries)))
+        return _rerank_topk(_role(emb, False).crossJoin(F.broadcast(_role(emb, True))))
 
     return _BF_TOPK_MEMO.get_or_build(spark, sf_dir, build)
 
@@ -120,13 +159,7 @@ scored AS (
          {_cos_sql('qv', 'cv')} AS cos_sim
   FROM q CROSS JOIN c
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
-"""
+{_TOPK_TAIL_SQL}"""
 
 # ---------------------------------------------------------------------------
 # ann_lsh_topk — sign-random-projection buckets, then exact rerank
@@ -155,18 +188,24 @@ def _plane_signs() -> list[list[list[float]]]:
 PLANES = _plane_signs()
 
 
-def _bucket_col(v, table: int) -> F.Column:
-    """LSH bucket id in one table: bit p = sign of Σ_d v[d]·h(t,p,d)."""
-    plane_dots = []
-    for p in range(NBITS):
-        signs = F.array(*[F.lit(s) for s in PLANES[table][p]])
-        dot = F.aggregate(F.zip_with(v, signs, lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x)
-        plane_dots.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(plane_dots)
+def _buckets() -> F.Column:
+    """The LSH bucket id of ``v`` in each of the N_TABLES tables: bit p
+    of table t = sign of Σ_d v[d]·h(t,p,d)."""
+    tables = []
+    for t in range(N_TABLES):
+        plane_dots = []
+        for p in range(NBITS):
+            signs = F.array(*[F.lit(s) for s in PLANES[t][p]])
+            dot = F.aggregate(
+                F.zip_with(F.col("v"), signs, lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x
+            )
+            plane_dots.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
+        tables.append(sum(plane_dots))
+    return F.array(*tables)
 
 
 def _bucket_sql(table: int) -> str:
-    """DuckDB twin of ``_bucket_col`` over the DOUBLE[] column ``v``."""
+    """DuckDB twin of one table of ``_buckets`` over the DOUBLE[] column ``v``."""
     terms = []
     for p in range(NBITS):
         lit = "[" + ", ".join(str(s) for s in PLANES[table][p]) + "]"
@@ -175,32 +214,29 @@ def _bucket_sql(table: int) -> str:
     return " + ".join(terms)
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _vectors(spark, sf_dir)
-    buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
+def _lsh_pairs(emb: DataFrame) -> DataFrame:
+    """The LSH filter: each vector explodes to one ``t:bucket`` key per
+    table, candidates join the broadcast queries on a shared key, and
+    each (query, candidate) pair is kept once however many tables it
+    collides in. Output: the ``_rerank_topk`` role columns."""
     bucketed = emb.select(
         "vec_id", "v", "nrm",
         F.explode(
-            F.transform(buckets, lambda b, i: F.concat(i.cast("string"), F.lit(":"), b.cast("string")))
+            F.transform(_buckets(), lambda b, i: F.concat(i.cast("string"), F.lit(":"), b.cast("string")))
         ).alias("bucket"),
     )
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), F.col("bucket").alias("qb")
-    )
-    cands = bucketed.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), F.col("bucket").alias("cb")
-    )
-    pairs = (
+    queries = _role(bucketed, True, F.col("bucket").alias("qb"))
+    cands = _role(bucketed, False, F.col("bucket").alias("cb"))
+    return (
         cands.join(F.broadcast(queries), F.col("cb") == F.col("qb"))
         .select("query_id", "neighbor_id", "qv", "cv", "qn", "cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return _rerank_topk(pairs)
 
 
-def _lsh_sql() -> str:
+def _lsh_cand_sql() -> str:
+    """DuckDB twin of `_lsh_pairs`: the CTEs up to `cand`, the deduplicated
+    (query_id, neighbor_id, qv, cv) pairs, after the `e` CTE."""
     bucket_cols = [
         f"'{t}:' || CAST({_bucket_sql(t)} AS VARCHAR) AS bucket{t}" for t in range(N_TABLES)
     ]
@@ -208,9 +244,7 @@ def _lsh_sql() -> str:
     union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, v, bucket{t} AS bucket FROM with_buckets" for t in range(N_TABLES)
     )
-    return f"""
-WITH {_vectors_sql()},
-with_buckets AS (
+    return f"""with_buckets AS (
   SELECT vec_id, v,
     {bucket_select}
   FROM e
@@ -223,22 +257,22 @@ c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket AS cb FROM bucketed WHERE ve
 cand AS (
   SELECT DISTINCT ON (query_id, neighbor_id) query_id, neighbor_id, qv, cv
   FROM q JOIN c ON qb = cb
-),
+)"""
+
+
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _rerank_topk(_lsh_pairs(_vectors(spark, sf_dir)))
+
+
+ANN_LSH_SQL = f"""
+WITH {_vectors_sql()},
+{_lsh_cand_sql()},
 scored AS (
   SELECT query_id, neighbor_id,
          {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ANN_LSH_SQL = _lsh_sql()
+{_TOPK_TAIL_SQL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -249,27 +283,22 @@ N_CELLS = 8
 N_PROBE = 2
 
 
-def _with_cells(
-    emb: DataFrame, cents: DataFrame, rank_limit: int, id_col: str, keep_rank: bool = False
-) -> DataFrame:
+def _with_cells(emb: DataFrame, cents: DataFrame, rank_limit: int) -> DataFrame:
     """Assign each vector to its `rank_limit` nearest coarse cells
-    (1 for indexing, N_PROBE for querying). With keep_rank, the
-    1-based probe rank survives as `cell_rank` (the probe-curve
-    input)."""
+    (1 for indexing, N_PROBE for querying): adds `cell_id`, the 6-dp
+    cosine `cell_sim` and the 1-based probe rank `cell_rank`."""
     sim = F.round(
         cosine_prenormed(F.col("v"), F.col("cell_v"), F.col("nrm"), F.col("cell_nrm")) + 1e-9, 6
     )
     rn = F.row_number().over(
-        Window.partitionBy(id_col).orderBy(F.col("cell_sim").desc(), F.col("cell_id"))
+        Window.partitionBy("vec_id").orderBy(F.col("cell_sim").desc(), F.col("cell_id"))
     )
-    out = (
+    return (
         emb.crossJoin(F.broadcast(cents))
         .withColumn("cell_sim", sim)
         .withColumn("cell_rank", rn)
         .filter(F.col("cell_rank") <= rank_limit)
-        .drop("cell_v", "cell_nrm", "cell_sim")
     )
-    return out if keep_rank else out.drop("cell_rank")
 
 
 def _ivf_codebook(emb: DataFrame) -> DataFrame:
@@ -286,58 +315,60 @@ def _ivf_codebook(emb: DataFrame) -> DataFrame:
     )
 
 
+def _ivf_probe(emb: DataFrame, n_probe: int, *q_extra) -> tuple[DataFrame, DataFrame]:
+    """Both sides of the IVF probe join, in the ``_role`` names plus
+    ``cell_id``: each query in its `n_probe` nearest cells (with
+    ``q_extra``), each candidate in its nearest one."""
+    cents = _ivf_codebook(emb)
+    queries = _role(emb, True, "cell_id", *q_extra, stage=lambda h: _with_cells(h, cents, n_probe))
+    cands = _role(emb, False, "cell_id", stage=lambda h: _with_cells(h, cents, 1))
+    return queries, cands
+
+
+def _ivf_cells_sql(n_probe: int, vectors: bool = True, lvl: bool = False) -> str:
+    """DuckDB twin of `_ivf_probe`: the `cents`, `cand_cells` and
+    `query_cells` CTEs after the `e` CTE, with the raw vectors `cv` /
+    `qv` when `vectors` and the probe rank `lvl` when `lvl`."""
+
+    def side(name: str, key: str, v: str, where: str, keep: str, extra: str = "") -> str:
+        cols = f" {v}," if vectors else ""
+        ev = f" e.v AS {v}," if vectors else ""
+        return f"""{name} AS (
+  SELECT vec_id AS {key},{cols} cell_id{extra} FROM (
+    SELECT e.vec_id,{ev} c.cell_id,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
+    FROM e CROSS JOIN cents c WHERE {where}
+  ) WHERE {keep}
+)"""
+
+    return f"""cents AS (
+  SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
+  FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
+),
+{side("cand_cells", "neighbor_id", "cv", f"e.vec_id >= {N_QUERIES}", "rn = 1")},
+{side("query_cells", "query_id", "qv", f"e.vec_id < {N_QUERIES}", f"rn <= {n_probe}",
+      ", rn AS lvl" if lvl else "")}"""
+
+
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: index vectors live in their nearest coarse cell;
     each query probes its N_PROBE nearest cells and reranks only
     those cells' members with exact cosine. At 100 TB the cell id
     is the partition key — a probe touches N_PROBE/N_CELLS of the
     corpus instead of all of it, and the rerank is per-cell work."""
-    emb = _vectors(spark, sf_dir)
-    cents = _ivf_codebook(emb)
-    cands = _with_cells(emb.filter(F.col("vec_id") >= N_QUERIES), cents, 1, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), "cell_id",
-    )
-    queries = _with_cells(emb.filter(F.col("vec_id") < N_QUERIES), cents, N_PROBE, "vec_id").select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), "cell_id",
-    )
+    queries, cands = _ivf_probe(_vectors(spark, sf_dir), N_PROBE)
     return _rerank_topk(cands.join(F.broadcast(queries), "cell_id"))
 
 ANN_IVF_SQL = f"""
 WITH {_vectors_sql()},
-cents AS (
-  SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
-  FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
-),
-cand_cells AS (
-  SELECT vec_id AS neighbor_id, cv, cell_id FROM (
-    SELECT e.vec_id, e.v AS cv, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
-  ) WHERE rn = 1
-),
-query_cells AS (
-  SELECT vec_id AS query_id, qv, cell_id FROM (
-    SELECT e.vec_id, e.v AS qv, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
-),
+{_ivf_cells_sql(N_PROBE)},
 scored AS (
   SELECT query_id, neighbor_id,
          {_cos_sql('qv', 'cv')} AS cos_sim
   FROM cand_cells JOIN query_cells USING (cell_id)
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
-"""
+{_TOPK_TAIL_SQL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -363,26 +394,8 @@ def ann_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     global); members collapse to N_CELLS groups map-side; the
     corpus total rides a partition-less window on the N_CELLS-row
     aggregate (feature-bounded)."""
-    emb = _vectors(spark, sf_dir).filter(F.col("vec_id") >= N_QUERIES)
-    cents = emb.filter(F.col("vec_id") < N_QUERIES + N_CELLS).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("v").alias("cell_v"),
-        F.col("nrm").alias("cell_nrm"),
-    )
-    sim = F.round(
-        cosine_prenormed(F.col("v"), F.col("cell_v"), F.col("nrm"), F.col("cell_nrm"))
-        + 1e-9,
-        6,
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("vec_id").orderBy(F.col("cell_sim").desc(), F.col("cell_id"))
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cents))
-        .withColumn("cell_sim", sim)
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-    )
+    emb = _vectors(spark, sf_dir)
+    assigned = _with_cells(emb.filter(F.col("vec_id") >= N_QUERIES), _ivf_codebook(emb), 1)
     cells = assigned.groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.round(F.avg("cell_sim") + 1e-9, 6).alias("mean_cos"),
@@ -470,6 +483,122 @@ def _pq_l2(a: str, b: str) -> F.Column:
     return out
 
 
+def _pq_codebook(emb: DataFrame) -> DataFrame:
+    """PQ codebooks: subspace `sub_id`'s codes are the subvectors of the
+    first PQ_CODES candidates — the same offline-training stand-in
+    convention as IVF's cells."""
+    return _pq_sub_explode(
+        emb.filter((F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_CODES)),
+        "vec_id",
+    ).select(
+        (F.col("vec_id") - N_QUERIES).alias("code_id"),
+        "sub_id",
+        F.col("sv").alias("code_sv"),
+    )
+
+
+def _pq_dists(df: DataFrame, id_col: str, cb: DataFrame) -> DataFrame:
+    """6-dp squared L2 from each subvector of `df` to every code of its
+    subspace: ``(id_col, sub_id, code_id, d)``."""
+    d6 = F.round(_pq_l2("sv", "code_sv") + 1e-9, 6)
+    return (
+        _pq_sub_explode(df, id_col)
+        .join(F.broadcast(cb), "sub_id")
+        .select(id_col, "sub_id", "code_id", d6.alias("d"))
+    )
+
+
+def _pq_encode(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """Each candidate's PQ code: per subspace, the nearest code (ties →
+    lowest code_id) as one map-side-combined min_by aggregation."""
+    return (
+        _pq_dists(emb.filter(F.col("vec_id") >= N_QUERIES), "vec_id", cb)
+        .groupBy("vec_id", "sub_id")
+        .agg(F.min_by("code_id", F.struct("d", "code_id")).alias("code_id"))
+    )
+
+
+def _pq_lut(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """The per-query ADC lookup table: each query subvector's distance to
+    every code, ``(query_id, sub_id, code_id, d)``."""
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(F.col("vec_id").alias("query_id"), "v")
+    return _pq_dists(queries, "query_id", cb)
+
+
+def _pq_rerank(emb: DataFrame, adc: DataFrame, id_col: str) -> DataFrame:
+    """The PQ refine: the PQ_SHORTLIST lowest ADC distances per query
+    (ties → lowest `id_col`) reload their raw vectors for
+    `_rerank_topk`."""
+    srn = F.row_number().over(
+        Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col(id_col))
+    )
+    short = adc.withColumn("srn", srn).filter(F.col("srn") <= PQ_SHORTLIST)
+    pairs = (
+        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
+        .join(F.broadcast(short.select("query_id", F.col(id_col).alias("neighbor_id"))), "neighbor_id")
+        .join(F.broadcast(_role(emb, True)), "query_id")
+    )
+    return _rerank_topk(pairs)
+
+
+def _pq_l2_sql(a: str, b: str, n: int = PQ_SUBDIM) -> str:
+    """DuckDB twin of `_pq_l2`: squared L2 over the first `n` dims."""
+    return " + ".join(f"({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])" for i in range(1, n + 1))
+
+
+def _pq_sub_sql(name: str, key: str, sv: str, where: str) -> str:
+    """DuckDB twin of `_pq_sub_explode`: CTE `name` of (key, sub_id, sv)."""
+    return f"""{name} AS (
+  SELECT {key}, t.sub_id,
+         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS {sv}
+  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
+  WHERE {where}
+)"""
+
+
+# DuckDB twin of `_pq_codebook`, `_pq_encode` and `_pq_lut`: the `cb`,
+# `codes` (keyed neighbor_id) and `lut` CTEs after the `e` CTE.
+# arg_min keys must be scalar; the zero-padded composite is
+# lexicographically identical to (d, code_id) for d >= 0.
+_PQ_CODES_SQL = f"""{_pq_sub_sql("cb", f"vec_id - {N_QUERIES} AS code_id", "code_sv",
+                                 f"vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + PQ_CODES}")},
+{_pq_sub_sql("cand_sub", "vec_id", "sv", f"vec_id >= {N_QUERIES}")},
+codes AS (
+  SELECT vec_id AS neighbor_id, sub_id,
+         arg_min(code_id, printf('%012.6f|%05d', d, code_id)) AS code_id
+  FROM (
+    SELECT c.vec_id, c.sub_id, cb.code_id,
+           round({_pq_l2_sql('c.sv', 'cb.code_sv')} + 1e-9, 6) AS d
+    FROM cand_sub c JOIN cb USING (sub_id)
+  )
+  GROUP BY 1, 2
+),
+{_pq_sub_sql("q_sub", "vec_id AS query_id", "sv", f"vec_id < {N_QUERIES}")},
+lut AS (
+  SELECT q.query_id, q.sub_id, cb.code_id,
+         round({_pq_l2_sql('q.sv', 'cb.code_sv')} + 1e-9, 6) AS d
+  FROM q_sub q JOIN cb USING (sub_id)
+)"""
+
+# DuckDB twin of `_pq_rerank` over an `adc` CTE of (query_id,
+# neighbor_id, adist)
+_PQ_RERANK_SQL = f"""short AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id
+                                 ORDER BY adist ASC, neighbor_id) AS srn
+    FROM adc
+  ) WHERE srn <= {PQ_SHORTLIST}
+),
+scored AS (
+  SELECT s.query_id, s.neighbor_id,
+         {_cos_sql('q.v', 'c.v')} AS cos_sim
+  FROM short s
+  JOIN e q ON q.vec_id = s.query_id
+  JOIN e c ON c.vec_id = s.neighbor_id
+),
+{_TOPK_TAIL_SQL}"""
+
+
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: each vector is encoded as PQ_M
     4-bit code ids (64 dims → 8 bytes — the compression that lets a
@@ -486,124 +615,25 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention as IVF's cells), so the DuckDB oracle replays
     encode→ADC→rerank value-for-value."""
     emb = _vectors(spark, sf_dir)
-    cb = _pq_sub_explode(
-        emb.filter((F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_CODES)),
-        "vec_id",
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("code_id"),
-        "sub_id",
-        F.col("sv").alias("code_sv"),
-    )
-    d6 = F.round(_pq_l2("sv", "code_sv") + 1e-9, 6)
-    codes = (
-        _pq_sub_explode(emb.filter(F.col("vec_id") >= N_QUERIES), "vec_id")
-        .join(F.broadcast(cb), "sub_id")
-        .select("vec_id", "sub_id", "code_id", d6.alias("d"))
-        .groupBy("vec_id", "sub_id")
-        .agg(F.min_by("code_id", F.struct("d", "code_id")).alias("code_id"))
-    )
-    lut = (
-        _pq_sub_explode(
-            emb.filter(F.col("vec_id") < N_QUERIES).select(
-                F.col("vec_id").alias("query_id"), "v"
-            ),
-            "query_id",
-        )
-        .join(F.broadcast(cb), "sub_id")
-        .select("query_id", "sub_id", "code_id", d6.alias("d"))
-    )
+    cb = _pq_codebook(emb)
     adc = (
-        codes.join(F.broadcast(lut), ["sub_id", "code_id"])
+        _pq_encode(emb, cb)
+        .join(F.broadcast(_pq_lut(emb, cb)), ["sub_id", "code_id"])
         .groupBy("query_id", "vec_id")
         .agg(F.round(F.sum("d") + 1e-9, 6).alias("adist"))
     )
-    srn = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("vec_id"))
-    )
-    short = adc.withColumn("srn", srn).filter(F.col("srn") <= PQ_SHORTLIST)
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    pairs = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
-        .join(F.broadcast(short.select("query_id", F.col("vec_id").alias("neighbor_id"))), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-    )
-    return _rerank_topk(pairs)
+    return _pq_rerank(emb, adc, "vec_id")
 
 
-def _pq_sql() -> str:
-    def l2(a: str, b: str) -> str:
-        return " + ".join(
-            f"({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])" for i in range(1, PQ_SUBDIM + 1)
-        )
-
-    return f"""
+ANN_PQ_SQL = f"""
 WITH {_vectors_sql()},
-cb AS (
-  SELECT vec_id - {N_QUERIES} AS code_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS code_sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + PQ_CODES}
-),
-cand_sub AS (
-  SELECT vec_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id >= {N_QUERIES}
-),
-codes AS (
-  SELECT vec_id, sub_id,
-         -- arg_min keys must be scalar; the zero-padded composite is
-         -- lexicographically identical to (d, code_id) for d >= 0
-         arg_min(code_id, printf('%012.6f|%05d', d, code_id)) AS code_id
-  FROM (
-    SELECT c.vec_id, c.sub_id, cb.code_id,
-           round({l2('c.sv', 'cb.code_sv')} + 1e-9, 6) AS d
-    FROM cand_sub c JOIN cb USING (sub_id)
-  )
-  GROUP BY 1, 2
-),
-q_sub AS (
-  SELECT vec_id AS query_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id < {N_QUERIES}
-),
-lut AS (
-  SELECT q.query_id, q.sub_id, cb.code_id,
-         round({l2('q.sv', 'cb.code_sv')} + 1e-9, 6) AS d
-  FROM q_sub q JOIN cb USING (sub_id)
-),
+{_PQ_CODES_SQL},
 adc AS (
-  SELECT l.query_id, c.vec_id, round(sum(l.d) + 1e-9, 6) AS adist
+  SELECT l.query_id, c.neighbor_id, round(sum(l.d) + 1e-9, 6) AS adist
   FROM codes c JOIN lut l ON c.sub_id = l.sub_id AND c.code_id = l.code_id
   GROUP BY 1, 2
 ),
-short AS (
-  SELECT query_id, vec_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adist ASC, vec_id) AS srn
-    FROM adc
-  ) WHERE srn <= {PQ_SHORTLIST}
-),
-scored AS (
-  SELECT s.query_id, s.vec_id AS neighbor_id,
-         {_cos_sql('q.v', 'c.v')} AS cos_sim
-  FROM short s
-  JOIN e q ON q.vec_id = s.query_id
-  JOIN e c ON c.vec_id = s.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ANN_PQ_SQL = _pq_sql()
+{_PQ_RERANK_SQL}"""
 
 # ---------------------------------------------------------------------------
 # embedding_pq_distortion — measured reconstruction error vs subspace count
@@ -729,11 +759,6 @@ def embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_distortion_sql() -> str:
     pair_rows = ", ".join(f"({m}, {s}, {lo}, {hi})" for (m, s, lo, hi) in _pq_ms_pairs())
 
-    def l2(m: int) -> str:
-        return " + ".join(
-            f"(sv[{i}]-code_sv[{i}])*(sv[{i}]-code_sv[{i}])" for i in range(1, DIM // m + 1)
-        )
-
     nrm2 = " + ".join(f"v[{i}]*v[{i}]" for i in range(1, DIM + 1))
     return f"""
 WITH {_vectors_sql()},
@@ -753,9 +778,9 @@ encoded AS (
   SELECT vec_id, m, sub_id, min(d) AS min_d
   FROM (
     SELECT s.vec_id, s.m, s.sub_id,
-           round(CASE WHEN s.m = 2 THEN {l2(2)}
-                      WHEN s.m = 4 THEN {l2(4)}
-                      ELSE {l2(8)} END + 1e-9, 6) AS d
+           round(CASE WHEN s.m = 2 THEN {_pq_l2_sql('sv', 'code_sv', DIM // 2)}
+                      WHEN s.m = 4 THEN {_pq_l2_sql('sv', 'code_sv', DIM // 4)}
+                      ELSE {_pq_l2_sql('sv', 'code_sv', DIM // 8)} END + 1e-9, 6) AS d
     FROM subs s JOIN cb ON cb.m = s.m AND cb.sub_id = s.sub_id
   )
   GROUP BY 1, 2, 3
@@ -805,130 +830,29 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention as the IVF cells / PQ codebooks they reuse) keep the
     whole encode→probe→ADC→rerank pipeline value-checked in DuckDB."""
     emb = _vectors(spark, sf_dir)
-    cents = _ivf_codebook(emb)
-    cands = emb.filter(F.col("vec_id") >= N_QUERIES)
-    cand_cells = _with_cells(cands, cents, 1, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), "cell_id"
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    query_cells = _with_cells(queries, cents, N_PROBE, "vec_id").select(
-        F.col("vec_id").alias("query_id"), "cell_id"
-    )
+    queries, cands = _ivf_probe(emb, N_PROBE)
     # probe pairs: candidates in any probed cell (cells assign each
     # candidate once, so no pair dedup is needed)
-    probe_pairs = cand_cells.join(F.broadcast(query_cells), "cell_id").select(
-        "query_id", "neighbor_id"
-    )
-    cb = _pq_sub_explode(
-        emb.filter((F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_CODES)),
-        "vec_id",
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("code_id"),
-        "sub_id",
-        F.col("sv").alias("code_sv"),
-    )
-    d6 = F.round(_pq_l2("sv", "code_sv") + 1e-9, 6)
-    codes = (
-        _pq_sub_explode(cands, "vec_id")
-        .join(F.broadcast(cb), "sub_id")
-        .select("vec_id", "sub_id", "code_id", d6.alias("d"))
-        .groupBy("vec_id", "sub_id")
-        .agg(F.min_by("code_id", F.struct("d", "code_id")).alias("code_id"))
-        .withColumnRenamed("vec_id", "neighbor_id")
-    )
-    lut = (
-        _pq_sub_explode(
-            queries.select(F.col("vec_id").alias("query_id"), "v"), "query_id"
-        )
-        .join(F.broadcast(cb), "sub_id")
-        .select("query_id", "sub_id", "code_id", d6.alias("d"))
-    )
+    probe_pairs = cands.join(F.broadcast(queries), "cell_id").select("query_id", "neighbor_id")
+    cb = _pq_codebook(emb)
+    codes = _pq_encode(emb, cb).withColumnRenamed("vec_id", "neighbor_id")
     adc = (
         probe_pairs.join(codes, "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "sub_id", "code_id"])
+        .join(F.broadcast(_pq_lut(emb, cb)), ["query_id", "sub_id", "code_id"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("d") + 1e-9, 6).alias("adist"))
     )
-    srn = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id"))
-    )
-    short = adc.withColumn("srn", srn).filter(F.col("srn") <= PQ_SHORTLIST)
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    pairs = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
-        .join(F.broadcast(short.select("query_id", "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-    )
-    return _rerank_topk(pairs)
+    return _pq_rerank(emb, adc, "neighbor_id")
 
 
-def _ivf_pq_sql() -> str:
-    def l2(a: str, b: str) -> str:
-        return " + ".join(
-            f"({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])" for i in range(1, PQ_SUBDIM + 1)
-        )
-
-    return f"""
+ANN_IVF_PQ_SQL = f"""
 WITH {_vectors_sql()},
-cents AS (
-  SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
-  FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
-),
-cand_cells AS (
-  SELECT vec_id AS neighbor_id, cell_id FROM (
-    SELECT e.vec_id, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
-  ) WHERE rn = 1
-),
-query_cells AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT e.vec_id, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
-),
+{_ivf_cells_sql(N_PROBE, vectors=False)},
 probe_pairs AS (
   SELECT q.query_id, c.neighbor_id
   FROM cand_cells c JOIN query_cells q USING (cell_id)
 ),
-cb AS (
-  SELECT vec_id - {N_QUERIES} AS code_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS code_sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + PQ_CODES}
-),
-cand_sub AS (
-  SELECT vec_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id >= {N_QUERIES}
-),
-codes AS (
-  SELECT vec_id AS neighbor_id, sub_id,
-         arg_min(code_id, printf('%012.6f|%05d', d, code_id)) AS code_id
-  FROM (
-    SELECT c.vec_id, c.sub_id, cb.code_id,
-           round({l2('c.sv', 'cb.code_sv')} + 1e-9, 6) AS d
-    FROM cand_sub c JOIN cb USING (sub_id)
-  )
-  GROUP BY 1, 2
-),
-q_sub AS (
-  SELECT vec_id AS query_id, t.sub_id,
-         list_slice(v, t.sub_id*{PQ_SUBDIM}+1, t.sub_id*{PQ_SUBDIM}+{PQ_SUBDIM}) AS sv
-  FROM e CROSS JOIN range(0, {PQ_M}) t(sub_id)
-  WHERE vec_id < {N_QUERIES}
-),
-lut AS (
-  SELECT q.query_id, q.sub_id, cb.code_id,
-         round({l2('q.sv', 'cb.code_sv')} + 1e-9, 6) AS d
-  FROM q_sub q JOIN cb USING (sub_id)
-),
+{_PQ_CODES_SQL},
 adc AS (
   SELECT p.query_id, p.neighbor_id, round(sum(l.d) + 1e-9, 6) AS adist
   FROM probe_pairs p
@@ -936,30 +860,7 @@ adc AS (
   JOIN lut l ON l.query_id = p.query_id AND l.sub_id = c.sub_id AND l.code_id = c.code_id
   GROUP BY 1, 2
 ),
-short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adist ASC, neighbor_id) AS srn
-    FROM adc
-  ) WHERE srn <= {PQ_SHORTLIST}
-),
-scored AS (
-  SELECT s.query_id, s.neighbor_id,
-         {_cos_sql('q.v', 'c.v')} AS cos_sim
-  FROM short s
-  JOIN e q ON q.vec_id = s.query_id
-  JOIN e c ON c.vec_id = s.neighbor_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ANN_IVF_PQ_SQL = _ivf_pq_sql()
+{_PQ_RERANK_SQL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1573,15 +1474,8 @@ def ann_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float math is a sequential fold, bit-identical to the oracle's
     recursive-CTE replay."""
     emb = _vectors(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cands = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    pairs = cands.crossJoin(F.broadcast(queries))
-    rel = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
-    scored = pairs.select("query_id", "neighbor_id", "cv", rel.alias("rel_sim"))
+    pairs = _role(emb, False).crossJoin(F.broadcast(_role(emb, True)))
+    scored = pairs.select("query_id", "neighbor_id", "cv", _cos6().alias("rel_sim"))
     rank = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.col("rel_sim").desc(), F.col("neighbor_id"))
     )
@@ -1765,6 +1659,56 @@ GROUP BY t.query_id
 
 
 # ---------------------------------------------------------------------------
+# recall curves — one index knob swept over a budget grid
+# ---------------------------------------------------------------------------
+
+
+def _recall(n_hits: F.Column) -> F.Column:
+    return F.round(n_hits / float(N_QUERIES * TOP_K) + 1e-9, 6)
+
+
+def _budget_recall(spark: SparkSession, sf_dir: str, scored: DataFrame, budget: str) -> DataFrame:
+    """The tail of every recall curve: the TOP_K per (`budget`, query)
+    of the `scored` (query_id, neighbor_id, cos_sim) rows (ties →
+    lowest neighbor_id), joined to the brute-force truth:
+    ``(budget, n_hits, recall)``. The truth is k·|queries| rows,
+    broadcast."""
+    rank = F.row_number().over(
+        Window.partitionBy(budget, "query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    )
+    topk = scored.withColumn("rank", rank).filter(F.col("rank") <= TOP_K)
+    exact = ann_bruteforce_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
+    )
+    return (
+        topk.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
+        .groupBy(budget)
+        .agg(F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hits"))
+        .select(budget, "n_hits", _recall(F.col("n_hits")).alias("recall"))
+    )
+
+
+def _recall_tail_sql(budget: str) -> str:
+    """DuckDB twin of `_budget_recall` over a `scored` CTE of (`budget`,
+    query_id, neighbor_id, cos_sim)."""
+    return f"""ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY {budget}, query_id
+                               ORDER BY cos_sim DESC, neighbor_id) AS rank
+  FROM scored
+),
+topk AS (SELECT * FROM ranked WHERE rank <= {TOP_K}),
+exact AS ({ANN_BRUTEFORCE_SQL})
+SELECT t.{budget},
+       CAST(count(x.neighbor_id) AS BIGINT) AS n_hits,
+       round(count(x.neighbor_id) * 1.0 / {N_QUERIES * TOP_K} + 1e-9, 6) AS recall
+FROM topk t
+LEFT JOIN exact x
+  ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id
+GROUP BY t.{budget}
+"""
+
+
+# ---------------------------------------------------------------------------
 # lsh_tables_recall_curve — recall@k vs the number of LSH hash tables
 # ---------------------------------------------------------------------------
 
@@ -1785,53 +1729,29 @@ def lsh_tables_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (×N_TABLES) broadcast-grid filter over the deduped pair set,
     never a re-join. Ground truth is the audited brute-force top-k;
     the comparison join is k·|queries| rows."""
-    emb = _vectors(spark, sf_dir)
-    buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
-    bucketed = emb.select(
-        "vec_id", "v", "nrm", F.posexplode(buckets).alias("tbl", "bucket")
+    bucketed = _vectors(spark, sf_dir).select(
+        "vec_id", "v", "nrm", F.posexplode(_buckets()).alias("tbl", "bucket")
     )
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), "tbl", "bucket",
-    )
-    cands = bucketed.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), "tbl", "bucket",
-    )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
+    queries = _role(bucketed, True, "tbl", "bucket")
+    cands = _role(bucketed, False, "tbl", "bucket")
     # score at the pair-occurrence grain, then collapse to one row
     # per pair carrying the first table that found it (cos is
     # identical across occurrences; min() is the deterministic pick)
     pairs = (
         cands.join(F.broadcast(queries), ["tbl", "bucket"])
-        .select("query_id", "neighbor_id", (F.col("tbl") + 1).alias("lvl"), cos.alias("cos_sim"))
+        .select("query_id", "neighbor_id", (F.col("tbl") + 1).alias("lvl"), _cos6().alias("cos_sim"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.min("lvl").alias("lvl"), F.min("cos_sim").alias("cos_sim"))
     )
     grid = spark.createDataFrame([(t,) for t in range(1, N_TABLES + 1)], "tables int")
     per_budget = pairs.join(F.broadcast(grid), F.col("lvl") <= F.col("tables"))
-    rank = F.row_number().over(
-        Window.partitionBy("tables", "query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-    )
-    topk = per_budget.withColumn("rank", rank).filter(F.col("rank") <= TOP_K)
-    exact = ann_bruteforce_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    denom = float(N_QUERIES * TOP_K)
-    per_t = (
-        topk.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .groupBy("tables")
-        .agg(F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hits"))
-    )
+    per_t = _budget_recall(spark, sf_dir, per_budget, "tables")
     # drive the face from the grid so a budget whose candidate set is
     # EMPTY (no bucket collision in its tables — possible on a small
     # or adversarial corpus) still reports its recall-0 row
+    n_hits = F.coalesce(F.col("n_hits"), F.lit(0))
     return grid.join(per_t, "tables", "left").select(
-        "tables",
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / denom + 1e-9, 6).alias("recall"),
+        "tables", n_hits.cast("long").alias("n_hits"), _recall(n_hits).alias("recall")
     )
 
 
@@ -1973,26 +1893,7 @@ def ann_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = pairs.select(
         "query_id", "neighbor_id", F.explode(F.array(*budget_structs)).alias("b")
     ).select("query_id", "neighbor_id", "b.dims", "b.cos_sim")
-    rank = F.row_number().over(
-        Window.partitionBy("dims", "query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-    )
-    topk = exploded.withColumn("rank", rank).filter(F.col("rank") <= TOP_K)
-    exact = ann_bruteforce_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    denom = float(N_QUERIES * TOP_K)
-    return (
-        topk.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .groupBy("dims")
-        .agg(F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hits"))
-        .select(
-            "dims",
-            "n_hits",
-            F.round(F.col("n_hits") / denom + 1e-9, 6).alias("recall"),
-        )
-    )
+    return _budget_recall(spark, sf_dir, exploded, "dims")
 
 
 def _ann_dim_curve_sql() -> str:
@@ -2046,21 +1947,7 @@ segdots AS (
 scored AS (
   {budgets}
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY dims, query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-),
-topk AS (SELECT * FROM ranked WHERE rank <= {TOP_K}),
-exact AS ({ANN_BRUTEFORCE_SQL})
-SELECT t.dims,
-       CAST(count(x.neighbor_id) AS BIGINT) AS n_hits,
-       round(count(x.neighbor_id) * 1.0 / {N_QUERIES * TOP_K} + 1e-9, 6) AS recall
-FROM topk t
-LEFT JOIN exact x
-  ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id
-GROUP BY t.dims
-"""
+{_recall_tail_sql('dims')}"""
 
 
 ANN_DIM_RECALL_CURVE_SQL = _ann_dim_curve_sql()
@@ -2158,26 +2045,7 @@ def ann_quantization_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     exploded = pairs.select(
         "query_id", "neighbor_id", F.explode(F.array(*budget_structs)).alias("s")
     ).select("query_id", "neighbor_id", "s.bits", "s.cos_sim")
-    rank = F.row_number().over(
-        Window.partitionBy("bits", "query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-    )
-    topk = exploded.withColumn("rank", rank).filter(F.col("rank") <= TOP_K)
-    exact = ann_bruteforce_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    denom = float(N_QUERIES * TOP_K)
-    return (
-        topk.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .groupBy("bits")
-        .agg(F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hits"))
-        .select(
-            "bits",
-            "n_hits",
-            F.round(F.col("n_hits") / denom + 1e-9, 6).alias("recall"),
-        )
-    )
+    return _budget_recall(spark, sf_dir, exploded, "bits")
 
 
 def _ann_quant_curve_sql() -> str:
@@ -2222,21 +2090,7 @@ c AS (SELECT vec_id AS neighbor_id, * EXCLUDE (vec_id) FROM dq WHERE vec_id >= {
 scored AS (
   {budgets}
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY bits, query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-),
-topk AS (SELECT * FROM ranked WHERE rank <= {TOP_K}),
-exact AS ({ANN_BRUTEFORCE_SQL})
-SELECT t.bits,
-       CAST(count(x.neighbor_id) AS BIGINT) AS n_hits,
-       round(count(x.neighbor_id) * 1.0 / {N_QUERIES * TOP_K} + 1e-9, 6) AS recall
-FROM topk t
-LEFT JOIN exact x
-  ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id
-GROUP BY t.bits
-"""
+{_recall_tail_sql('bits')}"""
 
 
 ANN_QUANTIZATION_RECALL_CURVE_SQL = _ann_quant_curve_sql()
@@ -2429,11 +2283,10 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
     )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
     scored = (
         cands.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "true_label", "neighbor_id", "n_label", cos.alias("cos_sim"))
+        .select("query_id", "true_label", "neighbor_id", "n_label", _cos6().alias("cos_sim"))
     )
     rank = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -2826,58 +2679,16 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keys, the query side broadcasts, and the radius filter
     runs before any window, so output is the only per-query
     variable cost. No all-pairs stage anywhere."""
-    emb = _vectors(spark, sf_dir)
-    buckets = F.array(*[_bucket_col(F.col("v"), t) for t in range(N_TABLES)])
-    bucketed = emb.select(
-        "vec_id", "v", "nrm",
-        F.explode(
-            F.transform(buckets, lambda b, i: F.concat(i.cast("string"), F.lit(":"), b.cast("string")))
-        ).alias("bucket"),
-    )
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), F.col("bucket").alias("qb")
-    )
-    cands = bucketed.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), F.col("bucket").alias("cb")
-    )
-    pairs = (
-        cands.join(F.broadcast(queries), F.col("cb") == F.col("qb"))
-        .select("query_id", "neighbor_id", "qv", "cv", "qn", "cn")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
     return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
+        _lsh_pairs(_vectors(spark, sf_dir))
+        .select("query_id", "neighbor_id", _cos6().alias("cos_sim"))
         .filter(F.col("cos_sim") >= RANGE_TAU)
     )
 
 
-def _range_sql() -> str:
-    bucket_cols = [
-        f"'{t}:' || CAST({_bucket_sql(t)} AS VARCHAR) AS bucket{t}" for t in range(N_TABLES)
-    ]
-    bucket_select = ",\n    ".join(bucket_cols)
-    union = "\n  UNION ALL\n  ".join(
-        f"SELECT vec_id, v, bucket{t} AS bucket FROM with_buckets" for t in range(N_TABLES)
-    )
-    return f"""
+ANN_RANGE_SQL = f"""
 WITH {_vectors_sql()},
-with_buckets AS (
-  SELECT vec_id, v,
-    {bucket_select}
-  FROM e
-),
-bucketed AS (
-  {union}
-),
-q AS (SELECT vec_id AS query_id, v AS qv, bucket AS qb FROM bucketed WHERE vec_id < {N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket AS cb FROM bucketed WHERE vec_id >= {N_QUERIES}),
-cand AS (
-  SELECT DISTINCT ON (query_id, neighbor_id) query_id, neighbor_id, qv, cv
-  FROM q JOIN c ON qb = cb
-),
+{_lsh_cand_sql()},
 scored AS (
   SELECT query_id, neighbor_id,
          {_cos_sql('qv', 'cv')} AS cos_sim
@@ -2885,9 +2696,6 @@ scored AS (
 )
 SELECT query_id, neighbor_id, cos_sim FROM scored WHERE cos_sim >= {RANGE_TAU}
 """
-
-
-ANN_RANGE_SQL = _range_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2994,104 +2802,29 @@ def ann_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     along), then a probe-grid explode (×4, constants-bounded) and
     per-(p, query) windows; ground truth is the brute-force top-k
     (its own audited broadcast shape)."""
-    emb = _vectors(spark, sf_dir)
-    cents = _ivf_codebook(emb)
-    cands = _with_cells(emb.filter(F.col("vec_id") >= N_QUERIES), cents, 1, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), "cell_id",
+    queries, cands = _ivf_probe(
+        _vectors(spark, sf_dir), IVF_CURVE_MAX_PROBE, F.col("cell_rank").alias("lvl")
     )
-    queries = _with_cells(
-        emb.filter(F.col("vec_id") < N_QUERIES), cents, IVF_CURVE_MAX_PROBE, "vec_id",
-        keep_rank=True,
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), "cell_id", F.col("cell_rank").alias("lvl"),
-    )
-    cos = F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")) + 1e-9, 6)
     scored = cands.join(F.broadcast(queries), "cell_id").select(
-        "query_id", "neighbor_id", "lvl", cos.alias("cos_sim")
+        "query_id", "neighbor_id", "lvl", _cos6().alias("cos_sim")
     )
     grid = spark.createDataFrame(
         [(p,) for p in range(1, IVF_CURVE_MAX_PROBE + 1)], "probe int"
     )
     per_budget = scored.join(F.broadcast(grid), F.col("lvl") <= F.col("probe"))
-    rank = F.row_number().over(
-        Window.partitionBy("probe", "query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-    )
-    topk = per_budget.withColumn("rank", rank).filter(F.col("rank") <= TOP_K)
-    exact = ann_bruteforce_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    denom = float(N_QUERIES * TOP_K)
-    return (
-        topk.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left")
-        .groupBy("probe")
-        .agg(
-            F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hits"),
-            F.round(F.coalesce(F.sum("hit"), F.lit(0)) / denom + 1e-9, 6).alias("recall"),
-        )
-    )
+    return _budget_recall(spark, sf_dir, per_budget, "probe")
 
 
-def _ann_ivf_probe_curve_sql() -> str:
-    return f"""
+ANN_IVF_PROBE_CURVE_SQL = f"""
 WITH {_vectors_sql()},
-cents AS (
-  SELECT vec_id - {N_QUERIES} AS cell_id, v AS cell_v
-  FROM e WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_CELLS}
-),
-cand_cells AS (
-  SELECT vec_id AS neighbor_id, cv, cell_id FROM (
-    SELECT e.vec_id, e.v AS cv, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id >= {N_QUERIES}
-  ) WHERE rn = 1
-),
-query_cells AS (
-  SELECT vec_id AS query_id, qv, cell_id, rn AS lvl FROM (
-    SELECT e.vec_id, e.v AS qv, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_cos_sql('e.v', 'c.cell_v')} DESC, c.cell_id) AS rn
-    FROM e CROSS JOIN cents c WHERE e.vec_id < {N_QUERIES}
-  ) WHERE rn <= {IVF_CURVE_MAX_PROBE}
-),
-scored AS (
-  SELECT query_id, neighbor_id, lvl,
-         {_cos_sql('qv', 'cv')} AS cos_sim
-  FROM cand_cells JOIN query_cells USING (cell_id)
-),
+{_ivf_cells_sql(IVF_CURVE_MAX_PROBE, lvl=True)},
 grid AS (SELECT CAST(unnest([{", ".join(str(p) for p in range(1, IVF_CURVE_MAX_PROBE + 1))}]) AS INTEGER) AS probe),
-topk AS (
-  SELECT probe, query_id, neighbor_id FROM (
-    SELECT g.probe, s.query_id, s.neighbor_id,
-           row_number() OVER (PARTITION BY g.probe, s.query_id
-                              ORDER BY s.cos_sim DESC, s.neighbor_id) AS rank
-    FROM scored s JOIN grid g ON s.lvl <= g.probe
-  ) WHERE rank <= {TOP_K}
+scored AS (
+  SELECT g.probe, query_id, neighbor_id,
+         {_cos_sql('qv', 'cv')} AS cos_sim
+  FROM cand_cells JOIN query_cells USING (cell_id) JOIN grid g ON lvl <= g.probe
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_cos_sql('q.v', 'c.v')} DESC, c.vec_id) AS rn
-    FROM e q CROSS JOIN e c
-    WHERE q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
-  ) WHERE rn <= {TOP_K}
-)
-SELECT t.probe,
-       CAST(sum(CASE WHEN x.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       round(sum(CASE WHEN x.query_id IS NOT NULL THEN 1 ELSE 0 END)
-             / {float(N_QUERIES * TOP_K)} + 1e-9, 6) AS recall
-FROM topk t LEFT JOIN exact x
-  ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id
-GROUP BY 1
-"""
-
-
-ANN_IVF_PROBE_CURVE_SQL = _ann_ivf_probe_curve_sql()
+{_recall_tail_sql('probe')}"""
 
 
 # ---------------------------------------------------------------------------
@@ -3192,7 +2925,10 @@ def embedding_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _embedding_knn_graph_sql() -> str:
+def _knn_sql() -> str:
+    """DuckDB twin of `_knn_edges`: the blocked pair CTEs of
+    `dedup._emb_pairs_parts`, then `directed` and the ranked `knn`
+    edges."""
     from datatransformertools_spark.operators.dedup import _emb_pairs_parts
 
     return (
@@ -3208,12 +2944,16 @@ knn AS (
          CAST(row_number() OVER (PARTITION BY src ORDER BY cos_sim DESC, dst) AS INTEGER) AS rank
   FROM directed
   QUALIFY rank <= {EMB_KNN_K}
-)
+)"""
+    )
+
+
+def _embedding_knn_graph_sql() -> str:
+    return _knn_sql() + """
 SELECT k.src, k.rank, k.dst, k.cos_sim,
        (r.src IS NOT NULL) AS is_mutual
 FROM knn k LEFT JOIN knn r ON k.src = r.dst AND k.dst = r.src
 """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3356,22 +3096,7 @@ def embedding_knn_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_knn_outlier_sql() -> str:
-    from datatransformertools_spark.operators.dedup import _emb_pairs_parts
-
-    return (
-        ",\n".join(_emb_pairs_parts())
-        + f""",
-directed AS (
-  SELECT vec_a AS src, vec_b AS dst, cos_sim FROM pairs
-  UNION ALL
-  SELECT vec_b AS src, vec_a AS dst, cos_sim FROM pairs
-),
-knn AS (
-  SELECT src, dst, cos_sim,
-         CAST(row_number() OVER (PARTITION BY src ORDER BY cos_sim DESC, dst) AS INTEGER) AS rank
-  FROM directed
-  QUALIFY rank <= {EMB_KNN_K}
-),
+    return _knn_sql() + f""",
 scores AS (
   SELECT src, CAST(count(*) AS BIGINT) AS n_neighbors,
          round(1.0 - avg(cos_sim) + 1e-9, 6) AS knn_mean_dist
@@ -3384,7 +3109,6 @@ FROM embeddings e LEFT JOIN scores s ON e.vec_id = s.src
 ORDER BY knn_mean_dist DESC, e.vec_id
 LIMIT {KNN_OUTLIER_TOP}
 """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3428,22 +3152,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_intrinsic_dim_sql() -> str:
-    from datatransformertools_spark.operators.dedup import _emb_pairs_parts
-
-    return (
-        ",\n".join(_emb_pairs_parts())
-        + f""",
-directed AS (
-  SELECT vec_a AS src, vec_b AS dst, cos_sim FROM pairs
-  UNION ALL
-  SELECT vec_b AS src, vec_a AS dst, cos_sim FROM pairs
-),
-knn AS (
-  SELECT src, dst, cos_sim,
-         CAST(row_number() OVER (PARTITION BY src ORDER BY cos_sim DESC, dst) AS INTEGER) AS rank
-  FROM directed
-  QUALIFY rank <= {EMB_KNN_K}
-),
+    return _knn_sql() + """,
 rr AS (
   SELECT src,
          min(CASE WHEN rank = 1 THEN 1.0 - cos_sim END) AS r1,
@@ -3457,7 +3166,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_with_neighbors,
              + 1e-9, 4) AS id_mle
 FROM rr
 """
-    )
 
 
 QUERIES = {

@@ -32,13 +32,18 @@ from pyspark.sql import functions as F
 
 from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.operators.events import (
+    DAY_US,
+    EVENING_MASK,
     EVENTS_BITMAP_ROLLUP_SQL,
     EVENTS_EWMA_SQL,
     EVENTS_HOPPING_AGG_SQL,
     EVENTS_TOP_K_SQL,
     EVENTS_TUMBLING_AGG_SQL,
+    HOUR_US,
+    MORNING_MASK,
+    WINDOW_TOP_K,
 )
-from datatransformertools_spark.sources.tables import events_event_time, events_ts_us
+from datatransformertools_spark.sources.tables import events_event_time, events_ts_us, load_table
 
 
 # Schema-probe memo (r12): every staged landing directory is a
@@ -546,8 +551,6 @@ def _final_interval_watermark_us(spark: SparkSession, sf_dir: str) -> int:
     no rows (min over one present side would silently advance the
     watermark past unseen data). Shared by the outer/full twins'
     safe-region cuts."""
-    from datatransformertools_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events")
     ts_us = events_ts_us(ev)
     maxes = ev.groupBy("event_type").agg(F.max(ts_us).alias("m")).filter(
@@ -961,8 +964,6 @@ def stream_daily_users(events: DataFrame) -> DataFrame:
     ``dropDuplicates`` on (user_id, day_start) under a 1-day
     watermark, then a 1-day window count, emitted (in append mode)
     once per day as the watermark closes it."""
-    from datatransformertools_spark.operators.events import DAY_US
-
     ev = events.withColumn("ts_us", events_ts_us(events)).withColumn(
         "day_start", F.timestamp_micros(F.expr(f"ts_us div {DAY_US}") * DAY_US)
     )
@@ -1219,8 +1220,6 @@ def stream_bitmap_rollup(events_with_ts_us: DataFrame) -> DataFrame:
     that keeps this runnable on an unbounded feed. Bitmaps are the
     ideal update-mode state (8 bytes per key, idempotent OR merge
     across microbatches; each update strictly adds bits)."""
-    from datatransformertools_spark.operators.events import DAY_US, HOUR_US
-
     ev = events_with_ts_us.select(
         F.timestamp_micros(F.expr(f"ts_us div {DAY_US}") * DAY_US).alias("day_start"),
         F.expr(f"(ts_us % {DAY_US}) div {HOUR_US}").alias("hour"),
@@ -1381,8 +1380,6 @@ def events_stream_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch `events_bitmap_rollup` day grain, so the gate
     value-checks the streaming runtime against the same DuckDB
     oracle."""
-    from datatransformertools_spark.operators.events import DAY_US, EVENING_MASK, MORNING_MASK
-
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
     bm = stream_bitmap_rollup(raw.withColumn("ts_us", events_ts_us(raw)))
@@ -1443,8 +1440,6 @@ def events_stream_top_k_per_window(spark: SparkSession, sf_dir: str) -> DataFram
     batch `events_top_k_per_window`, so the gate value-checks the
     streaming state math against the same oracle."""
     from pyspark.sql.window import Window
-
-    from datatransformertools_spark.operators.events import WINDOW_TOP_K
 
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=True)
     raw = _read_raw(spark, src_dir)

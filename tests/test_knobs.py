@@ -111,6 +111,27 @@ TWIN_FRAGMENTS = {
     "substr(md5('{i}:' || shingle)": {
         "datatransformertools_spark/operators/dedup.py:_minhash_ctes",
     },
+    "SELECT query_id, rank, neighbor_id, cos_sim FROM ranked": {
+        "datatransformertools_spark/operators/similarity.py:_TOPK_TAIL_SQL",
+    },
+    "'{t}:' || CAST(": {
+        "datatransformertools_spark/operators/similarity.py:_lsh_cand_sql",
+    },
+    "FROM e CROSS JOIN cents c WHERE": {
+        "datatransformertools_spark/operators/similarity.py:_ivf_cells_sql",
+    },
+    "list_slice(v, t.sub_id*": {
+        "datatransformertools_spark/operators/similarity.py:_pq_sub_sql",
+    },
+    "arg_min(code_id, printf(": {
+        "datatransformertools_spark/operators/similarity.py:_PQ_CODES_SQL",
+    },
+    "round(count(x.neighbor_id) * 1.0 /": {
+        "datatransformertools_spark/operators/similarity.py:_recall_tail_sql",
+    },
+    "SELECT vec_a AS src, vec_b AS dst, cos_sim FROM pairs": {
+        "datatransformertools_spark/operators/similarity.py:_knn_sql",
+    },
 }
 
 
@@ -123,8 +144,9 @@ def _top_level_owner(tree: ast.Module, lineno: int) -> str:
 
 
 def test_duckdb_twin_fragments_are_not_repasted():
-    """The DuckDB normalization and MinHash signature fragments are
-    spelled once, in their twin; every oracle calls the twin."""
+    """The DuckDB normalization, MinHash signature and ANN index-stage
+    fragments are spelled once, in their twin; every oracle calls the
+    twin."""
     hits: dict[str, set[str]] = {frag: set() for frag in TWIN_FRAGMENTS}
     for path in sorted(PACKAGE.rglob("*.py")):
         text = path.read_text()
@@ -134,3 +156,40 @@ def test_duckdb_twin_fragments_are_not_repasted():
                 if frag in line:
                     hits[frag].add(f"{path.relative_to(ROOT)}:{_top_level_owner(tree, i)}")
     assert hits == TWIN_FRAGMENTS
+
+
+def _repeated_local_imports(tree: ast.Module) -> list[int]:
+    """Lines of function-local ``from M import ...`` statements whose
+    package module M the file already imports at its top."""
+    top = {stmt.module for stmt in tree.body if isinstance(stmt, ast.ImportFrom)}
+    return sorted(
+        {
+            sub.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for sub in ast.walk(node)
+            if isinstance(sub, ast.ImportFrom)
+            and sub.module in top
+            and sub.module.startswith("datatransformertools_spark")
+        }
+    )
+
+
+def test_no_function_local_import_repeats_a_top_level_import():
+    """A module the file imports at its top is imported there once: a
+    function-local import of it only hides which names the file uses.
+    (Function-local imports of a module the file does not import at
+    its top, such as the dedup ↔ similarity cycle, stay allowed.)"""
+    bad = {
+        str(path.relative_to(ROOT)): lines
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (lines := _repeated_local_imports(ast.parse(path.read_text())))
+    }
+    assert not bad, f"function-local imports of a module already imported at the top: {bad}"
+    src = (
+        "from datatransformertools_spark.caching import Memo\n"
+        "def f():\n"
+        "    from datatransformertools_spark.caching import track\n"
+        "    from datatransformertools_spark.operators import dedup\n"
+    )
+    assert _repeated_local_imports(ast.parse(src)) == [3]

@@ -588,7 +588,7 @@ def test_dedup_incremental_never_shuffles_text(spark, sf_dir):
             assert "text#" not in line, line
 
 
-def test_no_data_scale_driver_collects(spark, sf_dir):
+def test_no_data_scale_driver_collects(batch_builds):
     """Engine-wide scale contract: BUILDING any query may pull only
     bounded frames to the driver. Iterative fits legitimately
     collect between rounds — centroids (K·DIM), the covariance
@@ -598,44 +598,44 @@ def test_no_data_scale_driver_collects(spark, sf_dir):
     un-distributing itself; this pins every call site under a hard
     cap. (take/head/first funnel through collect in PySpark, so one
     intercept covers them.)"""
+    cap = 5_000  # >> d(d+1)/2 = 2080 (the largest legitimate fit frame)
+    bad = {n: cs for n, cs in batch_builds[1].items() if any(c > cap for c in cs)}
+    assert not bad, f"data-scale driver collects: {bad}"
+
+
+@pytest.fixture(scope="module")
+def batch_builds(spark, sf_dir) -> tuple[dict[str, str], dict[str, list[int]]]:
+    """Build every registered batch query once: its executed plan, and
+    the row count of each driver collect the build ran. Streaming
+    queries are exercised by their own tests — their returned frame
+    is a memory-sink aggregate, so their plan here is not
+    informative, and they drain through sinks, not collect."""
     from pyspark.sql import DataFrame
 
-    cap = 5_000  # >> d(d+1)/2 = 2080 (the largest legitimate fit frame)
     orig = DataFrame.collect
-    seen: dict[str, list[int]] = {}
-    current: list[str | None] = [None]
+    plans: dict[str, str] = {}
+    collects: dict[str, list[int]] = {}
 
     def counting(self):
         rows = orig(self)
-        if current[0] is not None:
-            seen.setdefault(current[0], []).append(len(rows))
+        collects.setdefault(name, []).append(len(rows))
         return rows
 
     DataFrame.collect = counting
     try:
         for name, fn in _QUERIES.items():
-            if name.startswith("events_stream_"):
-                continue  # streams drain through sinks, not collect
-            current[0] = name
-            fn(spark, sf_dir)
-        current[0] = None
+            if not name.startswith("events_stream_"):
+                plans[name] = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     finally:
         DataFrame.collect = orig
-    bad = {n: cs for n, cs in seen.items() if any(c > cap for c in cs)}
-    assert not bad, f"data-scale driver collects: {bad}"
+    return plans, collects
 
 
 @pytest.fixture(scope="module")
-def batch_plans(spark, sf_dir) -> dict[str, str]:
-    """Executed plan of every registered batch query, built once and
-    shared by the engine-wide sweeps below. Streaming queries are
-    exercised by their own tests — their returned frame is a
-    memory-sink aggregate, so their plan here is not informative."""
-    return {
-        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        for name, fn in _QUERIES.items()
-        if not name.startswith("events_stream_")
-    }
+def batch_plans(batch_builds) -> dict[str, str]:
+    """Executed plan of every registered batch query, shared by the
+    engine-wide sweeps below."""
+    return batch_builds[0]
 
 
 def test_global_plan_hygiene(batch_plans):
@@ -712,6 +712,18 @@ def test_arrow_kernels_one_round_trip_per_partition(batch_plans):
     assert not bad, "Arrow-kernel stages off the contract:\n" + "\n".join(
         f"{n}: {v}" for n, vs in sorted(bad.items()) for v in vs
     )
+
+
+def test_one_arrow_kernel_per_batch_plan(batch_plans):
+    """Each batch query runs its Python kernel once: a second
+    Arrow-kernel node means the kernel's output feeds several
+    branches and every branch re-runs the kernel over its input."""
+    counts = {
+        name: sum(op.startswith(_ARROW_KERNELS) for op, _ in _plan_tree(plan))
+        for name, plan in batch_plans.items()
+    }
+    assert not {n: c for n, c in counts.items() if c > 1}
+    assert any(c == 1 for c in counts.values()), "the sweep found no Arrow kernel at all"
 
 
 def test_detection_nms_shuffles_predictions_once(spark, sf_dir):
