@@ -27,6 +27,18 @@ def md5_long(col: Column, salt: str | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, _HEX_CHARS), 16, 10).cast("long")
 
 
+def md5_u32(col: Column) -> Column:
+    """The low 32 bits of ``md5_long(col)``: the row checksum the
+    write→read round-trips sum, which stays far inside int64 at any
+    row count (2³² · rows)."""
+    return md5_long(col).bitwiseAND(F.lit((1 << 32) - 1))
+
+
+def md5_u32_sql(expr: str) -> str:
+    """DuckDB twin of ``md5_u32``."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT & 4294967295"
+
+
 def md5_bits32(col: Column, offset: int) -> Column:
     """A 32-bit unsigned slice of md5(col) as int64 (hex chars
     offset..offset+7). Used for simhash bit planes."""

@@ -24,9 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datatransformertools_spark.functions.bbox import from_yolo, to_yolo
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
+from datatransformertools_spark.sources.sinks import roundtrip_path
 from datatransformertools_spark.sources.tables import load_table
 
 # Class id → name (reference predictions_to_json.py:37-44).
@@ -327,13 +329,6 @@ SELECT * FROM (VALUES
 # ---------------------------------------------------------------------------
 
 
-def _io_tmp(tag: str) -> str:
-    from pathlib import Path
-
-    base = Path(__file__).resolve().parents[2] / ".dtt_tmp" / tag
-    return str(base)
-
-
 def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """YOLO label write→read round-trip: normalize the annotation
     set, write `stem cls %.6f ×4` text shards (write_yolo_labels),
@@ -360,7 +355,7 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(wn + 1e-9, 6).alias("w_norm"),
         F.round(hn + 1e-9, 6).alias("h_norm"),
     )
-    path = _io_tmp("yolo_labels")
+    path = roundtrip_path(spark, "yolo_labels")
     # key-only exchange: AQE sizes the label encode/write fan-out by
     # bytes instead of writing a fixed count of near-empty part files
     # (the per-class checksum is order-independent)
@@ -379,7 +374,7 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-bit hash slices: the per-class SUM stays far inside int64
     # at any corpus size (2³² · rows), and summing is order-
     # independent, so shard/partition order can't move the checksum.
-    h32 = md5_long(line).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(line)
     return (
         back.select("category_id", h32.alias("h"))
         .groupBy("category_id")
@@ -413,7 +408,7 @@ lines AS (
 )
 SELECT category_id,
        CAST(count(*) AS BIGINT) AS n_boxes,
-       CAST(sum(('0x' || substr(md5(line), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('line')}) AS BIGINT)
          AS line_hash_sum
 FROM lines
 GROUP BY category_id
@@ -428,12 +423,10 @@ def competition_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, md5 sum over the 2-dp bbox + class tuple). The
     `corruption: none` wrapper rows are counted too, so the writer's
     per-image envelope is certified, not just the box payload."""
-    from pyspark.sql import types as T
-
     from datatransformertools_spark.sources.annotations import write_competition_json
 
     preds = yolo_denormalize(spark, sf_dir)
-    path = _io_tmp("competition_json")
+    path = roundtrip_path(spark, "competition_json")
     write_competition_json(preds, path)
     schema = T.StructType(
         [
@@ -473,7 +466,7 @@ def competition_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.category_id"),
         F.col("a.category_name"),
     )
-    h32 = md5_long(key).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(key)
     return (
         ex.select("file_name", "envelope_ok", F.col("a.category_id").alias("category_id"), h32.alias("h"))
         .groupBy("category_id")
@@ -497,7 +490,7 @@ keyed AS (
 SELECT category_id,
        CAST(count(DISTINCT file_name) AS BIGINT) AS n_images,
        CAST(count(*) AS BIGINT) AS n_boxes,
-       CAST(sum(('0x' || substr(md5(key), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('key')}) AS BIGINT)
          AS bbox_hash_sum,
        CAST(1 AS BIGINT) AS envelope_ok
 FROM keyed

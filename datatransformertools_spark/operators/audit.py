@@ -175,9 +175,7 @@ def deletion_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows_to_delete"),
         )
 
-    from functools import reduce as _reduce
-
-    return _reduce(
+    return reduce(
         DataFrame.unionByName,
         (
             leg("customer", subjects),
@@ -505,9 +503,7 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    from functools import reduce as _reduce
-
-    return _reduce(DataFrame.unionByName, outs)
+    return reduce(DataFrame.unionByName, outs)
 
 
 ZONE_MAP_SKIPPING_SQL = f"""

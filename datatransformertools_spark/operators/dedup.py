@@ -991,8 +991,6 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join (never a broadcast of a per-doc frame), bounding
     any single join key's fan-out — the same hot-key discipline as
     the LSH buckets."""
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     tok = tokens(normalize_text(F.col("text")))

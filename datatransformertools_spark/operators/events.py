@@ -14,6 +14,15 @@ on identical int64 in both engines — no float time math anywhere.
 Scale design: every window/sessionization partitions by user_id, so
 state is distributed by key; the as-of join ranks per-event matches
 with a window function instead of a driver loop.
+
+Stages several queries share have one builder each, with its DuckDB
+twin next to it (a string builder that never calls the Spark one):
+``_sessions``/``_sessions_sql`` (30-minute-gap sessions), ``_gaps``
+(per-user inter-event gaps), ``_user_days`` (distinct (day, user)
+pairs) and ``_funnel_steps``/``_FUNNEL_STEPS_SQL`` (first view, click
+and purchase per user). ``operators/timeseries.py`` holds the hourly
+series and forecast face, ``streaming/events.py`` the stream-stream
+interval join.
 """
 
 from __future__ import annotations
@@ -70,32 +79,28 @@ GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us", "value")
+def _sessions(ev: DataFrame) -> DataFrame:
+    """Add ``new_session`` (1 when the gap to the user's previous event
+    is strictly greater than ``SESSION_GAP_US``) and the running
+    ``session_idx`` to a (user_id, event_id, ts_us, …) frame. One
+    user_id window pass ordered by (ts_us, event_id): equal timestamps
+    break by event_id."""
     order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     prev = F.lag("ts_us").over(order)
     flagged = ev.withColumn(
         "new_session",
         F.when(prev.isNull() | (F.col("ts_us") - prev > SESSION_GAP_US), 1).otherwise(0),
     )
-    running = Window.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    sessions = flagged.withColumn("session_idx", F.sum("new_session").over(running))
-    return (
-        sessions.groupBy("user_id", "session_idx")
-        .agg(
-            F.min("ts_us").alias("session_start_us"),
-            F.max("ts_us").alias("session_end_us"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value") + 1e-9, 4).alias("total_value"),
-        )
-    )
+    running = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return flagged.withColumn("session_idx", F.sum("new_session").over(running))
 
 
-EVENTS_SESSIONIZE_SQL = f"""
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events
+def _sessions_sql(*cols: str) -> str:
+    """DuckDB twin of ``_sessions``: the ``ev``/``flagged``/``sessions``
+    CTEs over events, carrying ``cols`` along."""
+    extra = "".join(f", {c}" for c in cols)
+    return f"""WITH ev AS (
+  SELECT user_id, event_id, epoch_us(ts) AS ts_us{extra} FROM events
 ),
 flagged AS (
   SELECT *,
@@ -110,7 +115,25 @@ sessions AS (
     CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
   FROM flagged
-)
+)"""
+
+
+def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us", "value")
+    return (
+        _sessions(ev)
+        .groupBy("user_id", "session_idx")
+        .agg(
+            F.min("ts_us").alias("session_start_us"),
+            F.max("ts_us").alias("session_end_us"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value") + 1e-9, 4).alias("total_value"),
+        )
+    )
+
+
+EVENTS_SESSIONIZE_SQL = f"""
+{_sessions_sql("value")}
 SELECT user_id, session_idx,
        min(ts_us) AS session_start_us,
        max(ts_us) AS session_end_us,
@@ -314,12 +337,13 @@ GROUP BY event_type
 # ---------------------------------------------------------------------------
 
 
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel: users who viewed, then clicked AFTER the
-    first view, then purchased AFTER that click. Three chained
-    conditional-min windows over ONE per-user partitioning — Spark
-    plans a single shuffle and evaluates the stages in consecutive
-    projections, so the funnel costs one pass regardless of depth."""
+def _funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per user: the first view ``v``, the first click at or after it
+    ``c`` and the first purchase at or after that click ``p`` (null
+    where the step never happens). Three chained conditional-min
+    windows over ONE per-user partitioning — Spark plans a single
+    shuffle and evaluates the stages in consecutive projections, so
+    the funnel costs one pass regardless of depth."""
     ev = _events_us(spark, sf_dir).select("user_id", "event_type", "ts_us")
     w = Window.partitionBy("user_id")
     s1 = ev.withColumn("v", F.min(F.when(F.col("event_type") == "view", F.col("ts_us"))).over(w))
@@ -335,19 +359,12 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when((F.col("event_type") == "purchase") & (F.col("ts_us") >= F.col("c")), F.col("ts_us"))
         ).over(w),
     )
-    per_user = s3.groupBy("user_id").agg(
+    return s3.groupBy("user_id").agg(
         F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p")
     )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count("v").alias("viewed"),
-        F.count("c").alias("clicked_after_view"),
-        F.count("p").alias("purchased_after_click"),
-    )
 
 
-EVENTS_FUNNEL_SQL = """
-WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+_FUNNEL_STEPS_SQL = """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
 s1 AS (
   SELECT *, min(CASE WHEN event_type = 'view' THEN ts_us END)
               OVER (PARTITION BY user_id) AS v
@@ -365,7 +382,22 @@ s3 AS (
 ),
 per_user AS (
   SELECT user_id, max(v) AS v, max(c) AS c, max(p) AS p FROM s3 GROUP BY user_id
-)
+)"""
+
+
+def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel: users who viewed, then clicked AFTER the
+    first view, then purchased AFTER that click (`_funnel_steps`)."""
+    return _funnel_steps(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n_users"),
+        F.count("v").alias("viewed"),
+        F.count("c").alias("clicked_after_view"),
+        F.count("p").alias("purchased_after_click"),
+    )
+
+
+EVENTS_FUNNEL_SQL = f"""
+{_FUNNEL_STEPS_SQL}
 SELECT count(*)  AS n_users,
        count(v)  AS viewed,
        count(c)  AS clicked_after_view,
@@ -926,9 +958,8 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     `F.sequence` explodes it back to buckets, so the fan-out input
     is |types| rows regardless of corpus size; the generated spine
     then left-joins the real bucket aggregates on (type, bucket)."""
-    five_min_us = 300_000_000
     ev = _events_us(spark, sf_dir).withColumn(
-        "bucket_us", F.expr(f"ts_us div {five_min_us}") * five_min_us
+        "bucket_us", F.expr(f"ts_us div {FIVE_MIN_US}") * FIVE_MIN_US
     )
     agg = ev.groupBy("event_type", "bucket_us").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -939,7 +970,7 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("bucket_us").alias("lo"), F.max("bucket_us").alias("hi"))
         .select(
             "event_type",
-            F.explode(F.sequence(F.col("lo"), F.col("hi"), F.lit(five_min_us))).alias(
+            F.explode(F.sequence(F.col("lo"), F.col("hi"), F.lit(FIVE_MIN_US))).alias(
                 "bucket_us"
             ),
         )
@@ -1543,6 +1574,16 @@ FROM hist
 DAY_US = 86_400_000_000
 
 
+def _user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (day, user_id) pairs of the feed: the one
+    data-scale shuffle every active-user count starts from."""
+    return (
+        _events_us(spark, sf_dir)
+        .select(F.expr(f"ts_us div {DAY_US}").alias("day"), "user_id")
+        .distinct()
+    )
+
+
 def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily and trailing-7-day active users (DAU/WAU), exact.
 
@@ -1557,10 +1598,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-window user-set state, no self-join. Target days are
     restricted to days that actually occur (partial leading windows
     are still reported, as trailing windows are by convention)."""
-    ev = _events_us(spark, sf_dir).select(
-        F.expr(f"ts_us div {DAY_US}").alias("day"), "user_id"
-    )
-    day_user = ev.distinct()
+    day_user = _user_days(spark, sf_dir)
     dau = day_user.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = day_user.select(
         F.explode(F.sequence(F.col("day"), F.col("day") + 6)).alias("day"), "user_id"
@@ -1597,9 +1635,6 @@ FROM dau d JOIN wau w USING (day)
 # events_peak_detection — local maxima in the hourly event series
 # ---------------------------------------------------------------------------
 
-HOUR_US_PD = 3_600_000_000
-
-
 def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic peaks: hourly event counts flagged as peaks when an
     hour strictly exceeds BOTH neighbors and runs ≥ 1.5× the global
@@ -1616,7 +1651,7 @@ def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-stable."""
     ev = _events_us(spark, sf_dir)
     hourly = ev.groupBy(
-        (F.expr(f"ts_us div {HOUR_US_PD}") * HOUR_US_PD).alias("hour_start_us")
+        (F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_start_us")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     w = Window.orderBy("hour_start_us")
     mean = hourly.agg(F.round(F.avg("n_events") + 1e-9, 4).alias("mean_hourly"))
@@ -1643,7 +1678,7 @@ def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EVENTS_PEAK_DETECTION_SQL = f"""
 WITH hourly AS (
-  SELECT (epoch_us(ts) // {HOUR_US_PD}) * {HOUR_US_PD} AS hour_start_us,
+  SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_start_us,
          CAST(count(*) AS BIGINT) AS n_events
   FROM events GROUP BY 1
 ),
@@ -1679,10 +1714,7 @@ def events_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each retention flag is one more join ON (user, first_day+k)
     against the pair set — keyed joins of the collapsed frame, never
     raw events. Exact integer counts, 6-dp rates."""
-    ev = _events_us(spark, sf_dir).select(
-        F.expr(f"ts_us div {DAY_US}").alias("day"), "user_id"
-    )
-    day_user = ev.distinct()
+    day_user = _user_days(spark, sf_dir)
     first = day_user.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     d1 = day_user.select("user_id", (F.col("day") - 1).alias("cohort_day"), F.lit(1).alias("r1"))
     d7 = day_user.select("user_id", (F.col("day") - 7).alias("cohort_day"), F.lit(1).alias("r7"))
@@ -3051,15 +3083,7 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering shuffle), and the final top-k is
     TakeOrderedAndProject over the |distinct paths| count frame."""
     ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us", "event_type")
-    order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    prev = F.lag("ts_us").over(order)
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(prev.isNull() | (F.col("ts_us") - prev > SESSION_GAP_US), 1).otherwise(0),
-    )
-    running = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sessions = flagged.withColumn("session_idx", F.sum("new_session").over(running))
-    paths = sessions.groupBy("user_id", "session_idx").agg(
+    paths = _sessions(ev).groupBy("user_id", "session_idx").agg(
         F.array_join(
             F.slice(
                 F.transform(
@@ -3085,23 +3109,7 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EVENTS_SESSION_PATHS_SQL = f"""
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type FROM events
-),
-flagged AS (
-  SELECT *,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-              OR ts_us - lag(ts_us) OVER w > {SESSION_GAP_US}
-         THEN 1 ELSE 0 END AS new_session
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sessions AS (
-  SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS session_idx
-  FROM flagged
-),
+{_sessions_sql("event_type")},
 paths AS (
   SELECT user_id, session_idx,
          array_to_string(
@@ -3718,7 +3726,7 @@ def user_hour_profile_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _user_hour_profile_kmeans_sql() -> str:
-    from datatransformertools_spark.operators.similarity import _lloyd_cte_parts
+    from datatransformertools_spark.operators.similarity import _lloyd_sql
 
     lead = [
         f"""WITH hc AS (
@@ -3733,19 +3741,7 @@ def _user_hour_profile_kmeans_sql() -> str:
 )""",
         "e AS (SELECT user_id, list(val ORDER BY hour) AS v FROM vals GROUP BY 1)",
     ]
-    parts = _lloyd_cte_parts(
-        lead_parts=lead, k=UHP_K, dim=UHP_DIM, key="user_id", iters=UHP_ITERS
-    )
-    last = UHP_ITERS
-    return (
-        ",\n".join(parts)
-        + f"""
-SELECT c.cluster, c.dim, c.cval,
-       CAST(COALESCE(n.n_members, 0) AS BIGINT) AS n_members
-FROM c{last} c
-LEFT JOIN c{last}_new n ON c.cluster = n.cluster AND c.dim = n.dim
-"""
-    )
+    return _lloyd_sql(lead_parts=lead, k=UHP_K, dim=UHP_DIM, key="user_id", iters=UHP_ITERS)
 
 
 USER_HOUR_PROFILE_KMEANS_SQL = _user_hour_profile_kmeans_sql()
@@ -3885,24 +3881,7 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB default, error-bounded in tests/test_sketches.py).
     Everything upstream is ONE per-user shuffle; the output is 2
     rows."""
-    ev = _events_us(spark, sf_dir).select("user_id", "event_type", "ts_us")
-    w = Window.partitionBy("user_id")
-    s1 = ev.withColumn("v", F.min(F.when(F.col("event_type") == "view", F.col("ts_us"))).over(w))
-    s2 = s1.withColumn(
-        "c",
-        F.min(
-            F.when((F.col("event_type") == "click") & (F.col("ts_us") >= F.col("v")), F.col("ts_us"))
-        ).over(w),
-    )
-    s3 = s2.withColumn(
-        "p",
-        F.min(
-            F.when((F.col("event_type") == "purchase") & (F.col("ts_us") >= F.col("c")), F.col("ts_us"))
-        ).over(w),
-    )
-    per_user = s3.groupBy("user_id").agg(
-        F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p")
-    )
+    per_user = _funnel_steps(spark, sf_dir)
     steps = per_user.select(
         F.lit("view_to_click").alias("step"), (F.col("c") - F.col("v")).alias("lat_us")
     ).unionByName(
@@ -3918,26 +3897,8 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_FUNNEL_LATENCY_SQL = """
-WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-s1 AS (
-  SELECT *, min(CASE WHEN event_type = 'view' THEN ts_us END)
-              OVER (PARTITION BY user_id) AS v
-  FROM ev
-),
-s2 AS (
-  SELECT *, min(CASE WHEN event_type = 'click' AND ts_us >= v THEN ts_us END)
-              OVER (PARTITION BY user_id) AS c
-  FROM s1
-),
-s3 AS (
-  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts_us >= c THEN ts_us END)
-              OVER (PARTITION BY user_id) AS p
-  FROM s2
-),
-per_user AS (
-  SELECT user_id, max(v) AS v, max(c) AS c, max(p) AS p FROM s3 GROUP BY 1
-),
+EVENTS_FUNNEL_LATENCY_SQL = f"""
+{_FUNNEL_STEPS_SQL},
 steps AS (
   SELECT 'view_to_click' AS step, c - v AS lat_us FROM per_user WHERE c - v IS NOT NULL
   UNION ALL
@@ -4037,6 +3998,16 @@ GAP_BUCKETS = (
 GAP_OVERFLOW = "5_over_1d"
 
 
+def _gaps(ev: DataFrame) -> DataFrame:
+    """Each user's inter-event gaps ``gap_us`` in (ts_us, event_id)
+    order over a (user_id, event_id, ts_us) frame; a user's first
+    event has no gap and drops out."""
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    return ev.select(
+        (F.col("ts_us") - F.lag("ts_us").over(w)).alias("gap_us")
+    ).filter(F.col("gap_us").isNotNull())
+
+
 def events_session_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where the 30-minute `SESSION_GAP_US` constant comes from: the
     histogram of per-user inter-event gaps. The shipped sessionize
@@ -4058,11 +4029,7 @@ def events_session_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, sorts partition-local); the histogram collapses to ~6
     bucket rows map-side, and the cumulative share runs on that
     bounded frame — output is ≤ 6 rows at any corpus size."""
-    ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us")
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gaps = ev.select(
-        (F.col("ts_us") - F.lag("ts_us").over(w)).alias("gap_us")
-    ).filter(F.col("gap_us").isNotNull())
+    gaps = _gaps(_events_us(spark, sf_dir).select("user_id", "event_id", "ts_us"))
     bucket = F.when(F.col("gap_us") <= GAP_BUCKETS[0][0], GAP_BUCKETS[0][1])
     for bound, label in GAP_BUCKETS[1:]:
         bucket = bucket.when(F.col("gap_us") <= bound, label)
@@ -4147,17 +4114,8 @@ def events_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     key prefix); the histogram then collapses map-side to ≤ 5
     bucket rows, and shares run on that bounded frame."""
     ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us")
-    order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    prev = F.lag("ts_us").over(order)
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(prev.isNull() | (F.col("ts_us") - prev > SESSION_GAP_US), 1).otherwise(0),
-    )
-    running = Window.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     sessions = (
-        flagged.withColumn("session_idx", F.sum("new_session").over(running))
+        _sessions(ev)
         .groupBy("user_id", "session_idx")
         .agg(
             (F.max("ts_us") - F.min("ts_us")).alias("duration_us"),
@@ -4192,24 +4150,7 @@ def _session_stats_oracle() -> str:
     for bound, label in SESSION_DUR_BUCKETS:
         cases += f"\n           WHEN duration_us < {bound} THEN '{label}'"
     return f"""
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
-),
-flagged AS (
-  SELECT *,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-              OR ts_us - lag(ts_us) OVER w > {SESSION_GAP_US}
-         THEN 1 ELSE 0 END AS new_session
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sessions AS (
-  SELECT user_id,
-    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx,
-    ts_us
-  FROM flagged
-),
+{_sessions_sql()},
 per_session AS (
   SELECT user_id, session_idx,
          max(ts_us) - min(ts_us) AS duration_us,
@@ -4262,10 +4203,7 @@ def session_gap_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 1-row (n_users, n_events) totals riding as the only
     broadcast. Face is |candidates| rows."""
     ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us")
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gaps = ev.select(
-        (F.col("ts_us") - F.lag("ts_us").over(w)).alias("gap_us")
-    ).filter(F.col("gap_us").isNotNull())
+    gaps = _gaps(ev)
     entries = []
     for m in SESSION_GAP_CANDIDATES_MIN:
         tau = m * 60_000_000
@@ -4362,10 +4300,7 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: fan-out happens AFTER the distinct collapse
     (28 × |user-days| rows, not 28 × |events|); the final aggregate
     carries (grid_day, user_id) pairs; output is |days| rows."""
-    ev = _events_us(spark, sf_dir).select(
-        F.expr(f"ts_us div {DAY_US}").alias("day"), "user_id"
-    )
-    user_days = ev.distinct()
+    user_days = _user_days(spark, sf_dir)
     dau = user_days.groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
     contrib = user_days.select(
         F.explode(

@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
 from datatransformertools_spark.sources.tables import load_table
 
 N_SHARDS = 16
@@ -521,7 +521,7 @@ def server_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x"), F.col("y"), F.col("w"), F.col("h"),
         F.col("category_id"), F.col("category_name"), F.col("confidence"),
     )
-    h32 = md5_long(ann_key).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(ann_key)
     return (
         dets.join(F.broadcast(names), "category_id")
         .groupBy("doc_id", "page_idx", "page_name", "width", "height")
@@ -587,7 +587,7 @@ SELECT doc_id, page_idx, page_name, width, height,
        CAST(count(*) AS BIGINT) AS n_dets,
        CAST(sum(kept) AS BIGINT) AS n_kept,
        CAST(sum(CASE WHEN kept = 1
-                     THEN ('0x' || substr(md5(ann_key), 1, 15))::BIGINT & 4294967295
+                     THEN {md5_u32_sql('ann_key')}
                      ELSE 0 END) AS BIGINT) AS ann_hash_sum,
        coalesce(round(max(CASE WHEN kept = 1 THEN conf_milli END) / 1000.0 + 1e-9, 4), 0.0)
          AS max_conf

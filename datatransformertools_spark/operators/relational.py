@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
+from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -1473,9 +1474,7 @@ def orders_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus"),
         F.format_string("%.4f", F.round(F.col("o_totalprice") + 1e-9, 4)),
     )
-    h32 = F.conv(F.substring(F.md5(line), 1, 15), 16, 10).cast("long").bitwiseAND(
-        F.lit((1 << 32) - 1)
-    )
+    h32 = md5_u32(line)
     return merged.select("o_orderstatus", h32.alias("h"), "o_totalprice").groupBy(
         "o_orderstatus"
     ).agg(
@@ -1485,7 +1484,7 @@ def orders_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORDERS_UPSERT_MERGE_SQL = """
+ORDERS_UPSERT_MERGE_SQL = f"""
 WITH snapshot AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
 updates AS (
   SELECT o_orderkey AS u_key, o_totalprice * 1.1 AS u_price, 'U' AS u_status
@@ -1515,7 +1514,7 @@ lines AS (
 SELECT o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders,
        round(sum(o_totalprice) + 1e-9, 2) AS total_price,
-       CAST(sum(('0x' || substr(md5(line), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('line')}) AS BIGINT)
          AS row_hash_sum
 FROM lines
 GROUP BY o_orderstatus
@@ -2684,7 +2683,7 @@ def _rfm_kmeans_sql() -> str:
     vec = ", ".join(
         f"round((f{i} - m{i}) / s{i} + 1e-9, 6)" for i in range(1, dim + 1)
     )
-    from datatransformertools_spark.operators.similarity import _lloyd_cte_parts
+    from datatransformertools_spark.operators.similarity import _lloyd_sql
 
     lead = [
         """WITH raw AS (
@@ -2697,17 +2696,7 @@ def _rfm_kmeans_sql() -> str:
         f"stats AS (SELECT {means}, {stds} FROM raw)",
         f"e AS (SELECT custkey, [{vec}] AS v FROM raw CROSS JOIN stats)",
     ]
-    parts = _lloyd_cte_parts(lead_parts=lead, k=k, dim=dim, key="custkey", iters=RFM_ITERS)
-    last = RFM_ITERS
-    return (
-        ",\n".join(parts)
-        + f"""
-SELECT c.cluster, c.dim, c.cval,
-       CAST(COALESCE(n.n_members, 0) AS BIGINT) AS n_members
-FROM c{last} c
-LEFT JOIN c{last}_new n ON c.cluster = n.cluster AND c.dim = n.dim
-"""
-    )
+    return _lloyd_sql(lead_parts=lead, k=k, dim=dim, key="custkey", iters=RFM_ITERS)
 
 
 CUSTOMER_RFM_KMEANS_SQL = _rfm_kmeans_sql()

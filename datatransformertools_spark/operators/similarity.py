@@ -1200,20 +1200,28 @@ def _lloyd_cte_parts(
     return parts
 
 
-def _kmeans_sql() -> str:
-    last = KMEANS_ITERS
+def _lloyd_sql(
+    lead_parts: list[str] | None = None,
+    k: int | None = None,
+    dim: int = DIM,
+    key: str = "vec_id",
+    iters: int = KMEANS_ITERS,
+) -> str:
+    """DuckDB twin of ``_lloyd_final``'s face: the unrolled rounds of
+    ``_lloyd_cte_parts`` (same arguments), then the exploded
+    (cluster, dim, cval, n_members) centroid matrix of round ``iters``."""
     return (
-        ",\n".join(_lloyd_cte_parts())
+        ",\n".join(_lloyd_cte_parts(lead_parts=lead_parts, k=k, dim=dim, key=key, iters=iters))
         + f"""
 SELECT c.cluster, c.dim, c.cval,
        CAST(COALESCE(n.n_members, 0) AS BIGINT) AS n_members
-FROM c{last} c
-LEFT JOIN c{last}_new n ON c.cluster = n.cluster AND c.dim = n.dim
+FROM c{iters} c
+LEFT JOIN c{iters}_new n ON c.cluster = n.cluster AND c.dim = n.dim
 """
     )
 
 
-KMEANS_EMBEDDINGS_SQL = _kmeans_sql()
+KMEANS_EMBEDDINGS_SQL = _lloyd_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1420,8 +1428,6 @@ def _make_mmr_kernel():
             for x, y in zip(a, b):
                 s += x * y
             return s
-
-        import math
 
         rows = list(pdf.itertuples())
         vecs = {r.neighbor_id: list(r.cv) for r in rows}

@@ -27,7 +27,7 @@ at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -40,15 +40,19 @@ from datatransformertools_spark.operators.events import HOUR_US, _events_us
 MAX_LAG = 3
 
 
-def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_us(spark, sf_dir)
-    hourly = (
-        ev.groupBy(
-            (F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_us"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("x"))
+def _hourly(spark: SparkSession, sf_dir: str, x: Column) -> DataFrame:
+    """The aggregate ``x`` per (hour_us, event_type): the Spark side of
+    ``_hourly_sql``, and the one keyed reduction every series operator
+    here windows over."""
+    return (
+        _events_us(spark, sf_dir)
+        .groupBy((F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_us"), "event_type")
+        .agg(x.alias("x"))
     )
+
+
+def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    hourly = _hourly(spark, sf_dir, F.count(F.lit(1)).cast("double"))
     order = Window.partitionBy("event_type").orderBy("hour_us")
     lagged = hourly.select(
         "event_type",
@@ -134,14 +138,7 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hour asc) order in each engine, so even float results agree;
     output is 4-dp-quantized like the other value aggregates.
     """
-    ev = _events_us(spark, sf_dir)
-    hourly = (
-        ev.groupBy(
-            (F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_us"),
-            "event_type",
-        )
-        .agg(F.round(F.avg("value") + 1e-9, 6).alias("x"))
-    )
+    hourly = _hourly(spark, sf_dir, F.round(F.avg("value") + 1e-9, 6))
     part = Window.partitionBy("event_type")
     mu = F.avg("x").over(part)
     sigma = F.stddev_samp("x").over(part)
@@ -301,6 +298,49 @@ HOLT_BETA = 0.1
 HOLT_HORIZON = 6
 
 
+def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each event type's hourly count series gathered into one array
+    ``s`` of (hour_us, x) structs, in hour order."""
+    hourly = _hourly(spark, sf_dir, F.count(F.lit(1)).cast("double"))
+    return hourly.groupBy("event_type").agg(
+        F.array_sort(F.collect_list(F.struct("hour_us", "x"))).alias("s")
+    )
+
+
+def _forecast(fitted: DataFrame, *tail: Column) -> DataFrame:
+    """The h = 1..HOLT_HORIZON forecast face of a fitted (event_type,
+    last_hour_us, st) frame: forecast hour, level and trend, then the
+    ``tail`` columns, which may read ``h`` and ``last_hour_us``."""
+    return fitted.select(
+        "event_type",
+        F.explode(F.array(*[F.lit(h) for h in range(1, HOLT_HORIZON + 1)])).alias("h"),
+        "last_hour_us",
+        "st",
+    ).select(
+        "event_type",
+        "h",
+        (F.col("last_hour_us") + F.col("h").cast("long") * F.lit(HOUR_US)).alias(
+            "forecast_hour_us"
+        ),
+        F.round(F.col("st.l") + 1e-9, 6).alias("level"),
+        F.round(F.col("st.b") + 1e-9, 6).alias("trend"),
+        *tail,
+    )
+
+
+def _forecast_sql(*tail: str) -> str:
+    """DuckDB twin of ``_forecast``: the ``grid`` CTE and the face
+    select over ``fitted``, with ``tail`` as its last columns."""
+    cols = "".join(f",\n       {t}" for t in tail)
+    return f"""grid AS (SELECT CAST(unnest(range(1, {HOLT_HORIZON} + 1)) AS INTEGER) AS h)
+SELECT event_type, h,
+       CAST(last_hour_us + h * {HOUR_US} AS BIGINT) AS forecast_hour_us,
+       round(st[1] + 1e-9, 6) AS level,
+       round(st[2] + 1e-9, 6) AS trend{cols}
+FROM fitted CROSS JOIN grid
+"""
+
+
 def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential (linear-trend) smoothing of the
     hourly count series per event type, with h-step-ahead forecasts
@@ -318,13 +358,7 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size. Both engines execute the identical operation
     sequence on IEEE doubles (fold order is the series order), so
     the state is bit-stable cross-engine; outputs round at 6 dp."""
-    ev = _events_us(spark, sf_dir)
-    hourly = ev.groupBy(
-        (F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_us"), "event_type"
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    series = hourly.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("hour_us", "x"))).alias("s")
-    ).select(
+    series = _hourly_series(spark, sf_dir).select(
         "event_type",
         F.transform("s", lambda e: e["x"]).alias("vals"),
         F.element_at("s", -1)["hour_us"].alias("last_hour_us"),
@@ -342,19 +376,8 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = series.withColumn(
         "st", F.aggregate(F.expr("slice(vals, 2, greatest(size(vals) - 1, 0))"), state0, step)
     )
-    return fitted.select(
-        "event_type",
-        F.explode(F.array(*[F.lit(h) for h in range(1, HOLT_HORIZON + 1)])).alias("h"),
-        "last_hour_us",
-        "st",
-    ).select(
-        "event_type",
-        "h",
-        (F.col("last_hour_us") + F.col("h").cast("long") * F.lit(HOUR_US)).alias(
-            "forecast_hour_us"
-        ),
-        F.round(F.col("st.l") + 1e-9, 6).alias("level"),
-        F.round(F.col("st.b") + 1e-9, 6).alias("trend"),
+    return _forecast(
+        fitted,
         F.round(F.col("st.l") + F.col("h") * F.col("st.b") + 1e-9, 6).alias("forecast"),
     )
 
@@ -381,14 +404,7 @@ fitted AS (
          ) AS st
   FROM series
 ),
-grid AS (SELECT CAST(unnest(range(1, {HOLT_HORIZON} + 1)) AS INTEGER) AS h)
-SELECT event_type, h,
-       CAST(last_hour_us + h * {HOUR_US} AS BIGINT) AS forecast_hour_us,
-       round(st[1] + 1e-9, 6) AS level,
-       round(st[2] + 1e-9, 6) AS trend,
-       round(st[1] + h * st[2] + 1e-9, 6) AS forecast
-FROM fitted CROSS JOIN grid
-"""
+{_forecast_sql('round(st[1] + h * st[2] + 1e-9, 6) AS forecast')}"""
 
 
 EVENTS_HOLT_FORECAST_SQL = _holt_sql()
@@ -414,13 +430,7 @@ def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     observation), not sequence position, so gaps in the series
     don't shift the season. Forecast h = l + h·b + S[hod(last+h)].
     Fold order is the series order in both engines → bit-stable."""
-    ev = _events_us(spark, sf_dir)
-    hourly = ev.groupBy(
-        (F.expr(f"ts_us div {HOUR_US}") * HOUR_US).alias("hour_us"), "event_type"
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    series = hourly.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("hour_us", "x"))).alias("s")
-    ).select(
+    series = _hourly_series(spark, sf_dir).select(
         "event_type",
         F.transform(
             "s",
@@ -451,19 +461,8 @@ def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "st", F.aggregate(F.expr("slice(obs, 2, greatest(size(obs) - 1, 0))"), state0, step)
     )
     hod_f = ((F.col("last_hour_us") / HOUR_US).cast("long") + F.col("h")) % HW_SEASON
-    return fitted.select(
-        "event_type",
-        F.explode(F.array(*[F.lit(h) for h in range(1, HOLT_HORIZON + 1)])).alias("h"),
-        "last_hour_us",
-        "st",
-    ).select(
-        "event_type",
-        "h",
-        (F.col("last_hour_us") + F.col("h").cast("long") * F.lit(HOUR_US)).alias(
-            "forecast_hour_us"
-        ),
-        F.round(F.col("st.l") + 1e-9, 6).alias("level"),
-        F.round(F.col("st.b") + 1e-9, 6).alias("trend"),
+    return _forecast(
+        fitted,
         F.round(F.element_at(F.col("st.s"), (hod_f + 1).cast("int")) + 1e-9, 6).alias("season"),
         F.round(
             F.col("st.l")
@@ -483,6 +482,11 @@ def _hw_sql() -> str:
     lnew = f"{a} * (x[1] - {sold}) + {1 - a} * (acc[1] + acc[2])"
     bnew = f"{b} * (({lnew}) - acc[1]) + {1 - b} * acc[2]"
     snew = f"{g} * (x[1] - ({lnew})) + {1 - g} * {sold}"
+    season = f"st[3 + ((last_hour_us // {HOUR_US}) + h) % {m}]"
+    face = _forecast_sql(
+        f"round({season} + 1e-9, 6) AS season",
+        f"round(st[1] + h * st[2] + {season} + 1e-9, 6)\n         AS forecast",
+    )
     return f"""
 WITH {_hourly_sql('count(*)::DOUBLE')},
 series AS (
@@ -509,16 +513,7 @@ fitted AS (
          ) AS st
   FROM series
 ),
-grid AS (SELECT CAST(unnest(range(1, {HOLT_HORIZON} + 1)) AS INTEGER) AS h)
-SELECT event_type, h,
-       CAST(last_hour_us + h * {HOUR_US} AS BIGINT) AS forecast_hour_us,
-       round(st[1] + 1e-9, 6) AS level,
-       round(st[2] + 1e-9, 6) AS trend,
-       round(st[3 + ((last_hour_us // {HOUR_US}) + h) % {m}] + 1e-9, 6) AS season,
-       round(st[1] + h * st[2] + st[3 + ((last_hour_us // {HOUR_US}) + h) % {m}] + 1e-9, 6)
-         AS forecast
-FROM fitted CROSS JOIN grid
-"""
+{face}"""
 
 
 EVENTS_HOLT_WINTERS_SQL = _hw_sql()

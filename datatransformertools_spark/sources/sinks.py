@@ -10,7 +10,31 @@
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
+from datatransformertools_spark.sources.tables import events_ts_us, load_table
+
+# One scratch dir per application holds the files of every write→read
+# round-trip (each under its own tag). It must outlive the collection
+# of the frame a round-trip returns, so a Memo owns it: the dir is
+# removed when the entry is released (caching.clear_all_memos(),
+# eviction) or, at the latest, when the interpreter exits.
+_IO_DIR_MEMO = Memo()
+
+
+def roundtrip_path(spark: SparkSession, tag: str) -> str:
+    """The directory the round-trip ``tag`` writes and reads back."""
+    scratch = _IO_DIR_MEMO.get_or_build(
+        spark,
+        "io",
+        lambda: tempfile.TemporaryDirectory(prefix="dtt-io-", ignore_cleanup_errors=True),
+    )
+    return f"{scratch.name}/{tag}"
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -54,10 +78,6 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged-builder exemption as PageRank/k-means) so the staging
     tables can be dropped before returning instead of leaking into
     the session catalog."""
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.sources.tables import load_table
-
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     # disc_price in DECIMAL: summed over ~1e5 rows per group, a double
     # sum's order noise can flip the 4-dp round between engines at
@@ -140,10 +160,6 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical in every engine), the audit is one ≤64-group
     partial-agg shuffle. The write itself is then
     `repartitionByRange(zkey).sortWithinPartitions(zkey)`."""
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     da = F.pmod(F.col("user_id"), F.lit(1 << Z_BITS)).cast("long")
     db = F.pmod(F.floor(F.col("value")).cast("long"), F.lit(1 << Z_BITS))
@@ -202,19 +218,12 @@ def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     INCLUDING the full text. Any writer-escaping or reader-parsing
     corruption (quotes, unicode, nulls) flips a hash; the oracle
     computes the identical checksums straight from parquet."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.functions.hashing import md5_long
-    from datatransformertools_spark.sources.tables import load_table
-
     docs = load_table(spark, sf_dir, "documents")
     # single-split local input → fan the JSON encode/write out (same
     # rationale as lineitem_orc_roundtrip; checksums are
     # order-independent)
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    path = str(Path(__file__).resolve().parents[2] / ".dtt_tmp" / "documents_jsonl")
+    path = roundtrip_path(spark, "documents_jsonl")
     write_jsonl(docs, path)
     back = read_jsonl(spark, path, _DOCS_SCHEMA)
     line = F.concat_ws(
@@ -225,7 +234,7 @@ def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("string"),
         F.md5(F.col("text")),
     )
-    h32 = md5_long(line).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(line)
     return (
         back.select("source", h32.alias("h"), "n_chars")
         .groupBy("source")
@@ -237,7 +246,7 @@ def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOCUMENTS_JSONL_ROUNDTRIP_SQL = """
+DOCUMENTS_JSONL_ROUNDTRIP_SQL = f"""
 WITH lines AS (
   SELECT source, n_chars,
          CAST(doc_id AS VARCHAR) || '|' || lang || '|' || source || '|'
@@ -247,7 +256,7 @@ WITH lines AS (
 SELECT source,
        CAST(count(*) AS BIGINT)     AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(('0x' || substr(md5(line), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('line')}) AS BIGINT)
          AS doc_hash_sum
 FROM lines
 GROUP BY source
@@ -275,20 +284,13 @@ def orders_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit pinned format.
     Any quoting/formatting/parsing drift flips a hash against the
     oracle computed straight from parquet."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.functions.hashing import md5_long
-    from datatransformertools_spark.sources.tables import load_table
-
     fmt = "yyyy-MM-dd HH:mm:ss"
     orders = load_table(spark, sf_dir, "orders")
     # single-split local input → fan the CSV encode/write out (same
     # rationale as lineitem_orc_roundtrip; checksums are
     # order-independent)
     orders = orders.repartition(spark.sparkContext.defaultParallelism, "o_orderkey")
-    path = str(Path(__file__).resolve().parents[2] / ".dtt_tmp" / "orders_csv")
+    path = roundtrip_path(spark, "orders_csv")
     (
         orders.write.mode("overwrite")
         .option("header", "true")
@@ -311,7 +313,7 @@ def orders_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.col("o_orderpriority"),
     )
-    h32 = md5_long(line).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(line)
     return (
         back.select("o_orderstatus", h32.alias("h"))
         .groupBy("o_orderstatus")
@@ -319,7 +321,7 @@ def orders_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORDERS_CSV_ROUNDTRIP_SQL = """
+ORDERS_CSV_ROUNDTRIP_SQL = f"""
 WITH lines AS (
   SELECT o_orderstatus,
          CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) || '|'
@@ -331,7 +333,7 @@ WITH lines AS (
 )
 SELECT o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(('0x' || substr(md5(line), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('line')}) AS BIGINT)
          AS row_hash_sum
 FROM lines
 GROUP BY o_orderstatus
@@ -355,14 +357,8 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     between scanning 1/|types| of a 100 TB table and all of it.
     Values are hash-checked against the oracle computing the same
     aggregate straight from the unpartitioned source."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.sources.tables import events_ts_us, load_table
-
     ev = load_table(spark, sf_dir, "events")
-    path = str(Path(__file__).resolve().parents[2] / ".dtt_tmp" / "events_by_type")
+    path = roundtrip_path(spark, "events_by_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path).filter(F.col("event_type") == PRUNE_EVENT_TYPE)
     back = back.withColumn("ts_us", events_ts_us(back))
@@ -400,15 +396,8 @@ def lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checksum proves it against the oracle computed straight
     from parquet — any type coercion in the writer or reader flips
     a hash."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.functions.hashing import md5_long
-    from datatransformertools_spark.sources.tables import load_table
-
     li = load_table(spark, sf_dir, "lineitem")
-    path = str(Path(__file__).resolve().parents[2] / ".dtt_tmp" / "lineitem_orc")
+    path = roundtrip_path(spark, "lineitem_orc")
     # The local testdata is ONE parquet split, which would serialize
     # the whole ORC encode through a single write task; hash-
     # repartition on the key first so encode + write + read-back all
@@ -426,7 +415,7 @@ def lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.format_string("%.2f", F.round(F.col("l_discount") + 1e-9, 2)),
         F.date_format("l_shipdate", "yyyy-MM-dd"),
     )
-    h32 = md5_long(line).bitwiseAND(F.lit((1 << 32) - 1))
+    h32 = md5_u32(line)
     return (
         back.select("l_returnflag", h32.alias("h"))
         .groupBy("l_returnflag")
@@ -434,7 +423,7 @@ def lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LINEITEM_ORC_ROUNDTRIP_SQL = """
+LINEITEM_ORC_ROUNDTRIP_SQL = f"""
 WITH lines AS (
   SELECT l_returnflag,
          CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|'
@@ -445,7 +434,7 @@ WITH lines AS (
 )
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(('0x' || substr(md5(line), 1, 15))::BIGINT & 4294967295) AS BIGINT)
+       CAST(sum({md5_u32_sql('line')}) AS BIGINT)
          AS row_hash_sum
 FROM lines
 GROUP BY l_returnflag

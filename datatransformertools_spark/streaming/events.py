@@ -39,8 +39,10 @@ from datatransformertools_spark.operators.events import (
     EVENTS_HOPPING_AGG_SQL,
     EVENTS_TOP_K_SQL,
     EVENTS_TUMBLING_AGG_SQL,
+    FIVE_MIN_US,
     HOUR_US,
     MORNING_MASK,
+    SESSION_GAP_US,
     WINDOW_TOP_K,
 )
 from datatransformertools_spark.sources.tables import events_event_time, events_ts_us, load_table
@@ -423,12 +425,11 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming dedup state machine itself is value-checked."""
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
     raw = _read_raw(spark, src_dir)
-    five_min_us = 300_000_000
     deduped = (
         raw.withColumn("ts_us", events_ts_us(raw))
         .withColumn(
             "bucket_time",
-            F.timestamp_micros(F.expr(f"ts_us div {five_min_us}") * five_min_us),
+            F.timestamp_micros(F.expr(f"ts_us div {FIVE_MIN_US}") * FIVE_MIN_US),
         )
         .withWatermark("bucket_time", "10 minutes")
         .dropDuplicates(["user_id", "event_type", "bucket_time"])
@@ -522,24 +523,37 @@ GROUP BY 1
 """
 
 
-def _interval_join_side(
-    spark: SparkSession, sf_dir: str, event_type: str,
-    user: str, tcol: str, ucol: str,
-) -> DataFrame:
-    """One side of the stream-stream interval-join family: a typed
-    event stream over the shared staged landing directory (in
-    production, its own topic/landing zone — each side keeps its own
-    SOURCE instance and offset log either way), watermarked 60
-    minutes. Shared by the inner / left-outer / full-outer twins so
-    the staging and watermark policy live in exactly one place."""
+def _interval_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The stream-stream interval join of the inner / left-outer /
+    full-outer queries: a `click` stream joins a `purchase` stream on
+    the user with the purchase in [click, click + 30 min], ``how``
+    naming the join type. Each side is a typed event stream over the
+    shared staged landing directory (in production, its own
+    topic/landing zone — each side keeps its own SOURCE instance and
+    offset log either way), watermarked 60 minutes. Columns: c_user,
+    click_time, click_us, p_user, purchase_time, purchase_us."""
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
-    raw = _read_raw(spark, src_dir)
-    return (
-        raw.filter(F.col("event_type") == event_type)
-        .withColumn(tcol, events_event_time(raw))
-        .withColumn(ucol, events_ts_us(raw))
-        .select(F.col("user_id").alias(user), F.col(tcol), F.col(ucol))
-        .withWatermark(tcol, "60 minutes")
+
+    def side(event_type: str, user: str, tcol: str, ucol: str) -> DataFrame:
+        raw = _read_raw(spark, src_dir)
+        return (
+            raw.filter(F.col("event_type") == event_type)
+            .withColumn(tcol, events_event_time(raw))
+            .withColumn(ucol, events_ts_us(raw))
+            .select(F.col("user_id").alias(user), F.col(tcol), F.col(ucol))
+            .withWatermark(tcol, "60 minutes")
+        )
+
+    return side("click", "c_user", "click_time", "click_us").join(
+        side("purchase", "p_user", "purchase_time", "purchase_us"),
+        F.expr(
+            """
+            c_user = p_user AND
+            purchase_time >= click_time AND
+            purchase_time <= click_time + interval 30 minutes
+            """
+        ),
+        how,
     )
 
 
@@ -577,23 +591,7 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded 100 TB/day feed. The drained pairs are then collapsed
     per user into exact-integer (n_pairs, total/max lag) so the
     DuckDB range-join oracle hashes stably."""
-    clicks = _interval_join_side(
-        spark, sf_dir, "click", "c_user", "click_time", "click_us"
-    )
-    purchases = _interval_join_side(
-        spark, sf_dir, "purchase", "p_user", "purchase_time", "purchase_us"
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user AND
-            purchase_time >= click_time AND
-            purchase_time <= click_time + interval 30 minutes
-            """
-        ),
-        "inner",
-    ).select(
+    joined = _interval_join(spark, sf_dir, "inner").select(
         F.col("c_user").alias("user_id"),
         (F.col("purchase_us") - F.col("click_us")).alias("lag_us"),
     )
@@ -612,6 +610,20 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IJ_INTERVAL_US = 30 * 60 * 1_000_000  # the [click, click+30min] window
 _IJ_WATERMARK_US = 60 * 60 * 1_000_000  # both sides' watermark delay
 _IJ_SAFE_SLACK_US = 60 * 60 * 1_000_000  # boundary guard (see below)
+
+# DuckDB twin of the join's two sides: clicks ``c``, purchases ``p``
+# and the final global watermark ``wm`` (min across sides of max event
+# time, minus the delay) the outer oracles cut their safe region by.
+_IJ_SIDES_SQL = f"""WITH c AS (
+  SELECT user_id, epoch_us(ts) AS cus FROM events WHERE event_type = 'click'
+),
+p AS (
+  SELECT user_id, epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase'
+),
+wm AS (
+  SELECT least((SELECT max(cus) FROM c), (SELECT max(pus) FROM p))
+         - {_IJ_WATERMARK_US} AS wm_us
+)"""
 
 
 def events_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,23 +647,7 @@ def events_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataF
     DuckDB left-join replay hash-matches without modeling microbatch
     timing. The boundary exclusion is applied identically in both
     engines."""
-    clicks = _interval_join_side(
-        spark, sf_dir, "click", "c_user", "click_time", "click_us"
-    )
-    purchases = _interval_join_side(
-        spark, sf_dir, "purchase", "p_user", "purchase_time", "purchase_us"
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user AND
-            purchase_time >= click_time AND
-            purchase_time <= click_time + interval 30 minutes
-            """
-        ),
-        "left_outer",
-    ).select(
+    joined = _interval_join(spark, sf_dir, "left_outer").select(
         F.col("c_user").alias("user_id"),
         "click_us",
         "purchase_us",
@@ -677,16 +673,7 @@ def events_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataF
 
 
 EVENTS_STREAM_INTERVAL_JOIN_OUTER_SQL = f"""
-WITH c AS (
-  SELECT user_id, epoch_us(ts) AS cus FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT user_id, epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT max(cus) FROM c), (SELECT max(pus) FROM p))
-         - {_IJ_WATERMARK_US} AS wm_us
-),
+{_IJ_SIDES_SQL},
 j AS (
   SELECT c.user_id, c.cus, p.pus
   FROM c LEFT JOIN p
@@ -727,23 +714,7 @@ def events_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFr
     final match status under either strictness, so the DuckDB
     full-join replay with the identical per-side cut hash-matches
     without modeling microbatch timing."""
-    clicks = _interval_join_side(
-        spark, sf_dir, "click", "c_user", "click_time", "click_us"
-    )
-    purchases = _interval_join_side(
-        spark, sf_dir, "purchase", "p_user", "purchase_time", "purchase_us"
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user AND
-            purchase_time >= click_time AND
-            purchase_time <= click_time + interval 30 minutes
-            """
-        ),
-        "full_outer",
-    ).select(
+    joined = _interval_join(spark, sf_dir, "full_outer").select(
         F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         "click_us",
         "purchase_us",
@@ -779,16 +750,7 @@ def events_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 EVENTS_STREAM_INTERVAL_JOIN_FULL_SQL = f"""
-WITH c AS (
-  SELECT user_id, epoch_us(ts) AS cus FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT user_id, epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT max(cus) FROM c), (SELECT max(pus) FROM p))
-         - {_IJ_WATERMARK_US} AS wm_us
-),
+{_IJ_SIDES_SQL},
 j AS (
   SELECT coalesce(c.user_id, p.user_id) AS user_id, c.cus, p.pus
   FROM c FULL JOIN p
@@ -1130,8 +1092,6 @@ def stream_anomaly(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs, state):
-        import math as _math
-
         import pandas as pd
 
         min_prior, z_tau = ANOMALY_MIN_PRIOR, ANOMALY_Z_TAU
@@ -1153,7 +1113,7 @@ def stream_anomaly(events: DataFrame) -> DataFrame:
             if n >= min_prior:
                 mu = s / n
                 var = max(ss / n - mu * mu, 0.0)
-                sd = _math.sqrt(var)
+                sd = math.sqrt(var)
                 if sd > 1e-9:
                     z = round((v - mu) / sd + 1e-9, 4)
                     anom = abs(z) > z_tau
@@ -1242,7 +1202,6 @@ def stream_bitmap_rollup(events_with_ts_us: DataFrame) -> DataFrame:
 # watermark work on the built-in aggregates
 # ---------------------------------------------------------------------------
 
-SESSION_TIMEOUT_GAP_US = 1_800_000_000  # 30 min — same gap as session_window
 SESSION_TO_OUT_SCHEMA = (
     "session_start_us long, session_end_us long, user_id long,"
     " n_events long, total_value double"
@@ -1273,7 +1232,7 @@ def stream_session_timeout(events: DataFrame) -> DataFrame:
     EventTimeTimeout is driven by that watermark."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    gap_us = SESSION_TIMEOUT_GAP_US
+    gap_us = SESSION_GAP_US
 
     def update(key, pdfs, state):
         import pandas as pd

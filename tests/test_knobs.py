@@ -132,6 +132,24 @@ TWIN_FRAGMENTS = {
     "SELECT vec_a AS src, vec_b AS dst, cos_sim FROM pairs": {
         "datatransformertools_spark/operators/similarity.py:_knn_sql",
     },
+    "_new n ON c.cluster = n.cluster AND c.dim = n.dim": {
+        "datatransformertools_spark/operators/similarity.py:_lloyd_sql",
+    },
+    "lag(ts_us) OVER w > {SESSION_GAP_US}": {
+        "datatransformertools_spark/operators/events.py:_sessions_sql",
+    },
+    "WHEN event_type = 'click' AND ts_us >= v": {
+        "datatransformertools_spark/operators/events.py:_FUNNEL_STEPS_SQL",
+    },
+    "AS BIGINT) AS forecast_hour_us": {
+        "datatransformertools_spark/operators/timeseries.py:_forecast_sql",
+    },
+    "SELECT least((SELECT max(cus) FROM c)": {
+        "datatransformertools_spark/streaming/events.py:_IJ_SIDES_SQL",
+    },
+    "::BIGINT & 4294967295": {
+        "datatransformertools_spark/functions/hashing.py:md5_u32_sql",
+    },
 }
 
 
@@ -144,9 +162,9 @@ def _top_level_owner(tree: ast.Module, lineno: int) -> str:
 
 
 def test_duckdb_twin_fragments_are_not_repasted():
-    """The DuckDB normalization, MinHash signature and ANN index-stage
-    fragments are spelled once, in their twin; every oracle calls the
-    twin."""
+    """The DuckDB normalization, MinHash signature, ANN index-stage,
+    Lloyd face, event-family stage and row-checksum fragments are
+    spelled once, in their twin; every oracle calls the twin."""
     hits: dict[str, set[str]] = {frag: set() for frag in TWIN_FRAGMENTS}
     for path in sorted(PACKAGE.rglob("*.py")):
         text = path.read_text()
@@ -158,19 +176,25 @@ def test_duckdb_twin_fragments_are_not_repasted():
     assert hits == TWIN_FRAGMENTS
 
 
+def _imported_modules(stmt: ast.stmt) -> set[str]:
+    if isinstance(stmt, ast.ImportFrom):
+        return {stmt.module}
+    if isinstance(stmt, ast.Import):
+        return {alias.name for alias in stmt.names}
+    return set()
+
+
 def _repeated_local_imports(tree: ast.Module) -> list[int]:
-    """Lines of function-local ``from M import ...`` statements whose
-    package module M the file already imports at its top."""
-    top = {stmt.module for stmt in tree.body if isinstance(stmt, ast.ImportFrom)}
+    """Lines of function-local ``import M`` / ``from M import ...``
+    statements whose module M the file already imports at its top."""
+    top = set().union(*(_imported_modules(stmt) for stmt in tree.body))
     return sorted(
         {
             sub.lineno
             for node in ast.walk(tree)
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
             for sub in ast.walk(node)
-            if isinstance(sub, ast.ImportFrom)
-            and sub.module in top
-            and sub.module.startswith("datatransformertools_spark")
+            if _imported_modules(sub) & top
         }
     )
 
@@ -178,8 +202,10 @@ def _repeated_local_imports(tree: ast.Module) -> list[int]:
 def test_no_function_local_import_repeats_a_top_level_import():
     """A module the file imports at its top is imported there once: a
     function-local import of it only hides which names the file uses.
-    (Function-local imports of a module the file does not import at
-    its top, such as the dedup ↔ similarity cycle, stay allowed.)"""
+    This holds for every module, the standard library and pyspark as
+    much as the package. (Function-local imports of a module the file
+    does not import at its top, such as the dedup ↔ similarity cycle,
+    stay allowed.)"""
     bad = {
         str(path.relative_to(ROOT)): lines
         for path in sorted(PACKAGE.rglob("*.py"))
@@ -187,9 +213,15 @@ def test_no_function_local_import_repeats_a_top_level_import():
     }
     assert not bad, f"function-local imports of a module already imported at the top: {bad}"
     src = (
+        "import math\n"
+        "from pyspark.sql import DataFrame\n"
         "from datatransformertools_spark.caching import Memo\n"
         "def f():\n"
         "    from datatransformertools_spark.caching import track\n"
         "    from datatransformertools_spark.operators import dedup\n"
+        "    def g():\n"
+        "        import math as m\n"
+        "        from pyspark.sql import functions as F\n"
+        "        import functools\n"
     )
-    assert _repeated_local_imports(ast.parse(src)) == [3]
+    assert _repeated_local_imports(ast.parse(src)) == [5, 8, 9]

@@ -1,6 +1,6 @@
 """Every cross-query memo is a ``caching.Memo``, ``clear_all_memos()``
 releases all of them, and the package makes no temp dir outside a
-``with`` block or a memo."""
+``with`` block or a memo, nor writes into the checkout."""
 
 from __future__ import annotations
 
@@ -37,6 +37,7 @@ def test_every_module_level_memo_is_a_memo():
 
 
 def test_clear_all_memos_releases_every_kind(spark, sf_dir):
+    from datatransformertools_spark.operators.annotations import yolo_label_roundtrip
     from datatransformertools_spark.operators.graph import _co_edges
     from datatransformertools_spark.operators.similarity import corpus_k
     from datatransformertools_spark.streaming.events import _staged_events_dir
@@ -51,18 +52,22 @@ def test_clear_all_memos_releases_every_kind(spark, sf_dir):
     assert corpus_k(spark, sf_dir) > 0
     staged = _staged_events_dir(spark, sf_dir, sentinel=False)
     assert os.path.isdir(staged)
+    assert yolo_label_roundtrip(spark, sf_dir).count() > 0
+    assert {n for n in dtt_dirs() - before if n.startswith("dtt-io-")}
 
-    assert caching.clear_all_memos() >= 3
+    assert caching.clear_all_memos() >= 4
     assert {id(m): len(m) for m in caching._MEMOS if len(m)} == {}
     assert frame.storageLevel == StorageLevel.NONE
     assert not os.path.exists(staged)
     assert dtt_dirs() - before == set()
+    assert not {n for n in dtt_dirs() if n.startswith("dtt-io-")}
 
 
 def test_temp_dirs_are_scoped_or_memo_owned():
     """A temp dir is either a ``with TemporaryDirectory`` block or a
-    ``Memo`` value; nothing hand-removes one or relies on an exit hook."""
-    banned = re.compile(r"\bmkdtemp\(|\batexit\.register\b")
+    ``Memo`` value; nothing hand-removes one, relies on an exit hook,
+    or writes scratch files into the checkout's ``.dtt_tmp``."""
+    banned = re.compile(r"\bmkdtemp\(|\batexit\.register\b|\.dtt_tmp")
     hits = [
         f"{path.relative_to(PKG.parent)}:{i}"
         for path in _package_sources()

@@ -1,8 +1,9 @@
 """Each DuckDB twin returns the same values as the Spark builder it
 mirrors, on small hand-built frames that hit the edge cases the staged
 test data never does (empty text, control-whitespace runs, zero
-vectors, degenerate boxes). The oracles certify these twins only end
-to end; these tests pin each one directly."""
+vectors, degenerate boxes, session and funnel boundaries). The
+oracles certify these twins only end to end; these tests pin each one
+directly."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datatransformertools_spark.functions.bbox import iou_xywh, iou_xywh_sql
+from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens_sql,
     normalize_sql,
@@ -19,6 +21,14 @@ from datatransformertools_spark.functions.text import (
     tokens_sql,
 )
 from datatransformertools_spark.functions.vectors import cosine, cosine_sql, norm, norm_sql
+from datatransformertools_spark.operators.events import (
+    _FUNNEL_STEPS_SQL,
+    SESSION_GAP_US,
+    _events_us,
+    _funnel_steps,
+    _sessions,
+    _sessions_sql,
+)
 from datatransformertools_spark.operators.text_analysis import (
     QUALITY_SCORE_SQL,
     quality_score_expr,
@@ -147,3 +157,103 @@ def test_iou_twin_matches_spark(spark):
     iou = dict(duck_rows)
     assert iou[0] == iou[1] == iou[2] == iou[5] == 0.0
     assert iou[3] == 16.0 / 100.0 and iou[4] == 1.0
+
+
+LINES = [
+    (0, ""),
+    (1, "1|36901|O|173665.4700|1996-01-02|5-LOW"),
+    (2, "doc_0 3 0.512300 0.250000 0.100000 0.333333"),
+]
+
+
+def test_md5_u32_twin_matches_spark(spark):
+    spark_rows = _spark_rows(spark, [md5_u32(F.col("line"))], LINES, "id int, line string")
+    duck_rows = _duck_rows(md5_u32_sql("line"), LINES, "id INTEGER, line VARCHAR")
+    assert duck_rows == spark_rows
+    assert all(0 <= h < 1 << 32 for _, h in duck_rows)
+
+
+def _events_dir(tmp_path, rows: list[tuple]) -> tuple[duckdb.DuckDBPyConnection, str]:
+    """Stage (user_id, event_id, event_type, ts_us) rows as the events
+    table that both engines read; returns the DuckDB connection and the
+    table directory."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (user_id BIGINT, event_id BIGINT, event_type VARCHAR,"
+        " ts TIMESTAMP, value DOUBLE)"
+    )
+    con.executemany(
+        "INSERT INTO events VALUES (?, ?, ?, make_timestamp(?::BIGINT), 1.0)", rows
+    )
+    con.execute(f"COPY events TO '{tmp_path}/events.parquet' (FORMAT parquet)")
+    return con, str(tmp_path)
+
+
+T0 = 1_700_000_000_000_000
+GAP = SESSION_GAP_US
+
+
+def test_sessions_twin_matches_spark_at_the_gap_boundaries(spark, tmp_path):
+    con, sf_dir = _events_dir(
+        tmp_path,
+        [
+            (1, 1, "view", T0),
+            (1, 2, "view", T0 + GAP),  # gap exactly τ: same session
+            (1, 3, "view", T0 + 2 * GAP + 1),  # gap τ + 1 µs: new session
+            # equal timestamps order by event_id: 6 opens the session, 7 joins it
+            (1, 7, "view", T0 + 3 * GAP + 2),
+            (1, 6, "view", T0 + 3 * GAP + 2),
+            (2, 9, "view", T0),
+        ],
+    )
+    ev = _events_us(spark, sf_dir).select("user_id", "event_id", "ts_us")
+    spark_rows = [
+        tuple(r)
+        for r in _sessions(ev)
+        .select("user_id", "event_id", "new_session", "session_idx")
+        .orderBy("user_id", "event_id")
+        .collect()
+    ]
+    duck_rows = con.sql(
+        f"{_sessions_sql()} SELECT user_id, event_id, new_session, session_idx"
+        " FROM sessions ORDER BY user_id, event_id"
+    ).fetchall()
+    assert duck_rows == spark_rows == [
+        (1, 1, 1, 1),
+        (1, 2, 0, 1),
+        (1, 3, 1, 2),
+        (1, 6, 1, 3),
+        (1, 7, 0, 3),
+        (2, 9, 1, 1),
+    ]
+
+
+def test_funnel_steps_twin_matches_spark(spark, tmp_path):
+    con, sf_dir = _events_dir(
+        tmp_path,
+        [
+            # a click before the first view does not count
+            (1, 1, "click", T0),
+            (1, 2, "view", T0 + 10),
+            (1, 3, "purchase", T0 + 20),
+            # a purchase in the same µs as its click counts
+            (2, 4, "view", T0),
+            (2, 5, "click", T0 + 5),
+            (2, 6, "purchase", T0 + 5),
+            # the first qualifying click, then the first purchase after it
+            (3, 7, "click", T0),
+            (3, 8, "view", T0 + 10),
+            (3, 9, "purchase", T0 + 12),
+            (3, 10, "click", T0 + 15),
+            (3, 11, "purchase", T0 + 30),
+        ],
+    )
+    spark_rows = [tuple(r) for r in _funnel_steps(spark, sf_dir).orderBy("user_id").collect()]
+    duck_rows = con.sql(
+        f"{_FUNNEL_STEPS_SQL} SELECT user_id, v, c, p FROM per_user ORDER BY user_id"
+    ).fetchall()
+    assert duck_rows == spark_rows == [
+        (1, T0 + 10, None, None),
+        (2, T0, T0 + 5, T0 + 5),
+        (3, T0 + 10, T0 + 15, T0 + 30),
+    ]
