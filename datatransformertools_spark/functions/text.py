@@ -4,8 +4,8 @@ All built-in JVM expressions (split/regexp/transform) — the text
 hot path stays inside whole-stage codegen. The DuckDB oracles build
 their SQL from the twins here: ``normalize_sql`` mirrors
 ``normalize_text``, ``tokens_sql`` mirrors ``tokens``, and
-``norm_tokens_sql`` is ``tokens(normalize_text(col))`` without the
-no-op outer trim.
+``norm_tokens_sql`` mirrors ``norm_tokens`` without the no-op outer
+trim.
 
 Precondition of the twins: the text holds no U+000B and no U+0130.
 Java's ``\\s`` matches the vertical tab and RE2's does not, and the
@@ -31,6 +31,13 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
+def norm_tokens(col: Column) -> Column:
+    """The corpus tokenizer every corpus-token stage reads: whitespace
+    tokens of the normalized text. ``tokens``' trim is a no-op here
+    but stays in the expression tree."""
+    return tokens(normalize_text(col))
+
+
 def normalize_sql(col: str = "text") -> str:
     """DuckDB twin of ``normalize_text`` over the column ``col``."""
     return rf"trim(regexp_replace(lower({col}), '\s+', ' ', 'g'))"
@@ -42,8 +49,8 @@ def tokens_sql(expr: str) -> str:
 
 
 def norm_tokens_sql(col: str = "text") -> str:
-    """DuckDB twin of ``tokens(normalize_text(col))`` without the outer
-    trim, which is a no-op on normalized text."""
+    """DuckDB twin of ``norm_tokens`` without the outer trim, which is
+    a no-op on normalized text."""
     return rf"regexp_split_to_array({normalize_sql(col)}, '\s+')"
 
 

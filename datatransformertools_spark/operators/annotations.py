@@ -28,6 +28,11 @@ from pyspark.sql import types as T
 
 from datatransformertools_spark.functions.bbox import from_yolo, to_yolo
 from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
+from datatransformertools_spark.sources.annotations import (
+    read_yolo_predictions,
+    write_competition_json,
+    write_yolo_labels,
+)
 from datatransformertools_spark.sources.sinks import roundtrip_path
 from datatransformertools_spark.sources.tables import load_table
 
@@ -338,11 +343,6 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings round-trip doubles exactly, so the hash certifies writer
     formatting AND reader parsing; the oracle computes the identical
     lines straight from the base CTE."""
-    from datatransformertools_spark.sources.annotations import (
-        read_yolo_predictions,
-        write_yolo_labels,
-    )
-
     ann = annotations_df(spark, sf_dir)
     xc, yc, wn, hn = to_yolo(
         F.col("x"), F.col("y"), F.col("w"), F.col("h"), F.col("img_w"), F.col("img_h")
@@ -423,8 +423,6 @@ def competition_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, md5 sum over the 2-dp bbox + class tuple). The
     `corruption: none` wrapper rows are counted too, so the writer's
     per-image envelope is certified, not just the box payload."""
-    from datatransformertools_spark.sources.annotations import write_competition_json
-
     preds = yolo_denormalize(spark, sf_dir)
     path = roundtrip_path(spark, "competition_json")
     write_competition_json(preds, path)

@@ -24,6 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.sources.tables import load_table
 
 # (table, key column) pairs every big shuffle in the engine keys on.
@@ -475,8 +476,6 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost. Per layout: chunk count, skippable chunks, skip fraction,
     and the avg chunk value-span (the clustering-quality proxy).
     One groupBy per layout at |chunks| output rows."""
-    from datatransformertools_spark.functions.hashing import md5_long
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     layouts = [
         ("arrival_clustered", F.floor(F.col("event_id") / ZONE_CHUNK_ROWS)),
@@ -563,8 +562,6 @@ def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     — that variant measured 14× slower at sf0.1); the fact side is
     touched only map-side (distinct keys → K bit tests), and only
     aggregate counts leave the scan stage."""
-    from datatransformertools_spark.functions.hashing import md5_long
-
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     dim_keys = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").cast("string").alias("k")

@@ -25,17 +25,17 @@ touches it:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import (
+    norm_tokens,
     norm_tokens_sql,
     normalize_sql,
     normalize_text,
-    tokens,
     tokens_sql,
 )
 from datatransformertools_spark.operators.dedup import (
@@ -406,6 +406,48 @@ GROUP BY source
 CTX_LEN = 256  # tokens per training context window
 
 
+def _packed(docs: DataFrame) -> DataFrame:
+    """``docs`` (doc_id, source, n_tokens) plus ``start_offset``: the
+    doc's position in its source's token stream, the running token
+    sum before it in doc_id order. One window per source partition."""
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return docs.withColumn(
+        "start_offset", (F.sum("n_tokens").over(w) - F.col("n_tokens")).cast("long")
+    )
+
+
+def _windows(ctx: int | Column) -> tuple[Column, Column]:
+    """(window_id, crosses_boundary) of a packed doc under context
+    length ``ctx``: the window its first token lands in, and 1 when
+    its last token lands in a later one."""
+    window_id = F.floor(F.col("start_offset") / ctx)
+    last = F.floor((F.col("start_offset") + F.col("n_tokens") - 1) / ctx)
+    return window_id, (window_id != last).cast("int")
+
+
+# DuckDB twins of the packing stage: the ``toks`` CTE, the
+# ``start_offset`` expression of ``_packed`` and the select items of
+# ``_windows``
+_PACK_TOKS_SQL = f"""toks AS (
+  SELECT doc_id, source,
+         len({tokens_sql(normalize_sql())}) AS n_tokens
+  FROM documents
+)"""
+
+_PACK_OFFSET_SQL = """CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              - n_tokens AS BIGINT)"""
+
+
+def _windows_sql(ctx: int) -> str:
+    return f"""start_offset // {ctx} AS window_id,
+       CAST(start_offset // {ctx} <> (start_offset + n_tokens - 1) // {ctx} AS INTEGER) AS crosses_boundary"""
+
+
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: concatenate each source's documents (in
     doc_id order) into one token stream and chunk it into CTX_LEN
@@ -415,58 +457,28 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack independently, so 1000 executors each pack their own
     shards; no shuffle beyond the per-source sort."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    n_tok = F.size(tokens(normalize_text(F.col("text"))))
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w)
-    return (
-        docs.withColumn("n_tokens", n_tok)
-        .withColumn("start_offset", (cum - F.col("n_tokens")).cast("long"))
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "start_offset",
-            F.floor(F.col("start_offset") / CTX_LEN).alias("window_id"),
-            (
-                F.floor(F.col("start_offset") / CTX_LEN)
-                != F.floor((F.col("start_offset") + F.col("n_tokens") - 1) / CTX_LEN)
-            )
-            .cast("int")
-            .alias("crosses_boundary"),
-        )
+    window_id, crosses = _windows(CTX_LEN)
+    return _packed(docs.withColumn("n_tokens", F.size(norm_tokens(F.col("text"))))).select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        "start_offset",
+        window_id.alias("window_id"),
+        crosses.alias("crosses_boundary"),
     )
 
 
-PACK_SEQUENCES_SQL = (
-    rf"""
-WITH toks AS (
-  SELECT doc_id, source,
-         len({tokens_sql(normalize_sql())}) AS n_tokens
-  FROM documents
-),
+PACK_SEQUENCES_SQL = f"""
+WITH {_PACK_TOKS_SQL},
 packed AS (
   SELECT doc_id, source, n_tokens,
-         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - n_tokens AS BIGINT) AS start_offset
+         {_PACK_OFFSET_SQL} AS start_offset
   FROM toks
 )
 SELECT doc_id, source, n_tokens, start_offset,
-       start_offset // """
-    + str(CTX_LEN)
-    + r""" AS window_id,
-       CAST(start_offset // """
-    + str(CTX_LEN)
-    + r""" <> (start_offset + n_tokens - 1) // """
-    + str(CTX_LEN)
-    + r""" AS INTEGER) AS crosses_boundary
+       {_windows_sql(CTX_LEN)}
 FROM packed
 """
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1029,7 +1041,7 @@ def quality_token_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     scored = docs.select(
         quality_score_expr().alias("q"),
-        F.size(tokens(normalize_text(F.col("text")))).cast("long").alias("n_tokens"),
+        F.size(norm_tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     totals = scored.agg(
         F.count(F.lit(1)).alias("total_docs"),
@@ -1158,6 +1170,52 @@ TOKENIZE_VOCAB_V = 20  # < corpus vocab (31), so the OOV path is real
 TOKENIZE_UNK_ID = 0
 
 
+def _token_ids(docs: DataFrame) -> DataFrame:
+    """Per doc of ``docs`` (doc_id, text): ``input_ids``, its tokens
+    in order as ids of the top-V vocabulary of ``docs`` (1..V by
+    count DESC, token; OOV → TOKENIZE_UNK_ID), with ``n_tokens`` and
+    ``n_oov``."""
+    toks = docs.select(
+        "doc_id", F.posexplode(norm_tokens(F.col("text"))).alias("pos", "token")
+    )
+    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+    top = counts.orderBy(F.col("cnt").desc(), "token").limit(TOKENIZE_VOCAB_V)
+    rank = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "token"))
+    vocab = top.withColumn("token_id", rank).select("token", "token_id")
+    tid = F.coalesce(F.col("token_id"), F.lit(TOKENIZE_UNK_ID)).alias("tid")
+    return (
+        toks.join(vocab, "token", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct(F.col("pos"), tid))), lambda s: s["tid"]
+            ).alias("input_ids"),
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum(F.col("token_id").isNull().cast("long")).alias("n_oov"),
+        )
+    )
+
+
+def _token_vocab_sql(where: str = "") -> str:
+    """DuckDB twin of ``_token_ids``' vocabulary: the ``split``,
+    ``tok``, ``counts`` and ``vocab`` CTEs over the documents ``where``
+    (a WHERE clause, or empty for all)."""
+    return rf"""split AS (
+  SELECT doc_id,
+         {norm_tokens_sql()} AS arr
+  FROM documents{where}
+),
+tok AS (
+  SELECT doc_id, i AS pos, arr[i] AS token
+  FROM split, unnest(range(1, len(arr) + 1)) AS t(i)
+),
+counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
+vocab AS (
+  SELECT token, CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INT) AS token_id
+  FROM counts ORDER BY cnt DESC, token LIMIT {TOKENIZE_VOCAB_V}
+)"""
+
+
 def tokenize_to_ids_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenize-for-training step that bridges vocabulary
     induction (`vocab_topk`) and batch assembly (`pack_sequences`):
@@ -1182,34 +1240,7 @@ def tokenize_to_ids_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle only the tail), and documents re-assemble with ONE
     doc_id shuffle — sort_array(collect_list(struct(pos, id)))
     rebuilds token order without a per-doc window sort pass."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.select(
-        "doc_id", F.posexplode(tokens(normalize_text(F.col("text")))).alias("pos", "token")
-    )
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    top = counts.orderBy(F.col("cnt").desc(), "token").limit(TOKENIZE_VOCAB_V)
-    rank = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "token"))
-    vocab = top.withColumn("token_id", rank).select("token", "token_id")
-    joined = toks.join(vocab, "token", "left")
-    return (
-        joined.groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("pos"),
-                            F.coalesce(F.col("token_id"), F.lit(TOKENIZE_UNK_ID)).alias("tid"),
-                        )
-                    )
-                ),
-                lambda s: s["tid"],
-            ).alias("input_ids"),
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.col("token_id").isNull().cast("long")).alias("n_oov"),
-        )
-        .select("doc_id", "input_ids", "n_tokens", "n_oov")
-    )
+    return _token_ids(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
 def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,34 +1261,19 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOKENIZE_TO_IDS_ARRAY_SQL = (
-    rf"""
-WITH split AS (
-  SELECT doc_id,
-         {norm_tokens_sql()} AS arr
-  FROM documents
-),
-tok AS (
-  SELECT doc_id, i AS pos, arr[i] AS token
-  FROM split, unnest(range(1, len(arr) + 1)) AS t(i)
-),
-counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
-vocab AS (
-  SELECT token, CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INT) AS token_id
-  FROM counts ORDER BY cnt DESC, token LIMIT TOPV
-),
+TOKENIZE_TO_IDS_ARRAY_SQL = f"""
+WITH {_token_vocab_sql()},
 joined AS (
   SELECT t.doc_id, t.pos, v.token_id
   FROM tok t LEFT JOIN vocab v USING (token)
 )
 SELECT doc_id,
-       list(COALESCE(token_id, UNKID) ORDER BY pos) AS input_ids,
+       list(COALESCE(token_id, {TOKENIZE_UNK_ID}) ORDER BY pos) AS input_ids,
        CAST(count(*) AS BIGINT) AS n_tokens,
        CAST(sum(CASE WHEN token_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
 FROM joined
 GROUP BY doc_id
-""".replace("TOPV", str(TOKENIZE_VOCAB_V)).replace("UNKID", str(TOKENIZE_UNK_ID))
-)
+"""
 
 # digest-column mirror of the registered query (DuckDB md5 over the
 # identical comma-joined id string; list indexing is 1-based / -1 =
@@ -1558,7 +1574,7 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
-    n_tok = F.size(tokens(normalize_text(F.col("text"))))
+    n_tok = F.size(norm_tokens(F.col("text")))
     w = Window.partitionBy("source").orderBy("quality", "doc_id")
     scored = docs.select(
         "doc_id",
@@ -1635,27 +1651,14 @@ def pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-row aggregate fanned out the same way; both collapse
     to |ctx| rows before the final join."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    n_tok = F.size(tokens(normalize_text(F.col("text"))))
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = (
-        docs.withColumn("n_tokens", n_tok)
-        .withColumn("start_offset", (F.sum("n_tokens").over(w) - F.col("n_tokens")).cast("long"))
-        .select("source", "n_tokens", "start_offset")
+    offsets = _packed(docs.withColumn("n_tokens", F.size(norm_tokens(F.col("text"))))).select(
+        "source", "n_tokens", "start_offset"
     )
     ctx = F.explode(F.array(*[F.lit(c) for c in PACK_CURVE_CTX])).alias("ctx_len")
+    _, crosses = _windows(F.col("ctx_len"))
     crossing = (
         offsets.select("*", ctx)
-        .withColumn(
-            "crosses",
-            (
-                F.floor(F.col("start_offset") / F.col("ctx_len"))
-                != F.floor((F.col("start_offset") + F.col("n_tokens") - 1) / F.col("ctx_len"))
-            ).cast("int"),
-        )
+        .withColumn("crosses", crosses)
         .groupBy("ctx_len")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1692,16 +1695,10 @@ def pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PACK_EFFICIENCY_CURVE_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, source,
-         len({tokens_sql(normalize_sql())}) AS n_tokens
-  FROM documents
-),
+WITH {_PACK_TOKS_SQL},
 offs AS (
   SELECT source, n_tokens,
-         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - n_tokens AS BIGINT) AS start_offset
+         {_PACK_OFFSET_SQL} AS start_offset
   FROM toks
 ),
 ctx AS (SELECT unnest([{", ".join(str(c) for c in PACK_CURVE_CTX)}]) AS ctx_len),
@@ -1843,17 +1840,48 @@ TB_BUDGET_TOKENS = 1_000  # per-source token budget
 _TB_BSTATS_MEMO = Memo()
 
 
+def _tb_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, doc_id, text, h, bucket): each doc's salted hash and
+    its hash bucket, the order keys of the take-while."""
+    h = md5_long(F.col("doc_id").cast("string"), salt=TB_SALT)
+    return load_table(spark, sf_dir, "documents").select(
+        "source", "doc_id", "text", h.alias("h"), (h % TB_BUCKETS).alias("bucket")
+    )
+
+
+def _tb_n_tokens() -> Column:
+    return F.size(norm_tokens(F.col("text"))).cast("long")
+
+
+def _tb_cum(bstats: DataFrame) -> DataFrame:
+    """``bstats`` plus each bucket's running token mass in bucket
+    order per source: ``cum_incl`` through it, ``cum_before`` up to it."""
+    w_cum = (
+        Window.partitionBy("source")
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return bstats.withColumn("cum_incl", F.sum("btok").over(w_cum)).withColumn(
+        "cum_before", F.col("cum_incl") - F.col("btok")
+    )
+
+
+def _tb_boundary_docs(spark: SparkSession, sf_dir: str, bnd: DataFrame) -> DataFrame:
+    """The docs of the boundary buckets ``bnd`` (bsource, bbucket,
+    ...), joined on (source, bucket) — both pure doc_id functions —
+    BEFORE tokenizing, so only the 1/B boundary slice pays the
+    tokenizer twice, never the corpus. ``bnd`` rides as a broadcast."""
+    return _tb_docs(spark, sf_dir).join(
+        F.broadcast(bnd),
+        (F.col("source") == F.col("bsource")) & (F.col("bucket") == F.col("bbucket")),
+    )
+
+
 def _tb_bstats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-        h = md5_long(F.col("doc_id").cast("string"), salt=TB_SALT)
-        n_tokens = F.size(tokens(normalize_text(F.col("text")))).cast("long")
         return (
-            docs.select(
-                "source",
-                (h % TB_BUCKETS).alias("bucket"),
-                n_tokens.alias("n_tokens"),
-            )
+            _tb_docs(spark, sf_dir)
+            .select("source", "bucket", _tb_n_tokens().alias("n_tokens"))
             .groupBy("source", "bucket")
             .agg(F.sum("n_tokens").alias("btok"), F.count(F.lit(1)).alias("bdocs"))
         )
@@ -1886,9 +1914,6 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤1 row per source) rides as a broadcast. The DuckDB oracle
     runs the naive single-window form; both orders are
     (h % B, h, doc_id), so the answers agree exactly."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    h = md5_long(F.col("doc_id").cast("string"), salt=TB_SALT)
-    n_tokens = F.size(tokens(normalize_text(F.col("text")))).cast("long")
     # (2) bucket grain: cumulative token mass per source in bucket
     # order. The memoized frame (|sources|·B rows) serves the three
     # consumers here AND token_budget_curve — without the pin each
@@ -1901,14 +1926,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bdocs").cast("long").alias("docs_total"),
         F.sum("btok").cast("long").alias("tokens_total"),
     )
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bcum = bstats.withColumn("cum_incl", F.sum("btok").over(w_cum)).withColumn(
-        "cum_before", F.col("cum_incl") - F.col("btok")
-    )
+    bcum = _tb_cum(bstats)
     full = bcum.filter(F.col("cum_incl") <= TB_BUDGET_TOKENS)
     full_kept = full.groupBy("source").agg(
         F.sum("bdocs").alias("full_docs"), F.sum("btok").alias("full_tok")
@@ -1925,24 +1943,15 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("bbucket"),
         F.col("cum_before").alias("offset"),
     )
-    # (3) doc grain, boundary bucket only: ~N/B docs per source. The
-    # second pass over the docs scan joins on (source, bucket) —
-    # both pure doc_id functions — BEFORE tokenizing, so only the
-    # 1/B boundary slice pays the tokenizer twice, never the corpus.
+    # (3) doc grain, boundary bucket only: ~N/B docs per source
     w_doc = (
         Window.partitionBy("source")
         .orderBy("h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     bdocs = (
-        docs.select(
-            "source", "doc_id", "text", h.alias("h"), (h % TB_BUCKETS).alias("bucket")
-        )
-        .join(
-            F.broadcast(boundary),
-            (F.col("source") == F.col("bsource")) & (F.col("bucket") == F.col("bbucket")),
-        )
-        .select("source", "h", "doc_id", n_tokens.alias("n_tokens"), "offset")
+        _tb_boundary_docs(spark, sf_dir, boundary)
+        .select("source", "h", "doc_id", _tb_n_tokens().alias("n_tokens"), "offset")
         .withColumn("doc_cum", F.sum("n_tokens").over(w_doc) + F.col("offset"))
     )
     bnd_kept = (
@@ -1997,18 +2006,8 @@ def token_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget just reads its own threshold. The DuckDB oracle runs the
     naive ordered-cumsum × grid form; identical order ⇒ identical
     counts."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    h = md5_long(F.col("doc_id").cast("string"), salt=TB_SALT)
-    n_tokens = F.size(tokens(normalize_text(F.col("text")))).cast("long")
     bstats = _tb_bstats_df(spark, sf_dir)
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bcum = bstats.withColumn("cum_incl", F.sum("btok").over(w_cum)).withColumn(
-        "cum_before", F.col("cum_incl") - F.col("btok")
-    )
+    bcum = _tb_cum(bstats)
     grid = spark.createDataFrame([(g,) for g in TB_BUDGET_GRID], "budget long")
     crossed = bcum.crossJoin(F.broadcast(grid))
     fullb = (
@@ -2033,19 +2032,8 @@ def token_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     doc_cum = (
-        docs.select("source", "doc_id", "text", h.alias("h"), (h % TB_BUCKETS).alias("bucket"))
-        .join(
-            F.broadcast(cand),
-            (F.col("source") == F.col("bsource")) & (F.col("bucket") == F.col("bbucket")),
-        )
-        .select(
-            "source",
-            "bucket",
-            "h",
-            "doc_id",
-            n_tokens.alias("n_tokens"),
-            "offset",
-        )
+        _tb_boundary_docs(spark, sf_dir, cand)
+        .select("source", "bucket", "h", "doc_id", _tb_n_tokens().alias("n_tokens"), "offset")
         .withColumn("doc_cum", F.sum("n_tokens").over(w_doc) + F.col("offset"))
         .select("source", "bucket", "n_tokens", "doc_cum")
     )
@@ -2093,8 +2081,10 @@ def token_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TB_GRID_SQL = ", ".join(str(g) for g in TB_BUDGET_GRID)
 
-TOKEN_BUDGET_CURVE_SQL = rf"""
-WITH base AS (
+# DuckDB twin of the take-while grains: per doc its hash and token
+# count (``base``) and the inclusive running total in (h % B, h,
+# doc_id) order (``ordered``), the naive single-window form
+_TB_ORDERED_SQL = rf"""base AS (
   SELECT source, doc_id,
          ('0x' || substr(md5('{TB_SALT}' || doc_id), 1, 15))::BIGINT AS h,
          CAST(len({norm_tokens_sql()}) AS BIGINT) AS n_tokens
@@ -2106,7 +2096,10 @@ ordered AS (
                              ORDER BY h % {TB_BUCKETS}, h, doc_id
                              ROWS UNBOUNDED PRECEDING) AS cum_incl
   FROM base
-),
+)"""
+
+TOKEN_BUDGET_CURVE_SQL = rf"""
+WITH {_TB_ORDERED_SQL},
 grid AS (SELECT CAST(unnest([{_TB_GRID_SQL}]) AS BIGINT) AS budget),
 src_tot AS (SELECT source, sum(n_tokens) AS src_tokens FROM base GROUP BY 1),
 tot AS (SELECT sum(n_tokens) AS total_tokens, count(DISTINCT source) AS n_sources FROM base),
@@ -2135,19 +2128,7 @@ FROM kept k JOIN sat s USING (budget) CROSS JOIN tot t
 # naive single-window form of the same rule: keep iff the inclusive
 # running total in (h % B, h, doc_id) order stays <= budget
 TOKEN_BUDGET_SAMPLE_SQL = rf"""
-WITH base AS (
-  SELECT source, doc_id,
-         ('0x' || substr(md5('{TB_SALT}' || doc_id), 1, 15))::BIGINT AS h,
-         CAST(len({norm_tokens_sql()}) AS BIGINT) AS n_tokens
-  FROM documents
-),
-ordered AS (
-  SELECT *,
-         sum(n_tokens) OVER (PARTITION BY source
-                             ORDER BY h % {TB_BUCKETS}, h, doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum_incl
-  FROM base
-)
+WITH {_TB_ORDERED_SQL}
 SELECT source,
        CAST(count(*) AS BIGINT) AS docs_total,
        CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
@@ -2318,51 +2299,17 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange — never the token rows
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     clean_docs = docs.join(clean.select("doc_id"), "doc_id", "leftsemi")
-    toks = clean_docs.select(
-        "doc_id", F.posexplode(tokens(normalize_text(F.col("text")))).alias("pos", "token")
-    )
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    top = counts.orderBy(F.col("cnt").desc(), "token").limit(TOKENIZE_VOCAB_V)
-    rank = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "token"))
-    vocab = top.withColumn("token_id", rank).select("token", "token_id")
-    ids_df = (
-        toks.join(vocab, "token", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("pos"),
-                                    F.coalesce(
-                                        F.col("token_id"), F.lit(TOKENIZE_UNK_ID)
-                                    ).alias("tid"),
-                                )
-                            )
-                        ),
-                        lambda s: s["tid"],
-                    ).cast("array<string>"),
-                )
-            ).alias("ids_md5"),
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.col("token_id").isNull().cast("long")).alias("n_oov"),
-        )
+    ids_df = _token_ids(clean_docs).select(
+        "doc_id",
+        F.md5(F.concat_ws(",", F.col("input_ids").cast("array<string>"))).alias("ids_md5"),
+        "n_tokens",
+        "n_oov",
     )
 
     # stages 5+6 — pack (per-source window over tokenize's n_tokens)
     # + shard (map-side hash)
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = clean.join(ids_df, "doc_id").withColumn(
-        "start_offset", (F.sum("n_tokens").over(w) - F.col("n_tokens")).cast("long")
-    )
-    return packed.select(
+    window_id, crosses = _windows(CTX_LEN)
+    return _packed(clean.join(ids_df, "doc_id")).select(
         "doc_id",
         "source",
         "quality_score",
@@ -2372,13 +2319,8 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         "n_oov",
         "start_offset",
-        F.floor(F.col("start_offset") / CTX_LEN).alias("window_id"),
-        (
-            F.floor(F.col("start_offset") / CTX_LEN)
-            != F.floor((F.col("start_offset") + F.col("n_tokens") - 1) / CTX_LEN)
-        )
-        .cast("int")
-        .alias("crosses_boundary"),
+        window_id.alias("window_id"),
+        crosses.alias("crosses_boundary"),
         (md5_long(F.col("doc_id").cast("string"), salt=SHARD_SALT) % N_SHARDS).alias(
             "shard"
         ),
@@ -2453,21 +2395,8 @@ clean AS (
 
 CORPUS_CURATION_PIPELINE_SQL = (
     _curation_ctes()
-    + rf""",
-split_docs AS (
-  SELECT doc_id,
-         {norm_tokens_sql()} AS arr
-  FROM documents WHERE doc_id IN (SELECT doc_id FROM clean)
-),
-tok AS (
-  SELECT doc_id, i AS pos, arr[i] AS token
-  FROM split_docs, unnest(range(1, len(arr) + 1)) AS t(i)
-),
-counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
-vocab AS (
-  SELECT token, CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INT) AS token_id
-  FROM counts ORDER BY cnt DESC, token LIMIT {TOKENIZE_VOCAB_V}
-),
+    + f""",
+{_token_vocab_sql(" WHERE doc_id IN (SELECT doc_id FROM clean)")},
 ids AS (
   SELECT t.doc_id,
          md5(array_to_string(list(COALESCE(v.token_id, {TOKENIZE_UNK_ID}) ORDER BY t.pos), ',')) AS ids_md5,
@@ -2479,15 +2408,12 @@ ids AS (
 packed AS (
   SELECT c.doc_id, c.source, c.quality_score, c.n_dups, c.max_containment,
          i.ids_md5, i.n_tokens, i.n_oov,
-         CAST(sum(i.n_tokens) OVER (PARTITION BY c.source ORDER BY c.doc_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - i.n_tokens AS BIGINT) AS start_offset
+         {_PACK_OFFSET_SQL} AS start_offset
   FROM clean c JOIN ids i USING (doc_id)
 )
 SELECT doc_id, source, quality_score, n_dups, max_containment,
        ids_md5, n_tokens, n_oov, start_offset,
-       start_offset // {CTX_LEN} AS window_id,
-       CAST(start_offset // {CTX_LEN} <> (start_offset + n_tokens - 1) // {CTX_LEN} AS INTEGER) AS crosses_boundary,
+       {_windows_sql(CTX_LEN)},
        ('0x' || substr(md5('{SHARD_SALT}' || doc_id), 1, 15))::BIGINT % {N_SHARDS} AS shard
 FROM packed
 """

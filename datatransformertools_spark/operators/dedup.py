@@ -33,10 +33,10 @@ from pyspark.sql.window import Window
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import lsh_band_keys
 from datatransformertools_spark.functions.text import (
+    norm_tokens,
     norm_tokens_sql,
     normalize_sql,
     normalize_text,
-    tokens,
     tokens_sql,
     word_shingles,
 )
@@ -104,7 +104,7 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        sh = word_shingles(tokens(normalize_text(F.col("text"))), SHINGLE_N)
+        sh = word_shingles(norm_tokens(F.col("text")), SHINGLE_N)
         return docs.select("doc_id", F.explode(sh).alias("shingle"))
 
     return _SHINGLE_MEMO.get_or_build(spark, sf_dir, build)
@@ -527,7 +527,7 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        tok = docs.select("doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+        tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("token"))
         # hash map-side, md5 computed ONCE per token (both 32-bit planes
         # slice the same hex string), then fold straight into the 48
         # per-bit sums in a single groupBy(doc_id): summing ±1 over all
@@ -993,7 +993,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH buckets."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     base = docs.select("doc_id", tok.alias("tok"), F.size(tok).alias("n"))
     pos = F.explode(F.sequence(F.lit(0), F.col("n") - K_GRAM)).alias("pos")
     grams = base.filter(F.col("n") >= K_GRAM).select(
@@ -1091,7 +1091,7 @@ def winnowing_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     this audits the index stage only."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     base = docs.select("doc_id", "source", tok.alias("tok"), F.size(tok).alias("n"))
     pos = F.explode(F.sequence(F.lit(0), F.col("n") - K_GRAM)).alias("pos")
     grams = base.filter(F.col("n") >= K_GRAM + WINNOW_G - 1).select(
@@ -2498,7 +2498,7 @@ def dedup_overlap_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.when(F.col("doc_id") % 7 == 0, F.concat(F.lit(" "), variant)).otherwise(F.lit("")),
     )
-    tok = tokens(normalize_text(aug))
+    tok = norm_tokens(aug)
     hh = docs.select(
         "doc_id",
         F.size(tok).alias("n_tok"),
@@ -2644,7 +2644,7 @@ def template_prefix_families(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc — text never moves; output is bounded by the number of
     template families, a vanishing fraction of any corpus."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     heads = docs.select(
         "doc_id",
         "source",

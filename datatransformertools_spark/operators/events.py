@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.operators.similarity import (
+    _init_cents,
+    _lloyd_final,
+    _lloyd_sql,
+    _lloyd_update,
+)
 from datatransformertools_spark.sources.tables import events_ts_us, load_table
 
 FIVE_MIN_US = 300_000_000
@@ -3697,12 +3703,6 @@ def user_hour_profile_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     24-per-user dense fill from a sequence explode (map-side); each
     Lloyd round is the literal-centroid codegen assignment + a
     K·24 partial agg."""
-    from datatransformertools_spark.operators.similarity import (
-        _init_cents,
-        _lloyd_final,
-        _lloyd_update,
-    )
-
     ev = _events_us(spark, sf_dir).select(
         "user_id", F.expr(f"(ts_us % {DAY_US}) div {HOUR_US}").alias("hour")
     )
@@ -3726,8 +3726,6 @@ def user_hour_profile_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _user_hour_profile_kmeans_sql() -> str:
-    from datatransformertools_spark.operators.similarity import _lloyd_sql
-
     lead = [
         f"""WITH hc AS (
   SELECT user_id, (epoch_us(ts) % {DAY_US}) // {HOUR_US} AS hour, count(*) AS n

@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
+from datatransformertools_spark.operators.relational import (
+    ORDERS_MARKET_BASKET_SQL,
+    orders_market_basket,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 PR_DAMPING = 0.85
@@ -180,8 +184,6 @@ def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree aggregate. Edge volume is already bounded by the
     market-basket support threshold — the same prune a 100 TB run
     leans on before any graph analytics."""
-    from datatransformertools_spark.operators.relational import orders_market_basket
-
     edges = orders_market_basket(spark, sf_dir).select("part_a", "part_b")
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     triangles = (
@@ -220,8 +222,6 @@ def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangles_sql() -> str:
-    from datatransformertools_spark.operators.relational import ORDERS_MARKET_BASKET_SQL
-
     return f"""
 WITH edges AS (SELECT part_a, part_b FROM ({ORDERS_MARKET_BASKET_SQL})),
 tri AS (
@@ -510,8 +510,6 @@ def part_similar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle. Degrees come from one aggregate over the
     support-pruned market-basket edges; the per-part top-k is a
     bounded window over candidate pairs."""
-    from datatransformertools_spark.operators.relational import orders_market_basket
-
     und = orders_market_basket(spark, sf_dir).select("part_a", "part_b")
     sym = und.unionByName(
         und.select(F.col("part_b").alias("part_a"), F.col("part_a").alias("part_b"))
@@ -571,8 +569,6 @@ def part_similar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _similar_parts_sql() -> str:
-    from datatransformertools_spark.operators.relational import ORDERS_MARKET_BASKET_SQL
-
     return f"""
 WITH und AS (SELECT part_a, part_b FROM ({ORDERS_MARKET_BASKET_SQL})),
 sym AS (

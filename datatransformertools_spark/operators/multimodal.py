@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
+from datatransformertools_spark.operators.annotations import class_map
 from datatransformertools_spark.sources.tables import load_table
 
 N_SHARDS = 16
@@ -365,8 +366,6 @@ def batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns one row per detection above threshold, with absolute
     xywh boxes and the class name."""
-    from datatransformertools_spark.operators.annotations import class_map
-
     detect = _make_stub_detector()
     out_columns = [f.name for f in INFERENCE_SCHEMA.fields]
 
@@ -512,8 +511,6 @@ def server_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose detections all fall below threshold still emit their
     # envelope row — the server returns `annotations: []`, not
     # nothing, for such a page.
-    from datatransformertools_spark.operators.annotations import class_map
-
     names = class_map(spark, sf_dir)
     kept = F.col("confidence") >= int(CONF_THRESHOLD * 1000)
     ann_key = F.format_string(

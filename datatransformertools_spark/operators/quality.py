@@ -32,13 +32,18 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.text import (
+    norm_tokens,
     norm_tokens_sql,
     normalize_sql,
     normalize_text,
     tokens,
     tokens_sql,
 )
-from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL
+from datatransformertools_spark.operators.dedup import (
+    DOC_DUPLICATION_SCORE_SQL,
+    doc_duplication_score,
+)
+from datatransformertools_spark.operators.text_analysis import QUALITY_SCORE_SQL, quality_score_expr
 from datatransformertools_spark.sources.tables import load_table
 
 # the standardized logreg feature frame (see _logreg_features)
@@ -166,6 +171,23 @@ P_LO = 0.05
 P_HI = 0.95
 
 
+def _length_band(docs: DataFrame) -> DataFrame:
+    """The 1-row [P_LO, P_HI] band of ``docs.n_chars``: exact
+    percentiles with linear interpolation, DuckDB's quantile_cont."""
+    return docs.agg(
+        F.round(F.expr(f"percentile(n_chars, {P_LO})") + 1e-9, 6).alias("p_lo"),
+        F.round(F.expr(f"percentile(n_chars, {P_HI})") + 1e-9, 6).alias("p_hi"),
+    )
+
+
+# DuckDB twin of ``_length_band`` over ``documents``: the ``bounds`` CTE
+_LENGTH_BAND_SQL = f"""bounds AS (
+  SELECT round(quantile_cont(n_chars, {P_LO}) + 1e-9, 6) AS p_lo,
+         round(quantile_cont(n_chars, {P_HI}) + 1e-9, 6) AS p_hi
+  FROM documents
+)"""
+
+
 def doc_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep documents whose n_chars lies in the global [P5, P95]
     band. The exact percentiles (linear interpolation — identical
@@ -173,23 +195,15 @@ def doc_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row frame that rides as a broadcast scalar (house rule): one
     scan for the bounds, one for the filter, zero sorts."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    bounds = docs.agg(
-        F.round(F.expr(f"percentile(n_chars, {P_LO})") + 1e-9, 6).alias("p_lo"),
-        F.round(F.expr(f"percentile(n_chars, {P_HI})") + 1e-9, 6).alias("p_hi"),
-    )
     return (
-        docs.crossJoin(F.broadcast(bounds))
+        docs.crossJoin(F.broadcast(_length_band(docs)))
         .filter((F.col("n_chars") >= F.col("p_lo")) & (F.col("n_chars") <= F.col("p_hi")))
         .select("doc_id", "source", "n_chars", "p_lo", "p_hi")
     )
 
 
 DOC_LENGTH_PERCENTILE_FILTER_SQL = f"""
-WITH bounds AS (
-  SELECT round(quantile_cont(n_chars, {P_LO}) + 1e-9, 6) AS p_lo,
-         round(quantile_cont(n_chars, {P_HI}) + 1e-9, 6) AS p_hi
-  FROM documents
-)
+WITH {_LENGTH_BAND_SQL}
 SELECT doc_id, source, n_chars, p_lo, p_hi
 FROM documents, bounds
 WHERE n_chars >= p_lo AND n_chars <= p_hi
@@ -256,6 +270,32 @@ GROUP BY 1
 FUNNEL_QUALITY_MIN = 0.5  # corpus_prep_pipeline's keep threshold
 
 
+def _filter_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(base, bounds) of the corpus filters: per doc its ``n_chars``,
+    normalized-text hash ``h``, token count ``n_tok`` and quality
+    score ``q``, in one projection; and the raw length band."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
+    base = docs.select(
+        "doc_id",
+        "n_chars",
+        F.md5(normalize_text(F.col("text"))).alias("h"),
+        F.size(norm_tokens(F.col("text"))).alias("n_tok"),
+        quality_score_expr().alias("q"),
+    )
+    return base, _length_band(docs)
+
+
+# DuckDB twin of ``_filter_base``: the ``base`` and ``bounds`` CTEs
+_FILTER_BASE_SQL = f"""base AS (
+  SELECT doc_id, n_chars,
+         md5({normalize_sql()}) AS h,
+         len({tokens_sql(normalize_sql())}) AS n_tok,
+         {QUALITY_SCORE_SQL} AS q
+  FROM documents
+),
+{_LENGTH_BAND_SQL}"""
+
+
 def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter-funnel observability: the per-stage doc/token survivor
     counts every production corpus pipeline reports (raw → quality
@@ -271,27 +311,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-scale shuffle (hash window); all eight funnel sums collapse
     map-side into ONE 1-row aggregate, and the 4 output rows explode
     from it — counts only, no per-doc rows leave the executors."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
-    n_tokens = F.size(tok)
-    uniq_ratio = F.when(n_tokens > 0, F.size(F.array_distinct(tok)) / n_tokens).otherwise(
-        F.lit(0.0)
-    )
-    score = F.round(
-        0.5 * uniq_ratio + 0.5 * F.least(F.col("n_chars") / F.lit(400.0), F.lit(1.0)) + 1e-9, 6
-    )
-    base = docs.select(
-        "doc_id",
-        "n_chars",
-        F.md5(norm).alias("h"),
-        n_tokens.alias("n_tok"),
-        score.alias("q"),
-    )
-    bounds = docs.agg(
-        F.round(F.expr(f"percentile(n_chars, {P_LO})") + 1e-9, 6).alias("p_lo"),
-        F.round(F.expr(f"percentile(n_chars, {P_HI})") + 1e-9, 6).alias("p_hi"),
-    )
+    base, bounds = _filter_base(spark, sf_dir)
     rn = F.row_number().over(Window.partitionBy("h", "q_pass").orderBy("doc_id"))
     flags = (
         base.crossJoin(F.broadcast(bounds))
@@ -326,18 +346,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORPUS_FILTER_FUNNEL_SQL = rf"""
-WITH base AS (
-  SELECT doc_id, n_chars,
-         md5({normalize_sql()}) AS h,
-         len({tokens_sql(normalize_sql())}) AS n_tok,
-         {QUALITY_SCORE_SQL} AS q
-  FROM documents
-),
-bounds AS (
-  SELECT round(quantile_cont(n_chars, {P_LO}) + 1e-9, 6) AS p_lo,
-         round(quantile_cont(n_chars, {P_HI}) + 1e-9, 6) AS p_hi
-  FROM documents
-),
+WITH {_FILTER_BASE_SQL},
 flag1 AS (SELECT *, (q >= {FUNNEL_QUALITY_MIN}) AS q_pass FROM base),
 flag2 AS (
   SELECT *, row_number() OVER (PARTITION BY h, q_pass ORDER BY doc_id) AS rn FROM flag1
@@ -400,27 +409,7 @@ def corpus_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride as a broadcast 1-row frame; the dedup-keeper window on the
     text hash is the single data-scale shuffle; the grid collapses
     map-side into ≤ 8 rows."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
-    n_tokens = F.size(tok)
-    uniq_ratio = F.when(n_tokens > 0, F.size(F.array_distinct(tok)) / n_tokens).otherwise(
-        F.lit(0.0)
-    )
-    score = F.round(
-        0.5 * uniq_ratio + 0.5 * F.least(F.col("n_chars") / F.lit(400.0), F.lit(1.0)) + 1e-9, 6
-    )
-    base = docs.select(
-        "doc_id",
-        "n_chars",
-        F.md5(norm).alias("h"),
-        n_tokens.alias("n_tok"),
-        score.alias("q"),
-    )
-    bounds = docs.agg(
-        F.round(F.expr(f"percentile(n_chars, {P_LO})") + 1e-9, 6).alias("p_lo"),
-        F.round(F.expr(f"percentile(n_chars, {P_HI})") + 1e-9, 6).alias("p_hi"),
-    )
+    base, bounds = _filter_base(spark, sf_dir)
     rn = F.row_number().over(Window.partitionBy("h").orderBy("doc_id"))
     flags = (
         base.withColumn("rn", rn)
@@ -458,18 +447,7 @@ def corpus_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORPUS_FILTER_ABLATION_SQL = rf"""
-WITH base AS (
-  SELECT doc_id, n_chars,
-         md5({normalize_sql()}) AS h,
-         len({tokens_sql(normalize_sql())}) AS n_tok,
-         {QUALITY_SCORE_SQL} AS q
-  FROM documents
-),
-bounds AS (
-  SELECT round(quantile_cont(n_chars, {P_LO}) + 1e-9, 6) AS p_lo,
-         round(quantile_cont(n_chars, {P_HI}) + 1e-9, 6) AS p_hi
-  FROM documents
-),
+WITH {_FILTER_BASE_SQL},
 keyed AS (
   SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn FROM base
 ),
@@ -517,7 +495,7 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id, so bucket assignment is deterministic cross-engine."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     tok = docs.select(
-        "doc_id", "source", F.explode(tokens(normalize_text(F.col("text")))).alias("token")
+        "doc_id", "source", F.explode(norm_tokens(F.col("text"))).alias("token")
     )
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").cast("double").alias("total"))
@@ -976,8 +954,6 @@ def dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join, then a map-side banding and a ≤5-row aggregate. The
     band boundary reads the 6-dp-rounded dup_frac both engines
     already agree on, so banding is deterministic cross-engine."""
-    from datatransformertools_spark.operators.dedup import doc_duplication_score
-
     gq = gopher_quality_filter(spark, sf_dir).select("doc_id", "n_words", "keep")
     dup = doc_duplication_score(spark, sf_dir).select("doc_id", "dup_frac")
     j = gq.join(dup, "doc_id", "left")
@@ -999,8 +975,6 @@ def dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_quality_interaction_sql() -> str:
-    from datatransformertools_spark.operators.dedup import DOC_DUPLICATION_SCORE_SQL
-
     return f"""
 WITH dup AS ({DOC_DUPLICATION_SCORE_SQL}),
 gq AS ({GOPHER_QUALITY_FILTER_SQL}),

@@ -25,6 +25,12 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
+from datatransformertools_spark.operators.similarity import (
+    _init_cents,
+    _lloyd_final,
+    _lloyd_sql,
+    _lloyd_update,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -2655,12 +2661,6 @@ def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     K lowest custkeys' vectors. Output is the exploded (cluster,
     dim, cval, n_members) centroid matrix, the same contract as
     `kmeans_embeddings`."""
-    from datatransformertools_spark.operators.similarity import (
-        _init_cents,
-        _lloyd_final,
-        _lloyd_update,
-    )
-
     # persist the feature frame across the Lloyd rounds (r12): init,
     # every update, and the final assignment each re-derived the
     # orders aggregate + standardization otherwise (guide §5:
@@ -2683,8 +2683,6 @@ def _rfm_kmeans_sql() -> str:
     vec = ", ".join(
         f"round((f{i} - m{i}) / s{i} + 1e-9, 6)" for i in range(1, dim + 1)
     )
-    from datatransformertools_spark.operators.similarity import _lloyd_sql
-
     lead = [
         """WITH raw AS (
   SELECT o_custkey AS custkey,

@@ -9,17 +9,17 @@ scale, and exactly mirrored in the DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import (
+    norm_tokens,
     norm_tokens_sql,
     normalize_sql,
     normalize_text,
-    tokens,
     tokens_sql,
     word_shingles,
 )
@@ -41,8 +41,7 @@ _MARKERS = {
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
-    n_tokens = F.size(tok)
+    n_tokens = F.size(norm_tokens(F.col("text")))
     n_chars = F.length(F.col("text"))
     n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     n_digit = F.length(F.regexp_replace(F.col("text"), r"[^0-9]", ""))
@@ -93,15 +92,19 @@ FROM m
 # ---------------------------------------------------------------------------
 
 
-def quality_score_expr() -> "F.Column":
-    """The 6-dp-quantized quality score over (text, n_chars) —
-    shared by `text_quality` and the keep-best dedup so both rank
-    documents identically."""
-    norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
+def _token_stats() -> tuple[Column, Column]:
+    """(n_tokens, uniq_ratio) of the ``text`` column's tokens."""
+    tok = norm_tokens(F.col("text"))
     n_tokens = F.size(tok)
     n_uniq = F.size(F.array_distinct(tok))
-    uniq_ratio = F.when(n_tokens > 0, n_uniq / n_tokens).otherwise(F.lit(0.0))
+    return n_tokens, F.when(n_tokens > 0, n_uniq / n_tokens).otherwise(F.lit(0.0))
+
+
+def quality_score_expr() -> Column:
+    """The 6-dp-quantized quality score over (text, n_chars) —
+    shared by `text_quality`, the corpus filters and the keep-best
+    dedup so they all rank documents identically."""
+    _, uniq_ratio = _token_stats()
     len_score = F.least(F.col("n_chars") / F.lit(400.0), F.lit(1.0))
     return F.round(0.5 * uniq_ratio + 0.5 * len_score + 1e-9, 6)
 
@@ -123,11 +126,7 @@ QUALITY_SCORE_SQL = f"""round(
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
-    n_tokens = F.size(tok)
-    n_uniq = F.size(F.array_distinct(tok))
-    uniq_ratio = F.when(n_tokens > 0, n_uniq / n_tokens).otherwise(F.lit(0.0))
+    n_tokens, uniq_ratio = _token_stats()
     score = quality_score_expr()
     return docs.select(
         "doc_id",
@@ -174,7 +173,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the point is the operator shape — the heuristic itself is
     the standard stopword-profile approach."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     scores = [
         sum(F.array_contains(tok, m).cast("int") for m in markers).alias(f"score_{code}")
         for code, markers in _MARKERS.items()
@@ -280,8 +279,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget-estimation ratio a training pipeline tracks per corpus
     slice. Pure per-row regexp projection: zero shuffles, scan-bound."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    norm = normalize_text(F.col("text"))
-    n_ws = F.size(tokens(norm))
+    n_ws = F.size(norm_tokens(F.col("text")))
     n_bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_PATTERN), 0))
     n_chars = F.length(F.col("text"))
     return docs.select(
@@ -348,7 +346,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     n_docs_df = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    tok = docs.select("doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("term"))
+    tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     score = F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")) + 1e-9, 6)
@@ -405,7 +403,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is identical in both engines and the 6-dp round is stable."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    tok = docs.select("doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("term"))
+    tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -473,17 +471,11 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (16-byte hash, doc_id), and the survivor set never
     rematerializes between stages."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    norm = normalize_text(F.col("text"))
-    tok = tokens(norm)
-    n_tokens = F.size(tok)
-    uniq_ratio = F.when(n_tokens > 0, F.size(F.array_distinct(tok)) / n_tokens).otherwise(F.lit(0.0))
-    score = F.round(
-        0.5 * uniq_ratio + 0.5 * F.least(F.col("n_chars") / F.lit(400.0), F.lit(1.0)) + 1e-9, 6
-    )
+    score = quality_score_expr()
     scored = docs.select(
         "doc_id",
-        F.md5(norm).alias("text_hash"),
-        n_tokens.alias("n_tokens"),
+        F.md5(normalize_text(F.col("text"))).alias("text_hash"),
+        F.size(norm_tokens(F.col("text"))).alias("n_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_PATTERN), 0)).alias("n_bpe_tokens"),
         score.alias("quality_score"),
     ).filter(score >= 0.5)
@@ -532,7 +524,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+explode out before the heavy work (a multi-file lake
     # parallelizes at the scan and AQE coalesces the remainder)
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    bigrams = word_shingles(tokens(normalize_text(F.col("text"))), 2)
+    bigrams = word_shingles(norm_tokens(F.col("text")), 2)
     exploded = docs.select("doc_id", F.explode(bigrams).alias("bigram"))
     return (
         exploded.groupBy("bigram")
@@ -581,7 +573,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The oracle computes the same mode the unnest-and-group way —
     oracle cost is irrelevant, value parity is what's checked.)"""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     bigrams = word_shingles(tok, 2)
     # longest run in the sorted array == max token multiplicity
     top_count = F.aggregate(
@@ -665,7 +657,7 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 shards independently; chunk text is sliced from the token
     array, never re-tokenized."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     n = F.size(tok)
     n_chunks = F.greatest(
         F.lit(1), F.ceil((n - F.lit(CHUNK_LEN)) / F.lit(CHUNK_STRIDE)) + 1
@@ -722,7 +714,7 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg shuffle of (source, bucket) keys; output cardinality
     is |sources|·|buckets| regardless of corpus size."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    n = F.size(tokens(normalize_text(F.col("text"))))
+    n = F.size(norm_tokens(F.col("text")))
     bucket = F.floor(n / HIST_BUCKET_W).cast("long")
     return (
         docs.select("source", n.alias("n_tokens"), bucket.alias("bucket"))
@@ -785,7 +777,7 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE upgrades at small SF from real sizes)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    tok = docs.select("doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("token"))
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").cast("double").alias("total"))
     return (
@@ -832,7 +824,7 @@ def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     norm = normalize_text(F.col("text"))
     n_chars = F.length(F.regexp_replace(norm, r"[^A-Za-z0-9]", ""))
-    n_words = F.greatest(F.size(tokens(norm)), F.lit(1))
+    n_words = F.greatest(F.size(norm_tokens(F.col("text"))), F.lit(1))
     sents = F.filter(
         F.split(F.col("text"), _SENT_SPLIT), lambda s: F.length(F.trim(s)) > 0
     )
@@ -958,7 +950,7 @@ def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     tok = docs.select(
-        "doc_id", F.posexplode(tokens(normalize_text(F.col("text")))).alias("pos", "w")
+        "doc_id", F.posexplode(norm_tokens(F.col("text"))).alias("pos", "w")
     )
     stop_arr = F.array(*[F.lit(s) for s in RAKE_STOPWORDS])
     tok = tok.withColumn(
@@ -1150,7 +1142,7 @@ def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on ≤ |sources|·V rows."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "source")
-    tok = docs.select("source", F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select("source", F.explode(norm_tokens(F.col("text"))).alias("token"))
     corpus_counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     top = corpus_counts.orderBy(F.col("c").desc(), "token").limit(JS_VOCAB_V)
     corpus_total = top.agg(F.sum("c").cast("double").alias("ct"))
@@ -1251,7 +1243,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ALL bigram occurrences (multiplicity matters for an LM — the
     # shingle builder's array_distinct would undercount): zip the
     # token array with its own 1-shifted copy, map-side.
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     shifted = F.slice(tok, 2, F.greatest(F.lit(0), F.size(tok) - 1))
     bigrams = F.when(
         F.size(tok) >= 2,
@@ -1322,7 +1314,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over the already-limited V rows, so its single-partition
     sort is O(V) regardless of corpus size."""
     docs = load_table(spark, sf_dir, "documents").select("text")
-    tok = docs.select(F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select(F.explode(norm_tokens(F.col("text"))).alias("token"))
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     top = counts.orderBy(F.col("cnt").desc(), "token").limit(VOCAB_TOP_V)
     rank = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "token"))
@@ -1367,7 +1359,7 @@ def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     float expression shape. Two vocab-keyed shuffles + one global
     top-k (TakeOrderedAndProject) — no all-pairs anything."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = tokens(normalize_text(F.col("text")))
+    tok = norm_tokens(F.col("text"))
     shifted = F.slice(tok, 2, F.greatest(F.lit(0), F.size(tok) - 1))
     pairs = F.slice(
         F.zip_with(tok, shifted, lambda x, y: F.struct(x.alias("x"), y.alias("y"))),
@@ -1446,8 +1438,7 @@ def token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     token budgets per language slice. One map-side projection (two
     regex counts per row) + one 5-group aggregate — scan-bound."""
     docs = load_table(spark, sf_dir, "documents").select("lang", "text", "n_chars")
-    norm = normalize_text(F.col("text"))
-    n_ws = F.size(tokens(norm))
+    n_ws = F.size(norm_tokens(F.col("text")))
     n_bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_PATTERN), 0))
     per_doc = docs.select("lang", "n_chars", n_ws.alias("n_ws"), n_bpe.alias("n_bpe"))
     agg = per_doc.groupBy("lang").agg(
@@ -1511,7 +1502,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrades it from runtime stats); token instances join on the
     token key and collapse map-side to |sources| rows."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    tok = docs.select("source", F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select("source", F.explode(norm_tokens(F.col("text"))).alias("token"))
     vocab = (
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1635,7 +1626,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     share one training run per session."""
     docs = load_table(spark, sf_dir, "documents").select("text")
     words = (
-        docs.select(F.explode(tokens(normalize_text(F.col("text")))).alias("word"))
+        docs.select(F.explode(norm_tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1750,7 +1741,7 @@ def bpe_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     src_words = (
-        docs.select("source", F.explode(tokens(normalize_text(F.col("text")))).alias("word"))
+        docs.select("source", F.explode(norm_tokens(F.col("text"))).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1828,7 +1819,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — so the single-partition rank sort is bounded by distinct
     tokens, the same exemption vocab_topk documents."""
     docs = load_table(spark, sf_dir, "documents").select("text")
-    tok = docs.select(F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select(F.explode(norm_tokens(F.col("text"))).alias("token"))
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").cast("long").alias("total_tokens"))
     ranked = counts.withColumn(
@@ -1901,7 +1892,7 @@ def vocab_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     `word_zipf_slope` pattern) and rides back as a broadcast 1-row
     frame."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = docs.select("doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("token"))
+    tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     first_occ = tok.groupBy("token").agg(F.min("doc_id").alias("first_doc"))
     maxid = docs.agg(F.max("doc_id").alias("max_id"))

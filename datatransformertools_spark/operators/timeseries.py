@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.operators.events import HOUR_US, _events_us
+from datatransformertools_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # events_autocorr
@@ -541,8 +542,6 @@ def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — bounded by the calendar, not the data, so the
     unpartitioned window is a constant-size frame at any SF.
     The 12-row seasonal index rides as a broadcast join."""
-    from datatransformertools_spark.sources.tables import load_table
-
     orders = load_table(spark, sf_dir, "orders").select("o_totalprice", "o_orderdate")
     monthly = orders.groupBy(
         F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month")

@@ -12,12 +12,26 @@ from datatransformertools_spark.operators.audit import (
 )
 from datatransformertools_spark.operators.corpus import (
     SOURCE_CAP,
+    cap_per_source,
     shard_assignment,
     source_temperature_weights,
 )
-from datatransformertools_spark.operators.dedup import dedup_incremental
-from datatransformertools_spark.operators.events import events_watermark_audit
-from datatransformertools_spark.operators.similarity import TOP_K, ann_recall_eval
+from datatransformertools_spark.operators.dedup import (
+    dedup_containment,
+    dedup_incremental,
+    doc_ngram_novelty,
+)
+from datatransformertools_spark.operators.events import (
+    events_active_users,
+    events_scd_join,
+    events_watermark_audit,
+)
+from datatransformertools_spark.operators.similarity import (
+    TOP_K,
+    ann_bruteforce_topk,
+    ann_mmr_topk,
+    ann_recall_eval,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -55,8 +69,6 @@ def test_temperature_weights_normalize(spark, sf_dir):
 
 
 def test_cap_per_source_bounds(spark, sf_dir):
-    from datatransformertools_spark.operators.corpus import cap_per_source
-
     rows = cap_per_source(spark, sf_dir).collect()
     per_source: dict[str, int] = {}
     for r in rows:
@@ -104,8 +116,6 @@ def test_lang_id_eval_shares_sum_per_label(spark, sf_dir):
 
 
 def test_novelty_first_doc_is_fully_novel(spark, sf_dir):
-    from datatransformertools_spark.operators.dedup import doc_ngram_novelty
-
     rows = {r.doc_id: r for r in doc_ngram_novelty(spark, sf_dir).collect()}
     first = rows[min(rows)]
     # the earliest document's shingles have no earlier owner
@@ -114,9 +124,6 @@ def test_novelty_first_doc_is_fully_novel(spark, sf_dir):
 
 
 def test_scd_join_covers_every_event_once(spark, sf_dir):
-    from datatransformertools_spark.operators.events import events_scd_join
-    from datatransformertools_spark.sources.tables import load_table
-
     rows = events_scd_join(spark, sf_dir).collect()
     n_events = load_table(spark, sf_dir, "events").count()
     # half-open version windows partition the time range: every event
@@ -125,8 +132,6 @@ def test_scd_join_covers_every_event_once(spark, sf_dir):
 
 
 def test_active_users_wau_bounds(spark, sf_dir):
-    from datatransformertools_spark.operators.events import events_active_users
-
     rows = events_active_users(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -135,12 +140,6 @@ def test_active_users_wau_bounds(spark, sf_dir):
 
 
 def test_mmr_first_pick_is_most_relevant(spark, sf_dir):
-    from datatransformertools_spark.operators.similarity import (
-        TOP_K,
-        ann_bruteforce_topk,
-        ann_mmr_topk,
-    )
-
     mmr = ann_mmr_topk(spark, sf_dir).collect()
     per_query: dict[int, list] = {}
     for r in mmr:
@@ -162,8 +161,6 @@ def test_mmr_first_pick_is_most_relevant(spark, sf_dir):
 
 
 def test_containment_detects_subsets_jaccard_misses(spark, sf_dir):
-    from datatransformertools_spark.operators.dedup import dedup_containment
-
     rows = dedup_containment(spark, sf_dir).collect()
     for r in rows:
         assert r.containment >= 0.8

@@ -1,11 +1,14 @@
 """Source scans of the package: every environment variable it reads is
-a documented knob, and every top-level definition is reached from a
-query, a script or README's example."""
+a documented knob, every top-level definition is reached from a
+query, a script or README's example, every pasted stage has one
+owner, and every module imports cleanly on its own."""
 
 from __future__ import annotations
 
 import ast
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -150,6 +153,52 @@ TWIN_FRAGMENTS = {
     "::BIGINT & 4294967295": {
         "datatransformertools_spark/functions/hashing.py:md5_u32_sql",
     },
+    "quantile_cont(n_chars, {P_LO})": {
+        "datatransformertools_spark/operators/quality.py:_LENGTH_BAND_SQL",
+    },
+    "normalize_sql())}) AS n_tok,": {
+        "datatransformertools_spark/operators/quality.py:_FILTER_BASE_SQL",
+    },
+    "SELECT doc_id, source,\n         len({tokens_sql(normalize_sql())}) AS n_tokens\n  FROM": {
+        "datatransformertools_spark/operators/corpus.py:_PACK_TOKS_SQL",
+    },
+    "- n_tokens AS BIGINT)": {
+        "datatransformertools_spark/operators/corpus.py:_PACK_OFFSET_SQL",
+    },
+    "(start_offset + n_tokens - 1) // {ctx}": {
+        "datatransformertools_spark/operators/corpus.py:_windows_sql",
+    },
+    "SELECT doc_id, i AS pos, arr[i] AS token": {
+        "datatransformertools_spark/operators/corpus.py:_token_vocab_sql",
+    },
+    "ORDER BY h % {TB_BUCKETS}, h, doc_id": {
+        "datatransformertools_spark/operators/corpus.py:_TB_ORDERED_SQL",
+    },
+}
+
+# Each pasted Spark stage and the one builder allowed to spell it.
+BUILDER_FRAGMENTS = {
+    "tokens(normalize_text(": {
+        "datatransformertools_spark/functions/text.py:norm_tokens",
+    },
+    "F.lit(400.0)": {
+        "datatransformertools_spark/operators/text_analysis.py:quality_score_expr",
+    },
+    "percentile(n_chars": {
+        "datatransformertools_spark/operators/quality.py:_length_band",
+    },
+    'F.sum("n_tokens").over(w) - F.col("n_tokens")': {
+        "datatransformertools_spark/operators/corpus.py:_packed",
+    },
+    'F.col("start_offset") + F.col("n_tokens") - 1': {
+        "datatransformertools_spark/operators/corpus.py:_windows",
+    },
+    'lambda s: s["tid"]': {
+        "datatransformertools_spark/operators/corpus.py:_token_ids",
+    },
+    'F.col("cum_incl") - F.col("btok")': {
+        "datatransformertools_spark/operators/corpus.py:_tb_cum",
+    },
 }
 
 
@@ -161,19 +210,35 @@ def _top_level_owner(tree: ast.Module, lineno: int) -> str:
     return f"line {lineno}"
 
 
-def test_duckdb_twin_fragments_are_not_repasted():
-    """The DuckDB normalization, MinHash signature, ANN index-stage,
-    Lloyd face, event-family stage and row-checksum fragments are
-    spelled once, in their twin; every oracle calls the twin."""
-    hits: dict[str, set[str]] = {frag: set() for frag in TWIN_FRAGMENTS}
+def _fragment_owners(fragments: dict[str, set[str]]) -> dict[str, set[str]]:
+    """For each fragment, the top-level definitions of the package
+    whose source spells it; a fragment may span lines."""
+    hits: dict[str, set[str]] = {frag: set() for frag in fragments}
     for path in sorted(PACKAGE.rglob("*.py")):
         text = path.read_text()
         tree = ast.parse(text)
-        for i, line in enumerate(text.splitlines(), 1):
-            for frag in TWIN_FRAGMENTS:
-                if frag in line:
-                    hits[frag].add(f"{path.relative_to(ROOT)}:{_top_level_owner(tree, i)}")
-    assert hits == TWIN_FRAGMENTS
+        for frag in fragments:
+            at = text.find(frag)
+            while at != -1:
+                owner = _top_level_owner(tree, text.count("\n", 0, at) + 1)
+                hits[frag].add(f"{path.relative_to(ROOT)}:{owner}")
+                at = text.find(frag, at + 1)
+    return hits
+
+
+def test_duckdb_twin_fragments_are_not_repasted():
+    """The DuckDB normalization, MinHash signature, ANN index-stage,
+    Lloyd face, event-family stage, row-checksum and corpus-token
+    stage fragments are spelled once, in their twin; every oracle
+    calls the twin."""
+    assert _fragment_owners(TWIN_FRAGMENTS) == TWIN_FRAGMENTS
+
+
+def test_spark_stage_fragments_are_not_repasted():
+    """The corpus tokenizer, quality score, length band, packing
+    offsets and windows, vocab→ids and token-budget grains are
+    spelled once, in their Spark builder; every query calls it."""
+    assert _fragment_owners(BUILDER_FRAGMENTS) == BUILDER_FRAGMENTS
 
 
 def _imported_modules(stmt: ast.stmt) -> set[str]:
@@ -203,12 +268,13 @@ def test_no_function_local_import_repeats_a_top_level_import():
     """A module the file imports at its top is imported there once: a
     function-local import of it only hides which names the file uses.
     This holds for every module, the standard library and pyspark as
-    much as the package. (Function-local imports of a module the file
-    does not import at its top, such as the dedup ↔ similarity cycle,
-    stay allowed.)"""
+    much as the package, in the package and in its tests. (Which
+    function-local imports of a module the file does not import at
+    its top stay allowed is the next test's rule.)"""
+    paths = sorted(PACKAGE.rglob("*.py")) + sorted((ROOT / "tests").glob("*.py"))
     bad = {
         str(path.relative_to(ROOT)): lines
-        for path in sorted(PACKAGE.rglob("*.py"))
+        for path in paths
         if (lines := _repeated_local_imports(ast.parse(path.read_text())))
     }
     assert not bad, f"function-local imports of a module already imported at the top: {bad}"
@@ -225,3 +291,94 @@ def test_no_function_local_import_repeats_a_top_level_import():
         "        import functools\n"
     )
     assert _repeated_local_imports(ast.parse(src)) == [5, 8, 9]
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _import_targets(stmt: ast.AST, modules: set[str]) -> set[str]:
+    """The modules of ``modules`` an import statement loads."""
+    if isinstance(stmt, ast.Import):
+        return {alias.name for alias in stmt.names} & modules
+    if isinstance(stmt, ast.ImportFrom) and stmt.module:
+        subs = {f"{stmt.module}.{alias.name}" for alias in stmt.names}
+        return (subs | {stmt.module}) & modules
+    return set()
+
+
+def _acyclic_local_imports(trees: dict[str, ast.Module]) -> list[str]:
+    """``module:line`` of each function-local import of a module whose
+    target does not reach the importer in the import graph of
+    ``trees`` (an edge per import statement, top-level or local).
+    Such an import guards no import cycle."""
+    modules = set(trees)
+    edges = {
+        m: {target for stmt in ast.walk(tree) for target in _import_targets(stmt, modules)}
+        for m, tree in trees.items()
+    }
+    local = {
+        (m, stmt.lineno, target)
+        for m, tree in trees.items()
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for stmt in ast.walk(fn)
+        for target in _import_targets(stmt, modules)
+    }
+
+    def reaches(src: str, dst: str) -> bool:
+        seen, todo = set(), [src]
+        while todo:
+            node = todo.pop()
+            if node == dst:
+                return True
+            if node not in seen:
+                seen.add(node)
+                todo.extend(edges[node])
+        return False
+
+    return sorted({f"{m}:{line}" for m, line, target in local if not reaches(target, m)})
+
+
+def test_function_local_package_imports_guard_a_cycle():
+    """A package module imports another package module inside a
+    function only to break an import cycle (the dedup ↔ similarity
+    oracles): every other import sits at the top, where it shows
+    what the module depends on. The CLI entry point keeps its lazy
+    imports for start-up time."""
+    trees = {
+        _module_name(path): ast.parse(path.read_text())
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.name != "__main__.py"
+    }
+    bad = _acyclic_local_imports(trees)
+    assert not bad, f"function-local package imports that guard no cycle: {bad}"
+    src = {
+        "p": "",
+        "p.a": "import p.b\ndef f():\n    from p.c import x\n",
+        "p.b": "def g():\n    from p.a import y\n",
+        "p.c": "def h():\n    from p.d import z\n",
+        "p.d": "from p.c import h\n",
+    }
+    assert _acyclic_local_imports({m: ast.parse(t) for m, t in src.items()}) == ["p.a:3"]
+
+
+def test_every_module_imports_first_in_a_fresh_interpreter():
+    """Each operator, streaming and source module imports cleanly as
+    the first import of a new interpreter, so no module works only
+    because another one was imported before it."""
+    modules = [
+        _module_name(path)
+        for sub in ("operators", "streaming", "sources")
+        for path in sorted((PACKAGE / sub).glob("*.py"))
+        if path.name != "__init__.py"
+    ]
+    failed = {}
+    for module in modules:
+        run = subprocess.run(
+            [sys.executable, "-c", f"import {module}"], cwd=ROOT, capture_output=True, text=True
+        )
+        if run.returncode:
+            failed[module] = run.stderr.strip().splitlines()[-1]
+    assert not failed, f"modules that fail as the first import: {failed}"

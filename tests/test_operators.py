@@ -9,9 +9,40 @@ from pyspark.sql import functions as F
 
 from datatransformertools_spark.functions.bbox import clip_box, from_yolo, iou_xywh, to_yolo
 from datatransformertools_spark.operators.annotations import train_val_split
-from datatransformertools_spark.operators.dedup import dedup_exact, dedup_ngram_jaccard
-from datatransformertools_spark.operators.evaluation import detection_eval
-from datatransformertools_spark.operators.similarity import ann_bruteforce_topk, ann_lsh_topk
+from datatransformertools_spark.operators.dedup import (
+    MAX_SHINGLE_DF,
+    _multiprobe,
+    dedup_components,
+    dedup_containment,
+    dedup_exact,
+    dedup_keep_best,
+    dedup_minhash_lsh,
+    dedup_ngram_jaccard,
+    dedup_winnowing,
+)
+from datatransformertools_spark.operators.evaluation import (
+    _CONF_ORDER,
+    _PRED_ID_ORDER,
+    _make_greedy_kernel,
+    detection_eval,
+    detection_eval_ap,
+    detection_eval_map,
+    detection_eval_sweep,
+)
+from datatransformertools_spark.operators.similarity import (
+    K_CLUSTERS,
+    SEM_TAU,
+    TARGET_CELL,
+    TOP_K,
+    _assign,
+    _cells_join,
+    ann_bruteforce_topk,
+    ann_ivf_topk,
+    ann_lsh_topk,
+    ann_pq_topk,
+    corpus_k,
+    semdedup,
+)
 
 
 def _one(df):
@@ -93,8 +124,6 @@ class TestDedup:
     def test_keep_best_prefers_quality_then_min_id(self, spark, tmp_path):
         import pandas as pd
 
-        from datatransformertools_spark.operators.dedup import dedup_keep_best
-
         # docs 1-3 share a text (one dup group); n_chars drives the
         # length half of the score, so doc 2 (n_chars=300) must win.
         # docs 10/11 tie exactly -> lowest doc_id survives.
@@ -115,8 +144,6 @@ class TestDedup:
 
     def test_winnowing_guarantee_on_planted_overlap(self, spark, tmp_path):
         import pandas as pd
-
-        from datatransformertools_spark.operators.dedup import dedup_winnowing
 
         # docs 1/2 share a verbatim 40-token run — far above the
         # K_GRAM + WINNOW_G - 1 = 11 guarantee length, so winnowing
@@ -147,12 +174,6 @@ class TestDedup:
     def test_shingle_df_cap_bounds_boilerplate_joins(self, spark, tmp_path):
         import pandas as pd
 
-        from datatransformertools_spark.operators.dedup import (
-            MAX_SHINGLE_DF,
-            dedup_containment,
-            dedup_ngram_jaccard,
-        )
-
         # 60 docs (> MAX_SHINGLE_DF = 50) that are mostly one shared
         # boilerplate run: uncapped, every pair shares 3 of its 4
         # shingles (jaccard 0.6) -> 60*59/2 = 1770 pairs and a d²
@@ -176,11 +197,6 @@ class TestDedup:
         assert cont == {(200, 201), (201, 200)}
 
     def test_components_consistent_with_pairs(self, spark, sf_dir):
-        from datatransformertools_spark.operators.dedup import (
-            dedup_components,
-            dedup_minhash_lsh,
-        )
-
         comp = {r.doc_id: r.component for r in dedup_components(spark, sf_dir).collect()}
         pairs = dedup_minhash_lsh(spark, sf_dir).collect()
         assert len(pairs) > 0
@@ -223,8 +239,6 @@ class TestSimilarity:
         assert recall > 0.05, f"recall {recall}"
 
     def test_pq_recall_vs_bruteforce(self, spark, sf_dir):
-        from datatransformertools_spark.operators.similarity import ann_pq_topk
-
         exact = {(r.query_id, r.neighbor_id) for r in ann_bruteforce_topk(spark, sf_dir).collect()}
         approx = {(r.query_id, r.neighbor_id) for r in ann_pq_topk(spark, sf_dir).collect()}
         assert len(approx) > 0
@@ -235,8 +249,6 @@ class TestSimilarity:
         assert recall > 0.15, f"recall {recall}"
 
     def test_ivf_shape_and_scores(self, spark, sf_dir):
-        from datatransformertools_spark.operators.similarity import TOP_K, ann_ivf_topk
-
         rows = ann_ivf_topk(spark, sf_dir).collect()
         assert len(rows) > 0
         per_query = {}
@@ -259,7 +271,6 @@ class TestSimilarity:
 
 
     def test_semdedup_survivor_invariants(self, spark, sf_dir):
-        from datatransformertools_spark.operators.similarity import SEM_TAU, semdedup
         from datatransformertools_spark.sources.tables import load_table
 
         rows = semdedup(spark, sf_dir).collect()
@@ -288,11 +299,6 @@ class TestEvaluation:
         assert r.recall == pytest.approx(r.tp / (r.tp + r.fn), abs=1e-5)
 
     def test_ap_invariants(self, spark, sf_dir):
-        from datatransformertools_spark.operators.evaluation import (
-            detection_eval_ap,
-            detection_eval_map,
-        )
-
         rows = detection_eval_ap(spark, sf_dir).collect()
         assert len(rows) == 6  # one row per class with GT
         for r in rows:
@@ -317,12 +323,6 @@ class TestEvaluation:
         pred_id order pred 1 claims it; in confidence order pred 2
         does, and the other prediction falls back to GT 11."""
         import pandas as pd
-
-        from datatransformertools_spark.operators.evaluation import (
-            _CONF_ORDER,
-            _PRED_ID_ORDER,
-            _make_greedy_kernel,
-        )
 
         pdf = pd.DataFrame(
             {
@@ -394,8 +394,6 @@ class TestBatchInference:
 
 class TestEvalSweep:
     def test_sweep_monotone_in_threshold(self, spark, sf_dir):
-        from datatransformertools_spark.operators.evaluation import detection_eval_sweep
-
         rows = sorted(detection_eval_sweep(spark, sf_dir).collect(), key=lambda r: r.iou_threshold)
         assert len(rows) == 5
         # stricter IoU can only lose matches
@@ -443,11 +441,6 @@ class TestKScaling:
     identical to the literal path."""
 
     def test_corpus_k_floor_at_shipped_sf(self, spark, sf_dir):
-        from datatransformertools_spark.operators.similarity import (
-            K_CLUSTERS,
-            TARGET_CELL,
-            corpus_k,
-        )
         from datatransformertools_spark.sources.tables import load_table
 
         n = load_table(spark, sf_dir, "embeddings").count()
@@ -458,11 +451,6 @@ class TestKScaling:
         assert k == K_CLUSTERS
 
     def test_corpus_k_scales_past_floor(self):
-        from datatransformertools_spark.operators.similarity import (
-            K_CLUSTERS,
-            TARGET_CELL,
-        )
-
         # the formula itself: 100× corpus → ~100× clusters
         for n in (10_000, 1_000_000, 100_000_000):
             k = max(K_CLUSTERS, -(-n // TARGET_CELL))
@@ -470,11 +458,6 @@ class TestKScaling:
             assert k * TARGET_CELL < n + TARGET_CELL
 
     def test_assign_join_path_matches_literal(self, spark):
-        from datatransformertools_spark.operators.similarity import (
-            _assign,
-            _cells_join,
-        )
-
         rows = [
             (i, [float((i * 7 + d * 3) % 11) for d in range(4)]) for i in range(40)
         ]
@@ -488,9 +471,6 @@ class TestKScaling:
         assert lit == join
 
     def test_multiprobe_join_path_matches_literal(self, spark):
-        from datatransformertools_spark.operators.dedup import _multiprobe
-        from datatransformertools_spark.operators.similarity import _cells_join
-
         rows = [
             (i, [float((i * 5 + d * 2) % 13) for d in range(4)]) for i in range(30)
         ]

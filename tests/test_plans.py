@@ -13,6 +13,7 @@ import re
 
 import pytest
 
+import datatransformertools_spark as pkg
 from datatransformertools_spark import registry
 
 _QUERIES = registry.queries()
@@ -305,25 +306,23 @@ def find_hinted_caller_outer_joins(src: str) -> list[int]:
     are skipped (prose may quote the banned shape). Known limits,
     accepted for a lint: a hint bound to a variable first, or a '#'
     inside a string literal earlier on the same line, escape."""
-    import re as _re
-
     # right/right_outer are NOT banned: the hinted caller is the
     # LEFT side, and JoinSelection allows BuildLeft for RightOuter —
     # Spark plans that hint (ADVICE r10). "outer"/"full" stay banned
     # (neither side of a full outer can build), as do left*/semi/anti
     # (the caller would have to be the build side and cannot be).
-    bad_type = _re.compile(
+    bad_type = re.compile(
         r"""["'](?:left|left_outer|leftouter|"""
         r"""full|full_outer|fullouter|outer|semi|left_semi|leftsemi|"""
         r"""anti|left_anti|leftanti)["']"""
     )
     hits = []
-    for m in _re.finditer(r"F\.broadcast\(", src):
+    for m in re.finditer(r"F\.broadcast\(", src):
         line_start = src.rfind("\n", 0, m.start()) + 1
         if "#" in src[line_start : m.start()]:
             continue  # commented-out / prose occurrence
         after_broadcast = _scan_balanced(src, m.end() - 1)
-        join = _re.match(r"\s*\.join\(", src[after_broadcast:])
+        join = re.match(r"\s*\.join\(", src[after_broadcast:])
         if not join:
             continue
         join_open = after_broadcast + join.end() - 1
@@ -346,8 +345,6 @@ def test_no_hinted_caller_outer_joins_in_source():
     legal for Inner and RightOuter — ADVICE r10) and the plan sweep
     still verifies every batch hint realizes."""
     from pathlib import Path
-
-    import datatransformertools_spark as pkg
 
     pkg_root = Path(pkg.__file__).parent
     offenders = []

@@ -250,7 +250,6 @@ class TestAudioFrameEnergy:
         """RMS of a known byte pattern: 'aaaa' → samples (97−128)=−31,
         rms = 31 exactly."""
         import numpy as np
-        import pandas as pd
 
         from datatransformertools_spark.operators.multimodal import audio_frame_energy
 
@@ -373,8 +372,6 @@ class TestEventsBurstiness:
         out.unpersist()
 
     def test_metronome_is_minus_one(self, spark):
-        import pandas as pd
-
         from datatransformertools_spark.operators.timeseries import events_burstiness
 
         df = spark.createDataFrame(

@@ -201,8 +201,6 @@ class TestUpsertMerge:
 
 class TestAttribution:
     def test_lag_bounds_and_click_precedes(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from datatransformertools_spark.operators.events import (
             ATTRIBUTION_WINDOW_US,
             events_attribution,
@@ -220,8 +218,6 @@ class TestAttribution:
 
 class TestUserFeatures:
     def test_counts_sum_to_total(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from datatransformertools_spark.operators.events import (
             EVENT_TYPES,
             user_event_features,
@@ -1076,15 +1072,13 @@ class TestAnova:
 
 class TestCharEntropy:
     def test_entropy_bounds(self, spark, sf_dir):
-        import math as m
-
         from datatransformertools_spark.operators.text_analysis import doc_char_entropy
 
         rows = doc_char_entropy(spark, sf_dir).collect()
         assert len(rows) == 500
         for r in rows:
             # 0 <= H <= log2(distinct trigrams) <= log2(n)
-            assert -1e-9 <= r["char_entropy_bits"] <= m.log2(max(r["n_trigrams"], 2)) + 1e-6
+            assert -1e-9 <= r["char_entropy_bits"] <= math.log2(max(r["n_trigrams"], 2)) + 1e-6
         # natural text sits well above zero on average
         avg = sum(r["char_entropy_bits"] for r in rows) / len(rows)
         assert avg > 3.0
@@ -1212,15 +1206,12 @@ def test_tokenize_to_ids_reconstructs_tokens(spark, sf_dir):
     equals the token count, ids stay in [0, V], OOV count matches the
     unk occurrences, and decoding in-vocab ids through the induced
     vocabulary reproduces the original token stream positions."""
-    from pyspark.sql import functions as F
-
     from datatransformertools_spark.functions.text import normalize_text, tokens
     from datatransformertools_spark.operators.corpus import (
         TOKENIZE_UNK_ID,
         TOKENIZE_VOCAB_V,
         tokenize_to_ids_array,
     )
-    from datatransformertools_spark.sources.tables import load_table
 
     out = tokenize_to_ids_array(spark, sf_dir)
     rows = out.collect()
@@ -1267,7 +1258,6 @@ def test_tokenize_to_ids_reconstructs_tokens(spark, sf_dir):
 
 def test_corpus_filter_funnel_monotone(spark, sf_dir):
     from datatransformertools_spark.operators.quality import corpus_filter_funnel
-    from datatransformertools_spark.sources.tables import load_table
 
     rows = sorted(corpus_filter_funnel(spark, sf_dir).collect(), key=lambda r: r["stage_idx"])
     assert [r["stage"] for r in rows] == ["raw", "quality", "exact_dedup", "length_band"]

@@ -215,7 +215,6 @@ def test_user_hour_profile_kmeans_contract(spark, sf_dir):
         UHP_K,
         user_hour_profile_kmeans,
     )
-    from datatransformertools_spark.sources.tables import load_table
 
     rows = user_hour_profile_kmeans(spark, sf_dir).collect()
     assert len(rows) == UHP_K * UHP_DIM
@@ -236,7 +235,6 @@ def test_table_stats_profile_matches_spec(spark, sf_dir):
         _STATS_SPEC,
         table_stats_profile,
     )
-    from datatransformertools_spark.sources.tables import load_table
 
     rows = {(r["tbl"], r["col"]): r for r in table_stats_profile(spark, sf_dir).collect()}
     assert set(rows) == set(_STATS_SPEC)
@@ -247,8 +245,6 @@ def test_table_stats_profile_matches_spec(spark, sf_dir):
 
 
 def test_lang_mismatch_consistent_with_lang_id(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from datatransformertools_spark.operators.text_analysis import (
         lang_id,
         lang_mismatch_by_source,

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 # Dropping every cross-query memo makes the next embedding build
 # re-run the full fit + blocking + pair join.
-from datatransformertools_spark.caching import clear_all_memos
+from datatransformertools_spark.caching import Memo, clear_all_memos
 
 
 class TestCellsJoinEndToEnd:
@@ -126,8 +126,6 @@ class TestFrameMemo:
     def test_stale_app_entries_evicted(self, spark):
         from pyspark.sql import functions as F
         from pyspark.storagelevel import StorageLevel
-
-        from datatransformertools_spark.caching import Memo
 
         memo = Memo()
         df = spark.range(1).select(F.col("id")).persist()

@@ -91,7 +91,6 @@ def test_cms_overcount_never_negative_and_bounded(spark, sf_dir):
         CMS_WIDTH,
         events_heavy_hitters_cms,
     )
-    from datatransformertools_spark.sources.tables import load_table
 
     n_events = load_table(spark, sf_dir, "events").count()
     rows = events_heavy_hitters_cms(spark, sf_dir).collect()

@@ -1,11 +1,13 @@
 """Each DuckDB twin returns the same values as the Spark builder it
 mirrors, on small hand-built frames that hit the edge cases the staged
 test data never does (empty text, control-whitespace runs, zero
-vectors, degenerate boxes, session and funnel boundaries). The
-oracles certify these twins only end to end; these tests pin each one
-directly."""
+vectors, degenerate boxes, session and funnel boundaries, window and
+budget boundaries, vocabulary ties). The oracles certify these twins
+only end to end; these tests pin each one directly."""
 
 from __future__ import annotations
+
+import hashlib
 
 import duckdb
 import pytest
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 from datatransformertools_spark.functions.bbox import iou_xywh, iou_xywh_sql
 from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
 from datatransformertools_spark.functions.text import (
+    norm_tokens,
     norm_tokens_sql,
     normalize_sql,
     normalize_text,
@@ -21,6 +24,24 @@ from datatransformertools_spark.functions.text import (
     tokens_sql,
 )
 from datatransformertools_spark.functions.vectors import cosine, cosine_sql, norm, norm_sql
+from datatransformertools_spark.operators.corpus import (
+    _PACK_OFFSET_SQL,
+    _PACK_TOKS_SQL,
+    CTX_LEN,
+    TB_BUCKETS,
+    TB_BUDGET_TOKENS,
+    TB_SALT,
+    TOKEN_BUDGET_SAMPLE_SQL,
+    TOKENIZE_TO_IDS_ARRAY_SQL,
+    TOKENIZE_UNK_ID,
+    TOKENIZE_VOCAB_V,
+    _packed,
+    _token_ids,
+    _token_vocab_sql,
+    _windows,
+    _windows_sql,
+    token_budget_sample,
+)
 from datatransformertools_spark.operators.events import (
     _FUNNEL_STEPS_SQL,
     SESSION_GAP_US,
@@ -29,10 +50,12 @@ from datatransformertools_spark.operators.events import (
     _sessions,
     _sessions_sql,
 )
+from datatransformertools_spark.operators.quality import _FILTER_BASE_SQL, _filter_base
 from datatransformertools_spark.operators.text_analysis import (
     QUALITY_SCORE_SQL,
     quality_score_expr,
 )
+from datatransformertools_spark.sources.tables import load_table
 
 TEXTS = [
     "",
@@ -256,4 +279,153 @@ def test_funnel_steps_twin_matches_spark(spark, tmp_path):
         (1, T0 + 10, None, None),
         (2, T0, T0 + 5, T0 + 5),
         (3, T0 + 10, T0 + 15, T0 + 30),
+    ]
+
+
+def _docs_dir(tmp_path, rows: list[tuple]) -> tuple[duckdb.DuckDBPyConnection, str]:
+    """Stage (doc_id, source, text) rows as the documents table that
+    both engines read; returns the DuckDB connection and the table
+    directory."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
+        " source VARCHAR, n_chars BIGINT)"
+    )
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?, 'en', ?, length(?))",
+        [(d, t, src, t) for d, src, t in rows],
+    )
+    con.execute(f"COPY documents TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    return con, str(tmp_path)
+
+
+def _words(n: int, word: str = "w") -> str:
+    return " ".join([word] * n)
+
+
+def test_filter_base_twin_matches_spark(spark, tmp_path):
+    con, sf_dir = _docs_dir(
+        tmp_path,
+        [
+            # case and whitespace differ only: one normalized text, one hash
+            (1, "s", "The  Cat\tsat"),
+            (2, "s", " the cat sat "),
+            (3, "s", ""),
+            (4, "s", "a b c d e f g h i j"),
+            (5, "s", _words(120, "x")),
+        ],
+    )
+    base, bounds = _filter_base(spark, sf_dir)
+    spark_base = [tuple(r) for r in base.orderBy("doc_id").collect()]
+    spark_bounds = [tuple(r) for r in bounds.collect()]
+    duck_base = con.sql(
+        f"WITH {_FILTER_BASE_SQL} SELECT doc_id, n_chars, h, n_tok, q FROM base ORDER BY doc_id"
+    ).fetchall()
+    duck_bounds = con.sql(f"WITH {_FILTER_BASE_SQL} SELECT p_lo, p_hi FROM bounds").fetchall()
+    assert duck_base == spark_base
+    assert duck_bounds == spark_bounds
+    h = {r[0]: r[2] for r in spark_base}
+    assert h[1] == h[2] != h[4]
+    # the empty text is a document too: one empty token, hash of ""
+    assert spark_base[2][:4] == (3, 0, hashlib.md5(b"").hexdigest(), 1)
+
+
+def test_packing_twins_match_spark_at_the_window_boundary(spark, tmp_path):
+    con, sf_dir = _docs_dir(
+        tmp_path,
+        [
+            (1, "s1", _words(CTX_LEN)),  # ends exactly on the boundary
+            (2, "s1", _words(10)),  # starts the next window
+            (3, "s1", _words(CTX_LEN)),  # straddles into window 2
+            (4, "s2", "one"),  # another source packs from 0
+        ],
+    )
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "n_tokens", F.size(norm_tokens(F.col("text")))
+    )
+    window_id, crosses = _windows(CTX_LEN)
+    spark_rows = [
+        tuple(r)
+        for r in _packed(docs)
+        .select("doc_id", "start_offset", window_id, crosses)
+        .orderBy("doc_id")
+        .collect()
+    ]
+    duck_rows = con.sql(
+        f"WITH {_PACK_TOKS_SQL}, packed AS (SELECT doc_id, n_tokens, {_PACK_OFFSET_SQL}"
+        f" AS start_offset FROM toks) SELECT doc_id, start_offset, {_windows_sql(CTX_LEN)}"
+        " FROM packed ORDER BY doc_id"
+    ).fetchall()
+    assert duck_rows == spark_rows == [
+        (1, 0, 0, 0),
+        (2, CTX_LEN, 1, 0),
+        (3, CTX_LEN + 10, 1, 1),
+        (4, 0, 0, 0),
+    ]
+
+
+def test_token_ids_twin_breaks_count_ties_by_token(spark, tmp_path):
+    # "b", "a" and "x01" tie at 3 occurrences; 19 more tokens tie at 2
+    # for the V - 3 slots left, so the vocabulary cut falls inside that
+    # tie: "x19" and "y" fall out of vocabulary, as does "zz"
+    tied = [f"x{i:02d}" for i in range(1, 20)] + ["y"]
+    con, sf_dir = _docs_dir(
+        tmp_path,
+        [
+            (1, "s", "b a b a " + " ".join(tied)),
+            (2, "s", "A B " + " ".join(tied)),
+            (3, "s", "zz x01"),
+        ],
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    spark_rows = [
+        (r["doc_id"], list(r["input_ids"]), r["n_tokens"], r["n_oov"])
+        for r in _token_ids(docs).orderBy("doc_id").collect()
+    ]
+    duck_rows = [
+        (d, list(ids), n, oov)
+        for d, ids, n, oov in con.sql(
+            f"SELECT * FROM ({TOKENIZE_TO_IDS_ARRAY_SQL}) ORDER BY doc_id"
+        ).fetchall()
+    ]
+    assert duck_rows == spark_rows
+    vocab = con.sql(
+        f"WITH {_token_vocab_sql()} SELECT token, token_id FROM vocab ORDER BY token_id"
+    ).fetchall()
+    assert vocab == [("a", 1), ("b", 2)] + [
+        (t, i) for i, t in enumerate(tied[: TOKENIZE_VOCAB_V - 2], 3)
+    ]
+    assert spark_rows[2] == (3, [TOKENIZE_UNK_ID, 3], 2, 1)
+
+
+def _tb_h(doc_id: int) -> int:
+    """``md5_long`` of the salted doc_id, the take-while's order key."""
+    return int(hashlib.md5(f"{TB_SALT}{doc_id}".encode()).hexdigest()[:15], 16)
+
+
+def test_token_budget_keeps_the_doc_that_meets_the_budget_exactly(spark, tmp_path):
+    # two docs in one hash bucket (a before b) and one in a lower bucket
+    # (c): c and a sum to the budget exactly, so the boundary bucket's
+    # doc-grain pass keeps a and drops b
+    by_bucket: dict[int, list[int]] = {}
+    for d in range(1, 400):
+        by_bucket.setdefault(_tb_h(d) % TB_BUCKETS, []).append(d)
+    shared = min(b for b, ds in by_bucket.items() if len(ds) >= 2 and b > min(by_bucket))
+    a, b = sorted(by_bucket[shared][:2], key=_tb_h)
+    c = by_bucket[min(by_bucket)][0]
+    half = TB_BUDGET_TOKENS // 2
+    con, sf_dir = _docs_dir(
+        tmp_path,
+        [
+            (c, "s1", _words(half)),
+            (a, "s1", _words(TB_BUDGET_TOKENS - half)),
+            (b, "s1", "w"),
+            (1000, "s2", _words(3)),  # a source that fits whole
+        ],
+    )
+    spark_rows = sorted(tuple(r) for r in token_budget_sample(spark, sf_dir).collect())
+    duck_rows = sorted(con.sql(TOKEN_BUDGET_SAMPLE_SQL).fetchall())
+    assert duck_rows == spark_rows == [
+        ("s1", 3, TB_BUDGET_TOKENS + 1, 2, TB_BUDGET_TOKENS, 1.0, round(1000 / 1001 + 1e-9, 6)),
+        ("s2", 1, 3, 1, 3, round(3 / TB_BUDGET_TOKENS + 1e-9, 6), 1.0),
     ]

@@ -11,7 +11,7 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from datatransformertools_spark.sources.tables import events_event_time
+from datatransformertools_spark.sources.tables import events_event_time, events_ts_us, load_table
 
 
 def test_stream_interval_join_boundary(spark, tmp_path):
@@ -114,9 +114,6 @@ def test_stream_outer_interval_join_emits_null_rows(spark, sf_dir):
     purchase in-window (null-joined) once the watermark passes
     their horizon — and in the safe comparison region, matched +
     unmatched must account for every click."""
-    from pyspark.sql import functions as F
-
-    from datatransformertools_spark.sources.tables import events_ts_us, load_table
     from datatransformertools_spark.streaming.events import (
         _IJ_INTERVAL_US,
         _IJ_SAFE_SLACK_US,
@@ -235,7 +232,6 @@ def test_bitmap_rollup_update_mode_state_bounded(drain_two_batches):
     then sentinel): batch 2 touches only the sentinel's key, so its
     update emission must be ≤ 1 row — NOT the whole table, which is
     what the replaced complete-mode twin re-emitted every batch."""
-    from datatransformertools_spark.sources.tables import events_ts_us
     from datatransformertools_spark.streaming.events import stream_bitmap_rollup
 
     _, progresses = drain_two_batches(
@@ -264,7 +260,6 @@ def test_stream_dau_append_emits_each_day_once_and_evicts(spark, sf_dir, drain_t
     complete-mode re-emission), and (c) report state rows REMOVED
     from BOTH stateful operators once the sentinel pushes the
     watermark past the real days."""
-    from datatransformertools_spark.sources.tables import events_ts_us
     from datatransformertools_spark.streaming.events import stream_daily_users
 
     day_us = 86_400_000_000

@@ -20,6 +20,8 @@ from datatransformertools_spark.operators.timeseries import (
     HOLT_HORIZON,
     HW_GAMMA,
     HW_SEASON,
+    events_holt_forecast,
+    events_holt_winters,
 )
 
 
@@ -75,8 +77,6 @@ def tiny_dir(spark, tmp_path_factory):
 
 
 def test_holt_single_point_is_init_state(spark, tiny_dir):
-    from datatransformertools_spark.operators.timeseries import events_holt_forecast
-
     rows = {
         (r["event_type"], r["h"]): r
         for r in events_holt_forecast(spark, tiny_dir).collect()
@@ -89,8 +89,6 @@ def test_holt_single_point_is_init_state(spark, tiny_dir):
 
 
 def test_holt_matches_reference_recursion(spark, tiny_dir):
-    from datatransformertools_spark.operators.timeseries import events_holt_forecast
-
     l, b = _holt_ref([4.0, 6.0, 8.0])
     rows = {r["h"]: r for r in events_holt_forecast(spark, tiny_dir).collect() if r["event_type"] == "gap"}
     assert rows[2]["level"] == round(l + 1e-9, 6)
@@ -99,8 +97,6 @@ def test_holt_matches_reference_recursion(spark, tiny_dir):
 
 
 def test_holt_winters_season_indexes_by_hour_of_day(spark, tiny_dir):
-    from datatransformertools_spark.operators.timeseries import events_holt_winters
-
     # the gap series observes hours-of-day 0, 1, 3 — slot 2 must stay
     # untouched (0.0) and slot 3 must carry the update from the
     # hour-3 observation even though it is the 3rd element.
@@ -116,8 +112,6 @@ def test_holt_winters_season_indexes_by_hour_of_day(spark, tiny_dir):
 
 
 def test_holt_winters_single_point(spark, tiny_dir):
-    from datatransformertools_spark.operators.timeseries import events_holt_winters
-
     rows = [r for r in events_holt_winters(spark, tiny_dir).collect() if r["event_type"] == "solo"]
     assert len(rows) == HOLT_HORIZON
     for r in rows:
