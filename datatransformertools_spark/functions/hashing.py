@@ -14,17 +14,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# 15 hex chars = 60 bits — always fits a signed int64.
-_HEX_CHARS = 15
-
 
 def md5_long(col: Column, salt: str | None = None) -> Column:
-    """Stable 60-bit non-negative int64 hash of a string column.
+    """Stable 60-bit non-negative int64 hash of a string column: the
+    first 15 hex chars of md5(salt || col), which always fit a signed
+    int64.
 
-    DuckDB equivalent: ``('0x' || substr(md5(<salt>||x),1,15))::BIGINT``.
+    DuckDB twin: ``md5_long_sql``.
     """
     s = F.concat(F.lit(salt), col) if salt is not None else col
-    return F.conv(F.substring(F.md5(s), 1, _HEX_CHARS), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+
+def md5_long_sql(expr: str, salt: str | None = None) -> str:
+    """DuckDB twin of ``md5_long``."""
+    s = f"'{salt}' || {expr}" if salt is not None else expr
+    return f"('0x' || substr(md5({s}), 1, 15))::BIGINT"
 
 
 def md5_u32(col: Column) -> Column:
@@ -36,7 +41,7 @@ def md5_u32(col: Column) -> Column:
 
 def md5_u32_sql(expr: str) -> str:
     """DuckDB twin of ``md5_u32``."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT & 4294967295"
+    return f"{md5_long_sql(expr)} & 4294967295"
 
 
 def md5_bits32(col: Column, offset: int) -> Column:
@@ -59,14 +64,7 @@ def minhash_signature(shingles: Column, num_perm: int) -> Column:
     that need the signature as an array column without an exchange.
     """
     sigs = [
-        F.array_min(
-            F.transform(
-                shingles,
-                lambda s, i=i: F.conv(
-                    F.substring(F.md5(F.concat(F.lit(f"{i}:"), s)), 1, _HEX_CHARS), 16, 10
-                ).cast("long"),
-            )
-        )
+        F.array_min(F.transform(shingles, lambda s, i=i: md5_long(s, salt=f"{i}:")))
         for i in range(num_perm)
     ]
     return F.array(*sigs)

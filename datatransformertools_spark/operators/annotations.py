@@ -22,16 +22,17 @@ reference's clipping path, converter_to_yolo_data.py:84-87).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from datatransformertools_spark.functions.bbox import from_yolo, to_yolo
-from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql, md5_u32, md5_u32_sql
 from datatransformertools_spark.sources.annotations import (
+    read_competition_json,
     read_yolo_predictions,
     write_competition_json,
     write_yolo_labels,
+    yolo_line,
 )
 from datatransformertools_spark.sources.sinks import roundtrip_path
 from datatransformertools_spark.sources.tables import load_table
@@ -45,6 +46,31 @@ CLASS_MAP = {
     4: "Table",
     5: "Figure",
 }
+N_CLASSES = len(CLASS_MAP)
+# predictions below this confidence are dropped (predictions_to_json.py)
+CONF_THRESHOLD = 0.25
+
+
+def class_name(cls: Column) -> Column:
+    """The class name of id ``cls`` (NULL off the map)."""
+    return F.create_map(*[F.lit(v) for kv in CLASS_MAP.items() for v in kv])[cls]
+
+
+def class_name_sql(cls: str) -> str:
+    """DuckDB twin of ``class_name``."""
+    whens = " ".join(f"WHEN {k} THEN '{v}'" for k, v in CLASS_MAP.items())
+    return f"CASE {cls} {whens} END"
+
+
+def _doc_png(uid: Column) -> Column:
+    """The synthetic image file name of ``uid``: ``doc_00042.png``."""
+    return F.concat(F.lit("doc_"), F.lpad(uid.cast("string"), 5, "0"), F.lit(".png"))
+
+
+def _doc_png_sql(uid: str) -> str:
+    """DuckDB twin of ``_doc_png``."""
+    return f"'doc_' || lpad(CAST({uid} AS VARCHAR), 5, '0') || '.png'"
+
 
 # ---------------------------------------------------------------------------
 # Synthetic deterministic annotation set (shared Spark builder + SQL CTE)
@@ -62,60 +88,39 @@ def annotations_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         eid.alias("ann_id"),
         uid.alias("image_id"),
-        F.concat(F.lit("doc_"), F.lpad(uid.cast("string"), 5, "0"), F.lit(".png")).alias("file_name"),
+        _doc_png(uid).alias("file_name"),
         (F.lit(640) + (uid % 7) * 160).cast("double").alias("img_w"),
         (F.lit(480) + (uid % 5) * 120).cast("double").alias("img_h"),
         ((eid % 97) * F.lit(12.0)).alias("x"),
         ((eid % 89) * F.lit(9.0)).alias("y"),
         (val * 2.0 + 20.0).alias("w"),
         (val * 1.5 + 15.0).alias("h"),
-        (eid % 6).cast("int").alias("cls"),
+        (eid % N_CLASSES).cast("int").alias("cls"),
         ((eid % 100) / F.lit(100.0)).alias("conf"),
     )
 
 
-ANN_BASE_SQL = """
+ANN_BASE_SQL = f"""
 ann_base AS (
   SELECT
     event_id                                                        AS ann_id,
     user_id                                                         AS image_id,
-    'doc_' || lpad(CAST(user_id AS VARCHAR), 5, '0') || '.png'      AS file_name,
+    {_doc_png_sql('user_id')}      AS file_name,
     CAST(640 + (user_id % 7) * 160 AS DOUBLE)                       AS img_w,
     CAST(480 + (user_id % 5) * 120 AS DOUBLE)                       AS img_h,
     (event_id % 97) * 12.0                                          AS x,
     (event_id % 89) * 9.0                                           AS y,
     value * 2.0 + 20.0                                              AS w,
     value * 1.5 + 15.0                                              AS h,
-    CAST(event_id % 6 AS INTEGER)                                   AS cls,
+    CAST(event_id % {N_CLASSES} AS INTEGER)                                   AS cls,
     (event_id % 100) / 100.0                                        AS conf
   FROM events
 )
 """
 
-# ---------------------------------------------------------------------------
-# yolo_normalize — converter_to_yolo_data.py:81-92 (to_yolo_line)
-# ---------------------------------------------------------------------------
-
-
-def yolo_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ann = annotations_df(spark, sf_dir)
-    xc, yc, wn, hn = to_yolo(
-        F.col("x"), F.col("y"), F.col("w"), F.col("h"), F.col("img_w"), F.col("img_h")
-    )
-    return ann.select(
-        "ann_id",
-        "image_id",
-        "cls",
-        F.round(xc + 1e-9, 6).alias("x_center"),
-        F.round(yc + 1e-9, 6).alias("y_center"),
-        F.round(wn + 1e-9, 6).alias("w_norm"),
-        F.round(hn + 1e-9, 6).alias("h_norm"),
-    )
-
-
-YOLO_NORMALIZE_SQL = f"""
-WITH {ANN_BASE_SQL},
-clipped AS (
+# DuckDB twin of ``clip_box`` over ``ann_base``: the clipped box
+# ``cx, cy, cw, ch`` (converter_to_yolo_data.py:84-87)
+_CLIPPED_SQL = """clipped AS (
   SELECT *,
     greatest(0.0, least(x, img_w)) AS cx,
     greatest(0.0, least(y, img_h)) AS cy
@@ -126,7 +131,36 @@ clipped2 AS (
     greatest(0.0, least(w, img_w - cx)) AS cw,
     greatest(0.0, least(h, img_h - cy)) AS ch
   FROM clipped
-)
+)"""
+
+# ---------------------------------------------------------------------------
+# yolo_normalize — converter_to_yolo_data.py:81-92 (to_yolo_line)
+# ---------------------------------------------------------------------------
+
+
+def _yolo_labels(spark: SparkSession, sf_dir: str, *keys: str | Column) -> DataFrame:
+    """``keys`` plus the 6-dp YOLO label columns ``x_center, y_center,
+    w_norm, h_norm`` of every annotation (clipped, then normalized)."""
+    ann = annotations_df(spark, sf_dir)
+    xc, yc, wn, hn = to_yolo(
+        F.col("x"), F.col("y"), F.col("w"), F.col("h"), F.col("img_w"), F.col("img_h")
+    )
+    return ann.select(
+        *keys,
+        F.round(xc + 1e-9, 6).alias("x_center"),
+        F.round(yc + 1e-9, 6).alias("y_center"),
+        F.round(wn + 1e-9, 6).alias("w_norm"),
+        F.round(hn + 1e-9, 6).alias("h_norm"),
+    )
+
+
+def yolo_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _yolo_labels(spark, sf_dir, "ann_id", "image_id", "cls")
+
+
+YOLO_NORMALIZE_SQL = f"""
+WITH {ANN_BASE_SQL},
+{_CLIPPED_SQL}
 SELECT
   ann_id, image_id, cls,
   round((cx + cw / 2.0) / img_w + 1e-9, 6) AS x_center,
@@ -152,14 +186,13 @@ def yolo_denormalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ax, ay, aw, ah = from_yolo(
         F.col("xc"), F.col("yc"), F.col("wn"), F.col("hn"), F.col("img_w"), F.col("img_h")
     )
-    mapping = F.create_map(*[F.lit(v) for kv in CLASS_MAP.items() for v in kv])
     return (
-        norm.filter(F.col("conf") >= 0.25)
+        norm.filter(F.col("conf") >= CONF_THRESHOLD)
         .select(
             "ann_id",
             "file_name",
             F.col("cls").alias("category_id"),
-            mapping[F.col("cls")].alias("category_name"),
+            class_name(F.col("cls")).alias("category_name"),
             F.round(ax + 1e-9, 2).alias("x_min"),
             F.round(ay + 1e-9, 2).alias("y_min"),
             F.round(aw + 1e-9, 2).alias("bbox_w"),
@@ -171,21 +204,14 @@ def yolo_denormalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 YOLO_DENORMALIZE_SQL = f"""
 WITH {ANN_BASE_SQL},
+{_CLIPPED_SQL},
 norm AS (
   SELECT ann_id, image_id, file_name, img_w, img_h, cls, conf,
     (cx + cw / 2.0) / img_w AS xc,
     (cy + ch / 2.0) / img_h AS yc,
     cw / img_w AS wn,
     ch / img_h AS hn
-  FROM (
-    SELECT *, greatest(0.0, least(w, img_w - cx)) AS cw,
-              greatest(0.0, least(h, img_h - cy)) AS ch
-    FROM (
-      SELECT *, greatest(0.0, least(x, img_w)) AS cx,
-                greatest(0.0, least(y, img_h)) AS cy
-      FROM ann_base
-    )
-  )
+  FROM clipped2
 ),
 denorm AS (
   SELECT *,
@@ -202,15 +228,14 @@ denorm2 AS (
 SELECT
   ann_id, file_name,
   cls AS category_id,
-  CASE cls WHEN 0 THEN 'Background' WHEN 1 THEN 'Text' WHEN 2 THEN 'Title'
-           WHEN 3 THEN 'List' WHEN 4 THEN 'Table' WHEN 5 THEN 'Figure' END AS category_name,
+  {class_name_sql('cls')} AS category_name,
   round(dx + 1e-9, 2) AS x_min,
   round(dy + 1e-9, 2) AS y_min,
   round(dw + 1e-9, 2) AS bbox_w,
   round(dh + 1e-9, 2) AS bbox_h,
   round(conf + 1e-9, 2) AS confidence
 FROM denorm2
-WHERE conf >= 0.25
+WHERE conf >= {CONF_THRESHOLD}
 """
 
 # ---------------------------------------------------------------------------
@@ -219,14 +244,25 @@ WHERE conf >= 0.25
 # materialization (the reference collects every file name into sklearn).
 # ---------------------------------------------------------------------------
 
+TRAIN_PCT = 80
+
+
+def _is_train(file_name: Column) -> Column:
+    """Whether the image ``file_name`` falls in the train split."""
+    return md5_long(file_name, salt="split:") % 100 < TRAIN_PCT
+
+
+def _is_train_sql(file_name: str) -> str:
+    """DuckDB twin of ``_is_train``."""
+    return f"{md5_long_sql(file_name, salt='split:')} % 100 < {TRAIN_PCT}"
+
 
 def train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = annotations_df(spark, sf_dir).select("image_id", "file_name").distinct()
-    bucket = md5_long(F.col("file_name"), salt="split:") % 100
     return images.select(
         "image_id",
         "file_name",
-        F.when(bucket < 80, F.lit("train")).otherwise(F.lit("val")).alias("split"),
+        F.when(_is_train(F.col("file_name")), F.lit("train")).otherwise(F.lit("val")).alias("split"),
     )
 
 
@@ -235,7 +271,7 @@ WITH {ANN_BASE_SQL},
 images AS (SELECT DISTINCT image_id, file_name FROM ann_base)
 SELECT
   image_id, file_name,
-  CASE WHEN ('0x' || substr(md5('split:' || file_name), 1, 15))::BIGINT % 100 < 80
+  CASE WHEN {_is_train_sql('file_name')}
        THEN 'train' ELSE 'val' END AS split
 FROM images
 """
@@ -254,12 +290,10 @@ def dataset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.when(F.col("event_type") != "error", 1).otherwise(0)).alias("n_boxes"),
     )
-    file_name = F.concat(F.lit("doc_"), F.lpad(F.col("image_id").cast("string"), 5, "0"), F.lit(".png"))
-    bucket = md5_long(file_name, salt="split:") % 100
     flagged = per_image.select(
         "image_id",
         "n_boxes",
-        (bucket < 80).cast("int").alias("is_train"),
+        _is_train(_doc_png(F.col("image_id"))).cast("int").alias("is_train"),
         (F.col("n_boxes") == 0).cast("int").alias("is_missing"),
     )
     return flagged.agg(
@@ -272,7 +306,7 @@ def dataset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DATASET_STATS_SQL = """
+DATASET_STATS_SQL = f"""
 WITH per_image AS (
   SELECT
     user_id AS image_id,
@@ -284,7 +318,7 @@ WITH per_image AS (
 flagged AS (
   SELECT
     image_id, n_boxes,
-    CASE WHEN ('0x' || substr(md5('split:' || 'doc_' || lpad(CAST(image_id AS VARCHAR), 5, '0') || '.png'), 1, 15))::BIGINT % 100 < 80
+    CASE WHEN {_is_train_sql(_doc_png_sql('image_id'))}
          THEN 1 ELSE 0 END AS is_train,
     CASE WHEN n_boxes = 0 THEN 1 ELSE 0 END AS is_missing
   FROM per_image
@@ -305,19 +339,20 @@ FROM flagged
 # ---------------------------------------------------------------------------
 
 
+_CLASS_VALUES = ", ".join(f"({k}, '{v}')" for k, v in sorted(CLASS_MAP.items()))
+
+
 def class_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pure Catalyst LocalRelation (VALUES) — avoids the RDD-backed
     # createDataFrame path, whose py4j/job overhead dwarfs a 6-row dim.
-    values = ", ".join(f"({k}, '{v}')" for k, v in sorted(CLASS_MAP.items()))
     return spark.sql(
-        f"SELECT category_id, category_name FROM (VALUES {values}) AS t(category_id, category_name)"
+        f"SELECT category_id, category_name FROM (VALUES {_CLASS_VALUES}) AS t(category_id, category_name)"
     ).select(F.col("category_id").cast("int"), "category_name")
 
 
-CLASS_MAP_SQL = """
+CLASS_MAP_SQL = f"""
 SELECT * FROM (VALUES
-  (0, 'Background'), (1, 'Text'), (2, 'Title'),
-  (3, 'List'), (4, 'Table'), (5, 'Figure')
+  {_CLASS_VALUES}
 ) AS t(category_id, category_name)
 """
 
@@ -343,18 +378,7 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings round-trip doubles exactly, so the hash certifies writer
     formatting AND reader parsing; the oracle computes the identical
     lines straight from the base CTE."""
-    ann = annotations_df(spark, sf_dir)
-    xc, yc, wn, hn = to_yolo(
-        F.col("x"), F.col("y"), F.col("w"), F.col("h"), F.col("img_w"), F.col("img_h")
-    )
-    labels = ann.select(
-        "file_name",
-        F.col("cls").alias("category_id"),
-        F.round(xc + 1e-9, 6).alias("x_center"),
-        F.round(yc + 1e-9, 6).alias("y_center"),
-        F.round(wn + 1e-9, 6).alias("w_norm"),
-        F.round(hn + 1e-9, 6).alias("h_norm"),
-    )
+    labels = _yolo_labels(spark, sf_dir, "file_name", F.col("cls").alias("category_id"))
     path = roundtrip_path(spark, "yolo_labels")
     # key-only exchange: AQE sizes the label encode/write fan-out by
     # bytes instead of writing a fixed count of near-empty part files
@@ -362,15 +386,7 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = labels.repartition("file_name")
     write_yolo_labels(labels, path)
     back = read_yolo_predictions(spark, path)
-    line = F.concat_ws(
-        " ",
-        F.col("image_stem"),
-        F.col("category_id").cast("string"),
-        F.format_string("%.6f", F.col("x_center")),
-        F.format_string("%.6f", F.col("y_center")),
-        F.format_string("%.6f", F.col("w_norm")),
-        F.format_string("%.6f", F.col("h_norm")),
-    )
+    line = yolo_line(F.col("image_stem"))
     # 32-bit hash slices: the per-class SUM stays far inside int64
     # at any corpus size (2³² · rows), and summing is order-
     # independent, so shard/partition order can't move the checksum.
@@ -384,18 +400,7 @@ def yolo_label_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 YOLO_LABEL_ROUNDTRIP_SQL = f"""
 WITH {ANN_BASE_SQL},
-clipped AS (
-  SELECT *,
-    greatest(0.0, least(x, img_w)) AS cx,
-    greatest(0.0, least(y, img_h)) AS cy
-  FROM ann_base
-),
-clipped2 AS (
-  SELECT *,
-    greatest(0.0, least(w, img_w - cx)) AS cw,
-    greatest(0.0, least(h, img_h - cy)) AS ch
-  FROM clipped
-),
+{_CLIPPED_SQL},
 lines AS (
   SELECT cls AS category_id,
          regexp_replace(file_name, '\\.[a-zA-Z]+$', '')
@@ -418,7 +423,7 @@ GROUP BY category_id
 def competition_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Competition-JSON write→read round-trip: denormalized
     predictions grouped per image and written as JSON-lines shards
-    (write_competition_json), read back with schema inference,
+    (write_competition_json), read back (read_competition_json),
     re-exploded, and checksummed per class (distinct images, box
     count, md5 sum over the 2-dp bbox + class tuple). The
     `corruption: none` wrapper rows are counted too, so the writer's
@@ -426,30 +431,7 @@ def competition_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     preds = yolo_denormalize(spark, sf_dir)
     path = roundtrip_path(spark, "competition_json")
     write_competition_json(preds, path)
-    schema = T.StructType(
-        [
-            T.StructField("file_name", T.StringType()),
-            T.StructField(
-                "annotations",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("bbox", T.ArrayType(T.DoubleType())),
-                            T.StructField("category_id", T.IntegerType()),
-                            T.StructField("category_name", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField(
-                "corruption",
-                T.StructType(
-                    [T.StructField("type", T.StringType()), T.StructField("severity", T.LongType())]
-                ),
-            ),
-        ]
-    )
-    back = spark.read.schema(schema).json(path)
+    back = read_competition_json(spark, path)
     ex = back.select(
         "file_name",
         (F.col("corruption.type") == "none").cast("long").alias("envelope_ok"),

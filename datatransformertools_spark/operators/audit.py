@@ -24,7 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql
 from datatransformertools_spark.sources.tables import load_table
 
 # (table, key column) pairs every big shuffle in the engine keys on.
@@ -512,7 +512,7 @@ WITH arrival AS (
   FROM events GROUP BY 1
 ),
 scatter AS (
-  SELECT ('0x' || substr(md5('zm:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT % 16 AS chunk,
+  SELECT {md5_long_sql('CAST(event_id AS VARCHAR)', salt='zm:')} % 16 AS chunk,
          min(value) AS vmin, max(value) AS vmax
   FROM events GROUP BY 1
 )
@@ -652,7 +652,7 @@ def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_pos_sql(i: int) -> str:
-    return f"(('0x' || substr(md5('{i}:' || k), 1, 15))::BIGINT % {BLOOM_M})"
+    return f"({md5_long_sql('k', salt=f'{i}:')} % {BLOOM_M})"
 
 
 BLOOM_JOIN_PRUNE_SQL = f"""

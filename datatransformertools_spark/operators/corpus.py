@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -359,9 +359,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 STRATIFIED_SAMPLE_SQL = f"""
 SELECT doc_id, source,
-       ('0x' || substr(md5('{SAMPLE_SALT}' || doc_id), 1, 15))::BIGINT % {SAMPLE_BUCKETS} AS sample_key
+       {md5_long_sql('doc_id', salt=SAMPLE_SALT)} % {SAMPLE_BUCKETS} AS sample_key
 FROM documents
-WHERE ('0x' || substr(md5('{SAMPLE_SALT}' || doc_id), 1, 15))::BIGINT % {SAMPLE_BUCKETS}
+WHERE {md5_long_sql('doc_id', salt=SAMPLE_SALT)} % {SAMPLE_BUCKETS}
       < (CAST(substr(source, 4, 10) AS INTEGER) % 10 + 1) / 10.0 * {SAMPLE_BUCKETS}
 """
 
@@ -387,11 +387,11 @@ def corpus_mix_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS_MIX_SUMMARY_SQL = f"""
 SELECT source,
        count(*) AS n_total,
-       CAST(sum(CASE WHEN ('0x' || substr(md5('{SAMPLE_SALT}' || doc_id), 1, 15))::BIGINT % {SAMPLE_BUCKETS}
+       CAST(sum(CASE WHEN {md5_long_sql('doc_id', salt=SAMPLE_SALT)} % {SAMPLE_BUCKETS}
                           < (CAST(substr(source, 4, 10) AS INTEGER) % 10 + 1) / 10.0 * {SAMPLE_BUCKETS}
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
        round((CAST(substr(source, 4, 10) AS INTEGER) % 10 + 1) / 10.0 + 1e-9, 4) AS target_rate,
-       round(sum(CASE WHEN ('0x' || substr(md5('{SAMPLE_SALT}' || doc_id), 1, 15))::BIGINT % {SAMPLE_BUCKETS}
+       round(sum(CASE WHEN {md5_long_sql('doc_id', salt=SAMPLE_SALT)} % {SAMPLE_BUCKETS}
                            < (CAST(substr(source, 4, 10) AS INTEGER) % 10 + 1) / 10.0 * {SAMPLE_BUCKETS}
                       THEN 1 ELSE 0 END) * 1.0 / count(*) + 1e-9, 4) AS actual_rate
 FROM documents
@@ -680,7 +680,7 @@ WITH scored AS (
   SELECT doc_id,
          {QUALITY_SCORE_SQL} AS quality,
          least(CAST(floor({QUALITY_SCORE_SQL} * 10) AS BIGINT), 9) AS stratum,
-         CASE WHEN ('0x' || substr(md5('{SPLIT_SALT}' || doc_id), 1, 15))::BIGINT % 100 < {VAL_PCT}
+         CASE WHEN {md5_long_sql('doc_id', salt=SPLIT_SALT)} % 100 < {VAL_PCT}
               THEN 'val' ELSE 'train' END AS split
   FROM documents
 )
@@ -727,7 +727,7 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SHARD_ASSIGNMENT_SQL = f"""
-SELECT ('0x' || substr(md5('{SHARD_SALT}' || doc_id), 1, 15))::BIGINT % {N_SHARDS} AS shard,
+SELECT {md5_long_sql('doc_id', salt=SHARD_SALT)} % {N_SHARDS} AS shard,
        CAST(count(*) AS BIGINT)     AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
        min(doc_id)                  AS min_doc_id,
@@ -787,7 +787,7 @@ def shard_source_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SHARD_SOURCE_MIX_AUDIT_SQL = f"""
 WITH cells AS (
-  SELECT ('0x' || substr(md5('{SHARD_SALT}' || doc_id), 1, 15))::BIGINT % {N_SHARDS} AS shard,
+  SELECT {md5_long_sql('doc_id', salt=SHARD_SALT)} % {N_SHARDS} AS shard,
          source, count(*) AS n
   FROM documents GROUP BY 1, 2
 ),
@@ -1330,11 +1330,10 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_sql() -> str:
-    split = (
-        "CASE WHEN ('0x' || substr(md5('" + SPLIT_SALT + "' || {c}), 1, 15))::BIGINT"
-        f" % 100 < {VAL_PCT} THEN 'val' ELSE 'train' END"
-    )
-    sa, sb = split.format(c="doc_a"), split.format(c="doc_b")
+    def split(c: str) -> str:
+        return f"CASE WHEN {md5_long_sql(c, salt=SPLIT_SALT)} % 100 < {VAL_PCT} THEN 'val' ELSE 'train' END"
+
+    sa, sb = split("doc_a"), split("doc_b")
     return f"""
 WITH labeled AS (
   SELECT least({sa}, {sb}) AS split_lo, greatest({sa}, {sb}) AS split_hi
@@ -2086,7 +2085,7 @@ _TB_GRID_SQL = ", ".join(str(g) for g in TB_BUDGET_GRID)
 # doc_id) order (``ordered``), the naive single-window form
 _TB_ORDERED_SQL = rf"""base AS (
   SELECT source, doc_id,
-         ('0x' || substr(md5('{TB_SALT}' || doc_id), 1, 15))::BIGINT AS h,
+         {md5_long_sql('doc_id', salt=TB_SALT)} AS h,
          CAST(len({norm_tokens_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 ),
@@ -2414,7 +2413,7 @@ packed AS (
 SELECT doc_id, source, quality_score, n_dups, max_containment,
        ids_md5, n_tokens, n_oov, start_offset,
        {_windows_sql(CTX_LEN)},
-       ('0x' || substr(md5('{SHARD_SALT}' || doc_id), 1, 15))::BIGINT % {N_SHARDS} AS shard
+       {md5_long_sql('doc_id', salt=SHARD_SALT)} % {N_SHARDS} AS shard
 FROM packed
 """
 )

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
-from datatransformertools_spark.functions.hashing import lsh_band_keys
+from datatransformertools_spark.functions.hashing import lsh_band_keys, md5_long, md5_long_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -41,6 +41,15 @@ from datatransformertools_spark.functions.text import (
     word_shingles,
 )
 from datatransformertools_spark.functions.vectors import cosine_sql, flat_cols, flat_cosine_prenormed
+from datatransformertools_spark.operators.similarity import (
+    DIM,
+    KMEANS_ITERS,
+    _emb_block_chain,
+    _emb_pairs_parts,
+    _multiprobe,
+    _vectors,
+    trained_centroids,
+)
 from datatransformertools_spark.operators.text_analysis import (
     quality_score_expr,
     quality_terms_sql,
@@ -375,9 +384,7 @@ def _signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     this codegen'd aggregate — measured, not guessed.)"""
     sh = _shingle_df(spark, sf_dir)
     aggs = [
-        F.min(
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))), 1, 15), 16, 10).cast("long")
-        ).alias(f"sig{i}")
+        F.min(md5_long(F.col("shingle"), salt=f"{i}:")).alias(f"sig{i}")
         for i in range(NUM_PERM)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
@@ -461,7 +468,7 @@ def _minhash_ctes(prefix: str = "", keep_sigs: bool = False) -> str:
     ``{prefix}exploded`` CTEs over ``shingles``. ``keep_sigs`` carries
     the signature columns through the explode."""
     sig_aggs = ",\n    ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS sig{i}"
+        f"min({md5_long_sql('shingle', salt=f'{i}:')}) AS sig{i}"
         for i in range(NUM_PERM)
     )
     band_exprs = ",\n    ".join(
@@ -1217,13 +1224,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operator's own output, i.e. what a production pipeline would
 # persist to storage at this exact stage anyway.
 def _emb_tau_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datatransformertools_spark.operators.similarity import (
-        DIM,
-        KMEANS_ITERS,
-        _vectors,
-        trained_centroids,
-    )
-
     def build() -> DataFrame:
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
         # nrm comes from _vectors, BEFORE the probe explode — after
@@ -1259,59 +1259,6 @@ def _emb_tau_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _EMB_PAIRS_MEMO.get_or_build(spark, sf_dir, build)
 
 
-# Nearest cells each vector probes (IVF multi-probe). Measured by
-# dedup_embedding_recall at sf0.01: probe=1 → 0.32 recall,
-# 2 → 0.75, 3 → 0.95, 4 → 1.0; candidate fan-out is ×EMB_PROBE².
-# 3 is the knee. At scale K grows with the corpus (clusters ∝ N),
-# so 3 probes remain a vanishing fraction of cells.
-EMB_PROBE = 3
-
-
-def _multiprobe(
-    emb: DataFrame, cents: list[list[float]], max_probe: int | None = None,
-    keep_rank: bool = False,
-) -> DataFrame:
-    """Explode each vector to its `max_probe` (default EMB_PROBE)
-    nearest cells (distance asc, ties → lowest cluster id): a
-    literal-centroid codegen projection + explode — no join, no
-    shuffle. array_sort on struct(d, cluster) matches the oracle's
-    ORDER BY d, cluster. With keep_rank, each probe row also carries
-    its 1-based probe rank `rn` (the blocking-curve input).
-
-    Past K_LITERAL_MAX centroids (corpus-derived K on a large
-    corpus) the literal array stops being codegen-viable and the
-    probe ranking switches to the broadcast-join argmin path
-    (`_cells_join`) — identical rank/tie semantics, one extra
-    per-vector window shuffle."""
-    from datatransformertools_spark.operators.similarity import (
-        K_LITERAL_MAX,
-        _cells_join,
-        _cent_literal,
-        _kmeans_dist,
-    )
-
-    n = EMB_PROBE if max_probe is None else max_probe
-    if len(cents) > K_LITERAL_MAX:
-        probed = _cells_join(emb, cents, n, "vec_id")
-        return probed if keep_rank else probed.drop("rn")
-    ranked = F.array_sort(
-        F.transform(
-            _cent_literal(cents),
-            lambda c, i: F.struct(_kmeans_dist(c).alias("d"), i.alias("cluster")),
-        )
-    )
-    if not keep_rank:
-        probes = F.transform(F.slice(ranked, 1, n), lambda s: s["cluster"])
-        return emb.withColumn("cluster", F.explode(probes))
-    return emb.select(
-        "*", F.posexplode(F.slice(ranked, 1, n)).alias("pos", "_probe")
-    ).select(
-        *emb.columns,
-        (F.col("pos") + 1).alias("rn"),
-        F.col("_probe.cluster").alias("cluster"),
-    )
-
-
 # The exact ground-truth pair count is a single deterministic scalar
 # per corpus, and BOTH its consumers (the recall companion and the
 # blocking curve) re-ran the quadratic label-blocked join to get it.
@@ -1334,8 +1281,6 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     deferring it would re-introduce per-consumer rebuilds."""
 
     def count() -> int:
-        from datatransformertools_spark.operators.similarity import DIM, _vectors
-
         # flat-column cosine (r13, guide §4.1): this is the largest
         # pair count in the family (quadratic within-label), so the
         # per-pair kernel must be codegen, not the interpreted fold.
@@ -1361,57 +1306,6 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = _EXACT_PAIRS_MEMO.get_or_build(spark, sf_dir, count)
     return spark.createDataFrame([(n,)], "n_exact_pairs long")
-
-
-def _emb_block_chain(max_rn: int) -> list[str]:
-    """Shared oracle CTE chain for the cluster-blocked embedding
-    family: the Lloyd's loop (same init/quantization/tie-breaks as
-    the Spark side), final-centroid multi-probe assignment keeping
-    probe rank `rn` ≤ max_rn, and the label join. Ends with
-    afx(vec_id, v, cluster, rn, label)."""
-    from datatransformertools_spark.operators.similarity import (
-        _KM_DIST_SQL,
-        KMEANS_ITERS,
-        _lloyd_cte_parts,
-    )
-
-    parts = _lloyd_cte_parts()
-    parts.append(
-        f"""clF AS (
-  SELECT cluster, list(cval ORDER BY dim) AS c FROM c{KMEANS_ITERS} GROUP BY cluster
-)"""
-    )
-    parts.append(
-        f"""af AS (
-  SELECT vec_id, v, cluster, rn FROM (
-    SELECT e.vec_id, e.v, cl.cluster,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_KM_DIST_SQL}, cl.cluster) AS rn
-    FROM e CROSS JOIN clF cl
-  ) WHERE rn <= {max_rn}
-)"""
-    )
-    parts.append(
-        """afx AS (
-  SELECT af.vec_id, af.v, af.cluster, af.rn, l.label
-  FROM af JOIN (SELECT vec_id, label FROM embeddings) l ON af.vec_id = l.vec_id
-)"""
-    )
-    return parts
-
-
-def _emb_pairs_parts() -> list[str]:
-    """Chain + blocked-pairs CTE, shared by the dedup and recall
-    oracles (composed from parts, never by splitting rendered
-    SQL)."""
-    return _emb_block_chain(EMB_PROBE) + [
-        f"""pairs AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) AS cos_sim
-  FROM afx a JOIN afx b
-    ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
-)"""
-    ]
 
 
 def _dedup_embedding_sql() -> str:
@@ -1509,13 +1403,6 @@ def emb_blocking_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pair-keyed aggregate; the probe grid and the level counts
     (both ≤ CURVE_MAX_PROBE rows, constants-bounded) and the 1-row
     exact count ride as broadcast frames (house rule)."""
-    from datatransformertools_spark.operators.similarity import (
-        DIM,
-        KMEANS_ITERS,
-        _vectors,
-        trained_centroids,
-    )
-
     cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
     probed = _multiprobe(
         _vectors(spark, sf_dir), cents, max_probe=CURVE_MAX_PROBE, keep_rank=True

@@ -32,10 +32,15 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.bbox import clip_box, iou_xywh, iou_xywh_sql
-from datatransformertools_spark.operators.annotations import ANN_BASE_SQL, annotations_df
+from datatransformertools_spark.operators.annotations import (
+    _CLIPPED_SQL,
+    ANN_BASE_SQL,
+    CONF_THRESHOLD,
+    N_CLASSES,
+    annotations_df,
+)
 
 IOU_THRESHOLD = 0.5
-CONF_THRESHOLD = 0.25
 
 
 def _gt_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +61,7 @@ def _pred_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     jit = ann.filter((eid % 17) != 0).select(
         eid.alias("pred_id"),
         "image_id",
-        F.when((eid % 13) == 0, (F.col("cls") + 1) % 6).otherwise(F.col("cls")).cast("int").alias("cls"),
+        F.when((eid % 13) == 0, (F.col("cls") + 1) % N_CLASSES).otherwise(F.col("cls")).cast("int").alias("cls"),
         (F.col("x") + ((eid % 7) - 3).cast("double")).alias("px"),
         (F.col("y") + ((eid % 11) - 5).cast("double")).alias("py"),
         F.col("w").alias("pw"),
@@ -86,20 +91,14 @@ def _pred_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GT_SQL = f"""
 {ANN_BASE_SQL},
+{_CLIPPED_SQL},
 gt AS (
-  SELECT ann_id AS gt_id, image_id, cls,
-         cx AS gx, cy AS gy,
-         greatest(0.0, least(w, img_w - cx)) AS gw,
-         greatest(0.0, least(h, img_h - cy)) AS gh
-  FROM (
-    SELECT *, greatest(0.0, least(x, img_w)) AS cx,
-              greatest(0.0, least(y, img_h)) AS cy
-    FROM ann_base
-  )
+  SELECT ann_id AS gt_id, image_id, cls, cx AS gx, cy AS gy, cw AS gw, ch AS gh
+  FROM clipped2
 ),
 pred_raw AS (
   SELECT ann_id AS pred_id, image_id,
-         CAST(CASE WHEN ann_id % 13 = 0 THEN (cls + 1) % 6 ELSE cls END AS INTEGER) AS cls,
+         CAST(CASE WHEN ann_id % 13 = 0 THEN (cls + 1) % {N_CLASSES} ELSE cls END AS INTEGER) AS cls,
          x + CAST((ann_id % 7) - 3 AS DOUBLE) AS px,
          y + CAST((ann_id % 11) - 5 AS DOUBLE) AS py,
          w AS pw, h AS ph, conf, img_w, img_h
@@ -118,7 +117,7 @@ pred AS (
   FROM (
     SELECT *, greatest(0.0, least(px, img_w)) AS cx,
               greatest(0.0, least(py, img_h)) AS cy
-    FROM pred_raw WHERE conf >= 0.25
+    FROM pred_raw WHERE conf >= {CONF_THRESHOLD}
   )
 )
 """

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql
 from datatransformertools_spark.operators.similarity import (
     _init_cents,
     _lloyd_final,
@@ -1986,21 +1986,9 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     truth = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_count"))
-    probes = truth.select(
-        "user_id",
-        "true_count",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        (md5_long(u, salt=f"cms{i}:") % CMS_WIDTH).alias("bucket"),
-                    )
-                    for i in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("rb"),
-    ).select("user_id", "true_count", "rb.row", "rb.bucket")
+    probes = truth.select("user_id", "true_count", F.explode(buckets).alias("rb")).select(
+        "user_id", "true_count", "rb.row", "rb.bucket"
+    )
     est = (
         probes.join(sketch, ["row", "bucket"])
         .groupBy("user_id", "true_count")
@@ -2018,13 +2006,15 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_bucket_sql(i: int) -> str:
-    return f"('0x' || substr(md5('cms{i}:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % {CMS_WIDTH}"
+def _cms_bucket_sql(i: int, w: int) -> str:
+    """DuckDB twin of the Count-Min bucket of user_id in row ``i`` of a
+    width-``w`` sketch."""
+    return f"{md5_long_sql('CAST(user_id AS VARCHAR)', salt=f'cms{i}:')} % {w}"
 
 
 EVENTS_HEAVY_HITTERS_CMS_SQL = f"""
 WITH rb AS (
-  {" UNION ALL ".join(f"SELECT user_id, {i} AS row, {_cms_bucket_sql(i)} AS bucket FROM events" for i in range(CMS_DEPTH))}
+  {" UNION ALL ".join(f"SELECT user_id, {i} AS row, {_cms_bucket_sql(i, CMS_WIDTH)} AS bucket FROM events" for i in range(CMS_DEPTH))}
 ),
 sketch AS (SELECT row, bucket, count(*) AS cnt FROM rb GROUP BY 1, 2),
 truth AS (SELECT user_id, count(*) AS true_count FROM events GROUP BY 1),
@@ -2116,11 +2106,8 @@ def cms_width_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_width_error_sql() -> str:
-    def bucket(i: int, w: int) -> str:
-        return f"('0x' || substr(md5('cms{i}:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % {w}"
-
     rb = " UNION ALL ".join(
-        f"SELECT user_id, {w} AS width, {i} AS row, {bucket(i, w)} AS bucket FROM events"
+        f"SELECT user_id, {w} AS width, {i} AS row, {_cms_bucket_sql(i, w)} AS bucket FROM events"
         for w in CMS_ERR_WIDTHS
         for i in range(CMS_DEPTH)
     )
@@ -2163,6 +2150,78 @@ HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_W_BITS = 60 - HLL_P
 
 
+def _hll_registers(ev: DataFrame, *keys: str) -> DataFrame:
+    """The hand-rolled HLL's register maxima of ``ev``'s user_id per
+    ``keys``: register = h mod HLL_M, rho = leading-zero count of the
+    remaining HLL_W_BITS bits + 1."""
+    h = md5_long(F.col("user_id").cast("string"), salt="hll:")
+    w = h.bitwiseAND(F.lit((1 << HLL_W_BITS) - 1))
+    # bit_length(w) via the base-2 string — exact integer path
+    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
+        F.lit(HLL_W_BITS + 1) - F.length(F.conv(w, 10, 2))
+    )
+    return (
+        ev.select(*keys, (h % HLL_M).alias("register"), rho.alias("rho"))
+        .groupBy(*keys, "register")
+        .agg(F.max("rho").alias("max_rho"))
+    )
+
+
+def _hll_estimate(regs: DataFrame, *keys: str, name: str) -> DataFrame:
+    """The HLL estimate ``name`` per ``keys`` from register maxima
+    ``regs``, small-range corrected and rounded to 4 dp."""
+    # harmonic sum over PRESENT registers; absent registers
+    # contribute 2^0 = 1 each, added as (m - n_present)
+    per = regs.groupBy(*keys).agg(
+        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("present_sum"),
+        F.count(F.lit(1)).alias("n_present"),
+    )
+    z = F.col("present_sum") + (F.lit(HLL_M) - F.col("n_present"))
+    raw_e = F.lit(HLL_ALPHA * HLL_M * HLL_M) / z
+    v = F.lit(HLL_M) - F.col("n_present")  # zero registers
+    small = F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v)
+    est = F.when((raw_e <= 2.5 * HLL_M) & (v > 0), small).otherwise(raw_e)
+    return per.select(*keys, F.round(est + 1e-9, 4).alias(name))
+
+
+def _hll_registers_sql(src: str, keys: str, regs: str) -> str:
+    """DuckDB twin of ``_hll_registers`` over the relation ``src``: the
+    ``hashed`` and ``rr`` CTEs and the register-maxima CTE ``regs``."""
+    mask = (1 << HLL_W_BITS) - 1
+    by = ", ".join(str(i) for i in range(1, keys.count(",") + 3))
+    return f"""hashed AS (
+  SELECT {keys},
+         {md5_long_sql('CAST(user_id AS VARCHAR)', salt='hll:')} AS h
+  FROM {src}
+),
+rr AS (
+  SELECT {keys}, h % {HLL_M} AS register,
+         CASE WHEN (h & {mask}) = 0 THEN {HLL_W_BITS + 1}
+              ELSE {HLL_W_BITS + 1} - length(format('{{:b}}', h & {mask}))
+         END AS rho
+  FROM hashed
+),
+{regs} AS (
+  SELECT {keys}, register, max(rho) AS max_rho FROM rr GROUP BY {by}
+)"""
+
+
+def _hll_estimate_sql(regs: str, keys: str, name: str) -> str:
+    """DuckDB twin of ``_hll_estimate``: the SELECT of the estimate
+    ``name`` per ``keys`` from the register-maxima relation ``regs``."""
+    z = f"(present_sum + ({HLL_M} - n_present))"
+    return f"""  SELECT {keys},
+         round(CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / {z}
+                         <= 2.5 * {HLL_M} AND ({HLL_M} - n_present) > 0
+                    THEN {float(HLL_M)} * ln({float(HLL_M)} / ({HLL_M} - n_present))
+                    ELSE {HLL_ALPHA * HLL_M * HLL_M} / {z}
+               END + 1e-9, 4) AS {name}
+  FROM (
+    SELECT {keys}, sum(pow(2.0, -max_rho)) AS present_sum, count(*) AS n_present
+    FROM {regs} GROUP BY {keys}
+  )"""
+
+
 def events_user_count_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type distinct users via a HAND-ROLLED HyperLogLog —
     the engine-internal approx_count_distinct can never hash-match a
@@ -2178,31 +2237,9 @@ def events_user_count_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the sketch's raison d'être, and partial max combines map-side
     exactly like a cluster merge of per-executor sketches."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    h = md5_long(F.col("user_id").cast("string"), salt="hll:")
-    reg = (h % HLL_M).alias("register")
-    w = (h.bitwiseAND(F.lit((1 << HLL_W_BITS) - 1)))
-    # bit_length(w) via the base-2 string — exact integer path
-    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
-        F.lit(HLL_W_BITS + 1) - F.length(F.conv(w, 10, 2))
-    )
-    regs = (
-        ev.select("event_type", reg, rho.alias("rho"))
-        .groupBy("event_type", "register")
-        .agg(F.max("rho").alias("max_rho"))
-    )
-    # harmonic sum over PRESENT registers; absent registers
-    # contribute 2^0 = 1 each, added as (m - n_present)
-    per_type = regs.groupBy("event_type").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("present_sum"),
-        F.count(F.lit(1)).alias("n_present"),
-    )
-    z = F.col("present_sum") + (F.lit(HLL_M) - F.col("n_present"))
-    raw_e = F.lit(HLL_ALPHA * HLL_M * HLL_M) / z
-    v = F.lit(HLL_M) - F.col("n_present")  # zero registers
-    small = F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v)
-    estimate = F.when((raw_e <= 2.5 * HLL_M) & (v > 0), small).otherwise(raw_e)
+    regs = _hll_registers(ev, "event_type")
     exact = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("exact_users"))
-    est = per_type.select("event_type", F.round(estimate + 1e-9, 4).alias("hll_estimate"))
+    est = _hll_estimate(regs, "event_type", name="hll_estimate")
     return est.join(exact, "event_type").select(
         "event_type",
         "exact_users",
@@ -2214,37 +2251,9 @@ def events_user_count_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EVENTS_HLL_MANUAL_SQL = f"""
-WITH hashed AS (
-  SELECT event_type,
-         ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-  FROM events
-),
-rr AS (
-  SELECT event_type,
-         h % {HLL_M} AS register,
-         CASE WHEN (h & {(1 << HLL_W_BITS) - 1}) = 0 THEN {HLL_W_BITS + 1}
-              ELSE {HLL_W_BITS + 1} - length(format('{{:b}}', h & {(1 << HLL_W_BITS) - 1}))
-         END AS rho
-  FROM hashed
-),
-regs AS (
-  SELECT event_type, register, max(rho) AS max_rho FROM rr GROUP BY 1, 2
-),
-per_type AS (
-  SELECT event_type,
-         sum(pow(2.0, -max_rho)) AS present_sum,
-         count(*) AS n_present
-  FROM regs GROUP BY 1
-),
+WITH {_hll_registers_sql("events", "event_type", "regs")},
 est AS (
-  SELECT event_type,
-         round(CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-                         <= {2.5 * HLL_M}
-                    AND ({HLL_M} - n_present) > 0
-               THEN {float(HLL_M)} * ln({float(HLL_M)} / ({HLL_M} - n_present))
-               ELSE {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-               END + 1e-9, 4) AS hll_estimate
-  FROM per_type
+{_hll_estimate_sql("regs", "event_type", "hll_estimate")}
 ),
 exact AS (
   SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users
@@ -2968,7 +2977,7 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVENTS_AB_TEST_SQL = f"""
 WITH assigned AS (
   SELECT event_type,
-         ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm,
+         {md5_long_sql('CAST(user_id AS VARCHAR)', salt='ab:')} % 2 AS arm,
          value
   FROM events
 ),
@@ -3224,35 +3233,12 @@ def events_hll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         "user_id",
     )
-    h = md5_long(F.col("user_id").cast("string"), salt="hll:")
-    reg = (h % HLL_M).alias("register")
-    w = h.bitwiseAND(F.lit((1 << HLL_W_BITS) - 1))
-    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
-        F.lit(HLL_W_BITS + 1) - F.length(F.conv(w, 10, 2))
-    )
-    daily_regs = (
-        ev.select("week", "day", reg, rho.alias("rho"))
-        .groupBy("week", "day", "register")
-        .agg(F.max("rho").alias("max_rho"))
-    )
-
-    def estimate(grouped: DataFrame, keys: list[str]) -> DataFrame:
-        per = grouped.groupBy(*keys).agg(
-            F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("present_sum"),
-            F.count(F.lit(1)).alias("n_present"),
-        )
-        z = F.col("present_sum") + (F.lit(HLL_M) - F.col("n_present"))
-        raw_e = F.lit(HLL_ALPHA * HLL_M * HLL_M) / z
-        v = F.lit(HLL_M) - F.col("n_present")
-        small = F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v)
-        est = F.when((raw_e <= 2.5 * HLL_M) & (v > 0), small).otherwise(raw_e)
-        return per.select(*keys, F.round(est + 1e-9, 4).alias("est"))
-
+    daily_regs = _hll_registers(ev, "week", "day")
     weekly_regs = daily_regs.groupBy("week", "register").agg(
         F.max("max_rho").alias("max_rho")
     )
-    merged = estimate(weekly_regs, ["week"]).withColumnRenamed("est", "merged_estimate")
-    daily_est = estimate(daily_regs, ["week", "day"])
+    merged = _hll_estimate(weekly_regs, "week", name="merged_estimate")
+    daily_est = _hll_estimate(daily_regs, "week", "day", name="est")
     daily_sum = daily_est.groupBy("week").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.round(F.sum("est") + 1e-9, 4).alias("sum_daily_estimates"),
@@ -3283,47 +3269,15 @@ WITH ev AS (
          user_id
   FROM events
 ),
-hashed AS (
-  SELECT week, day,
-         ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-  FROM ev
-),
-rr AS (
-  SELECT week, day, h % {HLL_M} AS register,
-         CASE WHEN (h & {(1 << HLL_W_BITS) - 1}) = 0 THEN {HLL_W_BITS + 1}
-              ELSE {HLL_W_BITS + 1} - length(format('{{:b}}', h & {(1 << HLL_W_BITS) - 1}))
-         END AS rho
-  FROM hashed
-),
-daily_regs AS (
-  SELECT week, day, register, max(rho) AS max_rho FROM rr GROUP BY 1, 2, 3
-),
+{_hll_registers_sql("ev", "week, day", "daily_regs")},
 weekly_regs AS (
   SELECT week, register, max(max_rho) AS max_rho FROM daily_regs GROUP BY 1, 2
 ),
 merged AS (
-  SELECT week,
-         round(CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-                         <= 2.5 * {HLL_M} AND ({HLL_M} - n_present) > 0
-                    THEN {float(HLL_M)} * ln({float(HLL_M)} / ({HLL_M} - n_present))
-                    ELSE {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-               END + 1e-9, 4) AS merged_estimate
-  FROM (
-    SELECT week, sum(pow(2.0, -max_rho)) AS present_sum, count(*) AS n_present
-    FROM weekly_regs GROUP BY week
-  )
+{_hll_estimate_sql("weekly_regs", "week", "merged_estimate")}
 ),
 daily_est AS (
-  SELECT week, day,
-         round(CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-                         <= 2.5 * {HLL_M} AND ({HLL_M} - n_present) > 0
-                    THEN {float(HLL_M)} * ln({float(HLL_M)} / ({HLL_M} - n_present))
-                    ELSE {HLL_ALPHA * HLL_M * HLL_M} / (present_sum + ({HLL_M} - n_present))
-               END + 1e-9, 4) AS est
-  FROM (
-    SELECT week, day, sum(pow(2.0, -max_rho)) AS present_sum, count(*) AS n_present
-    FROM daily_regs GROUP BY week, day
-  )
+{_hll_estimate_sql("daily_regs", "week, day", "est")}
 ),
 daily_sum AS (
   SELECT week, CAST(count(*) AS BIGINT) AS n_days,

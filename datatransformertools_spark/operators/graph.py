@@ -73,6 +73,15 @@ def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _EDGES_MEMO.get_or_build(spark, sf_dir, build)
 
 
+# DuckDB twin of `_co_edges`: the ``li`` and symmetric ``edges`` CTEs
+_CO_EDGES_SQL = """li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+edges AS (
+  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+  FROM li a JOIN li b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+)"""
+
+
 def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the part co-purchase graph. Scale design: the
     adjacency table builds in two shuffles (basket-explode, same
@@ -132,12 +141,7 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_sql() -> str:
     n = "(SELECT count(*) FROM deg)"
     ctes = [
-        "li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """edges AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-)""",
+        _CO_EDGES_SQL,
         "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1)",
         f"r0 AS (SELECT src AS part, round(1.0/{n} + 1e-9, 9) AS r FROM deg)",
     ]
@@ -314,12 +318,7 @@ def _lpa_cte_parts() -> list[str]:
     l{LPA_ITERS} (part, label) — shared by the LPA oracle and the
     modularity oracle so both replay the identical rounds."""
     ctes = [
-        "WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """edges AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-)""",
+        f"WITH {_CO_EDGES_SQL}",
         "l0 AS (SELECT DISTINCT src AS part, src AS label FROM edges)",
     ]
     for i in range(1, LPA_ITERS + 1):
@@ -653,12 +652,7 @@ def part_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bfs_sql() -> str:
     ctes = [
-        "WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """edges AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-)""",
+        f"WITH {_CO_EDGES_SQL}",
         "r0 AS (SELECT min(src) AS part, 0 AS hop FROM edges)",
     ]
     for i in range(1, BFS_ITERS + 1):
@@ -722,13 +716,8 @@ def part_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PART_DEGREE_DISTRIBUTION_SQL = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-),
+PART_DEGREE_DISTRIBUTION_SQL = f"""
+WITH {_CO_EDGES_SQL},
 deg AS (SELECT src, CAST(count(*) AS BIGINT) AS degree FROM edges GROUP BY 1),
 buckets AS (
   SELECT CAST(floor(log2(degree)) AS INTEGER) AS log2_bucket,

@@ -35,8 +35,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datatransformertools_spark.functions.hashing import md5_long, md5_u32, md5_u32_sql
-from datatransformertools_spark.operators.annotations import class_map
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql, md5_u32, md5_u32_sql
+from datatransformertools_spark.operators.annotations import (
+    CONF_THRESHOLD,
+    N_CLASSES,
+    class_map,
+    class_name_sql,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 N_SHARDS = 16
@@ -93,7 +98,7 @@ SELECT
   ['image', 'audio', 'video'][CAST(doc_id % 3 + 1 AS INTEGER)] AS media_kind,
   octet_length(encode(text))  AS n_bytes,
   sha256(text)                AS sha256,
-  ('0x' || substr(md5('shard:' || text), 1, 15))::BIGINT % {N_SHARDS} AS shard
+  {md5_long_sql('text', salt='shard:')} % {N_SHARDS} AS shard
 FROM documents
 """
 
@@ -290,21 +295,19 @@ FROM pages
 # ---------------------------------------------------------------------------
 
 PAGE_SIZE = 1000  # stub page coordinate space (px)
-CONF_THRESHOLD = 0.25
-N_CLASSES = 6
 
-INFERENCE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("det_idx", IntegerType()),
-        StructField("category_id", IntegerType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("confidence", LongType()),  # millis: conf*1000, exact int
-    ]
-)
+# one stub detection, as `_make_stub_detector`'s `detect` returns it
+_DET_FIELDS = [
+    StructField("det_idx", IntegerType()),
+    StructField("category_id", IntegerType()),
+    StructField("x", IntegerType()),
+    StructField("y", IntegerType()),
+    StructField("w", IntegerType()),
+    StructField("h", IntegerType()),
+    StructField("confidence", LongType()),  # millis: conf*1000, exact int
+]
+
+INFERENCE_SCHEMA = StructType([StructField("doc_id", LongType()), *_DET_FIELDS])
 
 
 def _make_stub_detector():
@@ -318,8 +321,8 @@ def _make_stub_detector():
     returned ``detect(key, n_dets, n_bytes)`` derives deterministic
     detections from md5(key:det:n_bytes) so batching, bbox clip,
     xyxy→xywh and the confidence filter are value-checked end to
-    end and the DuckDB oracles can replay the arithmetic exactly. A
-    real model changes only this function."""
+    end and the DuckDB oracles can replay the arithmetic exactly
+    (`_stub_boxes_sql`). A real model changes only this function."""
     page_size, n_classes = PAGE_SIZE, N_CLASSES
 
     def detect(key: str, n_dets: int, n_bytes: int) -> list[dict]:
@@ -350,6 +353,30 @@ def _make_stub_detector():
         return dets
 
     return detect
+
+
+def _stub_boxes_sql(keys: str) -> str:
+    """DuckDB twin of the stub detector's replay from ``dets`` (``keys``
+    plus the md5 hex ``hx``): the ``raw`` draws and the clipped
+    ``boxes`` CTEs, carrying ``keys``."""
+    return f"""raw AS (
+  SELECT {keys},
+         CAST(('0x' || substr(hx, 21, 2))::BIGINT % {N_CLASSES} AS INTEGER) AS category_id,
+         ('0x' || substr(hx, 1, 4))::BIGINT % 1001                  AS conf_milli,
+         ('0x' || substr(hx, 5, 4))::BIGINT % {PAGE_SIZE}           AS cx,
+         ('0x' || substr(hx, 9, 4))::BIGINT % {PAGE_SIZE}           AS cy,
+         1 + ('0x' || substr(hx, 13, 4))::BIGINT % 400              AS bw,
+         1 + ('0x' || substr(hx, 17, 4))::BIGINT % 400              AS bh
+  FROM dets
+),
+boxes AS (
+  SELECT {keys}, category_id, conf_milli,
+         greatest(cx - bw // 2, 0)           AS x1,
+         greatest(cy - bh // 2, 0)           AS y1,
+         least(cx + bw // 2, {PAGE_SIZE})    AS x2,
+         least(cy + bh // 2, {PAGE_SIZE})    AS y2
+  FROM raw
+)"""
 
 
 def batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,28 +427,9 @@ dets AS (
          md5(doc_id || ':' || j || ':' || n_bytes) AS hx
   FROM pages, unnest(range(0, 1 + doc_id % 3)) AS t(j)
 ),
-raw AS (
-  SELECT doc_id, det_idx,
-         CAST(('0x' || substr(hx, 21, 2))::BIGINT % {N_CLASSES} AS INTEGER) AS category_id,
-         ('0x' || substr(hx, 1, 4))::BIGINT % 1001                  AS conf_milli,
-         ('0x' || substr(hx, 5, 4))::BIGINT % {PAGE_SIZE}           AS cx,
-         ('0x' || substr(hx, 9, 4))::BIGINT % {PAGE_SIZE}           AS cy,
-         1 + ('0x' || substr(hx, 13, 4))::BIGINT % 400              AS bw,
-         1 + ('0x' || substr(hx, 17, 4))::BIGINT % 400              AS bh
-  FROM dets
-),
-boxes AS (
-  SELECT doc_id, det_idx, category_id, conf_milli,
-         greatest(cx - bw // 2, 0)           AS x1,
-         greatest(cy - bh // 2, 0)           AS y1,
-         least(cx + bw // 2, {PAGE_SIZE})    AS x2,
-         least(cy + bh // 2, {PAGE_SIZE})    AS y2
-  FROM raw
-)
+{_stub_boxes_sql("doc_id, det_idx")}
 SELECT doc_id, det_idx, category_id,
-       CASE category_id WHEN 0 THEN 'Background' WHEN 1 THEN 'Text'
-                        WHEN 2 THEN 'Title' WHEN 3 THEN 'List'
-                        WHEN 4 THEN 'Table' ELSE 'Figure' END AS category_name,
+       {class_name_sql('category_id')} AS category_name,
        CAST(x1 AS INTEGER) AS x, CAST(y1 AS INTEGER) AS y,
        CAST(x2 - x1 AS INTEGER) AS w, CAST(y2 - y1 AS INTEGER) AS h,
        round(conf_milli / 1000.0 + 1e-9, 4) AS conf
@@ -447,13 +455,7 @@ PIPELINE_DETS_SCHEMA = StructType(
         StructField("page_name", StringType()),
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
-        StructField("det_idx", IntegerType()),
-        StructField("category_id", IntegerType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("confidence", LongType()),  # millis: conf*1000, exact int
+        *_DET_FIELDS,
     ]
 )
 
@@ -551,32 +553,13 @@ dets AS (
          md5(doc_id || ':' || page_idx || ':' || j || ':' || n_bytes) AS hx
   FROM pages, unnest(range(0, 1 + (doc_id + page_idx) % 3)) AS t(j)
 ),
-raw AS (
-  SELECT doc_id, page_idx, page_name, width, height,
-         CAST(('0x' || substr(hx, 21, 2))::BIGINT % {N_CLASSES} AS INTEGER) AS category_id,
-         ('0x' || substr(hx, 1, 4))::BIGINT % 1001                  AS conf_milli,
-         ('0x' || substr(hx, 5, 4))::BIGINT % {PAGE_SIZE}           AS cx,
-         ('0x' || substr(hx, 9, 4))::BIGINT % {PAGE_SIZE}           AS cy,
-         1 + ('0x' || substr(hx, 13, 4))::BIGINT % 400              AS bw,
-         1 + ('0x' || substr(hx, 17, 4))::BIGINT % 400              AS bh
-  FROM dets
-),
-boxes AS (
-  SELECT doc_id, page_idx, page_name, width, height, category_id, conf_milli,
-         greatest(cx - bw // 2, 0)           AS x1,
-         greatest(cy - bh // 2, 0)           AS y1,
-         least(cx + bw // 2, {PAGE_SIZE})    AS x2,
-         least(cy + bh // 2, {PAGE_SIZE})    AS y2
-  FROM raw
-),
+{_stub_boxes_sql("doc_id, page_idx, page_name, width, height")},
 keyed AS (
   SELECT doc_id, page_idx, page_name, width, height, conf_milli,
          CASE WHEN conf_milli >= {int(CONF_THRESHOLD * 1000)} THEN 1 ELSE 0 END AS kept,
          printf('%d|%d|%d|%d|%d|%s|%d',
                 x1, y1, x2 - x1, y2 - y1, category_id,
-                CASE category_id WHEN 0 THEN 'Background' WHEN 1 THEN 'Text'
-                                 WHEN 2 THEN 'Title' WHEN 3 THEN 'List'
-                                 WHEN 4 THEN 'Table' ELSE 'Figure' END,
+                {class_name_sql('category_id')},
                 conf_milli) AS ann_key
   FROM boxes
 )

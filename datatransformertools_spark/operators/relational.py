@@ -2073,20 +2073,12 @@ FROM counts
 CHI2_CRIT_DOF8 = 15.507  # α = 0.05 upper tail, dof = (5-1)(3-1)
 
 
-def priority_returnflag_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square test of independence between order priority and
-    lineitem return flag — the categorical-association check a
-    data-QA pass runs before trusting either field as a feature
-    (a significant statistic means the two leak into each other).
-    Observed counts come from one (priority, flag) groupBy;
-    expected counts are row_total·col_total/N with the margins
-    riding as broadcast frames; χ² sums (obs−exp)²/exp over the
-    ≤15-cell table. Emits N, cells, χ², dof, and the α=0.05
-    verdict against the dof-8 critical value.
-
-    Scale: the contingency table is |priorities|·|modes| rows no
-    matter how big the join is — the fact-scale work is exactly one
-    map-side-combined aggregate after an orderkey-keyed join."""
+def _priority_flag_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The (order priority × return flag) contingency table: its
+    ``cells`` (obs with the broadcast margins rt, ct and total n), the
+    row margin, the column margin and the one-row total."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     obs = (
@@ -2101,11 +2093,40 @@ def priority_returnflag_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs.join(F.broadcast(row_t), "o_orderpriority")
         .join(F.broadcast(col_t), "l_returnflag")
         .crossJoin(F.broadcast(total))
-        .withColumn("exp", F.col("rt") * F.col("ct") / F.col("n"))
     )
+    return cells, row_t, col_t, total
+
+
+# DuckDB twin of `_priority_flag_cells`' obs, rt, ct and n
+_PRIORITY_FLAG_SQL = """obs AS (
+  SELECT o.o_orderpriority, l.l_returnflag, count(*) AS obs
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  GROUP BY 1, 2
+),
+rt AS (SELECT o_orderpriority, sum(obs) AS rt FROM obs GROUP BY 1),
+ct AS (SELECT l_returnflag, sum(obs) AS ct FROM obs GROUP BY 1),
+n AS (SELECT sum(obs) AS n FROM obs)"""
+
+
+def priority_returnflag_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square test of independence between order priority and
+    lineitem return flag — the categorical-association check a
+    data-QA pass runs before trusting either field as a feature
+    (a significant statistic means the two leak into each other).
+    Observed counts come from one (priority, flag) groupBy;
+    expected counts are row_total·col_total/N with the margins
+    riding as broadcast frames; χ² sums (obs−exp)²/exp over the
+    ≤15-cell table. Emits N, cells, χ², dof, and the α=0.05
+    verdict against the dof-8 critical value.
+
+    Scale: the contingency table is |priorities|·|modes| rows no
+    matter how big the join is — the fact-scale work is exactly one
+    map-side-combined aggregate after an orderkey-keyed join."""
+    cells, _, _, _ = _priority_flag_cells(spark, sf_dir)
+    cells = cells.withColumn("exp", F.col("rt") * F.col("ct") / F.col("n"))
     chi2 = F.sum((F.col("obs") - F.col("exp")) * (F.col("obs") - F.col("exp")) / F.col("exp"))
-    n_rows = F.countDistinct("o_orderpriority")
-    n_cols = F.countDistinct("l_returnflag")
+    n_rows = F.size(F.collect_set("o_orderpriority"))
+    n_cols = F.size(F.collect_set("l_returnflag"))
     return cells.agg(
         F.first("n").cast("long").alias("n_pairs"),
         F.count(F.lit(1)).cast("long").alias("n_cells"),
@@ -2116,14 +2137,7 @@ def priority_returnflag_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PRIORITY_RETURNFLAG_CHI2_SQL = f"""
-WITH obs AS (
-  SELECT o.o_orderpriority, l.l_returnflag, count(*) AS obs
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-),
-rt AS (SELECT o_orderpriority, sum(obs) AS rt FROM obs GROUP BY 1),
-ct AS (SELECT l_returnflag, sum(obs) AS ct FROM obs GROUP BY 1),
-n AS (SELECT sum(obs) AS n FROM obs),
+WITH {_PRIORITY_FLAG_SQL},
 cells AS (
   SELECT obs.obs, rt.rt * ct.ct / n.n AS exp, obs.o_orderpriority, obs.l_returnflag
   FROM obs JOIN rt USING (o_orderpriority) JOIN ct USING (l_returnflag) CROSS JOIN n
@@ -2719,21 +2733,7 @@ def priority_returnflag_mutual_info(spark: SparkSession, sf_dir: str) -> DataFra
     table; margins ride as broadcast frames; every statistic is a
     fold over those cells. MI in bits (log2); NMI = 2·MI/(H_r+H_c);
     V = sqrt(chi2 / (N·min(r-1, c-1)))."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    obs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority", "l_returnflag")
-        .agg(F.count(F.lit(1)).alias("obs"))
-    )
-    row_t = obs.groupBy("o_orderpriority").agg(F.sum("obs").alias("rt"))
-    col_t = obs.groupBy("l_returnflag").agg(F.sum("obs").alias("ct"))
-    total = obs.agg(F.sum("obs").alias("n"))
-    cells = (
-        obs.join(F.broadcast(row_t), "o_orderpriority")
-        .join(F.broadcast(col_t), "l_returnflag")
-        .crossJoin(F.broadcast(total))
-    )
+    cells, row_t, col_t, total = _priority_flag_cells(spark, sf_dir)
     # marginal entropies fold over the margin TABLES (≤|priorities| /
     # ≤|flags| rows), not the cells — no per-cell multiplicity games
     h_row = (
@@ -2752,7 +2752,7 @@ def priority_returnflag_mutual_info(spark: SparkSession, sf_dir: str) -> DataFra
         / (F.col("rt") * F.col("ct") / F.col("n"))
     )
     min_dim = F.least(
-        F.countDistinct("o_orderpriority") - 1, F.countDistinct("l_returnflag") - 1
+        F.size(F.collect_set("o_orderpriority")) - 1, F.size(F.collect_set("l_returnflag")) - 1
     )
     folded = cells.agg(
         F.first("n").cast("long").alias("n_pairs"),
@@ -2774,15 +2774,8 @@ def priority_returnflag_mutual_info(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-PRIORITY_RETURNFLAG_MI_SQL = """
-WITH obs AS (
-  SELECT o.o_orderpriority, l.l_returnflag, count(*) AS obs
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-),
-rt AS (SELECT o_orderpriority, sum(obs) AS rt FROM obs GROUP BY 1),
-ct AS (SELECT l_returnflag, sum(obs) AS ct FROM obs GROUP BY 1),
-n AS (SELECT sum(obs) AS n FROM obs),
+PRIORITY_RETURNFLAG_MI_SQL = f"""
+WITH {_PRIORITY_FLAG_SQL},
 cells AS (
   SELECT obs.o_orderpriority, obs.l_returnflag, obs.obs, rt.rt, ct.ct, n.n
   FROM obs JOIN rt USING (o_orderpriority) JOIN ct USING (l_returnflag) CROSS JOIN n

@@ -1024,6 +1024,52 @@ def _assign(emb: DataFrame, cents: list[list[float]], key: str = "vec_id") -> Da
 # dedup_embedding / recall / curve at ITERS) shares ONE training
 # run per session — requesting more rounds later just extends the
 # existing chain. Only K·DIM centroid matrices are retained.
+# Nearest cells each vector probes (IVF multi-probe). Measured by
+# dedup_embedding_recall at sf0.01: probe=1 → 0.32 recall,
+# 2 → 0.75, 3 → 0.95, 4 → 1.0; candidate fan-out is ×EMB_PROBE².
+# 3 is the knee. At scale K grows with the corpus (clusters ∝ N),
+# so 3 probes remain a vanishing fraction of cells.
+EMB_PROBE = 3
+
+
+def _multiprobe(
+    emb: DataFrame, cents: list[list[float]], max_probe: int | None = None,
+    keep_rank: bool = False,
+) -> DataFrame:
+    """Explode each vector to its `max_probe` (default EMB_PROBE)
+    nearest cells (distance asc, ties → lowest cluster id): a
+    literal-centroid codegen projection + explode — no join, no
+    shuffle. array_sort on struct(d, cluster) matches the oracle's
+    ORDER BY d, cluster. With keep_rank, each probe row also carries
+    its 1-based probe rank `rn` (the blocking-curve input).
+
+    Past K_LITERAL_MAX centroids (corpus-derived K on a large
+    corpus) the literal array stops being codegen-viable and the
+    probe ranking switches to the broadcast-join argmin path
+    (`_cells_join`) — identical rank/tie semantics, one extra
+    per-vector window shuffle."""
+    n = EMB_PROBE if max_probe is None else max_probe
+    if len(cents) > K_LITERAL_MAX:
+        probed = _cells_join(emb, cents, n, "vec_id")
+        return probed if keep_rank else probed.drop("rn")
+    ranked = F.array_sort(
+        F.transform(
+            _cent_literal(cents),
+            lambda c, i: F.struct(_kmeans_dist(c).alias("d"), i.alias("cluster")),
+        )
+    )
+    if not keep_rank:
+        probes = F.transform(F.slice(ranked, 1, n), lambda s: s["cluster"])
+        return emb.withColumn("cluster", F.explode(probes))
+    return emb.select(
+        "*", F.posexplode(F.slice(ranked, 1, n)).alias("pos", "_probe")
+    ).select(
+        *emb.columns,
+        (F.col("pos") + 1).alias("rn"),
+        F.col("_probe.cluster").alias("cluster"),
+    )
+
+
 _CENT_MEMO = Memo()
 
 
@@ -1222,6 +1268,51 @@ LEFT JOIN c{iters}_new n ON c.cluster = n.cluster AND c.dim = n.dim
 
 
 KMEANS_EMBEDDINGS_SQL = _lloyd_sql()
+
+
+def _emb_block_chain(max_rn: int) -> list[str]:
+    """Shared oracle CTE chain for the cluster-blocked embedding
+    family: the Lloyd's loop (same init/quantization/tie-breaks as
+    the Spark side), final-centroid multi-probe assignment keeping
+    probe rank `rn` ≤ max_rn, and the label join. Ends with
+    afx(vec_id, v, cluster, rn, label)."""
+    parts = _lloyd_cte_parts()
+    parts.append(
+        f"""clF AS (
+  SELECT cluster, list(cval ORDER BY dim) AS c FROM c{KMEANS_ITERS} GROUP BY cluster
+)"""
+    )
+    parts.append(
+        f"""af AS (
+  SELECT vec_id, v, cluster, rn FROM (
+    SELECT e.vec_id, e.v, cl.cluster,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_KM_DIST_SQL}, cl.cluster) AS rn
+    FROM e CROSS JOIN clF cl
+  ) WHERE rn <= {max_rn}
+)"""
+    )
+    parts.append(
+        """afx AS (
+  SELECT af.vec_id, af.v, af.cluster, af.rn, l.label
+  FROM af JOIN (SELECT vec_id, label FROM embeddings) l ON af.vec_id = l.vec_id
+)"""
+    )
+    return parts
+
+
+def _emb_pairs_parts() -> list[str]:
+    """Chain + blocked-pairs CTE, shared by the dedup and recall
+    oracles (composed from parts, never by splitting rendered
+    SQL)."""
+    return _emb_block_chain(EMB_PROBE) + [
+        f"""pairs AS (
+  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
+         round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) AS cos_sim
+  FROM afx a JOIN afx b
+    ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
+)"""
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -2864,8 +2955,6 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel)."""
 
     def build() -> DataFrame:
-        from datatransformertools_spark.operators.dedup import _multiprobe
-
         emb = _vectors(spark, sf_dir)
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
         assigned = _multiprobe(emb, cents)
@@ -2933,10 +3022,8 @@ def embedding_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_sql() -> str:
     """DuckDB twin of `_knn_edges`: the blocked pair CTEs of
-    `dedup._emb_pairs_parts`, then `directed` and the ranked `knn`
+    `_emb_pairs_parts`, then `directed` and the ranked `knn`
     edges."""
-    from datatransformertools_spark.operators.dedup import _emb_pairs_parts
-
     return (
         ",\n".join(_emb_pairs_parts())
         + f""",

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
-from datatransformertools_spark.functions.hashing import md5_long
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -320,7 +320,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_FINGERPRINT_SQL = rf"""
 SELECT doc_id,
        md5({normalize_sql()}) AS fingerprint_md5,
-       ('0x' || substr(md5({normalize_sql()}), 1, 15))::BIGINT AS fingerprint_int
+       {md5_long_sql(normalize_sql())} AS fingerprint_int
 FROM documents
 """
 

@@ -20,7 +20,7 @@ payloads and gets distributed scans instead of a Python for-loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -73,6 +73,21 @@ def read_annotation_json(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def yolo_line(stem: Column) -> Column:
+    """One YOLO label line ``stem cls xc yc wn hn`` (6-dp fixed format,
+    converter_to_yolo_data.py:92) over the category_id, x_center,
+    y_center, w_norm and h_norm columns."""
+    # format_string('%.6f') — NOT format_number, which inserts comma
+    # grouping for values >= 1000 and diverges from the reference's
+    # f'{v:.6f}' (converter_to_yolo_data.py:92)
+    return F.concat_ws(
+        " ",
+        stem,
+        F.col("category_id").cast("string"),
+        *(F.format_string("%.6f", F.col(c)) for c in ("x_center", "y_center", "w_norm", "h_norm")),
+    )
+
+
 def write_yolo_labels(df: DataFrame, path: str, split_col: str | None = None) -> None:
     """Write YOLO label lines ``cls xc yc wn hn`` (6-dp fixed format,
     converter_to_yolo_data.py:92) keyed by image.
@@ -83,18 +98,7 @@ def write_yolo_labels(df: DataFrame, path: str, split_col: str | None = None) ->
     consumer can regroup — the scalable stand-in for
     one-file-per-image.
     """
-    line = F.concat_ws(
-        " ",
-        F.regexp_replace("file_name", r"\.[a-zA-Z]+$", ""),
-        F.col("category_id").cast("string"),
-        # format_string('%.6f') — NOT format_number, which inserts
-        # comma grouping for values >= 1000 and diverges from the
-        # reference's f'{v:.6f}' (converter_to_yolo_data.py:92)
-        F.format_string("%.6f", F.col("x_center")),
-        F.format_string("%.6f", F.col("y_center")),
-        F.format_string("%.6f", F.col("w_norm")),
-        F.format_string("%.6f", F.col("h_norm")),
-    )
+    line = yolo_line(F.regexp_replace("file_name", r"\.[a-zA-Z]+$", ""))
     out = df.select(line.alias("value"), *( [F.col(split_col)] if split_col else [] ))
     writer = out.write.mode("overwrite")
     if split_col:
@@ -145,3 +149,16 @@ def write_competition_json(df: DataFrame, path: str) -> None:
         .withColumn("corruption", F.struct(F.lit("none").alias("type"), F.lit(0).alias("severity")))
     )
     per_image.write.mode("overwrite").json(path)
+
+
+COMPETITION_JSON_SCHEMA = (
+    "file_name STRING, "
+    "annotations ARRAY<STRUCT<bbox: ARRAY<DOUBLE>, category_id: INT, category_name: STRING>>, "
+    "corruption STRUCT<type: STRING, severity: BIGINT>"
+)
+
+
+def read_competition_json(spark: SparkSession, path: str) -> DataFrame:
+    """The per-image documents ``write_competition_json`` wrote, read
+    back under their declared schema (no inference pass)."""
+    return spark.read.schema(COMPETITION_JSON_SCHEMA).json(path)

@@ -105,13 +105,14 @@ def test_every_package_definition_is_reached_from_a_root():
 
 # Each pasted-SQL fragment and the one definition allowed to spell it.
 # ``doc_char_entropy`` spells the normalization in a Spark SQL
-# expression, which is the builder itself, not a DuckDB twin.
+# expression, which is the builder itself, not a DuckDB twin;
+# ``_kcore_sql`` keeps its own ``MATERIALIZED`` copy of the edge CTE.
 TWIN_FRAGMENTS = {
     "regexp_replace(lower(": {
         "datatransformertools_spark/functions/text.py:normalize_sql",
         "datatransformertools_spark/operators/text_analysis.py:doc_char_entropy",
     },
-    "substr(md5('{i}:' || shingle)": {
+    "md5_long_sql('shingle', salt=f'{i}:')": {
         "datatransformertools_spark/operators/dedup.py:_minhash_ctes",
     },
     "SELECT query_id, rank, neighbor_id, cos_sim FROM ranked": {
@@ -150,8 +151,8 @@ TWIN_FRAGMENTS = {
     "SELECT least((SELECT max(cus) FROM c)": {
         "datatransformertools_spark/streaming/events.py:_IJ_SIDES_SQL",
     },
-    "::BIGINT & 4294967295": {
-        "datatransformertools_spark/functions/hashing.py:md5_u32_sql",
+    "), 1, 15))::BIGINT": {
+        "datatransformertools_spark/functions/hashing.py:md5_long_sql",
     },
     "quantile_cont(n_chars, {P_LO})": {
         "datatransformertools_spark/operators/quality.py:_LENGTH_BAND_SQL",
@@ -173,6 +174,25 @@ TWIN_FRAGMENTS = {
     },
     "ORDER BY h % {TB_BUCKETS}, h, doc_id": {
         "datatransformertools_spark/operators/corpus.py:_TB_ORDERED_SQL",
+    },
+    "substr(hx, 21, 2)": {
+        "datatransformertools_spark/operators/multimodal.py:_stub_boxes_sql",
+    },
+    "greatest(0.0, least(w, img_w - cx))": {
+        "datatransformertools_spark/operators/annotations.py:_CLIPPED_SQL",
+    },
+    "a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey": {
+        "datatransformertools_spark/operators/graph.py:_CO_EDGES_SQL",
+        "datatransformertools_spark/operators/graph.py:_kcore_sql",
+    },
+    "count(*) AS obs\n  FROM lineitem l JOIN orders o": {
+        "datatransformertools_spark/operators/relational.py:_PRIORITY_FLAG_SQL",
+    },
+    "length(format('{{:b}}'": {
+        "datatransformertools_spark/operators/events.py:_hll_registers_sql",
+    },
+    "sum(pow(2.0, -max_rho))": {
+        "datatransformertools_spark/operators/events.py:_hll_estimate_sql",
     },
 }
 
@@ -198,6 +218,21 @@ BUILDER_FRAGMENTS = {
     },
     'F.col("cum_incl") - F.col("btok")': {
         "datatransformertools_spark/operators/corpus.py:_tb_cum",
+    },
+    'salt="split:"': {
+        "datatransformertools_spark/operators/annotations.py:_is_train",
+    },
+    'F.format_string("%.6f"': {
+        "datatransformertools_spark/sources/annotations.py:yolo_line",
+    },
+    "F.conv(w, 10, 2)": {
+        "datatransformertools_spark/operators/events.py:_hll_registers",
+    },
+    "F.log(F.lit(float(HLL_M))": {
+        "datatransformertools_spark/operators/events.py:_hll_estimate",
+    },
+    '.groupBy("o_orderpriority", "l_returnflag")': {
+        "datatransformertools_spark/operators/relational.py:_priority_flag_cells",
     },
 }
 
@@ -227,17 +262,20 @@ def _fragment_owners(fragments: dict[str, set[str]]) -> dict[str, set[str]]:
 
 
 def test_duckdb_twin_fragments_are_not_repasted():
-    """The DuckDB normalization, MinHash signature, ANN index-stage,
-    Lloyd face, event-family stage, row-checksum and corpus-token
-    stage fragments are spelled once, in their twin; every oracle
-    calls the twin."""
+    """The DuckDB normalization, md5 hash, MinHash signature, ANN
+    index-stage, Lloyd face, event-family stage, corpus-token stage,
+    reference-pipeline, co-purchase edge, contingency-table and HLL
+    fragments are spelled once, in their twin; every oracle calls the
+    twin."""
     assert _fragment_owners(TWIN_FRAGMENTS) == TWIN_FRAGMENTS
 
 
 def test_spark_stage_fragments_are_not_repasted():
     """The corpus tokenizer, quality score, length band, packing
-    offsets and windows, vocab→ids and token-budget grains are
-    spelled once, in their Spark builder; every query calls it."""
+    offsets and windows, vocab→ids, token-budget grains, train/val
+    split, YOLO label line, HLL registers and estimate and the
+    contingency table are spelled once, in their Spark builder; every
+    query calls it."""
     assert _fragment_owners(BUILDER_FRAGMENTS) == BUILDER_FRAGMENTS
 
 

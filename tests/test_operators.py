@@ -11,7 +11,6 @@ from datatransformertools_spark.functions.bbox import clip_box, from_yolo, iou_x
 from datatransformertools_spark.operators.annotations import train_val_split
 from datatransformertools_spark.operators.dedup import (
     MAX_SHINGLE_DF,
-    _multiprobe,
     dedup_components,
     dedup_containment,
     dedup_exact,
@@ -36,6 +35,7 @@ from datatransformertools_spark.operators.similarity import (
     TOP_K,
     _assign,
     _cells_join,
+    _multiprobe,
     ann_bruteforce_topk,
     ann_ivf_topk,
     ann_lsh_topk,

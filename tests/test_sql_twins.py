@@ -13,8 +13,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from datatransformertools_spark.functions.bbox import iou_xywh, iou_xywh_sql
-from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
+from datatransformertools_spark.functions.bbox import clip_box, iou_xywh, iou_xywh_sql
+from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql, md5_u32, md5_u32_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -24,6 +24,18 @@ from datatransformertools_spark.functions.text import (
     tokens_sql,
 )
 from datatransformertools_spark.functions.vectors import cosine, cosine_sql, norm, norm_sql
+from datatransformertools_spark.operators.annotations import (
+    _CLIPPED_SQL,
+    CLASS_MAP,
+    N_CLASSES,
+    TRAIN_PCT,
+    _doc_png,
+    _doc_png_sql,
+    _is_train,
+    _is_train_sql,
+    class_name,
+    class_name_sql,
+)
 from datatransformertools_spark.operators.corpus import (
     _PACK_OFFSET_SQL,
     _PACK_TOKS_SQL,
@@ -50,10 +62,20 @@ from datatransformertools_spark.operators.events import (
     _sessions,
     _sessions_sql,
 )
+from datatransformertools_spark.operators.multimodal import (
+    PAGE_SIZE,
+    _make_stub_detector,
+    _stub_boxes_sql,
+)
 from datatransformertools_spark.operators.quality import _FILTER_BASE_SQL, _filter_base
 from datatransformertools_spark.operators.text_analysis import (
     QUALITY_SCORE_SQL,
     quality_score_expr,
+)
+from datatransformertools_spark.sources.annotations import (
+    read_yolo_predictions,
+    write_yolo_labels,
+    yolo_line,
 )
 from datatransformertools_spark.sources.tables import load_table
 
@@ -194,6 +216,137 @@ def test_md5_u32_twin_matches_spark(spark):
     duck_rows = _duck_rows(md5_u32_sql("line"), LINES, "id INTEGER, line VARCHAR")
     assert duck_rows == spark_rows
     assert all(0 <= h < 1 << 32 for _, h in duck_rows)
+
+
+MD5_TEXTS = [(0, ""), (1, "doc_00042.png"), (2, "naïve — 日本語 ✓"), (3, None)]
+
+
+@pytest.mark.parametrize("salt", [None, "", "split:"])
+def test_md5_long_twin_matches_spark(spark, salt):
+    spark_rows = _spark_rows(
+        spark, [md5_long(F.col("s"), salt=salt)], MD5_TEXTS, "id int, s string"
+    )
+    duck_rows = _duck_rows(md5_long_sql("s", salt=salt), MD5_TEXTS, "id INTEGER, s VARCHAR")
+    assert duck_rows == spark_rows
+    assert duck_rows[-1] == (3, None)
+    assert duck_rows[:-1] == [
+        (i, int(hashlib.md5(((salt or "") + t).encode()).hexdigest()[:15], 16))
+        for i, t in MD5_TEXTS[:-1]
+    ]
+
+
+def test_class_name_twin_matches_spark(spark):
+    ids = [(i, i) for i in range(N_CLASSES + 1)]  # the last id is off the map
+    spark_rows = _spark_rows(spark, [class_name(F.col("cls"))], ids, "id int, cls int")
+    duck_rows = _duck_rows(class_name_sql("cls"), ids, "id INTEGER, cls INTEGER")
+    assert duck_rows == spark_rows
+    assert [name for _, name in duck_rows] == [*CLASS_MAP.values(), None]
+
+
+def test_split_rule_twins_match_spark(spark):
+    # 123456 has six digits: lpad truncates it to five in both engines;
+    # 83 and 15 hash to buckets 79 and 80, either side of TRAIN_PCT
+    uids = [(i, uid) for i, uid in enumerate([0, 42, 99999, 123456, 83, 15, *range(100, 140)])]
+    spark_rows = _spark_rows(
+        spark,
+        [_doc_png(F.col("uid")), _is_train(_doc_png(F.col("uid")))],
+        uids,
+        "id int, uid long",
+    )
+    duck_rows = _duck_rows(
+        f"{_doc_png_sql('uid')}, {_is_train_sql(_doc_png_sql('uid'))}",
+        uids,
+        "id INTEGER, uid BIGINT",
+    )
+    assert duck_rows == spark_rows
+    assert [f for _, f, _ in duck_rows[:4]] == [
+        "doc_00000.png", "doc_00042.png", "doc_99999.png", "doc_12345.png"
+    ]
+    assert [t for _, _, t in duck_rows[4:6]] == [True, False]
+    assert all(
+        t == (int(hashlib.md5(f"split:{f}".encode()).hexdigest()[:15], 16) % 100 < TRAIN_PCT)
+        for _, f, t in duck_rows
+    )
+
+
+CLIP_BOXES = [  # (id, x, y, w, h, img_w, img_h)
+    (0, 10.0, 20.0, 30.0, 40.0, 640.0, 480.0),  # inside
+    (1, 600.0, 20.0, 100.0, 40.0, 640.0, 480.0),  # past the right edge
+    (2, 10.0, 450.0, 30.0, 100.0, 640.0, 480.0),  # past the bottom edge
+    (3, 700.0, 500.0, 30.0, 40.0, 640.0, 480.0),  # starts past both far edges
+    (4, -50.0, -20.0, 100.0, 60.0, 640.0, 480.0),  # negative origin
+    (5, -10.0, -10.0, 2000.0, 2000.0, 640.0, 480.0),  # covers the image
+    (6, 10.0, 10.0, -5.0, -5.0, 640.0, 480.0),  # negative size
+]
+
+
+def test_clipped_twin_matches_clip_box(spark):
+    cols = ["x", "y", "w", "h", "img_w", "img_h"]
+    spark_rows = _spark_rows(
+        spark,
+        list(clip_box(*[F.col(c) for c in cols])),
+        CLIP_BOXES,
+        "id int, " + ", ".join(f"{c} double" for c in cols),
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ann_base (id INTEGER, " + ", ".join(f"{c} DOUBLE" for c in cols) + ")")
+    con.executemany("INSERT INTO ann_base VALUES (?, ?, ?, ?, ?, ?, ?)", CLIP_BOXES)
+    duck_rows = con.sql(
+        f"WITH {_CLIPPED_SQL} SELECT id, cx, cy, cw, ch FROM clipped2 ORDER BY id"
+    ).fetchall()
+    assert duck_rows == spark_rows
+    assert duck_rows[3] == (3, 640.0, 480.0, 0.0, 0.0)
+    assert duck_rows[4] == (4, 0.0, 0.0, 100.0, 60.0)
+    assert duck_rows[5] == (5, 0.0, 0.0, 640.0, 480.0)
+    assert duck_rows[6] == (6, 10.0, 10.0, 0.0, 0.0)
+
+
+def test_stub_boxes_twin_replays_the_stub_detector():
+    # (key, n_dets, n_bytes): doc keys, a server page key, an empty key
+    src = [(str(k), 3, k * 7) for k in range(200)] + [("5:3", 2, 120), ("", 1, 0)]
+    detect = _make_stub_detector()
+    python_rows = sorted(
+        (key, d["det_idx"], d["category_id"], d["x"], d["y"], d["w"], d["h"], d["confidence"])
+        for key, n_dets, n_bytes in src
+        for d in detect(key, n_dets, n_bytes)
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE src (key VARCHAR, n_dets BIGINT, n_bytes BIGINT)")
+    con.executemany("INSERT INTO src VALUES (?, ?, ?)", src)
+    duck_rows = con.sql(
+        f"""WITH dets AS (
+  SELECT key, CAST(j AS INTEGER) AS det_idx, md5(key || ':' || j || ':' || n_bytes) AS hx
+  FROM src, unnest(range(0, n_dets)) AS t(j)
+),
+{_stub_boxes_sql("key, det_idx")}
+SELECT key, det_idx, category_id, x1, y1, x2 - x1, y2 - y1, conf_milli
+FROM boxes ORDER BY key, det_idx"""
+    ).fetchall()
+    assert duck_rows == python_rows
+    # boxes clipped at each page edge are among them
+    assert any(r[3] == 0 for r in duck_rows) and any(r[4] == 0 for r in duck_rows)
+    assert any(r[3] + r[5] == PAGE_SIZE for r in duck_rows)
+    assert any(r[4] + r[6] == PAGE_SIZE for r in duck_rows)
+
+
+def test_yolo_line_rebuilds_the_written_labels(spark, tmp_path):
+    labels = spark.createDataFrame(
+        [
+            ("doc_00001.png", 1, 0.5, 0.25, 0.1, 0.333333),
+            ("doc_00001.png", 4, 1234.5, 0.0, 1.0, 1e-7),  # no comma grouping
+            ("scan.v2.jpeg", 0, 0.1234565, 0.9999995, 0.0000005, 0.123456789),
+        ],
+        "file_name string, category_id int, x_center double, y_center double,"
+        " w_norm double, h_norm double",
+    )
+    path = str(tmp_path / "labels")
+    write_yolo_labels(labels, path)
+    written = sorted(r.value for r in spark.read.text(path).collect())
+    back = read_yolo_predictions(spark, path)
+    rebuilt = sorted(r[0] for r in back.select(yolo_line(F.col("image_stem"))).collect())
+    assert rebuilt == written
+    assert "doc_00001 4 1234.500000 0.000000 1.000000 0.000000" in written
+    assert len(written) == 3
 
 
 def _events_dir(tmp_path, rows: list[tuple]) -> tuple[duckdb.DuckDBPyConnection, str]:
