@@ -287,9 +287,12 @@ def main() -> None:
     cal_runs = _run_calibration(spark)
     cores_samples = [_measure_effective_cores(int(cpus))]
 
-    from datatransformertools_spark.caching import release_caches
+    from datatransformertools_spark.caching import codegen_compiles, release_caches
 
     timings: dict[str, float] = {}
+    # Janino compiles per query (additions-only key): a query that
+    # compiles again in a warm session misses the codegen class cache
+    compiles: dict[str, int] = {}
     names = sorted(queries)
     mid = len(names) // 2
     for i, name in enumerate(names):
@@ -303,9 +306,11 @@ def main() -> None:
         if i == mid:
             cal_runs += _run_calibration(spark)
             cores_samples.append(_measure_effective_cores(int(cpus)))
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
+        compiles[name] = codegen_compiles(spark) - c0
         # per-query release (the caching.track contract): each query
         # pays for its own stage tables and no cached blocks leak GC
         # pressure into later queries
@@ -504,6 +509,7 @@ def main() -> None:
     }
     detail = {
         "detail": timings,
+        "codegen_compiles": compiles,
         "isolated": isolated,
         "isolated_adjudication": iso_adjudication,
         "calibration": calibration,

@@ -1,12 +1,16 @@
-"""The two lifetimes of what the engine keeps between plans.
+"""The three lifetimes of what the engine keeps between plans.
 
 Per-query: ``track()`` persists a stage table that several plans of
-ONE query reuse (shingles, minhash signatures, IoU pairs). A bare
-``.persist()`` inside a plan builder has no release path, so a
-long-lived session running many queries (bench.py runs the whole
-registry) would accumulate cached blocks it can never free. The
-caller that owns the query (bench.py per query, the test session at
-its end) calls ``release_caches()`` to drop every tracked frame.
+ONE query reuse (shingles, minhash signatures, IoU pairs), and
+``track_view()`` registers the temp view a streaming drain's memory
+sink is read through. A bare ``.persist()`` or view inside a plan
+builder has no release path, so a long-lived session running many
+queries (bench.py runs the whole registry) would accumulate cached
+blocks and sink rows it can never free. The caller that owns the
+query (bench.py per query, the test session at its end) calls
+``release_caches()`` to drop every tracked frame and view; a frame
+read from a dropped view keeps its rows, because its plan already
+holds the sink.
 
 Cross-query: a ``Memo`` holds a value that SEVERAL registered queries
 start from (shingle and τ-pair tables, IoU pairs, co-purchase edges,
@@ -29,6 +33,13 @@ A memo key names immutable data: a corpus directory is read-only for
 the process lifetime, and a pipeline that regenerates one in place
 calls ``clear_all_memos()``. At cluster scale both roles are played by
 writing the stage table to storage once per corpus.
+
+Session: the JVM keeps every class Janino compiles from generated
+code, keyed on the source text, in an LRU cache that lives as long as
+the SparkContext. Nothing here releases it; ``session.get_spark``
+sizes it to the engine's measured working set so a repeated query
+compiles nothing. ``codegen_compiles()`` reads how many compiles the
+JVM has done, so a caller can see which plans recompile.
 """
 
 from __future__ import annotations
@@ -40,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
+_VIEWS: list[tuple[SparkSession, str]] = []
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -49,8 +61,15 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def track_view(spark: SparkSession, name: str) -> DataFrame:
+    """Read temp view ``name`` and register it for later release."""
+    _VIEWS.append((spark, name))
+    return spark.table(name)
+
+
 def release_caches() -> int:
-    """Unpersist every tracked frame (LIFO); returns how many."""
+    """Unpersist every tracked frame (LIFO) and drop every tracked
+    view; returns how many frames."""
     n = 0
     while _LIVE:
         df = _LIVE.pop()
@@ -59,7 +78,20 @@ def release_caches() -> int:
             n += 1
         except Exception:
             pass  # session may already be stopped
+    while _VIEWS:
+        spark, name = _VIEWS.pop()
+        try:
+            spark.catalog.dropTempView(name)
+        except Exception:
+            pass  # session may already be stopped
     return n
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles the session's JVM has run so far; a cache hit
+    on generated code adds nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 # Entries one Memo keeps per application: enough for the few corpora

@@ -30,7 +30,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.caching import Memo, track_view
 from datatransformertools_spark.operators.events import (
     DAY_US,
     EVENING_MASK,
@@ -153,7 +153,8 @@ DRAIN_TIMEOUT_S = 300
 
 def _drain(df: DataFrame, prefix: str, output_mode: str, src_dir: str) -> DataFrame:
     """Run ``df`` as one bounded availableNow drain into a memory sink
-    and return the sink table. The checkpoint is a fresh temp dir whose
+    and return the sink table, whose view ``release_caches()`` drops.
+    The checkpoint is a fresh temp dir whose
     state layout ``_state_partition_count`` sizes from ``src_dir``; it
     is removed once the query has terminated, because the sink holds
     the rows and nothing reopens it. A drain still running at
@@ -180,7 +181,7 @@ def _drain(df: DataFrame, prefix: str, output_mode: str, src_dir: str) -> DataFr
             raise TimeoutError(
                 f"streaming drain {name} did not finish within {DRAIN_TIMEOUT_S} s"
             )
-    return spark.table(name)
+    return track_view(spark, name)
 
 
 # Watermark-close sentinel: a single far-future row appended to the

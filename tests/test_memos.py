@@ -1,10 +1,13 @@
 """Every cross-query memo is a ``caching.Memo``, ``clear_all_memos()``
 releases all of them, and the package makes no temp dir outside a
-``with`` block or a memo, nor writes into the checkout."""
+``with`` block or a memo, nor writes into the checkout.
+``release_caches()`` drops the streaming sink views, and the session's
+compiled-class cache holds a repeated workload's generated code."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
 import re
 import tempfile
@@ -53,14 +56,15 @@ def test_clear_all_memos_releases_every_kind(spark, sf_dir):
     staged = _staged_events_dir(spark, sf_dir, sentinel=False)
     assert os.path.isdir(staged)
     assert yolo_label_roundtrip(spark, sf_dir).count() > 0
-    assert {n for n in dtt_dirs() - before if n.startswith("dtt-io-")}
+    io_dirs = {n for n in dtt_dirs() - before if n.startswith("dtt-io-")}
+    assert io_dirs
 
     assert caching.clear_all_memos() >= 4
     assert {id(m): len(m) for m in caching._MEMOS if len(m)} == {}
     assert frame.storageLevel == StorageLevel.NONE
     assert not os.path.exists(staged)
     assert dtt_dirs() - before == set()
-    assert not {n for n in dtt_dirs() if n.startswith("dtt-io-")}
+    assert not io_dirs & dtt_dirs()
 
 
 def test_temp_dirs_are_scoped_or_memo_owned():
@@ -75,3 +79,39 @@ def test_temp_dirs_are_scoped_or_memo_owned():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_release_caches_drops_stream_sink_views(spark, sf_dir):
+    from datatransformertools_spark.streaming.events import events_stream_tumbling
+
+    def stream_views():
+        tables = spark.catalog.listTables()
+        return {t.name for t in tables if t.isTemporary and t.name.startswith("stream_")}
+
+    df = events_stream_tumbling(spark, sf_dir)
+    rows = sorted(df.collect())
+    assert rows and stream_views()
+    caching.release_caches()
+    assert stream_views() == set()
+    assert sorted(df.collect()) == rows
+
+
+def test_repeated_perfbench_queries_compile_nothing(spark, sf_dir):
+    """The second round of the perfbench queries finds every generated
+    class in the session's codegen cache."""
+    with open(PKG.parent / "perfbench" / "workloads.json") as fh:
+        workloads = json.load(fh)["workloads"]
+    fns = registry.queries()
+
+    def run_round():
+        for w in ("reference_pipeline", "curation_streaming_cold"):
+            for name in workloads[w]["queries"]:
+                if workloads[w]["memo_policy"] == "clear":
+                    caching.clear_all_memos()
+                fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                caching.release_caches()
+
+    run_round()
+    before = caching.codegen_compiles(spark)
+    run_round()
+    assert caching.codegen_compiles(spark) - before == 0
