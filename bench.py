@@ -293,6 +293,11 @@ def main() -> None:
     # Janino compiles per query (additions-only key): a query that
     # compiles again in a warm session misses the codegen class cache
     compiles: dict[str, int] = {}
+    # Spark jobs each query function starts before its plan executes
+    # (additions-only key): schema probes, driver loops, checkpoints
+    # and drains, counted by the DAG scheduler's job-id delta
+    build_jobs: dict[str, int] = {}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     names = sorted(queries)
     mid = len(names) // 2
     for i, name in enumerate(names):
@@ -308,7 +313,10 @@ def main() -> None:
             cores_samples.append(_measure_effective_cores(int(cpus)))
         c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        j0 = dag.numTotalJobs()
+        df = queries[name](spark, sf_dir)
+        build_jobs[name] = dag.numTotalJobs() - j0
+        df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
         compiles[name] = codegen_compiles(spark) - c0
         # per-query release (the caching.track contract): each query
@@ -510,6 +518,7 @@ def main() -> None:
     detail = {
         "detail": timings,
         "codegen_compiles": compiles,
+        "build_jobs": build_jobs,
         "isolated": isolated,
         "isolated_adjudication": iso_adjudication,
         "calibration": calibration,

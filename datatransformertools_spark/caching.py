@@ -15,7 +15,8 @@ holds the sink.
 Cross-query: a ``Memo`` holds a value that SEVERAL registered queries
 start from (shingle and τ-pair tables, IoU pairs, co-purchase edges,
 trained centroids and weights, staged streaming landing dirs, the
-write→read round-trips' scratch dir), built once per (session, key).
+write→read round-trips' scratch dir, each corpus's parquet schemas),
+built once per (session, key).
 ``release_caches()`` deliberately does not own these; every ``Memo``
 registers itself on construction, so ``clear_all_memos()`` releases
 all of them without a list to keep.

@@ -259,9 +259,9 @@ def schema_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-filled join).
 
     This is metadata work by design: only parquet footers are read
-    (one driver-side schema probe per table), and the verdict frame
-    is |tables| literal rows — no scan, no shuffle, identical cost
-    at any data scale."""
+    (one driver-side schema probe per table and session), and the
+    verdict frame is |tables| literal rows — no scan, no shuffle,
+    identical cost at any data scale."""
     rows = []
     for table, expected in SCHEMA_CONTRACT.items():
         actual = load_table(spark, sf_dir, table).columns

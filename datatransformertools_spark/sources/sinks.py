@@ -44,14 +44,17 @@ def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 
 def write_bucketed_table(df: DataFrame, table: str, bucket_col: str, n_buckets: int) -> None:
-    """Bucketed + sorted managed table: rows are hash-distributed
+    """Bucketed + sorted external table: rows are hash-distributed
     into n_buckets files by bucket_col. Two tables bucketed the same
-    way join with no exchange on either side."""
+    way join with no exchange on either side. The files live under
+    the session's round-trip dir, not the shared warehouse dir, so
+    sessions started in the same working directory cannot collide."""
     (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
+        .option("path", roundtrip_path(df.sparkSession, table))
         .saveAsTable(table)
     )
 
@@ -65,7 +68,7 @@ _BUCKETS = 8
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per order priority THROUGH the bucketed-table path:
-    orders and lineitem are first written as managed tables bucketed
+    orders and lineitem are first written as tables bucketed
     (and sorted) on the order key, then joined out of the catalog —
     the join runs with ZERO exchanges on either side because both
     layouts already agree (tests/test_sinks.py asserts the
@@ -360,7 +363,10 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     path = roundtrip_path(spark, "events_by_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    back = spark.read.parquet(path).filter(F.col("event_type") == PRUNE_EVENT_TYPE)
+    # the schema just written: Spark still places the partition
+    # column last, and the read-back starts no inference job
+    back = spark.read.schema(ev.schema).parquet(path)
+    back = back.filter(F.col("event_type") == PRUNE_EVENT_TYPE)
     back = back.withColumn("ts_us", events_ts_us(back))
     hour_us = F.expr("ts_us div 3600000000") * 3_600_000_000
     return (

@@ -5,12 +5,26 @@ pushes filters and prunes columns into the scan (`PushedFilters` /
 `ReadSchema` in `.explain`), which is what makes the same plans
 viable at 100 TB — a query touching 2 of 11 lineitem columns reads
 2 columns' worth of bytes, not the table.
+
+A parquet read with no schema starts a Spark job that reads the
+file's footer to learn one, and the registry reads the same corpus
+files hundreds of times per session. So the schema of every file is
+probed once per (session, corpus directory) and memoized; every later
+read passes it to the reader and starts no job. The events ``ts``
+shape (see ``load_table``) is therefore probed once per corpus per
+session too. A corpus is immutable for the process lifetime, and code
+that regenerates one in place calls ``caching.clear_all_memos()``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from datatransformertools_spark.caching import Memo
 
 TABLE_NAMES = (
     "region",
@@ -24,6 +38,22 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
+
+# One entry per corpus directory (realpath), holding file name →
+# schema, so all ten tables of a corpus share one of MEMO_CAP slots.
+_SCHEMA_MEMO = Memo()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of parquet file ``path``, probed on its first read in
+    the session. A symlink resolves to its target, so a staged landing
+    file shares its corpus file's entry."""
+    real = os.path.realpath(path)
+    schemas = _SCHEMA_MEMO.get_or_build(spark, os.path.dirname(real), dict)
+    name = os.path.basename(real)
+    if name not in schemas:
+        schemas[name] = spark.read.parquet(path).schema
+    return schemas[name]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -39,7 +69,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # representation that is bit-exact across engines (the DuckDB
         # oracles use epoch_us(ts)).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def events_ts_us(df: DataFrame) -> Column:

@@ -45,16 +45,13 @@ from datatransformertools_spark.operators.events import (
     SESSION_GAP_US,
     WINDOW_TOP_K,
 )
-from datatransformertools_spark.sources.tables import events_event_time, events_ts_us, load_table
+from datatransformertools_spark.sources.tables import (
+    events_event_time,
+    events_ts_us,
+    load_table,
+    parquet_schema,
+)
 
-
-# Schema-probe memo (r12): every staged landing directory is a
-# symlink set over the SAME events.parquet (+ a sentinel row written
-# with the file's exact arrow schema), so the probed schema is one
-# per (session, events file) — 16 streaming queries each paid a
-# driver-side batch-read analysis for an identical answer. Keyed on
-# the resolved events path, NOT the tmp staging dir.
-_SCHEMA_MEMO = Memo()
 
 # Staged landing-dir memo (r13): the standard staging is IDENTICAL
 # for every streaming query over the same corpus — a tmp dir with an
@@ -82,26 +79,20 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str, sentinel: bool) -> str:
 def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
     """File-source stream over an events parquet landing directory.
 
-    The file stream source needs an explicit schema; probe it from the
-    directory with ONE driver-side batch footer read so the stream is
+    The file stream source needs an explicit schema. It is the batch
+    read's memoized schema of the first landing file, so the stream is
     robust to how events.ts materialized across testdata generations
     (epoch-nanos int64 under nanosAsLong, or native timestamp_ntz
-    micros). Downstream time math goes through events_ts_us /
+    micros). Every staged landing file is a symlink to the corpus's
+    events.parquet (the sentinel row carries the same arrow schema),
+    so the batch and stream reads share one probe per corpus.
+    Downstream time math goes through events_ts_us /
     events_event_time, which normalize either shape. Extra source
     options (e.g. maxFilesPerTrigger for multi-batch drains) pass
     through."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # key on the realpath of the first parquet actually present —
-    # ADVICE r12 #3: hardcoding events.parquet made the a/b-split
-    # staging (replay dedup) miss forever AND leak one unique
-    # per-tmp-dir key per call within a session
     files = sorted(glob.glob(f"{source_dir}/*.parquet"))
-    schema = _SCHEMA_MEMO.get_or_build(
-        spark,
-        os.path.realpath(files[0]) if files else source_dir,
-        lambda: spark.read.parquet(source_dir).schema,
-    )
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, files[0] if files else source_dir))
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.parquet(source_dir)
@@ -204,10 +195,11 @@ def _write_watermark_sentinel(src_dir: str, sf_dir: str) -> None:
     max ts + 30 days) into the staged source directory. The max ts
     comes from the parquet FOOTER statistics — a driver-side
     metadata read, no data scan; the sentinel row carries the
-    file's exact arrow schema so the stream's schema probe sees one
-    homogeneous directory. Its mtime is set 1 s after the newest
-    ``*.parquet`` already in the directory (symlink or target, whichever
-    is later), so a drain reads it after the real events."""
+    file's exact arrow schema so the stream reads one homogeneous
+    directory under the events file's schema. Its mtime is set 1 s
+    after the newest ``*.parquet`` already in the directory (symlink
+    or target, whichever is later), so a drain reads it after the
+    real events."""
     import datetime as _dt
 
     import pyarrow as pa
@@ -828,9 +820,7 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the static side is a batch read of the same landing table
     # (stand-in for the warehouse's historical stats table)
     src_dir = _staged_events_dir(spark, sf_dir, sentinel=False)
-    agg = stream_enrich(
-        _read_raw(spark, src_dir), spark.read.parquet(f"{sf_dir}/events.parquet")
-    )
+    agg = stream_enrich(_read_raw(spark, src_dir), load_table(spark, sf_dir, "events"))
     # last-update-wins over the update log: n_events only grows for
     # a key, so the max struct is that key's final state.
     log = _drain(agg, "enrich", "update", src_dir)

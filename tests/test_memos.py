@@ -1,8 +1,9 @@
 """Every cross-query memo is a ``caching.Memo``, ``clear_all_memos()``
 releases all of them, and the package makes no temp dir outside a
 ``with`` block or a memo, nor writes into the checkout.
-``release_caches()`` drops the streaming sink views, and the session's
-compiled-class cache holds a repeated workload's generated code."""
+``release_caches()`` drops the streaming sink views, the session's
+compiled-class cache holds a repeated workload's generated code, and a
+corpus table's parquet schema is probed once per session."""
 
 from __future__ import annotations
 
@@ -115,3 +116,50 @@ def test_repeated_perfbench_queries_compile_nothing(spark, sf_dir):
     before = caching.codegen_compiles(spark)
     run_round()
     assert caching.codegen_compiles(spark) - before == 0
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_second_load_table_starts_no_job(spark, sf_dir):
+    from datatransformertools_spark.sources.tables import TABLE_NAMES, load_table
+
+    for name in TABLE_NAMES:
+        load_table(spark, sf_dir, name)
+    j0 = _jobs(spark)
+    frames = {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+    assert _jobs(spark) - j0 == 0
+    for name, df in frames.items():
+        assert df.schema == spark.read.parquet(f"{sf_dir}/{name}.parquet").schema, name
+
+    caching.clear_all_memos()
+    j0 = _jobs(spark)
+    load_table(spark, sf_dir, "lineitem")
+    assert _jobs(spark) - j0 == 1
+
+
+def test_nanos_events_read_as_epoch_nanos(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) events.ts reads as bigint on the probe and on
+    the memo hit, and normalizes to the same µs as a MICROS copy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datatransformertools_spark.sources.tables import events_ts_us, load_table
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    i = table.schema.get_field_index("ts")
+    for unit in ("ns", "us"):
+        (tmp_path / unit).mkdir()
+        ts = table.column(i).cast(pa.timestamp(unit))
+        pq.write_table(table.set_column(i, "ts", ts), tmp_path / unit / "events.parquet")
+    written = pq.ParquetFile(tmp_path / "ns" / "events.parquet").schema.column(i)
+    assert "timeUnit=nanoseconds" in str(written.logical_type)
+
+    def ts_us(unit):
+        df = load_table(spark, str(tmp_path / unit), "events")
+        return dict(df.dtypes)["ts"], sorted(df.select("event_id", events_ts_us(df)).collect())
+
+    probed, hit = ts_us("ns"), ts_us("ns")
+    assert probed[0] == hit[0] == "bigint"
+    assert probed[1] == hit[1] == ts_us("us")[1]

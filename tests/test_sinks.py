@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
-from datatransformertools_spark.sources.sinks import read_jsonl, write_bucketed_table
+import shutil
+from pathlib import Path
+from urllib.parse import urlparse
+
+from datatransformertools_spark.sources.sinks import (
+    bucketed_join_revenue,
+    read_jsonl,
+    write_bucketed_table,
+)
 from datatransformertools_spark.sources.tables import load_table
 
 
@@ -32,6 +40,25 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
+
+
+def test_bucketed_join_revenue_ignores_warehouse_dir(spark, sf_dir):
+    """The bucketed tables live in the session's own scratch dir: a
+    leftover ``dtt_bkt_orders`` dir in the shared warehouse dir (another
+    session's, or a crashed run's) does not fail the query, and the
+    query runs twice in one session."""
+    stale = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path) / "dtt_bkt_orders"
+    made = not stale.exists()
+    stale.mkdir(parents=True, exist_ok=True)
+    (stale / "part-00000-stale.parquet").write_bytes(b"")
+    try:
+        first = sorted(bucketed_join_revenue(spark, sf_dir).collect())
+        assert first and first == sorted(bucketed_join_revenue(spark, sf_dir).collect())
+    finally:
+        if made:
+            shutil.rmtree(stale)
+        else:
+            (stale / "part-00000-stale.parquet").unlink()
 
 
 def test_cli_list_and_run(spark, sf_dir, capsys):
