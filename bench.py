@@ -200,6 +200,14 @@ def _band_moved_tags(
     ]
 
 
+def _child_cpu_s(stat_path: str) -> float:
+    """CPU seconds of the reaped children of a process (cutime + cstime
+    of its ``/proc/<pid>/stat``)."""
+    with open(stat_path) as fh:
+        f = fh.read().rsplit(")", 1)[1].split()
+    return (int(f[13]) + int(f[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def _run_one_isolated(name: str, sf_dir: str, cpus: str) -> dict[str, float]:
     """Time one query in a fresh python/JVM, twice: `cold` includes
     first-plan codegen/JIT of that query's operator family, `warm`
@@ -298,6 +306,11 @@ def main() -> None:
     # and drains, counted by the DAG scheduler's job-id delta
     build_jobs: dict[str, int] = {}
     dag = spark.sparkContext._jsc.sc().dagScheduler()
+    # CPU of the shell commands the JVM forks and reaps during each
+    # query (additions-only key): without libhadoop, Hadoop's local
+    # file system runs chmod/readlink as child processes
+    jvm_child_cpu_s: dict[str, float] = {}
+    jvm_stat = f"/proc/{spark._jvm.java.lang.ProcessHandle.current().pid()}/stat"
     names = sorted(queries)
     mid = len(names) // 2
     for i, name in enumerate(names):
@@ -312,6 +325,7 @@ def main() -> None:
             cal_runs += _run_calibration(spark)
             cores_samples.append(_measure_effective_cores(int(cpus)))
         c0 = codegen_compiles(spark)
+        k0 = _child_cpu_s(jvm_stat)
         t0 = time.perf_counter()
         j0 = dag.numTotalJobs()
         df = queries[name](spark, sf_dir)
@@ -319,6 +333,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
         compiles[name] = codegen_compiles(spark) - c0
+        jvm_child_cpu_s[name] = round(_child_cpu_s(jvm_stat) - k0, 3)
         # per-query release (the caching.track contract): each query
         # pays for its own stage tables and no cached blocks leak GC
         # pressure into later queries
@@ -519,6 +534,7 @@ def main() -> None:
         "detail": timings,
         "codegen_compiles": compiles,
         "build_jobs": build_jobs,
+        "jvm_child_cpu_s": jvm_child_cpu_s,
         "isolated": isolated,
         "isolated_adjudication": iso_adjudication,
         "calibration": calibration,

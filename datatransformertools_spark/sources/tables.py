@@ -9,8 +9,9 @@ viable at 100 TB — a query touching 2 of 11 lineitem columns reads
 A parquet read with no schema starts a Spark job that reads the
 file's footer to learn one, and the registry reads the same corpus
 files hundreds of times per session. So the schema of every file is
-probed once per (session, corpus directory) and memoized; every later
-read passes it to the reader and starts no job. The events ``ts``
+probed once per (session, corpus directory) and memoized: the first
+read returns the probe's own frame, and every later read passes the
+schema to the reader and starts no job. The events ``ts``
 shape (see ``load_table``) is therefore probed once per corpus per
 session too. A corpus is immutable for the process lifetime, and code
 that regenerates one in place calls ``caching.clear_all_memos()``.
@@ -44,16 +45,25 @@ TABLE_NAMES = (
 _SCHEMA_MEMO = Memo()
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema of parquet file ``path``, probed on its first read in
-    the session. A symlink resolves to its target, so a staged landing
-    file shares its corpus file's entry."""
+def _schema_or_probe(spark: SparkSession, path: str) -> tuple[StructType, DataFrame | None]:
+    """The schema of parquet file ``path`` and, on its first read in the
+    session, the probe's own frame (None on a memo hit). A symlink
+    resolves to its target, so a staged landing file shares its corpus
+    file's entry."""
     real = os.path.realpath(path)
     schemas = _SCHEMA_MEMO.get_or_build(spark, os.path.dirname(real), dict)
     name = os.path.basename(real)
-    if name not in schemas:
-        schemas[name] = spark.read.parquet(path).schema
-    return schemas[name]
+    if name in schemas:
+        return schemas[name], None
+    probe = spark.read.parquet(path)
+    schemas[name] = probe.schema
+    return schemas[name], probe
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of parquet file ``path``, probed on its first read in
+    the session."""
+    return _schema_or_probe(spark, path)[0]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,7 +80,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # oracles use epoch_us(ts)).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    # a miss returns the probe's frame rather than reading a second time
+    schema, probe = _schema_or_probe(spark, path)
+    return probe if probe is not None else spark.read.schema(schema).parquet(path)
 
 
 def events_ts_us(df: DataFrame) -> Column:

@@ -15,7 +15,12 @@ Design notes for the cluster:
   landing directory, on a throwaway checkpoint whose state-store
   partition count is sized from the source bytes the way AQE sizes a
   batch shuffle. The drain fails loudly at its ``DRAIN_TIMEOUT_S``
-  cap, and the gate compares what it drained against the batch plan.
+  cap, and the gate compares what it drained against the batch plan;
+- every stream start runs inside ``_state_partitions``, which scopes
+  the state partition count and Spark's FileSystem-based checkpoint
+  file manager to it. The default manager's FileContext rename forks
+  a ``readlink`` shell command per path without libhadoop; a
+  FileSystem rename forks none and is atomic on a local disk too.
 """
 
 from __future__ import annotations
@@ -112,17 +117,40 @@ def _read_raw(spark: SparkSession, source_dir: str, **options) -> DataFrame:
 # the cap; a small landing dir gets one partition.
 
 
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
 @contextmanager
 def _state_partitions(spark: SparkSession, n: int):
-    """Scope spark.sql.shuffle.partitions to the stream start so the
-    checkpoint is created with ``n`` state partitions, without
-    disturbing the session's batch shuffle setting."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    """The scope of every stream start. It sets
+    spark.sql.shuffle.partitions to ``n``, so the checkpoint is created
+    with ``n`` state partitions, and the checkpoint file manager to the
+    FileSystem-based one. Spark's default manager commits each file by
+    a FileContext rename, and without libhadoop (pyspark ships none)
+    Hadoop's local file system resolves every path of that rename by
+    forking a ``readlink`` shell command; a FileSystem rename forks
+    none and is just as atomic on a local disk. The ``.crc`` sidecars
+    and state-store checksums stay on. A stream clones its session at
+    ``start()``, so the query keeps both settings for its whole life.
+    On exit each key gets its previous value back (an unset key is
+    unset again)."""
+    scoped = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
+    }
+    old = {key: spark.conf.get(key, None) for key in scoped}
+    for key, value in scoped.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _state_partition_count(spark: SparkSession, src_dir: str) -> int:

@@ -420,3 +420,67 @@ def test_every_module_imports_first_in_a_fresh_interpreter():
         if run.returncode:
             failed[module] = run.stderr.strip().splitlines()[-1]
     assert not failed, f"modules that fail as the first import: {failed}"
+
+
+def _is_stream_start(node: ast.AST) -> bool:
+    """Whether ``node`` is a ``….writeStream….start()`` call."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    if node.func.attr != "start":
+        return False
+    chain = node.func.value
+    while isinstance(chain, (ast.Call, ast.Attribute)):
+        if isinstance(chain, ast.Attribute) and chain.attr == "writeStream":
+            return True
+        chain = chain.func if isinstance(chain, ast.Call) else chain.value
+    return False
+
+
+def _stream_starts(tree: ast.Module) -> tuple[list[int], list[int]]:
+    """Lines of the stream starts of ``tree``: those inside a
+    ``with _state_partitions(...)`` block, and those outside one."""
+    scoped: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.With) and any(
+            isinstance(item.context_expr, ast.Call)
+            and _referenced(item.context_expr.func) & {"_state_partitions"}
+            for item in node.items
+        ):
+            scoped |= {id(sub) for stmt in node.body for sub in ast.walk(stmt)}
+    starts = [node for node in ast.walk(tree) if _is_stream_start(node)]
+    return (
+        sorted(node.lineno for node in starts if id(node) in scoped),
+        sorted(node.lineno for node in starts if id(node) not in scoped),
+    )
+
+
+def test_every_stream_start_runs_inside_the_state_partitions_scope():
+    """Every ``writeStream`` chain ending in ``.start()``, in the package
+    and in its tests, sits inside a ``with _state_partitions(...)``
+    block: the scope sizes the state store and sets the checkpoint
+    file manager that forks no shell command, and a stream keeps both
+    only if they are set when it starts."""
+    paths = sorted(PACKAGE.rglob("*.py")) + sorted((ROOT / "tests").glob("*.py"))
+    scoped, bad = {}, {}
+    for path in paths:
+        inside, outside = _stream_starts(ast.parse(path.read_text()))
+        if inside:
+            scoped[str(path.relative_to(ROOT))] = inside
+        if outside:
+            bad[str(path.relative_to(ROOT))] = outside
+    assert scoped, "the scan found no stream start at all"
+    assert not bad, f"stream starts outside a `with _state_partitions(...)` block: {bad}"
+    src = (
+        "with _state_partitions(spark, 1), tmp() as d:\n"
+        "    q = df.writeStream.format('memory').start()\n"
+        "with events._state_partitions(spark, 2):\n"
+        "    def f():\n"
+        "        return df.writeStream.start()\n"
+        "q = df.writeStream.format('memory').option('k', 'v').start()\n"
+        "with tmp():\n"
+        "    q = (df\n"
+        "         .writeStream.trigger(availableNow=True)\n"
+        "         .start())\n"
+        "t = threading.Thread(target=f).start()\n"
+    )
+    assert _stream_starts(ast.parse(src)) == ([2, 5], [6, 8])

@@ -109,6 +109,78 @@ def test_checkpoint_freezes_state_partition_count(spark, sf_dir, tmp_path):
     assert counts == {"8"}, counts
 
 
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_stream_start_scope_commits_through_the_filesystem_manager(spark, sf_dir, tmp_path):
+    """A query started inside ``_state_partitions`` writes its offsets
+    and commits logs through the FileSystem-based checkpoint manager,
+    whose rename forks no ``readlink``; after the block the manager
+    key is unset again and the shuffle setting is back."""
+    from datatransformertools_spark.streaming.events import (
+        _CHECKPOINT_FILE_MANAGER,
+        _read_raw,
+        _state_partitions,
+    )
+
+    src = tmp_path / "events"
+    src.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
+    raw = _read_raw(spark, str(src))
+    agg = raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    assert spark.conf.get(MANAGER_KEY, None) is None
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
+    with _state_partitions(spark, 1):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("scoped_manager")
+            .outputMode("complete")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        execution = q._jsq.streamingQuery()
+        managers = {
+            execution.offsetLog().fileManager().getClass().getName(),
+            execution.commitLog().fileManager().getClass().getName(),
+        }
+    assert managers == {_CHECKPOINT_FILE_MANAGER}
+    assert spark.conf.get(MANAGER_KEY, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions", None) == shuffle
+    assert spark.table("scoped_manager").count() > 0
+
+
+def test_stream_start_scope_restores_values_the_caller_set(spark):
+    """Inside the scope both keys hold the scope's values; on exit each
+    gets back the value the caller had set, even when the block
+    raised."""
+    from datatransformertools_spark.streaming.events import (
+        _CHECKPOINT_FILE_MANAGER,
+        _state_partitions,
+    )
+
+    caller_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    )
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(MANAGER_KEY, caller_manager)
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        try:
+            with _state_partitions(spark, 3):
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+                assert spark.conf.get(MANAGER_KEY) == _CHECKPOINT_FILE_MANAGER
+                raise RuntimeError("stream start failed")
+        except RuntimeError:
+            pass
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+        assert spark.conf.get(MANAGER_KEY) == caller_manager
+    finally:
+        spark.conf.unset(MANAGER_KEY)
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+
+
 def test_stream_outer_interval_join_emits_null_rows(spark, sf_dir):
     """The left-outer interval join must emit clicks with NO
     purchase in-window (null-joined) once the watermark passes
