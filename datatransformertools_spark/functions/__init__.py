@@ -7,16 +7,10 @@ implements the same md5/IEEE semantics (the DuckDB oracle does).
 """
 
 from datatransformertools_spark.functions.bbox import clip_box, iou_xywh
-from datatransformertools_spark.functions.hashing import (
-    lsh_band_keys,
-    md5_bits32,
-    md5_long,
-    minhash_signature,
-)
+from datatransformertools_spark.functions.hashing import lsh_band_keys, md5_long
 from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
 from datatransformertools_spark.functions.vectors import (
     as_double,
-    cosine,
     cosine_prenormed,
     dot,
     norm,
@@ -25,14 +19,11 @@ from datatransformertools_spark.functions.vectors import (
 __all__ = [
     "as_double",
     "clip_box",
-    "cosine",
     "cosine_prenormed",
     "dot",
     "iou_xywh",
     "lsh_band_keys",
-    "md5_bits32",
     "md5_long",
-    "minhash_signature",
     "norm",
     "normalize_text",
     "tokens",

@@ -44,32 +44,6 @@ def md5_u32_sql(expr: str) -> str:
     return f"{md5_long_sql(expr)} & 4294967295"
 
 
-def md5_bits32(col: Column, offset: int) -> Column:
-    """A 32-bit unsigned slice of md5(col) as int64 (hex chars
-    offset..offset+7). Used for simhash bit planes."""
-    return F.conv(F.substring(F.md5(col), offset, 8), 16, 10).cast("long")
-
-
-def minhash_signature(shingles: Column, num_perm: int) -> Column:
-    """Minhash signature: array of per-permutation minima over an
-    array-of-string shingles column.
-
-    Each "permutation" i is the independent hash family
-    md5(i||':'||shingle) → 60-bit int. array_min over the
-    transformed array is a per-row JVM loop — no shuffle, no UDF.
-    Perf note: higher-order-function lambdas evaluate interpreted
-    (outside codegen), so the production dedup pipeline uses the
-    explode + codegen'd agg-min form instead
-    (operators/dedup.py:_signature_df); this builder suits plans
-    that need the signature as an array column without an exchange.
-    """
-    sigs = [
-        F.array_min(F.transform(shingles, lambda s, i=i: md5_long(s, salt=f"{i}:")))
-        for i in range(num_perm)
-    ]
-    return F.array(*sigs)
-
-
 def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     """Banded LSH keys: md5 over each band's slice of the signature.
 

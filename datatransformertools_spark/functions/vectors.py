@@ -33,19 +33,14 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    ad, bd = as_double(a), as_double(b)
-    denom = norm(ad) * norm(bd)
-    return F.when(denom > 0, dot(ad, bd) / denom).otherwise(F.lit(0.0))
-
-
 def norm_sql(v: str) -> str:
     """DuckDB twin of ``norm`` over a DOUBLE[] expression."""
     return f"sqrt(list_sum(list_transform({v}, x -> x * x)))"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """DuckDB twin of ``cosine`` over two DOUBLE[] expressions."""
+    """DuckDB twin of ``cosine_prenormed`` over two DOUBLE[]
+    expressions, with each norm taken from its own vector."""
     return f"""CASE WHEN {norm_sql(a)}
                      * {norm_sql(b)} > 0
                 THEN list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i]))
@@ -55,11 +50,9 @@ def cosine_sql(a: str, b: str) -> str:
 
 
 def cosine_prenormed(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine with per-vector norms precomputed BEFORE the pair join
-    — same values as ``cosine`` (identical sequential fold per
-    vector) but the O(pairs) stage folds one array instead of
-    three. This is the form every pairwise operator should use at
-    scale."""
+    """Cosine with per-vector norms (``norm``) precomputed BEFORE the
+    pair join, so the O(pairs) stage folds one array instead of
+    three. 0.0 when either vector is zero."""
     denom = norm_a * norm_b
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 

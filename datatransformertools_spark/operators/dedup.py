@@ -40,10 +40,11 @@ from datatransformertools_spark.functions.text import (
     tokens_sql,
     word_shingles,
 )
-from datatransformertools_spark.functions.vectors import cosine_sql, flat_cols, flat_cosine_prenormed
 from datatransformertools_spark.operators.similarity import (
-    DIM,
     KMEANS_ITERS,
+    _block_join_sql,
+    _block_pairs,
+    _cos_sql,
     _emb_block_chain,
     _emb_pairs_parts,
     _multiprobe,
@@ -54,7 +55,7 @@ from datatransformertools_spark.operators.text_analysis import (
     quality_score_expr,
     quality_terms_sql,
 )
-from datatransformertools_spark.sources.tables import load_table
+from datatransformertools_spark.sources.tables import fan_out, load_table
 
 NUM_PERM = 8
 BANDS = 4
@@ -112,7 +113,7 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        docs = fan_out(docs, "doc_id")
         sh = word_shingles(norm_tokens(F.col("text")), SHINGLE_N)
         return docs.select("doc_id", F.explode(sh).alias("shingle"))
 
@@ -533,7 +534,7 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        docs = fan_out(docs, "doc_id")
         tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("token"))
         # hash map-side, md5 computed ONCE per token (both 32-bit planes
         # slice the same hex string), then fold straight into the 48
@@ -999,7 +1000,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     any single join key's fan-out — the same hot-key discipline as
     the LSH buckets."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     tok = norm_tokens(F.col("text"))
     base = docs.select("doc_id", tok.alias("tok"), F.size(tok).alias("n"))
     pos = F.explode(F.sequence(F.lit(0), F.col("n") - K_GRAM)).alias("pos")
@@ -1097,7 +1098,7 @@ def winnowing_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the face is |sources| rows. The pair self-join never runs —
     this audits the index stage only."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     tok = norm_tokens(F.col("text"))
     base = docs.select("doc_id", "source", tok.alias("tok"), F.size(tok).alias("n"))
     pos = F.explode(F.sequence(F.lit(0), F.col("n") - K_GRAM)).alias("pos")
@@ -1226,32 +1227,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_tau_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-        # nrm comes from _vectors, BEFORE the probe explode — after
-        # it, the O(DIM) fold would evaluate EMB_PROBE times per vector
-        assigned = _multiprobe(_vectors(spark, sf_dir), cents)
-        # r13 (guide §4.1): split the vector into DIM primitive
-        # columns once per probe row, so the O(pairs) cosine below is
-        # a codegen'd multiply-add chain instead of the interpreted
-        # zip_with fold — same bytes through the exchange, same
-        # left-to-right accumulation order (bit-identical values).
-        flat = assigned.select(
-            "vec_id", "label", "cluster", "nrm", *flat_cols(F.col("v"), DIM, "_v")
-        )
-        a = flat.alias("a")
-        b = flat.alias("b")
-        cos = F.round(
-            flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
-            + 1e-9,
-            6,
-        )
+        pairs, cos = _block_pairs(_multiprobe(_vectors(spark, sf_dir), cents), ("cluster", "label"))
         return (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col("a.label") == F.col("b.label"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"), cos.alias("cos_sim"))
+            pairs.select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"), cos.alias("cos_sim"))
             .filter(F.col("cos_sim") >= COSINE_TAU)
             .distinct()  # a pair sharing BOTH probed cells appears once
         )
@@ -1281,27 +1259,10 @@ def _exact_label_pairs_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     deferring it would re-introduce per-consumer rebuilds."""
 
     def count() -> int:
-        # flat-column cosine (r13, guide §4.1): this is the largest
-        # pair count in the family (quadratic within-label), so the
-        # per-pair kernel must be codegen, not the interpreted fold.
-        flat = _vectors(spark, sf_dir).select(
-            "vec_id", "label", "nrm", *flat_cols(F.col("v"), DIM, "_v")
-        )
-        a, b = flat.alias("a"), flat.alias("b")
-        cos = F.round(
-            flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
-            + 1e-9,
-            6,
-        )
+        # the largest pair count in the family (quadratic within-label)
+        pairs, cos = _block_pairs(_vectors(spark, sf_dir), ("label",))
         return int(
-            a.join(
-                b,
-                (F.col("a.label") == F.col("b.label"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .filter(cos >= COSINE_TAU)
-            .agg(F.count(F.lit(1)).alias("n_exact_pairs"))
-            .first()[0]
+            pairs.filter(cos >= COSINE_TAU).agg(F.count(F.lit(1)).alias("n_exact_pairs")).first()[0]
         )
 
     n = _EXACT_PAIRS_MEMO.get_or_build(spark, sf_dir, count)
@@ -1357,8 +1318,8 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_EXACT_CNT_SQL = f"""el AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 exact_cnt AS (
   SELECT count(*) AS n_exact_pairs
-  FROM el a JOIN el b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) >= {COSINE_TAU}
+  {_block_join_sql('el', 'label')}
+  WHERE {_cos_sql('a.v', 'b.v')} >= {COSINE_TAU}
 )"""
 
 
@@ -1407,25 +1368,9 @@ def emb_blocking_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = _multiprobe(
         _vectors(spark, sf_dir), cents, max_probe=CURVE_MAX_PROBE, keep_rank=True
     )
-    # flat-column cosine (r13, guide §4.1): the widest-probe join is
-    # the family's biggest candidate set — keep its kernel in codegen
-    flat = probed.select(
-        "vec_id", "label", "cluster", "nrm", "rn", *flat_cols(F.col("v"), DIM, "_v")
-    )
-    a, b = flat.alias("a"), flat.alias("b")
-    cos = F.round(
-        flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
-        + 1e-9,
-        6,
-    )
+    pairs, cos = _block_pairs(probed, ("cluster", "label"), "rn")
     pair_lvl = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
+        pairs.select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             F.greatest(F.col("a.rn"), F.col("b.rn")).alias("lvl"),
@@ -1460,9 +1405,8 @@ def _emb_blocking_curve_sql() -> str:
 pair_lvl AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          min(greatest(a.rn, b.rn)) AS lvl
-  FROM afx a JOIN afx b
-    ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) >= {COSINE_TAU}
+  {_block_join_sql('afx', 'cluster', 'label')}
+  WHERE {_cos_sql('a.v', 'b.v')} >= {COSINE_TAU}
   GROUP BY 1, 2
 ),
 lvl_counts AS (SELECT lvl, count(*) AS n FROM pair_lvl GROUP BY 1),
@@ -2231,12 +2175,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwhelming majority — never reach the island pass, and the
     island window itself is a per-doc partition sort, embarrassingly
     parallel across docs."""
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(par, "doc_id")
-    )
+    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     wins = (
         docs.filter(F.length("text") >= SPAN_L)
         .select(

@@ -39,6 +39,7 @@ from datatransformertools_spark.operators.annotations import (
     N_CLASSES,
     annotations_df,
 )
+from datatransformertools_spark.sources.tables import fan_out
 
 IOU_THRESHOLD = 0.5
 
@@ -172,16 +173,8 @@ _MUTUAL_MEMO = Memo()
 
 def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        # fan the probe side out first: the local testdata is one
-        # parquet file (≤2 scan partitions), and AQE broadcast-joins the
-        # small gt side — without this exchange the whole IoU pair
-        # computation would run in those 2 scan tasks. One cheap
-        # shuffle of the pred rows unlocks full-width parallelism for
-        # the O(|pairs|) IoU math (on a real multi-file table the scan
-        # fans out naturally and AQE coalesces this no-op away).
-        p = _pred_df(spark, sf_dir).repartition(
-            spark.sparkContext.defaultParallelism, "image_id"
-        )
+        # fan the probe side out: AQE broadcast-joins the small gt side
+        p = fan_out(_pred_df(spark, sf_dir), "image_id")
         g = _gt_df(spark, sf_dir)
         joined = p.join(g, ["image_id", "cls"])
         iou = iou_xywh(
@@ -899,8 +892,7 @@ def detection_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embarrassingly parallel), and the matrix collapses map-side to
     ≤(|classes|+1)² rows. Oracle: the same recursive-CTE greedy
     replay as AP, extended to carry the claimed gt_id."""
-    par = spark.sparkContext.defaultParallelism
-    p = _pred_df(spark, sf_dir).repartition(par, "image_id")
+    p = fan_out(_pred_df(spark, sf_dir), "image_id")
     g = _gt_df(spark, sf_dir)
     pr = p.select(
         "pred_id", "image_id", "conf", F.col("cls").alias("pred_cls"),

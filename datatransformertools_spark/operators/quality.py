@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo
+from datatransformertools_spark.functions.scaling import zscore, zscore_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -589,27 +590,11 @@ def _logreg_features_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("top_word_ratio").alias("f4"),
         F.col("keep").cast("double").alias("y"),
     )
-    # zero-variance features (possible on a synthetic corpus, e.g. a
-    # rule input that is constant) get std pinned to 1.0 AFTER the
-    # 6-dp rounding — their standardized value is exactly 0 and the
-    # GD never moves their weight.
-    def _std(i: int):
-        s = F.round(F.stddev_pop(f"f{i}") + 1e-9, 6)
-        return F.when(s < 1e-6, F.lit(1.0)).otherwise(s).alias(f"s{i}")
-
-    stats = g.agg(
-        *[F.round(F.avg(f"f{i}") + 1e-9, 6).alias(f"m{i}") for i in range(1, 5)],
-        *[_std(i) for i in range(1, 5)],
-    )
-    return g.crossJoin(F.broadcast(stats)).select(
+    joined, z = zscore(g, 4)
+    return joined.select(
         "doc_id",
         F.lit(1.0).alias("x1"),
-        *[
-            F.round((F.col(f"f{i}") - F.col(f"m{i}")) / F.col(f"s{i}") + 1e-9, 6).alias(
-                f"x{i + 1}"
-            )
-            for i in range(1, 5)
-        ],
+        *[c.alias(f"x{i + 2}") for i, c in enumerate(z)],
         "y",
     )
 
@@ -700,22 +685,15 @@ def _logreg_chain_parts() -> list[str]:
     would otherwise re-evaluate the whole Gopher chain once per
     gradient round — the Spark side persists the same frame)."""
     n_feat = len(_LOGREG_FEATURES)
-    means = ", ".join(f"round(avg(f{i}) + 1e-9, 6) AS m{i}" for i in range(1, 5))
-    stds = ", ".join(
-        f"CASE WHEN round(stddev_pop(f{i}) + 1e-9, 6) < 1e-6 THEN 1.0"
-        f" ELSE round(stddev_pop(f{i}) + 1e-9, 6) END AS s{i}"
-        for i in range(1, 5)
-    )
-    std_feats = ", ".join(
-        f"round((f{i} - m{i}) / s{i} + 1e-9, 6) AS x{i + 1}" for i in range(1, 5)
-    )
+    stats, z = zscore_sql(4, "gq")
+    std_feats = ", ".join(f"{c} AS x{i + 2}" for i, c in enumerate(z))
     parts = [
         f"""gq AS MATERIALIZED (
   SELECT doc_id, n_words::DOUBLE AS f1, mean_word_len AS f2,
          alpha_word_frac AS f3, top_word_ratio AS f4, keep::DOUBLE AS y
   FROM ({GOPHER_QUALITY_FILTER_SQL}) g
 )""",
-        f"stats AS (SELECT {means}, {stds} FROM gq)",
+        stats,
         f"""feats AS MATERIALIZED (
   SELECT doc_id, 1.0 AS x1, {std_feats}, y
   FROM gq CROSS JOIN stats

@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from datatransformertools_spark.caching import Memo, track
 from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
+from datatransformertools_spark.functions.scaling import zscore, zscore_sql
 from datatransformertools_spark.operators.similarity import (
     _init_cents,
     _lloyd_final,
@@ -2644,23 +2645,8 @@ def _rfm_feature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _std(i: int):
-        s = F.round(F.stddev_pop(f"f{i}") + 1e-9, 6)
-        return F.when(s < 1e-6, F.lit(1.0)).otherwise(s).alias(f"s{i}")
-
-    stats = per.agg(
-        *[F.round(F.avg(f"f{i}") + 1e-9, 6).alias(f"m{i}") for i in range(1, _RFM_DIM + 1)],
-        *[_std(i) for i in range(1, _RFM_DIM + 1)],
-    )
-    return per.crossJoin(F.broadcast(stats)).select(
-        "custkey",
-        F.array(
-            *[
-                F.round((F.col(f"f{i}") - F.col(f"m{i}")) / F.col(f"s{i}") + 1e-9, 6)
-                for i in range(1, _RFM_DIM + 1)
-            ]
-        ).alias("v"),
-    )
+    joined, z = zscore(per, _RFM_DIM)
+    return joined.select("custkey", F.array(*z).alias("v"))
 
 
 def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2688,15 +2674,7 @@ def customer_rfm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rfm_kmeans_sql() -> str:
     dim, k = _RFM_DIM, RFM_K
-    means = ", ".join(f"round(avg(f{i}) + 1e-9, 6) AS m{i}" for i in range(1, dim + 1))
-    stds = ", ".join(
-        f"CASE WHEN round(stddev_pop(f{i}) + 1e-9, 6) < 1e-6 THEN 1.0"
-        f" ELSE round(stddev_pop(f{i}) + 1e-9, 6) END AS s{i}"
-        for i in range(1, dim + 1)
-    )
-    vec = ", ".join(
-        f"round((f{i} - m{i}) / s{i} + 1e-9, 6)" for i in range(1, dim + 1)
-    )
+    stats, z = zscore_sql(dim, "raw")
     lead = [
         """WITH raw AS (
   SELECT o_custkey AS custkey,
@@ -2705,8 +2683,8 @@ def _rfm_kmeans_sql() -> str:
          round(sum(o_totalprice) + 1e-9, 2) AS f3
   FROM orders GROUP BY 1
 )""",
-        f"stats AS (SELECT {means}, {stds} FROM raw)",
-        f"e AS (SELECT custkey, [{vec}] AS v FROM raw CROSS JOIN stats)",
+        stats,
+        f"e AS (SELECT custkey, [{', '.join(z)}] AS v FROM raw CROSS JOIN stats)",
     ]
     return _lloyd_sql(lead_parts=lead, k=k, dim=dim, key="custkey", iters=RFM_ITERS)
 

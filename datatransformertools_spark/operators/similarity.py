@@ -31,10 +31,14 @@ the Spark one) next to it:
 - ``_rerank_topk`` / ``_TOPK_TAIL_SQL`` — the exact top-K refine;
 - ``_budget_recall`` / ``_recall_tail_sql`` — the recall-curve face
   (per-budget top-K against the brute-force truth).
+
+The embedding dedup, SemDeDup and kNN-graph pair stages share one
+blocked flat-cosine self-join, ``_block_pairs`` / ``_block_join_sql``.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +54,6 @@ from datatransformertools_spark.functions.vectors import (
     flat_cols,
     flat_cosine_prenormed,
     norm,
-    norm_sql,
 )
 from datatransformertools_spark.sources.tables import load_table
 
@@ -1301,6 +1304,40 @@ def _emb_block_chain(max_rn: int) -> list[str]:
     return parts
 
 
+def _block_pairs(
+    vecs: DataFrame, keys: tuple[str, ...], *carry: str
+) -> tuple[DataFrame, F.Column]:
+    """The blocked flat-cosine self-join every embedding pair stage
+    runs: each side of ``vecs`` (a `_vectors`, `_assign` or
+    `_multiprobe` frame) projects ``vec_id``, the block ``keys`` in the
+    frame's column order, ``nrm``, the ``carry`` columns and DIM flat
+    columns ``_v*``, and the sides ``a`` and ``b`` join on equal keys
+    (compared in the order given), each pair once with the lower
+    ``vec_id`` on side ``a``. Returns the joined frame and the 6-dp
+    pair cosine over it.
+
+    Flat columns: the vector is split into primitive columns once
+    per row, so the O(pairs) kernel is a
+    codegen'd multiply-add chain instead of the interpreted zip_with
+    fold, with the same accumulation order (bit-identical values).
+    ``nrm`` comes from `_vectors`, before any probe explode. DuckDB
+    twin: ``_block_join_sql``."""
+    block = [c for c in vecs.columns if c in keys]
+    flat = vecs.select("vec_id", *block, "nrm", *carry, *flat_cols(F.col("v"), DIM, "_v"))
+    a, b = flat.alias("a"), flat.alias("b")
+    eq = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on = functools.reduce(F.Column.__and__, [*eq, F.col("a.vec_id") < F.col("b.vec_id")])
+    cos = flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
+    return a.join(b, on), F.round(cos + 1e-9, 6)
+
+
+def _block_join_sql(src: str, *keys: str) -> str:
+    """DuckDB twin of ``_block_pairs``'s join: ``src`` as ``a`` and
+    ``b`` on equal ``keys``, the lower ``vec_id`` on side ``a``."""
+    on = "".join(f"a.{k} = b.{k} AND " for k in keys)
+    return f"FROM {src} a JOIN {src} b\n    ON {on}a.vec_id < b.vec_id"
+
+
 def _emb_pairs_parts() -> list[str]:
     """Chain + blocked-pairs CTE, shared by the dedup and recall
     oracles (composed from parts, never by splitting rendered
@@ -1308,9 +1345,8 @@ def _emb_pairs_parts() -> list[str]:
     return _emb_block_chain(EMB_PROBE) + [
         f"""pairs AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round({cosine_sql('a.v', 'b.v')} + 1e-9, 6) AS cos_sim
-  FROM afx a JOIN afx b
-    ON a.cluster = b.cluster AND a.label = b.label AND a.vec_id < b.vec_id
+         {_cos_sql('a.v', 'b.v')} AS cos_sim
+  {_block_join_sql('afx', 'cluster', 'label')}
 )"""
     ]
 
@@ -1341,29 +1377,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cluster id. Cross-engine determinism inherits the kmeans
     contract: 6-dp centroid quantization at every iteration
     boundary, lowest-cluster argmin ties, 6-dp rounded cosine."""
-    emb = _vectors(spark, sf_dir)
     cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-    assigned = _assign(emb, cents)
-    # flat-column cosine (r13, guide §4.1): DIM primitive columns
-    # split once per vector so the in-cluster pair kernel is a
-    # codegen'd multiply-add chain, not the interpreted zip_with
-    # fold — same accumulation order, bit-identical values.
-    flat = assigned.select(
-        "vec_id", "cluster", "nrm", *flat_cols(F.col("v"), DIM, "_v")
-    )
-    a, b = flat.alias("a"), flat.alias("b")
-    cos = F.round(
-        flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
-        + 1e-9,
-        6,
-    )
+    assigned = _assign(_vectors(spark, sf_dir), cents)
+    pairs, cos = _block_pairs(assigned, ("cluster",))
     nn = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("b.vec_id").alias("vec_id"), cos.alias("c"))
+        pairs.select(F.col("b.vec_id").alias("vec_id"), cos.alias("c"))
         .groupBy("vec_id")
         .agg(F.max("c").alias("nn_sim"))
     )
@@ -1376,33 +1394,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_sql() -> str:
-    last = KMEANS_ITERS
-    na, nb = norm_sql("a.v"), norm_sql("b.v")
-    cos = (
-        f"CASE WHEN {na} * {nb} > 0 THEN "
-        f"list_sum(list_transform(range(1, {DIM} + 1), i -> a.v[i] * b.v[i]))"
-        f" / ({na} * {nb}) ELSE 0.0 END"
-    )
-    parts = _lloyd_cte_parts()
-    parts.append(
-        f"""clF AS (
-  SELECT cluster, list(cval ORDER BY dim) AS c FROM c{last} GROUP BY cluster
-)"""
-    )
-    parts.append(
-        f"""af AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT e.vec_id, e.v, cl.cluster,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_KM_DIST_SQL}, cl.cluster) AS rn
-    FROM e CROSS JOIN clF cl
-  ) WHERE rn = 1
-)"""
-    )
+    parts = _emb_block_chain(1)
     parts.append(
         f"""nn AS (
-  SELECT b.vec_id, max(round({cos} + 1e-9, 6)) AS nn_sim
-  FROM af a JOIN af b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+  SELECT b.vec_id, max({_cos_sql('a.v', 'b.v')}) AS nn_sim
+  {_block_join_sql('af', 'cluster')}
   GROUP BY b.vec_id
 )"""
     )
@@ -1584,12 +1580,7 @@ def _mmr_sql() -> str:
     # unrolled greedy (the kmeans-oracle technique): one CTE pair per
     # selection step — recursive CTEs cannot express the correlated
     # diversity max, a fixed K-step chain of plain joins can
-    dot_ab = f"list_sum(list_transform(range(1, {DIM} + 1), i -> a.cv[i] * b.cv[i]))"
-    na, nb = norm_sql("a.cv"), norm_sql("b.cv")
-    pair_cos = f"CASE WHEN {na} * {nb} > 0 THEN {dot_ab} / ({na} * {nb}) ELSE 0.0 END"
-    nq, nc = norm_sql("qv"), norm_sql("cv")
-    qdot = f"list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * cv[i]))"
-    qcos = f"CASE WHEN {nq} * {nc} > 0 THEN {qdot} / ({nq} * {nc}) ELSE 0.0 END"
+    rel = _cos_sql("qv", "cv")
     parts = [
         _vectors_sql(),
         f"q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES})",
@@ -1597,14 +1588,15 @@ def _mmr_sql() -> str:
         f"""shortlist AS (
   SELECT * FROM (
     SELECT query_id, neighbor_id, cv,
-           round({qcos} + 1e-9, 6) AS rel_sim,
+           {rel} AS rel_sim,
            row_number() OVER (PARTITION BY query_id
-                              ORDER BY round({qcos} + 1e-9, 6) DESC, neighbor_id) AS rn
+                              ORDER BY {rel} DESC, neighbor_id) AS rn
     FROM q CROSS JOIN c
   ) WHERE rn <= {MMR_SHORTLIST}
 )""",
         f"""pairsim AS (
-  SELECT a.query_id, a.neighbor_id AS cand, b.neighbor_id AS other, {pair_cos} AS sim
+  SELECT a.query_id, a.neighbor_id AS cand, b.neighbor_id AS other,
+         {cosine_sql('a.cv', 'b.cv')} AS sim
   FROM shortlist a JOIN shortlist b
     ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id
 )""",
@@ -2020,7 +2012,7 @@ def _ann_dim_curve_sql() -> str:
     # bit-exact vs the ground truth by construction
     budget_rows.append(
         f"SELECT query_id, neighbor_id, {DIM_GRID[-1]} AS dims,\n"
-        f"       round({cosine_sql('qv', 'cv')} + 1e-9, 6) AS cos_sim\n"
+        f"       {_cos_sql('qv', 'cv')} AS cos_sim\n"
         "FROM segdots"
     )
     budgets = "\n  UNION ALL\n  ".join(budget_rows)
@@ -2955,33 +2947,11 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel)."""
 
     def build() -> DataFrame:
-        emb = _vectors(spark, sf_dir)
         cents = trained_centroids(spark, sf_dir, KMEANS_ITERS)
-        assigned = _multiprobe(emb, cents)
-        # flat-column cosine (r13, guide §4.1) — see semdedup
-        flat = assigned.select(
-            "vec_id", "label", "cluster", "nrm", *flat_cols(F.col("v"), DIM, "_v")
-        )
-        a, b = flat.alias("a"), flat.alias("b")
-        cos = F.round(
-            flat_cosine_prenormed("a._v", "b._v", DIM, F.col("a.nrm"), F.col("b.nrm"))
-            + 1e-9,
-            6,
-        )
-        und = (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col("a.label") == F.col("b.label"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("src"),
-                F.col("b.vec_id").alias("dst"),
-                cos.alias("cos_sim"),
-            )
-            .distinct()
-        )
+        pairs, cos = _block_pairs(_multiprobe(_vectors(spark, sf_dir), cents), ("cluster", "label"))
+        und = pairs.select(
+            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"), cos.alias("cos_sim")
+        ).distinct()
         directed = und.unionByName(
             und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cos_sim")
         )

@@ -23,7 +23,7 @@ from datatransformertools_spark.functions.text import (
     tokens_sql,
     word_shingles,
 )
-from datatransformertools_spark.sources.tables import load_table
+from datatransformertools_spark.sources.tables import fan_out, load_table
 
 # English-ish function words used by the marker heuristic.
 _MARKERS = {
@@ -344,7 +344,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast single-row aggregate (no eager driver-side count, no
     second scan of documents)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     n_docs_df = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -402,7 +402,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs (tf, df, dl, N) are exact longs, so the IEEE expression
     is identical in both engines and the 6-dp round is stable."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -520,10 +520,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the heavy lifting; the shuffle carries one row per distinct
     bigram, and only the final K-row head is ordered."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # single-file local scan = one partition; fan the per-doc
-    # tokenize+explode out before the heavy work (a multi-file lake
-    # parallelizes at the scan and AQE coalesces the remainder)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     bigrams = word_shingles(norm_tokens(F.col("text")), 2)
     exploded = docs.select("doc_id", F.explode(bigrams).alias("bigram"))
     return (
@@ -776,7 +773,7 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab grows with the corpus, so it is never force-broadcast
     (AQE upgrades at small SF from real sizes)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     tok = docs.select("doc_id", F.explode(norm_tokens(F.col("text"))).alias("token"))
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").cast("double").alias("total"))
@@ -876,7 +873,7 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction both key on doc_id, so the whole op is one
     doc-partitioned aggregation chain."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     grams = docs.select(
         "doc_id",
         F.explode(
@@ -948,7 +945,7 @@ def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id — embarrassingly parallel across documents, no
     corpus-wide state at all."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     tok = docs.select(
         "doc_id", F.posexplode(norm_tokens(F.col("text"))).alias("pos", "w")
     )
@@ -1141,7 +1138,7 @@ def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts to gate the per-(source, token) count; everything
     after runs on ≤ |sources|·V rows."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "source")
+    docs = fan_out(docs, "source")
     tok = docs.select("source", F.explode(norm_tokens(F.col("text"))).alias("token"))
     corpus_counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     top = corpus_counts.orderBy(F.col("c").desc(), "token").limit(JS_VOCAB_V)
@@ -1239,7 +1236,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than 2 tokens have no bigrams and are (documentedly) not
     in the output."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = fan_out(docs, "doc_id")
     # ALL bigram occurrences (multiplicity matters for an LM — the
     # shingle builder's array_distinct would undercount): zip the
     # token array with its own 1-shifted copy, map-side.

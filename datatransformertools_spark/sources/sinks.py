@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from datatransformertools_spark.caching import Memo
 from datatransformertools_spark.functions.hashing import md5_u32, md5_u32_sql
-from datatransformertools_spark.sources.tables import events_ts_us, load_table
+from datatransformertools_spark.sources.tables import events_ts_us, fan_out, load_table
 
 # One scratch dir per application holds the files of every write→read
 # round-trip (each under its own tag). It must outlive the collection
@@ -96,23 +96,14 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("disc_price"),
         )
     )
-    # r13 (guide §2.5 input skew / the r12 sink-fan-out treatment):
-    # the local testdata is ONE parquet split per table, so each
-    # bucketed write ran its whole encode as a single task.
-    # Hash-repartition on the BUCKET KEY first: every task then holds
-    # keys of one hash residue class, writes exactly one file of one
-    # bucket, and the encode fans out across cores. The read-back
-    # join is exchange-free either way (multiple files per bucket
-    # coalesce into the bucket's partition) — pinned by
+    # Fan out on the BUCKET KEY: every task then holds keys of one hash
+    # residue class and writes exactly one file of one bucket. The
+    # read-back join is exchange-free either way (multiple files per
+    # bucket coalesce into the bucket's partition) — pinned by
     # tests/test_sinks.py; at 100 TB this distribute-by-bucket-key
     # before a bucketed write is the standard small-files guard.
-    par = spark.sparkContext.defaultParallelism
-    write_bucketed_table(
-        orders.repartition(par, "o_orderkey"), "dtt_bkt_orders", "o_orderkey", _BUCKETS
-    )
-    write_bucketed_table(
-        li.repartition(par, "o_orderkey"), "dtt_bkt_lineitem", "o_orderkey", _BUCKETS
-    )
+    write_bucketed_table(fan_out(orders, "o_orderkey"), "dtt_bkt_orders", "o_orderkey", _BUCKETS)
+    write_bucketed_table(fan_out(li, "o_orderkey"), "dtt_bkt_lineitem", "o_orderkey", _BUCKETS)
     try:
         out = (
             spark.table("dtt_bkt_orders")
@@ -222,10 +213,8 @@ def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corruption (quotes, unicode, nulls) flips a hash; the oracle
     computes the identical checksums straight from parquet."""
     docs = load_table(spark, sf_dir, "documents")
-    # single-split local input → fan the JSON encode/write out (same
-    # rationale as lineitem_orc_roundtrip; checksums are
-    # order-independent)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    # checksums are order-independent
+    docs = fan_out(docs, "doc_id")
     path = roundtrip_path(spark, "documents_jsonl")
     write_jsonl(docs, path)
     back = read_jsonl(spark, path, _DOCS_SCHEMA)
@@ -289,10 +278,8 @@ def orders_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computed straight from parquet."""
     fmt = "yyyy-MM-dd HH:mm:ss"
     orders = load_table(spark, sf_dir, "orders")
-    # single-split local input → fan the CSV encode/write out (same
-    # rationale as lineitem_orc_roundtrip; checksums are
-    # order-independent)
-    orders = orders.repartition(spark.sparkContext.defaultParallelism, "o_orderkey")
+    # checksums are order-independent
+    orders = fan_out(orders, "o_orderkey")
     path = roundtrip_path(spark, "orders_csv")
     (
         orders.write.mode("overwrite")
@@ -404,13 +391,9 @@ def lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash."""
     li = load_table(spark, sf_dir, "lineitem")
     path = roundtrip_path(spark, "lineitem_orc")
-    # The local testdata is ONE parquet split, which would serialize
-    # the whole ORC encode through a single write task; hash-
-    # repartition on the key first so encode + write + read-back all
-    # fan out (r12, guide §2.5 input-skew note — on a real multi-file
-    # table the scan parallelizes naturally and this is a no-op-sized
-    # exchange). The checksum face is order-independent by design.
-    li = li.repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
+    # encode + write + read-back fan out; the checksum face is
+    # order-independent by design
+    li = fan_out(li, "l_orderkey")
     li.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     line = F.concat_ws(

@@ -85,6 +85,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return probe if probe is not None else spark.read.schema(schema).parquet(path)
 
 
+def fan_out(df: DataFrame, key: str) -> DataFrame:
+    """``df`` hash-repartitioned by ``key`` to the session's default
+    parallelism, before heavy per-row work. A local corpus table is one
+    parquet file, so its scan is one split and the tokenize, encode or
+    pair math after it would run in one task; on a multi-file lake the
+    scan fans out by itself and AQE coalesces this exchange away."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+
+
 def events_ts_us(df: DataFrame) -> Column:
     """Epoch-microseconds int64 for events.ts, robust to how the
     parquet physical type materialized: epoch-nanos int64 (NANOS +
@@ -104,7 +113,3 @@ def events_event_time(df: DataFrame) -> Column:
     if dtype in ("bigint", "long"):
         return F.timestamp_micros(F.expr("ts div 1000"))
     return F.col("ts").cast("timestamp")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

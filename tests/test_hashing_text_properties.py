@@ -6,7 +6,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from datatransformertools_spark.functions.hashing import md5_bits32, md5_long
+from datatransformertools_spark.functions.hashing import md5_long
 from datatransformertools_spark.functions.text import normalize_text, tokens, word_shingles
 
 text_strategy = st.text(
@@ -20,12 +20,11 @@ def test_md5_long_range_and_stability(spark, texts):
     import hashlib
 
     df = spark.createDataFrame([(t,) for t in texts], "s string")
-    rows = df.select("s", md5_long(F.col("s")).alias("h"), md5_bits32(F.col("s"), 1).alias("b")).collect()
+    rows = df.select("s", md5_long(F.col("s")).alias("h")).collect()
     for r in rows:
         # 60-bit non-negative, and exactly the first 15 hex chars of md5
         assert 0 <= r.h < (1 << 60)
         assert r.h == int(hashlib.md5(r.s.encode()).hexdigest()[:15], 16)
-        assert 0 <= r.b < (1 << 32)
 
 
 @settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))

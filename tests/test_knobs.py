@@ -65,26 +65,24 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
     return []
 
 
-def _unreached_definitions() -> list[str]:
-    """Top-level defs, classes and UPPER_CASE constants of the package
-    that no root reaches. Roots: every other module-level statement of
-    the package (the registry's QUERIES dicts among them), bench.py,
-    __spark_entry__.py, perfbench/*.py and README's python blocks.
-    Names match across modules, so a name reached anywhere counts as
-    reached everywhere."""
+def _unreached(modules: dict[str, str], scripts: list[str]) -> list[str]:
+    """Top-level defs, classes and UPPER_CASE constants of ``modules``
+    (path → source) that no root reaches. Roots: every module-level
+    statement of the modules that is neither a definition nor an
+    import (the registry's QUERIES dicts among them), and the
+    ``scripts`` sources. An import only binds a name, so a definition
+    that nothing but a re-export names is unreached. Names match across
+    modules, so a name reached anywhere counts as reached everywhere."""
     defs: dict[str, list[tuple[str, ast.stmt]]] = {}
     roots = {"QUERIES"}  # registry._load reads each module's QUERIES by name
-    for path in sorted(PACKAGE.rglob("*.py")):
-        for stmt in ast.parse(path.read_text()).body:
+    for path, src in modules.items():
+        for stmt in ast.parse(src).body:
             names = _defined_names(stmt)
-            if not names:
+            if not names and not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 roots |= _referenced(stmt)
             for name in names:
-                defs.setdefault(name, []).append((f"{path.relative_to(ROOT)}:{name}", stmt))
-    scripts = [ROOT / "bench.py", ROOT / "__spark_entry__.py", *(ROOT / "perfbench").glob("*.py")]
-    sources = [p.read_text() for p in scripts]
-    sources += re.findall(r"```python\n(.*?)```", (ROOT / "README.md").read_text(), re.S)
-    for src in sources:
+                defs.setdefault(name, []).append((f"{path}:{name}", stmt))
+    for src in scripts:
         roots |= _referenced(ast.parse(src))
     reached: set[str] = set()
     todo = [name for name in roots if name in defs]
@@ -96,6 +94,25 @@ def _unreached_definitions() -> list[str]:
         for _, stmt in defs[name]:
             todo.extend(n for n in _referenced(stmt) if n in defs and n not in reached)
     return sorted(where for name in defs.keys() - reached for where, _ in defs[name])
+
+
+def _unreached_definitions() -> list[str]:
+    """``_unreached`` over the package, with bench.py,
+    __spark_entry__.py, perfbench/*.py and README's python blocks as
+    the scripts."""
+    modules = {str(p.relative_to(ROOT)): p.read_text() for p in sorted(PACKAGE.rglob("*.py"))}
+    paths = [ROOT / "bench.py", ROOT / "__spark_entry__.py", *(ROOT / "perfbench").glob("*.py")]
+    scripts = [p.read_text() for p in paths]
+    scripts += re.findall(r"```python\n(.*?)```", (ROOT / "README.md").read_text(), re.S)
+    return _unreached(modules, scripts)
+
+
+def test_a_name_that_is_only_imported_is_unreached():
+    modules = {
+        "pkg/a.py": "def used():\n    pass\n\n\ndef only_imported():\n    pass\n",
+        "pkg/__init__.py": "from pkg.a import only_imported, used\n",
+    }
+    assert _unreached(modules, ["used()\n"]) == ["pkg/a.py:only_imported"]
 
 
 def test_every_package_definition_is_reached_from_a_root():
@@ -194,6 +211,12 @@ TWIN_FRAGMENTS = {
     "sum(pow(2.0, -max_rho))": {
         "datatransformertools_spark/operators/events.py:_hll_estimate_sql",
     },
+    "a.vec_id < b.vec_id": {
+        "datatransformertools_spark/operators/similarity.py:_block_join_sql",
+    },
+    "< 1e-6 THEN 1.0": {
+        "datatransformertools_spark/functions/scaling.py:zscore_sql",
+    },
 }
 
 # Each pasted Spark stage and the one builder allowed to spell it.
@@ -234,6 +257,19 @@ BUILDER_FRAGMENTS = {
     '.groupBy("o_orderpriority", "l_returnflag")': {
         "datatransformertools_spark/operators/relational.py:_priority_flag_cells",
     },
+    "flat_cosine_prenormed(": {
+        "datatransformertools_spark/functions/vectors.py:flat_cosine_prenormed",
+        "datatransformertools_spark/operators/similarity.py:_block_pairs",
+    },
+    "< 1e-6, F.lit(1.0)": {
+        "datatransformertools_spark/functions/scaling.py:zscore",
+    },
+    # graph.py's src partitioning is the co-partitioning contract the
+    # PageRank and LPA rounds rely on, not a single-split fan-out
+    ".defaultParallelism": {
+        "datatransformertools_spark/sources/tables.py:fan_out",
+        "datatransformertools_spark/operators/graph.py:_co_edges",
+    },
 }
 
 
@@ -264,18 +300,19 @@ def _fragment_owners(fragments: dict[str, set[str]]) -> dict[str, set[str]]:
 def test_duckdb_twin_fragments_are_not_repasted():
     """The DuckDB normalization, md5 hash, MinHash signature, ANN
     index-stage, Lloyd face, event-family stage, corpus-token stage,
-    reference-pipeline, co-purchase edge, contingency-table and HLL
-    fragments are spelled once, in their twin; every oracle calls the
-    twin."""
+    reference-pipeline, co-purchase edge, contingency-table, HLL,
+    blocked-join and z-score fragments are spelled once, in their
+    twin; every oracle calls the twin."""
     assert _fragment_owners(TWIN_FRAGMENTS) == TWIN_FRAGMENTS
 
 
 def test_spark_stage_fragments_are_not_repasted():
     """The corpus tokenizer, quality score, length band, packing
     offsets and windows, vocab→ids, token-budget grains, train/val
-    split, YOLO label line, HLL registers and estimate and the
-    contingency table are spelled once, in their Spark builder; every
-    query calls it."""
+    split, YOLO label line, HLL registers and estimate, the
+    contingency table, the blocked flat-cosine pair kernel, the
+    z-score std floor and the single-split fan-out are spelled once,
+    in their Spark builder; every query calls it."""
     assert _fragment_owners(BUILDER_FRAGMENTS) == BUILDER_FRAGMENTS
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from datatransformertools_spark.functions.bbox import clip_box, iou_xywh, iou_xywh_sql
 from datatransformertools_spark.functions.hashing import md5_long, md5_long_sql, md5_u32, md5_u32_sql
+from datatransformertools_spark.functions.scaling import zscore, zscore_sql
 from datatransformertools_spark.functions.text import (
     norm_tokens,
     norm_tokens_sql,
@@ -23,7 +24,7 @@ from datatransformertools_spark.functions.text import (
     tokens,
     tokens_sql,
 )
-from datatransformertools_spark.functions.vectors import cosine, cosine_sql, norm, norm_sql
+from datatransformertools_spark.functions.vectors import cosine_prenormed, cosine_sql, norm, norm_sql
 from datatransformertools_spark.operators.annotations import (
     _CLIPPED_SQL,
     CLASS_MAP,
@@ -159,7 +160,10 @@ VECTORS = [
 def test_cosine_and_norm_twins_match_spark(spark):
     spark_rows = _spark_rows(
         spark,
-        [cosine(F.col("a"), F.col("b")), norm(F.col("a"))],
+        [
+            cosine_prenormed(F.col("a"), F.col("b"), norm(F.col("a")), norm(F.col("b"))),
+            norm(F.col("a")),
+        ],
         VECTORS,
         "id int, a array<double>, b array<double>",
     )
@@ -171,6 +175,32 @@ def test_cosine_and_norm_twins_match_spark(spark):
     assert duck_rows == spark_rows
     cos = {i: c for i, c, _ in duck_rows}
     assert cos[0] == cos[1] == 0.0 and cos[4] == 0.0
+
+
+FEATURES = [
+    # f1 is constant (zero variance), f2 has a 6-dp-boundary spread,
+    # f3 a wide one with a negative value
+    (0, 2.5, 0.1, -40.0),
+    (1, 2.5, 0.2, 10.0),
+    (2, 2.5, 0.3, 1e6),
+    (3, 2.5, 0.1000005, 7.25),
+]
+
+
+def test_zscore_twin_matches_spark(spark):
+    df = spark.createDataFrame(FEATURES, "id int, f1 double, f2 double, f3 double")
+    joined, z = zscore(df, 3)
+    spark_rows = [tuple(r) for r in joined.select("id", *z).orderBy("id").collect()]
+    stats, z_sql = zscore_sql(3, "t")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INTEGER, f1 DOUBLE, f2 DOUBLE, f3 DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", FEATURES)
+    duck_rows = con.sql(
+        f"WITH {stats} SELECT id, {', '.join(z_sql)} FROM t CROSS JOIN stats ORDER BY id"
+    ).fetchall()
+    assert duck_rows == spark_rows
+    assert all(r[1] == 0.0 for r in spark_rows)
+    assert len({r[2] for r in spark_rows}) > 1
 
 
 BOXES = [
